@@ -139,27 +139,27 @@ object Columnar {
   def fromLabeledDf(
       df: DataFrame,
       featuresCol: String = "features",
-      labelCol: String = "label",
-      numPartitions: Int = 0): ColumnarData = {
+      labelCol: String = "label"): ColumnarData = {
 
     val projected = df.select(
       org.apache.spark.sql.functions.col(labelCol).cast("double"),
       org.apache.spark.sql.functions.col(featuresCol))
-    val target =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (projected.queryExecution.toRdd.getNumPartitions < target) {
-        projected.repartition(target)
-      } else projected
-    val nf = df.select(featuresCol).head()
-      .getAs[Vector](0).size
+    val spread = spreadToParallelism(projected)
+    val first = df.select(featuresCol).head().getAs[Vector](0)
+    if (first == null) throw nullIn(featuresCol)
+    val nf = first.size
     val nCols = nf + 1
     val rows = spread.queryExecution.toRdd
 
     val transposed: RDD[((Int, Int), LabeledBlock)] =
       rows.mapPartitionsWithIndex { (pid, it0) =>
-        val it = it0.buffered
+        // UnsafeRow reads a null slot as 0 (label) or fails with a bare
+        // NPE (features): refuse nulls by column name instead
+        val it = it0.map { row =>
+          if (row.isNullAt(0)) throw nullIn(labelCol)
+          if (row.isNullAt(1)) throw nullIn(featuresCol)
+          row
+        }.buffered
         if (!it.hasNext) Iterator.empty
         else {
           // ml.VectorUDT layout: struct<type:byte, size:int,
@@ -170,6 +170,18 @@ object Columnar {
         }
       }
     finish(transposed, nCols)
+  }
+
+  private def nullIn(column: String) = new IllegalArgumentException(
+    s"null value in column $column: the selector's input must be non-null")
+
+  /** Repartitions up to `defaultParallelism` when the input has fewer
+    * partitions, so every core scans a block. */
+  private def spreadToParallelism(projected: DataFrame): DataFrame = {
+    val target = projected.sparkSession.sparkContext.defaultParallelism
+    if (projected.queryExecution.toRdd.getNumPartitions < target) {
+      projected.repartition(target)
+    } else projected
   }
 
   /** Vector size from the UDT struct (dense: values length; sparse: the
@@ -292,20 +304,12 @@ object Columnar {
   def fromIntColumns(
       df: DataFrame,
       featureCols: Seq[String],
-      labelCol: String,
-      numPartitions: Int = 0): ColumnarData = {
+      labelCol: String): ColumnarData = {
     val nf = featureCols.length
     val nCols = nf + 1
-    val projected = df.select((featureCols :+ labelCol).map(
-      c => org.apache.spark.sql.functions.col(c).cast("int")): _*)
-    val target =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (projected.queryExecution.toRdd.getNumPartitions < target) {
-        projected.repartition(target)
-      } else projected
-    val rows = spread.queryExecution.toRdd
+    val rows = spreadToParallelism(df.select((featureCols :+ labelCol).map(
+      c => org.apache.spark.sql.functions.col(c).cast("int")): _*))
+      .queryExecution.toRdd
     val transposed: RDD[((Int, Int), LabeledBlock)] =
       rows.mapPartitionsWithIndex { (pid, it) =>
         val builders = Array.fill(nCols)(new mutable.ArrayBuilder.ofByte)

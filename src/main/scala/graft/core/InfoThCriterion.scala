@@ -40,8 +40,6 @@ sealed trait InfoThCriterion extends Serializable {
 
   /** Greedy objective value under this criterion. */
   def score: Double
-
-  def cloneEmpty: InfoThCriterion
 }
 
 /** Mutual Information Maximisation: score = relevance only
@@ -49,7 +47,6 @@ sealed trait InfoThCriterion extends Serializable {
 final class Mim extends InfoThCriterion {
   override def update(mi: Double, cmi: Double): this.type = { k += 1; this }
   override def score: Double = relevance
-  override def cloneEmpty = new Mim
   override def toString = "MIM"
 }
 
@@ -62,7 +59,6 @@ final class Mifs(val beta: Double = 0.0) extends InfoThCriterion {
     redundancy += mi; k += 1; this
   }
   override def score: Double = relevance - beta * redundancy
-  override def cloneEmpty = new Mifs(beta)
   override def toString = "MIFS"
 }
 
@@ -77,7 +73,6 @@ final class Jmi extends InfoThCriterion {
   override def score: Double =
     if (k == 0) relevance
     else relevance - (redundancy - conditionalRedundancy) / k
-  override def cloneEmpty = new Jmi
   override def toString = "JMI"
 }
 
@@ -90,7 +85,6 @@ final class Mrmr extends InfoThCriterion {
   }
   override def score: Double =
     if (k == 0) relevance else relevance - redundancy / k
-  override def cloneEmpty = new Mrmr
   override def toString = "MRMR"
 }
 
@@ -103,14 +97,12 @@ sealed class Cmim extends InfoThCriterion {
     maxLoss = math.max(maxLoss, mi - cmi); k += 1; this
   }
   override def score: Double = relevance - maxLoss
-  override def cloneEmpty = new Cmim
   override def toString = "CMIM"
 }
 
 /** Informative Fragments — identical accumulator to CMIM in the reference
   * (InfoCriterion.scala:190-193: `class If extends Cmim`). */
 final class If extends Cmim {
-  override def cloneEmpty = new If
   override def toString = "IF"
 }
 
@@ -122,7 +114,6 @@ final class Icap extends InfoThCriterion {
     cappedLoss += math.max(0.0, mi - cmi); k += 1; this
   }
   override def score: Double = relevance - cappedLoss
-  override def cloneEmpty = new Icap
   override def toString = "ICAP"
 }
 

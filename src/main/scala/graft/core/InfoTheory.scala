@@ -71,7 +71,8 @@ object InfoTheory {
    * (I(X;Y), I(X;Y|Z)) from a 3-D contingency table in one pass
    * (reference: the fused MI+CMI map, InfoTheory.scala:140-168).
    *
-   * CMI via I(X;Y|Z) = sum_xyz p(xyz) * log2( p(z)p(xyz) / (p(xz)p(yz)) ).
+   * I(X;Y) is [[mutualInfo]] over the x-y marginal; CMI via
+   * I(X;Y|Z) = sum_xyz p(xyz) * log2( p(z)p(xyz) / (p(xz)p(yz)) ).
    */
   def miAndCmi(h: Hist3D, n: Long): (Double, Double) = {
     val xs = h.xs; val ys = h.ys; val zs = h.zs
@@ -96,30 +97,8 @@ object InfoTheory {
       }
       z += 1
     }
+    val mi = mutualInfo(Hist2D(xs, ys, cxy), n)
     val nd = n.toDouble
-    // marginal counts of x and y for the unconditional MI
-    val cx = new Array[Long](xs)
-    val cy = new Array[Long](ys)
-    var x = 0
-    while (x < xs) {
-      var y = 0
-      while (y < ys) { cx(x) += cxy(x * ys + y); cy(y) += cxy(x * ys + y); y += 1 }
-      x += 1
-    }
-    var mi = 0.0
-    x = 0
-    while (x < xs) {
-      var y = 0
-      while (y < ys) {
-        val c = cxy(x * ys + y)
-        if (c > 0 && cx(x) > 0 && cy(y) > 0) {
-          val p = c / nd
-          mi += p * log2(p * nd * nd / (cx(x).toDouble * cy(y).toDouble))
-        }
-        y += 1
-      }
-      x += 1
-    }
     var cmi = 0.0
     z = 0
     while (z < zs) {

@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.ml.{Estimator, Model}
+import org.apache.spark.ml.{Estimator, GraftMlBridge, Model}
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.{HasFeaturesCol, HasLabelCol, HasOutputCol}
@@ -34,13 +34,8 @@ trait InfoThSelectorParams extends Params
   final val beta = new DoubleParam(this, "beta", "MIFS redundancy weight")
   def getBeta: Double = $(beta)
 
-  /** Partitions for the columnar working set; 0 = inherit input. */
-  final val numPartitions = new IntParam(this, "numPartitions",
-    "partitions for the columnar working set (0 = input partitioning)",
-    ParamValidators.gtEq(0))
-
   setDefault(numTopFeatures -> 10, criterion -> "mrmr", beta -> 0.0,
-    numPartitions -> 0, outputCol -> "selectedFeatures")
+    outputCol -> "selectedFeatures")
 
   protected def validateAndTransformSchema(schema: StructType): StructType = {
     require(schema($(featuresCol)).dataType == SQLDataTypes.VectorType,
@@ -86,17 +81,14 @@ class InfoThSelector(override val uid: String)
   def setNumTopFeatures(v: Int): this.type = set(numTopFeatures, v)
   def setCriterion(v: String): this.type = set(criterion, v.toLowerCase)
   def setBeta(v: Double): this.type = set(beta, v)
-  def setNumPartitions(v: Int): this.type = set(numPartitions, v)
   def setFeaturesCol(v: String): this.type = set(featuresCol, v)
   def setLabelCol(v: String): this.type = set(labelCol, v)
   def setOutputCol(v: String): this.type = set(outputCol, v)
 
   override def fit(dataset: Dataset[_]): InfoThSelectorModel = {
     transformSchema(dataset.schema, logging = true)
-    val df = dataset.select(col($(labelCol)).cast("double").as("label"),
-      col($(featuresCol)).as("features")).toDF()
-    val colData = Columnar.fromLabeledDf(df, "features", "label",
-      $(numPartitions))
+    val colData = Columnar.fromLabeledDf(dataset.toDF(), $(featuresCol),
+      $(labelCol))
     try {
       val selected = InfoThSelector.select(
         colData, $(criterion), $(numTopFeatures), $(beta))
@@ -243,7 +235,7 @@ object InfoThSelectorModel extends MLReadable[InfoThSelectorModel] {
   private[InfoThSelectorModel] class Writer(instance: InfoThSelectorModel)
       extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
-      MetaIO.save(instance, instance.uid, path, sparkSession)
+      GraftMlBridge.saveMetadata(instance, path, sparkSession)
       val data = instance.selectionPath.map { case (f, s) => (f, s) }.toSeq
       sparkSession.createDataFrame(data).toDF("feature", "score")
         .repartition(1).write.parquet(new Path(path, "data").toString)
@@ -251,15 +243,14 @@ object InfoThSelectorModel extends MLReadable[InfoThSelectorModel] {
   }
 
   private class Reader extends MLReader[InfoThSelectorModel] {
-    override def load(path: String): InfoThSelectorModel = {
-      val (uid, raw) = MetaIO.load(path, sparkSession)
-      val data = sparkSession.read.parquet(new Path(path, "data").toString)
-        .select("feature", "score").collect()
-        .map(r => (r.getInt(0), r.getDouble(1)))
-      val model = new InfoThSelectorModel(uid, data.map(_._1).sorted, data)
-      MetaIO.restore(model, raw)
-      model
-    }
+    override def load(path: String): InfoThSelectorModel =
+      GraftMlBridge.loadWithMetadata(path, sparkSession,
+          classOf[InfoThSelectorModel]) { uid =>
+        val data = sparkSession.read.parquet(new Path(path, "data").toString)
+          .select("feature", "score").collect()
+          .map(r => (r.getInt(0), r.getDouble(1)))
+        new InfoThSelectorModel(uid, data.map(_._1).sorted, data)
+      }
   }
 
   override def read: MLReader[InfoThSelectorModel] = new Reader

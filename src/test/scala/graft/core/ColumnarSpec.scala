@@ -124,6 +124,49 @@ class ColumnarSpec extends SparkSpec {
     }
   }
 
+  /** Asserts that materializing `fromLabeledDf(df, "x", "y")` fails with
+    * an IllegalArgumentException (possibly wrapped by the task failure)
+    * that names `column`. */
+  private def assertRefusesNull(df: org.apache.spark.sql.DataFrame,
+      column: String): Unit = {
+    val e = intercept[Exception] {
+      Columnar.fromLabeledDf(df, "x", "y").data.count()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains(s"column $column")),
+      s"expected an IllegalArgumentException naming $column, got $e")
+  }
+
+  private def nullRows(vecs: Seq[org.apache.spark.ml.linalg.Vector]) = {
+    // row 1 carries a null label, row 2 a null features vector; row 0 is
+    // whole so the null sits past the row used to size the vectors
+    val withNullLabel = vecs.zipWithIndex.map { case (v, i) =>
+      (if (i == 1) None else Some((i % 2).toDouble), v)
+    }
+    val withNullVec = vecs.zipWithIndex.map { case (v, i) =>
+      ((i % 2).toDouble, if (i == 2) null else v)
+    }
+    (spark.createDataFrame(withNullLabel).toDF("y", "x").coalesce(1),
+      spark.createDataFrame(withNullVec).toDF("y", "x").coalesce(1))
+  }
+
+  test("null label or null features vector is refused, dense input") {
+    val (nullLabel, nullVec) = nullRows(Seq.tabulate(4)(i =>
+      Vectors.dense(i.toDouble, 1.0)))
+    assertRefusesNull(nullLabel, "y")
+    assertRefusesNull(nullVec, "x")
+    // a null in the row that sizes the vectors is refused on the driver
+    assertRefusesNull(nullVec.filter("x is null"), "x")
+  }
+
+  test("null label or null features vector is refused, sparse input") {
+    val (nullLabel, nullVec) = nullRows(Seq.tabulate(4)(i =>
+      Vectors.sparse(3, Array(i % 3), Array(2.0))))
+    assertRefusesNull(nullLabel, "y")
+    assertRefusesNull(nullVec, "x")
+  }
+
   test("histogram2D/3D match brute-force counts") {
     val rng = new scala.util.Random(7)
     val n = 200

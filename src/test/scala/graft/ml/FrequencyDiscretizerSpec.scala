@@ -27,36 +27,6 @@ class FrequencyDiscretizerSpec extends SparkSpec {
     assert(counts.values.max < 2000 / 2)
   }
 
-  test("sketched path (exactSplits=false) agrees with the sampled path") {
-    // 10k uniform values: both paths should produce ~equal-frequency
-    // quartiles; the sketch's splits sit within its rank error of the
-    // exact ones, so per-bucket occupancy stays near n/k
-    val n = 10000
-    val df = spark.createDataFrame((0 until n).map { i =>
-      Tuple1(Vectors.dense(i.toDouble, (i * 7919 % n).toDouble))
-    }).toDF("features")
-    val sketch = new FrequencyDiscretizer().setNumBuckets(4).setSeed(1)
-      .setExactSplits(false).fit(df)
-    assert(sketch.splitsArray.length == 2)
-    sketch.splitsArray.foreach { s =>
-      assert(s.length == 5) // 4 buckets on clean uniform data
-      assert(s.head == Double.NegativeInfinity)
-      assert(s.last == Double.PositiveInfinity)
-      // interior splits within 1% (sketch rank error) of ideal quartiles
-      s.slice(1, 4).zip(Seq(2500.0, 5000.0, 7500.0)).foreach {
-        case (got, ideal) => assert(math.abs(got - ideal) <= n / 100,
-          s"split $got far from $ideal")
-      }
-    }
-    // per-bucket occupancy within 5% of n/k for the sketched model
-    val out = sketch.transform(df).select("discFeatures").collect()
-      .map(_.getAs[Vector](0)(0))
-    val counts = out.groupBy(identity).view.mapValues(_.length).toMap
-    assert(counts.size == 4)
-    counts.values.foreach(c => assert(math.abs(c - n / 4) < n / 20,
-      s"bucket occupancy $c far from ${n / 4}"))
-  }
-
   test("constant column falls back to default splits [-Inf, 0, Inf]") {
     val df = spark.createDataFrame(
       (0 until 100).map(_ => Tuple1(Vectors.dense(7.7)))).toDF("features")
@@ -131,13 +101,25 @@ class FrequencyDiscretizerSpec extends SparkSpec {
   test("model save/load round-trip") {
     val df = spark.createDataFrame((0 until 200).map { i =>
       Tuple1(Vectors.dense(i.toDouble % 17))
-    }).toDF("features")
-    val model = new FrequencyDiscretizer().setNumBuckets(4).fit(df)
+    }).toDF("raw")
+    val model = new FrequencyDiscretizer().setNumBuckets(4).setSeed(42)
+      .setInputCol("raw").setOutputCol("binned").fit(df)
     val dir = java.nio.file.Files.createTempDirectory("graft-disc").toString
     model.write.overwrite().save(dir)
     val loaded = FrequencyDiscretizerModel.load(dir)
+    assert(loaded.uid == model.uid)
     assert(loaded.splitsArray.map(_.toSeq).toSeq ==
       model.splitsArray.map(_.toSeq).toSeq)
+    // every explicitly set param comes back
+    assert(loaded.getNumBuckets == 4)
+    assert(loaded.getSeed == 42L)
+    assert(loaded.getInputCol == "raw")
+    assert(loaded.getOutputCol == "binned")
+    // a directory written by the other model class is refused by name
+    val e = intercept[IllegalArgumentException] {
+      InfoThSelectorModel.load(dir)
+    }
+    assert(e.getMessage.contains(classOf[FrequencyDiscretizerModel].getName))
   }
 
   test("splits are Bucketizer-compatible: same buckets from Spark's Bucketizer") {

@@ -113,46 +113,74 @@ class InfoThSelectorSpec extends SparkSpec {
     }
   }
 
-  test("greedy mRMR/JMI over 24 features matches a local brute-force run") {
-    // independent in-memory reimplementation of the greedy loop: exact MI
-    // and CMI from full contingency counts, same criterion algebra
+  test("all 7 criteria match brute-force greedy, dense+sparse, with ties") {
+    // independent in-memory greedy: exact MI and CMI from full contingency
+    // counts, and this spec's own score algebra (Brown et al. 2012) over
+    // the relevance, sum(mi), sum(cmi), the max loss and the capped loss
     val rng = new scala.util.Random(29)
     val nf = 24
     val n = 800
     val rows = (0 until n).map { _ =>
       val x = Array.fill(nf)(rng.nextInt(4))
+      x(2) = x(17) // forced tie: feature 2 is an exact copy of feature 17
       val label = (x(3) + x(17) + (if (rng.nextDouble() < 0.2) 1 else 0)) % 4
       (label.toDouble, x)
     }
-    val df = toDf(rows.map { case (l, x) =>
-      (l, Vectors.dense(x.map(_.toDouble)))
-    })
     val xs = Array.tabulate(nf)(j => rows.map(_._2(j)))
     val y = rows.map(_._1.toInt)
-    def brutalGreedy(crit: String, k: Int): Seq[Int] = {
-      val rel = (0 until nf).map(f => graft.core.Brute.mi(xs(f), y))
-      val cs = (0 until nf).map(f =>
-        graft.core.InfoThCriterionFactory(crit).init(rel(f)))
-      val sel = collection.mutable.ArrayBuffer.empty[Int]
+    val rel = Array.tabulate(nf)(f => graft.core.Brute.mi(xs(f), y))
+    val redundancy = collection.mutable.Map.empty[(Int, Int), (Double, Double)]
+    def miCmi(f: Int, s: Int) = redundancy.getOrElseUpdate((f, s),
+      (graft.core.Brute.mi(xs(f), xs(s)), graft.core.Brute.cmi(xs(f), xs(s), y)))
+
+    def score(crit: String, beta: Double, f: Int, sel: Seq[Int]): Double = {
+      val red = sel.map(miCmi(f, _))
+      val k = red.length
+      val sumMi = red.map(_._1).sum
+      val sumCmi = red.map(_._2).sum
+      val maxLoss = (0.0 +: red.map { case (mi, cmi) => mi - cmi }).max
+      val cappedLoss = red.map { case (mi, cmi) => math.max(0.0, mi - cmi) }.sum
+      crit match {
+        case "mim" => rel(f)
+        case "mifs" => rel(f) - beta * sumMi
+        case "jmi" => if (k == 0) rel(f) else rel(f) - (sumMi - sumCmi) / k
+        case "mrmr" => if (k == 0) rel(f) else rel(f) - sumMi / k
+        case "cmim" | "if" => rel(f) - maxLoss
+        case "icap" => rel(f) - cappedLoss
+      }
+    }
+    def bruteGreedy(crit: String, beta: Double, k: Int): Seq[(Int, Double)] = {
+      val sel = collection.mutable.ArrayBuffer.empty[(Int, Double)]
       while (sel.length < k) {
-        val valid = (0 until nf).filter(f => cs(f).valid)
-        val best = valid.maxBy(f => (cs(f).score, -f))
-        sel += best
-        cs(best).setValid(false)
-        if (sel.length < k) (0 until nf).foreach { f =>
-          if (cs(f).valid) {
-            cs(f).update(graft.core.Brute.mi(xs(f), xs(best)),
-              graft.core.Brute.cmi(xs(f), xs(best), y))
-          }
-        }
+        val done = sel.map(_._1).toSeq
+        val scored = (0 until nf).filterNot(done.contains)
+          .map(f => (f, score(crit, beta, f, done)))
+        // highest score, ties to the lowest index
+        sel += scored.maxBy { case (f, sc) => (sc, -f) }
       }
       sel.toSeq
     }
-    Seq("mrmr", "jmi").foreach { crit =>
-      val model = new InfoThSelector().setCriterion(crit)
-        .setNumTopFeatures(6).fit(df)
-      assert(model.selectionPath.map(_._1).toSeq == brutalGreedy(crit, 6),
-        s"$crit distributed selection diverges from brute force")
+
+    val dense = toDf(rows.map { case (l, x) => (l, Vectors.dense(x.map(_.toDouble))) })
+    val sparse = toDf(rows.map { case (l, x) =>
+      (l, Vectors.dense(x.map(_.toDouble)).toSparse.asInstanceOf[Vector])
+    })
+    val configs = Seq("mim" -> 0.0, "mifs" -> 0.0, "mifs" -> 0.5, "jmi" -> 0.0,
+      "mrmr" -> 0.0, "cmim" -> 0.0, "icap" -> 0.0, "if" -> 0.0)
+    assert(configs.map(_._1).toSet == graft.core.InfoThCriterionFactory.all.toSet)
+    for ((crit, beta) <- configs; (kind, df) <- Seq("dense" -> dense, "sparse" -> sparse)) {
+      val what = s"$crit (beta $beta, $kind)"
+      val expected = bruteGreedy(crit, beta, 6)
+      val got = new InfoThSelector().setCriterion(crit).setBeta(beta)
+        .setNumTopFeatures(6).fit(df).selectionPath.toSeq
+      assert(got.map(_._1) == expected.map(_._1),
+        s"$what selected ${got.map(_._1)}, brute force ${expected.map(_._1)}")
+      got.zip(expected).foreach { case ((_, a), (_, b)) =>
+        assert(math.abs(a - b) < 1e-9, s"$what score $a vs brute force $b")
+      }
+      // the twins score identically until one is picked: 2 must come first
+      val twin = got.map(_._1).find(f => f == 2 || f == 17)
+      assert(twin == Some(2), s"$what resolved the 2/17 tie to $twin")
     }
   }
 
@@ -227,12 +255,26 @@ class InfoThSelectorSpec extends SparkSpec {
   }
 
   test("model save/load round-trip") {
-    val model = new InfoThSelector().setCriterion("jmi")
-      .setNumTopFeatures(2).fit(copyFixture)
+    val model = new InfoThSelector().setCriterion("mifs").setBeta(0.25)
+      .setNumTopFeatures(2).setFeaturesCol("feats").setLabelCol("lbl")
+      .setOutputCol("sel").fit(copyFixture.toDF("lbl", "feats"))
     val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
     model.write.overwrite().save(dir)
     val loaded = InfoThSelectorModel.load(dir)
+    assert(loaded.uid == model.uid)
     assert(loaded.selectedFeatures.toSeq == model.selectedFeatures.toSeq)
-    assert(loaded.getCriterion == "jmi")
+    assert(loaded.selectionPath.toSeq == model.selectionPath.toSeq)
+    // every explicitly set param comes back
+    assert(loaded.getCriterion == "mifs")
+    assert(loaded.getBeta == 0.25)
+    assert(loaded.getNumTopFeatures == 2)
+    assert(loaded.getFeaturesCol == "feats")
+    assert(loaded.getLabelCol == "lbl")
+    assert(loaded.getOutputCol == "sel")
+    // a directory written by the other model class is refused by name
+    val e = intercept[IllegalArgumentException] {
+      FrequencyDiscretizerModel.load(dir)
+    }
+    assert(e.getMessage.contains(classOf[InfoThSelectorModel].getName))
   }
 }
