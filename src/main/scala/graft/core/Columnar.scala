@@ -117,10 +117,6 @@ object Columnar {
       out
   }
 
-  /** Max feature count supported by the sparse transpose packing
-    * (feature id must fit in 22 bits next to a 32-bit row id). */
-  val MaxSparseFeatures: Int = 1 << 22
-
   /**
    * Block-local transpose of a `(label, features)` DataFrame into
    * columnar blocks (reference semantics: InfoSelector.scala:421-438),
@@ -145,7 +141,10 @@ object Columnar {
       org.apache.spark.sql.functions.col(labelCol).cast("double"),
       org.apache.spark.sql.functions.col(featuresCol))
     val spread = spreadToParallelism(projected)
-    val first = df.select(featuresCol).head().getAs[Vector](0)
+    val first = df.select(featuresCol).head(1).headOption
+      .getOrElse(throw new IllegalArgumentException(
+        "empty input: the selector needs at least one row"))
+      .getAs[Vector](0)
     if (first == null) throw nullIn(featuresCol)
     val nf = first.size
     val nCols = nf + 1
@@ -226,21 +225,29 @@ object Columnar {
   }
 
   /**
-   * Sparse-mode partition transpose: nonzeros pack into one long each
-   * (feature << 40 | row << 8 | value), a single array sort groups them
-   * by feature, and per-feature slices become [[SparseBlock]]s. Every
-   * feature emits a record (possibly with zero explicit entries) so the
-   * histogram kernels see every (feature, block) cell — implicit zeros
-   * are patched in-kernel, never materialized.
+   * Sparse-mode partition transpose by counting scatter: reading the rows
+   * buffers each nonzero as (feature, row, value) and counts it per
+   * feature; the counts size one exact-length array pair per feature, and
+   * a single pass scatters every entry into its feature's arrays. Entries
+   * arrive in row order, so rows stay strictly increasing within each
+   * [[SparseBlock]]. Work and memory are O(nonzeros + features), with no
+   * sort. Every feature emits a record (possibly with zero explicit
+   * entries) so the histogram kernels see every (feature, block) cell —
+   * implicit zeros are accounted for in-kernel, never materialized.
    */
   private def transposeSparse(pid: Int,
       it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
       nf: Int): Iterator[((Int, Int), LabeledBlock)] = {
-    require(nf < MaxSparseFeatures,
-      s"sparse transpose supports < $MaxSparseFeatures features, got $nf")
-    val packed = new mutable.ArrayBuilder.ofLong
+    val counts = new Array[Int](nf)
+    val feats = new mutable.ArrayBuilder.ofInt
+    val rowIds = new mutable.ArrayBuilder.ofInt
+    val values = new mutable.ArrayBuilder.ofByte
     val labels = new mutable.ArrayBuilder.ofByte
     var rowIdx = 0
+    @inline def add(f: Int, v: Byte): Unit = if (v != 0) {
+      counts(f) += 1
+      feats += f; rowIds += rowIdx; values += v
+    }
     it.foreach { row =>
       val vec = row.getStruct(1, 4)
       require(vecSize(vec) == nf,
@@ -249,45 +256,31 @@ object Columnar {
         val ids = vec.getArray(2); val vals = vec.getArray(3)
         val nnz = ids.numElements()
         var j = 0
-        while (j < nnz) {
-          val v = toByteChecked(vals.getDouble(j))
-          if (v != 0) {
-            packed += (ids.getInt(j).toLong << 40) | (rowIdx.toLong << 8) | (v & 0xFFL)
-          }
-          j += 1
-        }
+        while (j < nnz) { add(ids.getInt(j), toByteChecked(vals.getDouble(j))); j += 1 }
       } else {
         val vals = vec.getArray(3)
         var j = 0
-        while (j < nf) {
-          val v = toByteChecked(vals.getDouble(j))
-          if (v != 0) {
-            packed += (j.toLong << 40) | (rowIdx.toLong << 8) | (v & 0xFFL)
-          }
-          j += 1
-        }
+        while (j < nf) { add(j, toByteChecked(vals.getDouble(j))); j += 1 }
       }
       labels += toByteChecked(row.getDouble(0))
       rowIdx += 1
     }
     val labelArr = labels.result()
     val n = rowIdx
-    val arr = packed.result()
-    java.util.Arrays.sort(arr)
-    // slice per feature
+    val rowsOf = Array.tabulate(nf)(f => new Array[Int](counts(f)))
+    val valsOf = Array.tabulate(nf)(f => new Array[Byte](counts(f)))
+    val fill = new Array[Int](nf)
+    val fa = feats.result(); val ra = rowIds.result(); val va = values.result()
     var p = 0
-    val out = Iterator.tabulate(nf) { f =>
-      val rows = new mutable.ArrayBuilder.ofInt
-      val vals = new mutable.ArrayBuilder.ofByte
-      while (p < arr.length && (arr(p) >>> 40).toInt == f) {
-        rows += ((arr(p) >>> 8) & 0xFFFFFFFFL).toInt
-        vals += (arr(p) & 0xFFL).toByte
-        p += 1
-      }
-      ((f, pid), LabeledBlock(SparseBlock(n, rows.result(), vals.result()),
-        labelArr))
+    while (p < fa.length) {
+      val f = fa(p); val k = fill(f)
+      rowsOf(f)(k) = ra(p); valsOf(f)(k) = va(p)
+      fill(f) = k + 1
+      p += 1
     }
-    out ++ Iterator.single(
+    Iterator.tabulate(nf) { f =>
+      ((f, pid), LabeledBlock(SparseBlock(n, rowsOf(f), valsOf(f)), labelArr))
+    } ++ Iterator.single(
       ((nf, pid), LabeledBlock(DenseBlock(labelArr), labelArr)))
   }
 

@@ -39,10 +39,12 @@ final case class Hist3D(xs: Int, ys: Int, zs: Int, counts: Array[Long]) {
  * (feature, block) partitioning, so no task ever scans a whole feature
  * column, and no label column ever crosses the driver.
  *
- * Sparse blocks use implicit-zero patching (reference semantics:
- * InfoTheory.scala:274-310, :324-390): explicit entries count directly,
- * and the zero row of the table receives the label (or label x y)
- * frequency of the block minus that of the explicit rows.
+ * Sparse blocks use implicit-zero accounting (reference semantics:
+ * InfoTheory.scala:274-310, :324-390) in O(nonzeros): the block's label
+ * (or label x y) counts are built once per block, not per feature; each
+ * sparse feature seeds its zero row with them, and every explicit entry
+ * moves one count from the zero row to its own cell. A (feature, block)
+ * pair then costs O(|Y|(*|Z|) + nnz), never more than the table itself.
  */
 object Histograms {
 
@@ -59,42 +61,64 @@ object Histograms {
     val cards = col.data.sparkContext.broadcast(col.cardinality)
     col.data.mapPartitions { it =>
       val acc = new mutable.HashMap[Int, Hist2D]
-      it.foreach { case ((f, _), blk) =>
+      // label counts of block `yfreqBlock`, built by its first sparse
+      // record (dense blocks never need them)
+      var yfreqBlock = -1
+      var yfreq: Array[Long] = null
+      it.foreach { case ((f, block), blk) =>
         if (f != labelIdx) {
           val h = acc.getOrElseUpdate(f, {
             val xs = cards.value(f)
             Hist2D(xs, ys, new Array[Long](xs * ys))
           })
-          accumulate2D(blk.x, blk.label, h.counts, ys)
+          blk.x match {
+            case DenseBlock(bytes) => accumulate2D(bytes, blk.label, h.counts, ys)
+            case sb: SparseBlock =>
+              if (block != yfreqBlock) {
+                yfreq = labelCounts(blk.label, ys)
+                yfreqBlock = block
+              }
+              accumulateSparse2D(sb, blk.label, yfreq, h.counts, ys)
+          }
         }
       }
       acc.iterator
     }.reduceByKey(_.add(_))
   }
 
-  /** Fold one column block against a dense y column into counts(x*ys+y). */
-  private def accumulate2D(xb: ColBlock, ycol: Array[Byte],
-      m: Array[Long], ys: Int): Unit = xb match {
-    case DenseBlock(bytes) =>
-      var i = 0
-      while (i < bytes.length) {
-        m(idx(bytes(i)) * ys + idx(ycol(i))) += 1L
-        i += 1
-      }
-    case SparseBlock(n, rows, vals) =>
-      val yfreq = new Array[Long](ys)
-      var i = 0
-      while (i < n) { yfreq(idx(ycol(i))) += 1L; i += 1 }
-      i = 0
-      while (i < rows.length) {
-        val y = idx(ycol(rows(i)))
-        m(idx(vals(i)) * ys + y) += 1L
-        yfreq(y) -= 1L
-        i += 1
-      }
-      // remaining mass = implicit zeros, at x = 0
-      var y = 0
-      while (y < ys) { m(y) += yfreq(y); y += 1 }
+  /** Fold one dense column block against a dense y column into
+    * counts(x*ys+y). */
+  private def accumulate2D(bytes: Array[Byte], ycol: Array[Byte],
+      m: Array[Long], ys: Int): Unit = {
+    var i = 0
+    while (i < bytes.length) {
+      m(idx(bytes(i)) * ys + idx(ycol(i))) += 1L
+      i += 1
+    }
+  }
+
+  /** Counts of each y value over a block: out(y). */
+  private def labelCounts(ycol: Array[Byte], ys: Int): Array[Long] = {
+    val out = new Array[Long](ys)
+    var i = 0
+    while (i < ycol.length) { out(idx(ycol(i))) += 1L; i += 1 }
+    out
+  }
+
+  /** Sparse [[accumulate2D]]: the zero row starts at the block's y counts
+    * `yfreq`, and each explicit entry moves one count out of it. */
+  private def accumulateSparse2D(xb: SparseBlock, ycol: Array[Byte],
+      yfreq: Array[Long], m: Array[Long], ys: Int): Unit = {
+    var y = 0
+    while (y < ys) { m(y) += yfreq(y); y += 1 }
+    val rows = xb.rows; val vals = xb.values
+    var i = 0
+    while (i < rows.length) {
+      val y = idx(ycol(rows(i)))
+      m(idx(vals(i)) * ys + y) += 1L
+      m(y) -= 1L
+      i += 1
+    }
   }
 
   /**
@@ -117,7 +141,10 @@ object Histograms {
    * spilled-and-reread partition never pins more than the pre-y prefix
    * of one block in task heap. Per-round cost at any scale: one cached
    * scan + the O(nFeatures x blocks) matrix merge — no O(nInstances)
-   * term on any single node.
+   * term on any single node. On sparse blocks the scan is O(nonzeros):
+   * besides densifying y (O(block rows), once per block), each feature
+   * costs O(|Y||Z| + nnz) against the block's label x y counts, which
+   * are built once per block.
    */
   def histogram3D(col: ColumnarData, yFeat: Int): RDD[(Int, Hist3D)] = {
     val ys = col.cardinality(yFeat)
@@ -126,16 +153,24 @@ object Histograms {
     val cards = col.data.sparkContext.broadcast(col.cardinality)
     col.data.mapPartitions { it =>
       val acc = new mutable.HashMap[Int, Hist3D]
+      var curBlock = -1
+      var ycol: Array[Byte] = null
+      // label x y counts of curBlock, built by its first sparse record
+      var yzfreq: Array[Long] = null
       def fold(f: Int, blk: LabeledBlock, ycol: Array[Byte]): Unit =
         if (f != yFeat && f != labelIdx) {
           val h = acc.getOrElseUpdate(f, {
             val xs = cards.value(f)
             Hist3D(xs, ys, zs, new Array[Long](xs * ys * zs))
           })
-          accumulate3D(blk.x, ycol, blk.label, h.counts, h.xs, ys, zs)
+          blk.x match {
+            case DenseBlock(bytes) =>
+              accumulate3D(bytes, ycol, blk.label, h.counts, h.xs, ys)
+            case sb: SparseBlock =>
+              if (yzfreq == null) yzfreq = labelYCounts(ycol, blk.label, ys, zs)
+              accumulateSparse3D(sb, ycol, blk.label, yzfreq, h.counts, h.xs, ys, zs)
+          }
         }
-      var curBlock = -1
-      var ycol: Array[Byte] = null
       val pending = new mutable.ArrayBuffer[(Int, LabeledBlock)]
       it.foreach { case ((f, block), blk) =>
         if (block != curBlock) {
@@ -143,6 +178,7 @@ object Histograms {
             s"block $curBlock lost co-location with feature $yFeat")
           curBlock = block
           ycol = null
+          yzfreq = null
         }
         if (f == yFeat) {
           ycol = Columnar.densify(blk.x)
@@ -157,34 +193,47 @@ object Histograms {
     }.reduceByKey(_.add(_))
   }
 
-  /** Fold one column block against dense y and z columns into
+  /** Fold one dense column block against dense y and z columns into
     * counts((z*xs + x)*ys + y). */
-  private def accumulate3D(xb: ColBlock, ycol: Array[Byte], zcol: Array[Byte],
-      m: Array[Long], xs: Int, ys: Int, zs: Int): Unit = xb match {
-    case DenseBlock(bytes) =>
-      var i = 0
-      while (i < bytes.length) {
-        m((idx(zcol(i)) * xs + idx(bytes(i))) * ys + idx(ycol(i))) += 1L
-        i += 1
-      }
-    case SparseBlock(n, rows, vals) =>
-      val yzfreq = new Array[Long](ys * zs)
-      var i = 0
-      while (i < n) { yzfreq(idx(zcol(i)) * ys + idx(ycol(i))) += 1L; i += 1 }
-      i = 0
-      while (i < rows.length) {
-        val r = rows(i)
-        val y = idx(ycol(r)); val z = idx(zcol(r))
-        m((z * xs + idx(vals(i))) * ys + y) += 1L
-        yzfreq(z * ys + y) -= 1L
-        i += 1
-      }
-      var z = 0
-      while (z < zs) {
-        var y = 0
-        while (y < ys) { m((z * xs) * ys + y) += yzfreq(z * ys + y); y += 1 }
-        z += 1
-      }
+  private def accumulate3D(bytes: Array[Byte], ycol: Array[Byte],
+      zcol: Array[Byte], m: Array[Long], xs: Int, ys: Int): Unit = {
+    var i = 0
+    while (i < bytes.length) {
+      m((idx(zcol(i)) * xs + idx(bytes(i))) * ys + idx(ycol(i))) += 1L
+      i += 1
+    }
+  }
+
+  /** Counts of each (z, y) pair over a block: out(z*ys + y). */
+  private def labelYCounts(ycol: Array[Byte], zcol: Array[Byte],
+      ys: Int, zs: Int): Array[Long] = {
+    val out = new Array[Long](ys * zs)
+    var i = 0
+    while (i < ycol.length) { out(idx(zcol(i)) * ys + idx(ycol(i))) += 1L; i += 1 }
+    out
+  }
+
+  /** Sparse [[accumulate3D]]: each z's zero row starts at the block's
+    * (z, y) counts `yzfreq`, and each explicit entry moves one count out
+    * of it. */
+  private def accumulateSparse3D(xb: SparseBlock, ycol: Array[Byte],
+      zcol: Array[Byte], yzfreq: Array[Long], m: Array[Long],
+      xs: Int, ys: Int, zs: Int): Unit = {
+    var z = 0
+    while (z < zs) {
+      var y = 0
+      while (y < ys) { m((z * xs) * ys + y) += yzfreq(z * ys + y); y += 1 }
+      z += 1
+    }
+    val rows = xb.rows; val vals = xb.values
+    var i = 0
+    while (i < rows.length) {
+      val r = rows(i)
+      val y = idx(ycol(r)); val z = idx(zcol(r))
+      m((z * xs + idx(vals(i))) * ys + y) += 1L
+      m((z * xs) * ys + y) -= 1L
+      i += 1
+    }
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 
 import graft.SparkSpec
 
@@ -60,40 +60,144 @@ class ColumnarSpec extends SparkSpec {
     col.unpersist()
   }
 
+  /** A DataFrame whose partition b holds exactly `blocks(b)`, in order,
+    * padded with empty partitions up to `defaultParallelism` so the
+    * transpose keeps the partitioning (one block per partition). */
+  private def blockedDf(blocks: Seq[Seq[(Double, Vector)]]) = {
+    val pad = Seq.fill(math.max(0,
+      spark.sparkContext.defaultParallelism - blocks.length))(Seq.empty)
+    val parts = blocks ++ pad
+    val rdd = spark.sparkContext.parallelize(parts, parts.length).flatMap(rows => rows)
+    spark.createDataFrame(rdd).toDF("label", "features")
+  }
+
   test("sparse histograms equal dense histograms on the same data") {
+    // 5 blocks of different sizes and label mixes over 7 features:
+    // feature 3 is all zero, feature 4 has nonzeros only in block 2
     val rng = new scala.util.Random(11)
-    val n = 300
-    // ~80% zeros in both features
-    val xs = Seq.fill(n)(if (rng.nextInt(5) == 0) 1 + rng.nextInt(4) else 0)
-    val ys = Seq.fill(n)(if (rng.nextInt(5) == 0) 1 + rng.nextInt(3) else 0)
-    val lbl = Seq.fill(n)(rng.nextInt(3))
-    val sparseRows = (0 until n).map { i =>
-      (lbl(i).toDouble, Vectors.dense(xs(i).toDouble, ys(i).toDouble).toSparse
-        .asInstanceOf[org.apache.spark.ml.linalg.Vector])
+    val nf = 7
+    def label(b: Int): Int = b match {
+      case 0 => 0
+      case 1 => rng.nextInt(2)
+      case 2 => rng.nextInt(3)
+      case 3 => if (rng.nextInt(5) == 0) 0 else 2
+      case _ => if (rng.nextInt(5) == 0) 2 else 1
     }
-    val denseRows = (0 until n).map { i =>
-      (lbl(i).toDouble,
-        Vectors.dense(xs(i).toDouble, ys(i).toDouble))
+    def value(f: Int, b: Int): Double = (f match {
+      case 3 => 0
+      case 4 => if (b == 2 && rng.nextInt(2) == 0) 1 + rng.nextInt(3) else 0
+      case _ => if (rng.nextInt(5) == 0) 1 + rng.nextInt(2 + f % 3) else 0
+    }).toDouble
+    val blocks = Seq(40, 75, 60, 90, 55).zipWithIndex.map { case (size, b) =>
+      Seq.fill(size)((label(b).toDouble, Array.tabulate(nf)(value(_, b))))
     }
-    val sCol = Columnar.fromLabeledDf(
-      spark.createDataFrame(sparseRows).toDF("label", "features").repartition(3))
-    val dCol = Columnar.fromLabeledDf(
-      spark.createDataFrame(denseRows).toDF("label", "features").repartition(3))
+    val sCol = Columnar.fromLabeledDf(blockedDf(blocks.map(_.map {
+      case (l, v) => (l, Vectors.dense(v).toSparse: Vector) })))
+    val dCol = Columnar.fromLabeledDf(blockedDf(blocks.map(_.map {
+      case (l, v) => (l, Vectors.dense(v): Vector) })))
+    // the premise: five blocks, pairwise different label counts, sparse
+    val labelMix = sCol.collectColumn(sCol.labelIndex).values
+      .map(_.groupBy(identity).view.mapValues(_.length).toMap).toSeq
+    assert(labelMix.length == 5 && labelMix.distinct.length == 5)
+    assert(sCol.data.filter(_._1._1 < nf).map(_._2.x)
+      .collect().forall(_.isInstanceOf[SparseBlock]))
     assert(sCol.cardinality.toSeq == dCol.cardinality.toSeq)
+    assert(sCol.cardinality(3) == 1)
+
     val h2s = Histograms.histogram2D(sCol).collect().toMap
     val h2d = Histograms.histogram2D(dCol).collect().toMap
-    assert(h2s.keySet == h2d.keySet)
+    assert(h2s.keySet == (0 until nf).toSet && h2d.keySet == h2s.keySet)
     h2s.foreach { case (f, h) =>
       assert(h.counts.toSeq == h2d(f).counts.toSeq, s"2D mismatch at f=$f")
+      assert(h.total == blocks.map(_.length).sum)
     }
-    val h3s = Histograms.histogram3D(sCol, 1).collect().toMap
-    val h3d = Histograms.histogram3D(dCol, 1).collect().toMap
-    assert(h3s(0).counts.toSeq == h3d(0).counts.toSeq)
+    // y = a sparse feature, then y = the all-zero feature
+    Seq(1, 3).foreach { yFeat =>
+      val h3s = Histograms.histogram3D(sCol, yFeat).collect().toMap
+      val h3d = Histograms.histogram3D(dCol, yFeat).collect().toMap
+      assert(h3s.keySet == (0 until nf).toSet - yFeat && h3d.keySet == h3s.keySet)
+      h3s.foreach { case (f, h) =>
+        assert(h.counts.toSeq == h3d(f).counts.toSeq,
+          s"3D mismatch at f=$f, y=$yFeat")
+      }
+    }
     // frequencies kernel agrees too
     val fs = Histograms.frequenciesByFeature(sCol)
     val fd = Histograms.frequenciesByFeature(dCol)
     fs.foreach { case (f, a) => assert(a.toSeq == fd(f).toSeq) }
     sCol.unpersist(); dCol.unpersist()
+  }
+
+  test("sparse transpose layout: mixed rows, explicit zeros, empty blocks") {
+    val nf = 5
+    def sp(ids: Array[Int], vals: Array[Double]): Vector = Vectors.sparse(nf, ids, vals)
+    def dn(vals: Double*): Vector = Vectors.dense(vals.toArray)
+    val blocks = Seq(
+      // sparse first (sparse mode), dense rows mixed in; 0.0 stored
+      // explicitly at (row 0, feature 2) and (row 2, feature 4); feature
+      // 2 and feature 3 end up with no nonzeros in this block
+      Seq(
+        (0.0, sp(Array(0, 2), Array(3.0, 0.0))),
+        (1.0, dn(0, 1, 0, 0, 2)),
+        (1.0, sp(Array(1, 4), Array(5.0, 0.0))),
+        (0.0, dn(7, 0, 0, 0, 0)),
+        (1.0, sp(Array(0, 1, 4), Array(1.0, 2.0, 3.0)))),
+      // dense first (dense mode), sparse rows mixed in
+      Seq(
+        (1.0, dn(0, 4, 0, 1, 0)),
+        (0.0, sp(Array(3), Array(0.0))),
+        (0.0, sp(Array(0, 4), Array(2.0, 6.0))),
+        (1.0, dn(1, 0, 2, 0, 0))),
+      // sparse only: every entry of feature 1
+      Seq(
+        (0.0, sp(Array(1), Array(9.0))),
+        (1.0, sp(Array(1, 2), Array(1.0, 1.0))),
+        (0.0, sp(Array(1), Array(4.0)))))
+    val col = Columnar.fromLabeledDf(blockedDf(blocks))
+    val recs = col.data.collect().map { case ((f, b), blk) => (f, b) -> blk }.toMap
+    assert(recs.keySet == (for (f <- 0 to nf; b <- blocks.indices) yield (f, b)).toSet)
+    blocks.zipWithIndex.foreach { case (rows, b) =>
+      val labels = rows.map(_._1.toByte)
+      val sparseMode = rows.head._2.isInstanceOf[org.apache.spark.ml.linalg.SparseVector]
+      (0 until nf).foreach { f =>
+        val column = rows.map(_._2(f).toByte)
+        val blk = recs((f, b))
+        assert(blk.label.toSeq == labels, s"label at f=$f, b=$b")
+        blk.x match {
+          case SparseBlock(n, rs, vs) =>
+            assert(sparseMode, s"SparseBlock in dense-mode block $b")
+            assert(n == rows.length)
+            assert(rs.toSeq.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
+              s"rows not strictly increasing at f=$f, b=$b")
+            val nz = column.indices.filter(column(_) != 0)
+            assert(rs.toSeq == nz, s"rows at f=$f, b=$b")
+            assert(vs.toSeq == nz.map(column), s"values at f=$f, b=$b")
+          case DenseBlock(vs) =>
+            assert(!sparseMode, s"DenseBlock in sparse-mode block $b")
+            assert(vs.toSeq == column, s"values at f=$f, b=$b")
+        }
+      }
+      assert(recs((nf, b)).x == DenseBlock(recs((nf, b)).label))
+      assert(recs((nf, b)).label.toSeq == labels)
+    }
+    // the cases above are really exercised: empty sparse blocks, one of
+    // them (feature 2) holding only a dropped explicit zero
+    Seq(2, 3).foreach { f =>
+      val blk = recs((f, 0)).x.asInstanceOf[SparseBlock]
+      assert(blk.rows.isEmpty && blk.values.isEmpty && blk.n == 5)
+    }
+    assert(recs((4, 0)).x.asInstanceOf[SparseBlock].rows.toSeq == Seq(1, 4))
+    col.unpersist()
+  }
+
+  test("empty input is refused as empty") {
+    val empty = spark.createDataFrame(Seq.empty[(Double, Vector)])
+      .toDF("label", "features")
+    val e = intercept[IllegalArgumentException](Columnar.fromLabeledDf(empty))
+    assert(e.getMessage.contains("empty input"))
+    val e2 = intercept[IllegalArgumentException](
+      new graft.ml.InfoThSelector().fit(empty))
+    assert(e2.getMessage.contains("empty input"))
   }
 
   test("block-major co-location: every block's columns share one partition") {
