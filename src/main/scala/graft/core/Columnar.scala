@@ -29,46 +29,37 @@ final case class SparseBlock(n: Int, rows: Array[Int], values: Array[Byte])
     extends ColBlock
 
 /**
+ * One instance block of the working set: every feature's column block and
+ * the block's class labels, all row-aligned. Column `features.length` is
+ * the label (the reference appends it the same way, InfoSelector.scala:431).
+ */
+final case class ColumnBlock(features: Array[ColBlock], label: Array[Byte]) {
+  /** Number of instances in the block. */
+  def n: Int = label.length
+
+  /** Column `f`: feature `f`, or the label when `f == features.length`. */
+  def column(f: Int): ColBlock =
+    if (f == features.length) DenseBlock(label) else features(f)
+}
+
+/**
  * Columnar (transposed) working set: the engine's core internal
  * representation, mirroring the reference's `ColumnarData`
  * (reference: InfoSelector.scala:73-75) re-expressed Spark-first.
  *
- * Layout: `RDD[((feature, block), LabeledBlock)]` where `block` is the
- * source partition id and each record carries BOTH that feature's column
- * block and the block's class-label bytes. The label is also kept as its
- * own column at index `nFeatures` (the reference appends it the same
- * way, InfoSelector.scala:431).
- *
- * Scale notes (100 TB design):
- * - BLOCK-MAJOR CO-LOCATION: all columns of one instance block stay in
- *   the block's own partition — the transpose is a pure mapPartitions
- *   (ZERO shuffle; the only exchange anywhere is the optional
- *   parallelism repartition of the raw rows, which ships unsafe rows
- *   once). Every per-block pairing the kernels need (x vs label, x vs
- *   the per-round selected column y) is partition-local by
- *   construction, so NO column is ever collected, broadcast, or
- *   shuffled during selection: at 10^11 rows a collected/broadcast
- *   column (~100 GB) would exceed both driver and executor memory —
- *   here the per-task working set stays O(block), independent of
- *   nInstances.
- * - Scan parallelism = number of blocks, which grows with data volume
- *   (the reference's partitionByRange(0) by feature,
- *   InfoSelector.scala:436, would make one task scan an entire feature
- *   column — a straggler at billions of rows). A feature's partial
- *   histograms merge through a keyed reduce that shuffles only
- *   O(nFeatures x blocks) tiny count matrices (<= 6 KB each for a
- *   256x|Y| table) — independent of nInstances.
- * - The label column rides along with every feature block (in-memory
- *   it's one shared array reference per block, not a copy).
- * - Blocks carry their own id, so block-id keying can never break the
- *   x/y alignment invariant (SURVEY §7 risk 1): alignment is by block
- *   id, never partition placement — and co-location makes the aligned
- *   pairing free.
+ * Layout: one [[ColumnBlock]] per non-empty partition; the block id is the
+ * partition index. A block is the unit every kernel pairs columns in
+ * (feature vs label, feature vs the round's selected column), so all of a
+ * block's columns sit together by construction: the transpose is a pure
+ * `mapPartitions` with no shuffle, and no column is ever collected,
+ * broadcast or shuffled during selection. Scan parallelism is the number
+ * of blocks, which grows with the data (the reference's `partitionByRange`
+ * by feature, InfoSelector.scala:436, would make one task scan a whole
+ * feature column); histogram merges ship O(nFeatures x blocks) small count
+ * matrices, independent of nInstances.
  */
-final case class LabeledBlock(x: ColBlock, label: Array[Byte])
-
 final case class ColumnarData(
-    data: RDD[((Int, Int), LabeledBlock)],
+    data: RDD[ColumnBlock],
     nInstances: Long,
     nFeatures: Int,
     cardinality: Array[Int]) {
@@ -76,14 +67,12 @@ final case class ColumnarData(
   /** Index of the class-label column. */
   def labelIndex: Int = nFeatures
 
-  /** Collect one feature's blocks (block id -> densified bytes).
-    * TEST/DEBUG ONLY — the engine never collects a column: the greedy
-    * loop's per-round y column is read partition-locally thanks to
-    * block-major co-location (see [[Histograms.histogram3D]]). */
+  /** Collect one column's blocks (block id -> densified bytes).
+    * TEST/DEBUG ONLY — the engine never collects a column. */
   def collectColumn(feature: Int): Map[Int, Array[Byte]] =
-    data.filter(_._1._1 == feature)
-      .map { case ((_, b), blk) => (b, Columnar.densify(blk.x)) }
-      .collect().toMap
+    data.mapPartitionsWithIndex { (b, it) =>
+      it.map(blk => (b, Columnar.densify(blk.column(feature))))
+    }.collect().toMap
 
   def unpersist(): Unit = data.unpersist(blocking = false)
 }
@@ -118,9 +107,9 @@ object Columnar {
   }
 
   /**
-   * Block-local transpose of a `(label, features)` DataFrame into
-   * columnar blocks (reference semantics: InfoSelector.scala:421-438),
-   * each carrying the block's label bytes.
+   * Block-local transpose of a `(label, features)` DataFrame into one
+   * [[ColumnBlock]] per partition (reference semantics:
+   * InfoSelector.scala:421-438).
    *
    * The storage mode follows the input vectors: sparse rows transpose
    * into [[SparseBlock]]s (implicit zeros never materialize — neither in
@@ -142,16 +131,14 @@ object Columnar {
       org.apache.spark.sql.functions.col(featuresCol))
     val spread = spreadToParallelism(projected)
     val first = df.select(featuresCol).head(1).headOption
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input: the selector needs at least one row"))
+      .getOrElse(throw emptyInput)
       .getAs[Vector](0)
     if (first == null) throw nullIn(featuresCol)
     val nf = first.size
-    val nCols = nf + 1
     val rows = spread.queryExecution.toRdd
 
-    val transposed: RDD[((Int, Int), LabeledBlock)] =
-      rows.mapPartitionsWithIndex { (pid, it0) =>
+    val transposed: RDD[ColumnBlock] =
+      rows.mapPartitions { it0 =>
         // UnsafeRow reads a null slot as 0 (label) or fails with a bare
         // NPE (features): refuse nulls by column name instead
         val it = it0.map { row =>
@@ -164,12 +151,15 @@ object Columnar {
           // ml.VectorUDT layout: struct<type:byte, size:int,
           //   indices:array<int>, values:array<double>>; type 0 = sparse
           val sparseFirst = it.head.getStruct(1, 4).getByte(0) == 0
-          if (sparseFirst) transposeSparse(pid, it, nf)
-          else transposeDense(pid, it, nf)
+          Iterator.single(
+            if (sparseFirst) transposeSparse(it, nf) else transposeDense(it, nf))
         }
       }
-    finish(transposed, nCols)
+    finish(transposed, nf)
   }
+
+  private def emptyInput = new IllegalArgumentException(
+    "empty input: the selector needs at least one row")
 
   private def nullIn(column: String) = new IllegalArgumentException(
     s"null value in column $column: the selector's input must be non-null")
@@ -190,9 +180,9 @@ object Columnar {
     if (s.getByte(0) == 0) s.getInt(1) else s.getArray(3).numElements()
 
   /** Dense-mode partition transpose: one byte builder per column. */
-  private def transposeDense(pid: Int,
+  private def transposeDense(
       it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      nf: Int): Iterator[((Int, Int), LabeledBlock)] = {
+      nf: Int): ColumnBlock = {
     val builders = Array.fill(nf)(new mutable.ArrayBuilder.ofByte)
     val labels = new mutable.ArrayBuilder.ofByte
     it.foreach { row =>
@@ -216,12 +206,8 @@ object Columnar {
       }
       labels += toByteChecked(row.getDouble(0))
     }
-    val labelArr = labels.result()
-    val out = Iterator.tabulate(nf) { f =>
-      ((f, pid), LabeledBlock(DenseBlock(builders(f).result()), labelArr))
-    }
-    out ++ Iterator.single(
-      ((nf, pid), LabeledBlock(DenseBlock(labelArr), labelArr)))
+    ColumnBlock(builders.map(b => DenseBlock(b.result()): ColBlock),
+      labels.result())
   }
 
   /**
@@ -231,13 +217,13 @@ object Columnar {
    * a single pass scatters every entry into its feature's arrays. Entries
    * arrive in row order, so rows stay strictly increasing within each
    * [[SparseBlock]]. Work and memory are O(nonzeros + features), with no
-   * sort. Every feature emits a record (possibly with zero explicit
-   * entries) so the histogram kernels see every (feature, block) cell —
-   * implicit zeros are accounted for in-kernel, never materialized.
+   * sort. Every feature gets a column (possibly with zero explicit
+   * entries) — implicit zeros are accounted for in-kernel, never
+   * materialized.
    */
-  private def transposeSparse(pid: Int,
+  private def transposeSparse(
       it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      nf: Int): Iterator[((Int, Int), LabeledBlock)] = {
+      nf: Int): ColumnBlock = {
     val counts = new Array[Int](nf)
     val feats = new mutable.ArrayBuilder.ofInt
     val rowIds = new mutable.ArrayBuilder.ofInt
@@ -265,7 +251,6 @@ object Columnar {
       labels += toByteChecked(row.getDouble(0))
       rowIdx += 1
     }
-    val labelArr = labels.result()
     val n = rowIdx
     val rowsOf = Array.tabulate(nf)(f => new Array[Int](counts(f)))
     val valsOf = Array.tabulate(nf)(f => new Array[Byte](counts(f)))
@@ -278,10 +263,8 @@ object Columnar {
       fill(f) = k + 1
       p += 1
     }
-    Iterator.tabulate(nf) { f =>
-      ((f, pid), LabeledBlock(SparseBlock(n, rowsOf(f), valsOf(f)), labelArr))
-    } ++ Iterator.single(
-      ((nf, pid), LabeledBlock(DenseBlock(labelArr), labelArr)))
+    ColumnBlock(Array.tabulate(nf)(f => SparseBlock(n, rowsOf(f), valsOf(f))),
+      labels.result())
   }
 
   /**
@@ -303,8 +286,8 @@ object Columnar {
     val rows = spreadToParallelism(df.select((featureCols :+ labelCol).map(
       c => org.apache.spark.sql.functions.col(c).cast("int")): _*))
       .queryExecution.toRdd
-    val transposed: RDD[((Int, Int), LabeledBlock)] =
-      rows.mapPartitionsWithIndex { (pid, it) =>
+    val transposed: RDD[ColumnBlock] =
+      rows.mapPartitions { it =>
         val builders = Array.fill(nCols)(new mutable.ArrayBuilder.ofByte)
         var n = 0
         it.foreach { row =>
@@ -321,56 +304,41 @@ object Columnar {
           n += 1
         }
         if (n == 0) Iterator.empty
-        else {
-          val labelArr = builders(nCols - 1).result()
-          Iterator.tabulate(nf)(f =>
-            ((f, pid), LabeledBlock(DenseBlock(builders(f).result()), labelArr))
-          ) ++ Iterator.single(
-            ((nf, pid), LabeledBlock(DenseBlock(labelArr), labelArr)))
-        }
+        else Iterator.single(ColumnBlock(
+          Array.tabulate(nf)(f => DenseBlock(builders(f).result())),
+          builders(nf).result()))
       }
-    finish(transposed, nCols)
+    finish(transposed, nf)
   }
 
-  /** Persist (block-major: records stay in their source partition — no
-    * shuffle, so each block's columns are co-located with each other by
-    * construction) and run the single stats pass: per-feature (max
-    * value, instance count) in one job (cardinality pre-pass per
-    * reference InfoTheory.scala:415-419 fused with the instance count). */
-  private def finish(
-      transposed: RDD[((Int, Int), LabeledBlock)],
-      nCols: Int): ColumnarData = {
-    val partitioned = transposed
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val stats = partitioned
-      .map { case ((f, _), blk) =>
-        val (m, cnt) = blk.x match {
-          case DenseBlock(bytes) =>
-            var mx = 0
-            var i = 0
-            while (i < bytes.length) {
-              val v = idx(bytes(i)); if (v > mx) mx = v; i += 1
-            }
-            (mx, bytes.length.toLong)
-          case SparseBlock(n, _, vals) =>
-            var mx = 0
-            var i = 0
-            while (i < vals.length) {
-              val v = idx(vals(i)); if (v > mx) mx = v; i += 1
-            }
-            (mx, n.toLong)
-        }
-        (f, (m, cnt))
+  /** Persist the blocks and run the single stats pass: per-column max
+    * value (cardinality pre-pass, reference InfoTheory.scala:415-419)
+    * fused with the instance count, one map + fold over the blocks. */
+  private def finish(blocks: RDD[ColumnBlock], nf: Int): ColumnarData = {
+    val cached = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    val (maxes, nInstances) = cached
+      .map(blk => (Array.tabulate(nf + 1)(f => maxValue(blk.column(f))), blk.n.toLong))
+      .fold((new Array[Int](nf + 1), 0L)) { case ((ma, na), (mb, nb)) =>
+        var f = 0
+        while (f <= nf) { ma(f) = math.max(ma(f), mb(f)); f += 1 }
+        (ma, na + nb)
       }
-      .reduceByKey((a, b) => (math.max(a._1, b._1), a._2 + b._2))
-      .collect()
-    val cardinality = new Array[Int](nCols)
-    var nInstances = 0L
-    stats.foreach { case (f, (m, c)) =>
-      cardinality(f) = m + 1
-      if (f == nCols - 1) nInstances = c
+    if (nInstances == 0) {
+      cached.unpersist(blocking = false)
+      throw emptyInput
     }
-    ColumnarData(partitioned, nInstances, nCols - 1, cardinality)
+    ColumnarData(cached, nInstances, nf, maxes.map(_ + 1))
+  }
+
+  /** Largest value in a column block (0 when it holds no explicit value). */
+  private def maxValue(blk: ColBlock): Int = {
+    val vals = blk match {
+      case DenseBlock(bytes) => bytes
+      case SparseBlock(_, _, values) => values
+    }
+    var mx = 0
+    var i = 0
+    while (i < vals.length) { val v = idx(vals(i)); if (v > mx) mx = v; i += 1 }
+    mx
   }
 }

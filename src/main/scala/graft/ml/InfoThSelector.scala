@@ -52,19 +52,20 @@ trait InfoThSelectorParams extends Params
  * Spark-native re-expression of the reference selector
  * (reference: InfoSelector.scala fit path, traced in SURVEY §3.1):
  *
- *  1. block-local columnar transpose + hash partition by feature
- *     (one shuffle of O(cells) bytes), persisted;
- *  2. one job: 2-D histograms vs. the broadcast class column -> per-
- *     feature relevance I(Xi; Y) collected to the driver (nFeatures rows);
+ *  1. block-local columnar transpose into one [[graft.core.ColumnBlock]]
+ *     per partition (every feature column plus the block's labels; no
+ *     shuffle), persisted;
+ *  2. one job: 2-D histograms of each feature vs. its block's class
+ *     column -> per-feature relevance I(Xi; Y) collected to the driver
+ *     (nFeatures rows);
  *  3. driver-side greedy loop (replaces the Flink bulk iteration,
  *     reference InfoSelector.scala:354-364 — criterion state is tiny, so
  *     distributed iteration state buys nothing): per round, one job
- *     builds 3-D histograms against the newly selected column — read
- *     partition-locally via block-major co-location, with NO collect and
- *     NO broadcast of any column — and returns (feature, mi, cmi) rows
- *     the driver folds into the criteria. MIM short-circuits to top-k
- *     relevance (reference InfoSelector.scala:313-315) with zero extra
- *     passes.
+ *     builds 3-D histograms against the newly selected column — read from
+ *     the same block as each candidate, with NO collect and NO broadcast
+ *     of any column — and returns (feature, mi, cmi) rows the driver
+ *     folds into the criteria. MIM short-circuits to top-k relevance
+ *     (reference InfoSelector.scala:313-315) with zero extra passes.
  *  4. model holds the sorted selected indices
  *     (reference InfoSelector.scala:491).
  *
@@ -116,17 +117,19 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
 
     val n = colData.nInstances
     require(n > 0, "empty input")
+    // the param validator accepts any case (a ParamMap bypasses setCriterion)
+    val criterionKey = criterionName.toLowerCase
 
-    // Relevances: one histogram pass vs. the block-carried class column
+    // Relevances: one histogram pass vs. each block's class column
     // (reference: initializeDense, InfoTheory.scala:409-435). No label
-    // collect/broadcast — the label rides inside every block.
+    // collect/broadcast — the label sits inside every block.
     val relevances = Histograms.histogram2D(colData)
       .mapValues(h => InfoTheory.mutualInfo(h, n))
       .collect()
 
     val nToSelect = math.min(k, colData.nFeatures)
 
-    if (criterionName == InfoThCriterionFactory.Mim) {
+    if (criterionKey == InfoThCriterionFactory.Mim) {
       // MIM short-circuit: pure top-k on relevance, ties broken by
       // lowest index (the reference's tie behavior is nondeterministic
       // — SURVEY §7 risk 4 — we fix it deterministically).
@@ -135,7 +138,7 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
 
     val criteria: Array[(Int, InfoThCriterion)] = relevances.map {
       case (f, rel) =>
-        f -> InfoThCriterionFactory(criterionName, beta).init(rel)
+        f -> InfoThCriterionFactory(criterionKey, beta).init(rel)
     }
 
     val selected = collection.mutable.ArrayBuffer.empty[(Int, Double)]
@@ -151,10 +154,10 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
       maxCrit.setValid(false)
       if (selected.length < nToSelect) {
         // One job: 3-D histograms vs. (selected, class) -> (mi, cmi)
-        // (reference: getRedundancies, InfoTheory.scala:445-461). The
-        // selected column is read partition-locally (block-major
-        // co-location) — nothing is collected or broadcast; only the
-        // O(nFeatures) (mi, cmi) rows reach the driver.
+        // (reference: getRedundancies, InfoTheory.scala:445-461). Each
+        // block pairs its own selected column with its candidates —
+        // nothing is collected or broadcast; only the O(nFeatures)
+        // (mi, cmi) rows reach the driver.
         val redundancies =
           Histograms.histogram3D(colData, maxFeat)
             .mapValues(h => InfoTheory.miAndCmi(h, n))
@@ -210,26 +213,32 @@ class InfoThSelectorModel(
 object InfoThSelectorModel extends MLReadable[InfoThSelectorModel] {
 
   /** Vector gather (reference: InfoSelector.scala:229-263). `indices`
-    * must be sorted ascending. */
-  def gather(v: Vector, indices: Array[Int]): Vector = v match {
-    case dv: DenseVector =>
-      val out = new Array[Double](indices.length)
-      var i = 0
-      while (i < indices.length) { out(i) = dv.values(indices(i)); i += 1 }
-      Vectors.dense(out)
-    case sv: SparseVector =>
-      // sorted-merge intersection, reindexed to the compacted space
-      // (reference sparse loop, InfoSelector.scala:242-257)
-      val outIdx = collection.mutable.ArrayBuilder.make[Int]
-      val outVal = collection.mutable.ArrayBuilder.make[Double]
-      var i = 0; var j = 0
-      while (i < sv.indices.length && j < indices.length) {
-        val a = sv.indices(i); val b = indices(j)
-        if (a == b) { outIdx += j; outVal += sv.values(i); i += 1; j += 1 }
-        else if (a < b) i += 1
-        else j += 1
-      }
-      Vectors.sparse(indices.length, outIdx.result(), outVal.result())
+    * must be sorted ascending; a vector too narrow to hold the largest
+    * index is refused rather than read as zeros. */
+  def gather(v: Vector, indices: Array[Int]): Vector = {
+    require(indices.isEmpty || v.size > indices.last,
+      s"vector of size ${v.size} is narrower than the ${indices.last + 1} " +
+        "features the selected indices need")
+    v match {
+      case dv: DenseVector =>
+        val out = new Array[Double](indices.length)
+        var i = 0
+        while (i < indices.length) { out(i) = dv.values(indices(i)); i += 1 }
+        Vectors.dense(out)
+      case sv: SparseVector =>
+        // sorted-merge intersection, reindexed to the compacted space
+        // (reference sparse loop, InfoSelector.scala:242-257)
+        val outIdx = collection.mutable.ArrayBuilder.make[Int]
+        val outVal = collection.mutable.ArrayBuilder.make[Double]
+        var i = 0; var j = 0
+        while (i < sv.indices.length && j < indices.length) {
+          val a = sv.indices(i); val b = indices(j)
+          if (a == b) { outIdx += j; outVal += sv.values(i); i += 1; j += 1 }
+          else if (a < b) i += 1
+          else j += 1
+        }
+        Vectors.sparse(indices.length, outIdx.result(), outVal.result())
+    }
   }
 
   private[InfoThSelectorModel] class Writer(instance: InfoThSelectorModel)

@@ -10,8 +10,8 @@ class SparseQueriesSpec extends SparkSpec {
   test("q_sparse_* queries run on SparseBlocks end-to-end") {
     val dir = "/root/testdata/sf0.001"
     val col = Queries.sparseColumnar(spark, dir)
-    val kinds = col.data.filter(_._1._1 < col.nFeatures)
-      .map(_._2.x.getClass.getSimpleName).distinct().collect().toSet
+    val kinds = col.data.flatMap(_.features.toSeq)
+      .map(_.getClass.getSimpleName).distinct().collect().toSet
     assert(kinds == Set(classOf[SparseBlock].getSimpleName))
     // and the registered query over the same cache returns rows
     assert(Queries.sparseHist2d(spark, dir).count() > 0)

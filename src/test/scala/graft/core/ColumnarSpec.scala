@@ -50,8 +50,8 @@ class ColumnarSpec extends SparkSpec {
     val df = spark.createDataFrame(data).toDF("label", "features")
     val col = Columnar.fromLabeledDf(df)
     // feature blocks are SparseBlocks (no densification in the cache)
-    val kinds = col.data.filter(_._1._1 < col.nFeatures)
-      .map(_._2.x.getClass.getSimpleName).distinct().collect().toSet
+    val kinds = col.data.flatMap(_.features.toSeq)
+      .map(_.getClass.getSimpleName).distinct().collect().toSet
     assert(kinds == Set("SparseBlock"))
     assert(col.collectColumn(0).values.flatten.map(_.toInt).toSeq.sorted == Seq(0, 5))
     assert(col.collectColumn(1).values.flatten.map(_.toInt).toSeq.sorted == Seq(0, 2))
@@ -99,7 +99,7 @@ class ColumnarSpec extends SparkSpec {
     val labelMix = sCol.collectColumn(sCol.labelIndex).values
       .map(_.groupBy(identity).view.mapValues(_.length).toMap).toSeq
     assert(labelMix.length == 5 && labelMix.distinct.length == 5)
-    assert(sCol.data.filter(_._1._1 < nf).map(_._2.x)
+    assert(sCol.data.flatMap(_.features.toSeq)
       .collect().forall(_.isInstanceOf[SparseBlock]))
     assert(sCol.cardinality.toSeq == dCol.cardinality.toSeq)
     assert(sCol.cardinality(3) == 1)
@@ -154,16 +154,18 @@ class ColumnarSpec extends SparkSpec {
         (1.0, sp(Array(1, 2), Array(1.0, 1.0))),
         (0.0, sp(Array(1), Array(4.0)))))
     val col = Columnar.fromLabeledDf(blockedDf(blocks))
-    val recs = col.data.collect().map { case ((f, b), blk) => (f, b) -> blk }.toMap
-    assert(recs.keySet == (for (f <- 0 to nf; b <- blocks.indices) yield (f, b)).toSet)
+    val recs = col.data.mapPartitionsWithIndex((b, it) => it.map(b -> _))
+      .collect().toMap
+    assert(recs.keySet == blocks.indices.toSet)
     blocks.zipWithIndex.foreach { case (rows, b) =>
       val labels = rows.map(_._1.toByte)
       val sparseMode = rows.head._2.isInstanceOf[org.apache.spark.ml.linalg.SparseVector]
+      val blk = recs(b)
+      assert(blk.features.length == nf, s"columns in block $b")
+      assert(blk.label.toSeq == labels, s"label at b=$b")
       (0 until nf).foreach { f =>
         val column = rows.map(_._2(f).toByte)
-        val blk = recs((f, b))
-        assert(blk.label.toSeq == labels, s"label at f=$f, b=$b")
-        blk.x match {
+        blk.features(f) match {
           case SparseBlock(n, rs, vs) =>
             assert(sparseMode, s"SparseBlock in dense-mode block $b")
             assert(n == rows.length)
@@ -177,16 +179,15 @@ class ColumnarSpec extends SparkSpec {
             assert(vs.toSeq == column, s"values at f=$f, b=$b")
         }
       }
-      assert(recs((nf, b)).x == DenseBlock(recs((nf, b)).label))
-      assert(recs((nf, b)).label.toSeq == labels)
+      assert(blk.column(nf) == DenseBlock(blk.label))
     }
     // the cases above are really exercised: empty sparse blocks, one of
     // them (feature 2) holding only a dropped explicit zero
     Seq(2, 3).foreach { f =>
-      val blk = recs((f, 0)).x.asInstanceOf[SparseBlock]
+      val blk = recs(0).features(f).asInstanceOf[SparseBlock]
       assert(blk.rows.isEmpty && blk.values.isEmpty && blk.n == 5)
     }
-    assert(recs((4, 0)).x.asInstanceOf[SparseBlock].rows.toSeq == Seq(1, 4))
+    assert(recs(0).features(4).asInstanceOf[SparseBlock].rows.toSeq == Seq(1, 4))
     col.unpersist()
   }
 
@@ -198,24 +199,37 @@ class ColumnarSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException](
       new graft.ml.InfoThSelector().fit(empty))
     assert(e2.getMessage.contains("empty input"))
+    val emptyInts = spark.createDataFrame(Seq.empty[(Int, Int)]).toDF("a", "label")
+    val e3 = intercept[IllegalArgumentException](
+      Columnar.fromIntColumns(emptyInts, Seq("a"), "label"))
+    assert(e3.getMessage.contains("empty input"))
   }
 
   test("block-major co-location: every block's columns share one partition") {
+    // one record per non-empty partition holds all nf feature columns and
+    // the block's labels, so a block never spans partitions
     val rng = new scala.util.Random(3)
     val rows = Seq.fill(64)((rng.nextInt(2).toDouble,
       Array(rng.nextInt(8).toDouble, rng.nextInt(8).toDouble)))
     val col = Columnar.fromLabeledDf(labeledDf(rows).repartition(5))
-    val placement = col.data.mapPartitionsWithIndex { (pid, it) =>
-      it.map { case ((f, b), _) => (b, (pid, f)) }
-    }.collect().groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    placement.foreach { case (b, recs) =>
-      // one partition per block…
-      assert(recs.map(_._1).distinct.length == 1,
-        s"block $b spread over partitions ${recs.map(_._1).distinct.toSeq}")
-      // …holding every column of that block (features + label)
-      assert(recs.map(_._2).sorted.toSeq == (0 to col.nFeatures),
-        s"block $b missing columns")
+    val perPartition = col.data.mapPartitions(it => Iterator.single(it.toList))
+      .collect()
+    assert(perPartition.forall(_.length <= 1),
+      s"records per partition: ${perPartition.map(_.length).toSeq}")
+    val blocks = perPartition.flatten
+    assert(blocks.length > 1)
+    blocks.foreach { blk =>
+      assert(blk.n > 0, "empty block")
+      assert(blk.features.length == col.nFeatures)
+      assert(blk.features.forall(_.n == blk.label.length))
     }
+    // every block's columns are row-aligned with its labels
+    val rebuilt = blocks.toSeq.flatMap { blk =>
+      val cols = blk.features.map(Columnar.densify)
+      blk.label.indices.map(i => (blk.label(i).toDouble,
+        cols.map(_(i).toDouble).mkString(",")))
+    }
+    assert(rebuilt.sorted == rows.map(r => (r._1, r._2.mkString(","))).sorted)
     col.unpersist()
   }
 
@@ -269,6 +283,16 @@ class ColumnarSpec extends SparkSpec {
       Vectors.sparse(3, Array(i % 3), Array(2.0))))
     assertRefusesNull(nullLabel, "y")
     assertRefusesNull(nullVec, "x")
+  }
+
+  test("histogram3D refuses a y that is not a feature") {
+    val col = Columnar.fromLabeledDf(labeledDf(Seq(
+      (0.0, Array(1.0, 2.0)), (1.0, Array(0.0, 3.0)))))
+    Seq(-1, col.nFeatures, col.nFeatures + 1).foreach { y =>
+      val e = intercept[IllegalArgumentException](Histograms.histogram3D(col, y))
+      assert(e.getMessage.contains(s"got $y"))
+    }
+    col.unpersist()
   }
 
   test("histogram2D/3D match brute-force counts") {

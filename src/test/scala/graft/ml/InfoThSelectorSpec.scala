@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.param.ParamMap
 
 import graft.SparkSpec
 
@@ -84,6 +85,52 @@ class InfoThSelectorSpec extends SparkSpec {
       Vectors.sparse(4, Array(0, 3), Array(5.0, 2.0)), idx)
     assert(sparse.toArray.toSeq == Seq(0.0, 2.0))
     assert(sparse.isInstanceOf[org.apache.spark.ml.linalg.SparseVector])
+
+    // a vector narrower than the largest selected index is refused, dense
+    // or sparse, with both sizes named
+    Seq(Vectors.dense(9, 8, 7), Vectors.sparse(3, Array(1), Array(5.0))).foreach { v =>
+      val e = intercept[IllegalArgumentException](InfoThSelectorModel.gather(v, idx))
+      assert(e.getMessage.contains("size 3") && e.getMessage.contains("the 4 "),
+        e.getMessage)
+    }
+  }
+
+  /** Number of Spark jobs `body` starts, counted by a SparkListener. A
+    * marker job run afterwards flushes the listener queue: events reach a
+    * listener in order, so once the marker is seen every job of `body` is. */
+  private def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "listener never saw the marker job")
+      groups.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("criterion case does not change the work: MIM runs the jobs mim does") {
+    val est = new InfoThSelector().setNumTopFeatures(3)
+    var lower: InfoThSelectorModel = null
+    var upper: InfoThSelectorModel = null
+    val lowerJobs = jobsRunBy { lower = est.fit(copyFixture, ParamMap(est.criterion -> "mim")) }
+    val upperJobs = jobsRunBy { upper = est.fit(copyFixture, ParamMap(est.criterion -> "MIM")) }
+    assert(lowerJobs > 0)
+    assert(upperJobs == lowerJobs, s"MIM ran $upperJobs jobs, mim $lowerJobs")
+    assert(upper.selectionPath.toSeq == lower.selectionPath.toSeq)
   }
 
   test("sparse input selects identically to its dense equivalent") {
@@ -226,8 +273,8 @@ class InfoThSelectorSpec extends SparkSpec {
     // the cached working set must hold SparseBlocks, not densified rows
     val df = toDf(rows)
     val colData = graft.core.Columnar.fromLabeledDf(df)
-    val kinds = colData.data.filter(_._1._1 < nf)
-      .map(_._2.x.getClass.getSimpleName).distinct().collect().toSet
+    val kinds = colData.data.flatMap(_.features.toSeq)
+      .map(_.getClass.getSimpleName).distinct().collect().toSet
     assert(kinds == Set("SparseBlock"))
     colData.unpersist()
   }
