@@ -595,7 +595,7 @@ object Queries {
   }
 
   /** I1 at width: greedy mRMR k=5 over the 32 wide features —
-    * 4 histogram3D passes at realistic width, oracle-checked. */
+    * 4 2-D round passes at realistic width, oracle-checked. */
   def selectorMrmrWide(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val selected = InfoThSelector.select(wideColumnar(spark, dir), "mrmr", 5, 0.0)

@@ -55,8 +55,8 @@ final case class ColumnBlock(features: Array[ColBlock], label: Array[Byte]) {
  * broadcast or shuffled during selection. Scan parallelism is the number
  * of blocks, which grows with the data (the reference's `partitionByRange`
  * by feature, InfoSelector.scala:436, would make one task scan a whole
- * feature column); histogram merges ship O(nFeatures x blocks) small count
- * matrices, independent of nInstances.
+ * feature column); histogram merges ship one count array per (block,
+ * feature range), independent of nInstances.
  */
 final case class ColumnarData(
     data: RDD[ColumnBlock],

@@ -40,6 +40,10 @@ sealed trait InfoThCriterion extends Serializable {
 
   /** Greedy objective value under this criterion. */
   def score: Double
+
+  /** Whether `update` reads its `cmi` argument. A round for a criterion
+    * that does not needs only 2-D (x, selected) tables, not 3-D ones. */
+  def needsCmi: Boolean
 }
 
 /** Mutual Information Maximisation: score = relevance only
@@ -47,6 +51,7 @@ sealed trait InfoThCriterion extends Serializable {
 final class Mim extends InfoThCriterion {
   override def update(mi: Double, cmi: Double): this.type = { k += 1; this }
   override def score: Double = relevance
+  override def needsCmi: Boolean = false
   override def toString = "MIM"
 }
 
@@ -59,6 +64,7 @@ final class Mifs(val beta: Double = 0.0) extends InfoThCriterion {
     redundancy += mi; k += 1; this
   }
   override def score: Double = relevance - beta * redundancy
+  override def needsCmi: Boolean = false
   override def toString = "MIFS"
 }
 
@@ -73,6 +79,7 @@ final class Jmi extends InfoThCriterion {
   override def score: Double =
     if (k == 0) relevance
     else relevance - (redundancy - conditionalRedundancy) / k
+  override def needsCmi: Boolean = true
   override def toString = "JMI"
 }
 
@@ -85,6 +92,7 @@ final class Mrmr extends InfoThCriterion {
   }
   override def score: Double =
     if (k == 0) relevance else relevance - redundancy / k
+  override def needsCmi: Boolean = false
   override def toString = "MRMR"
 }
 
@@ -97,6 +105,7 @@ sealed class Cmim extends InfoThCriterion {
     maxLoss = math.max(maxLoss, mi - cmi); k += 1; this
   }
   override def score: Double = relevance - maxLoss
+  override def needsCmi: Boolean = true
   override def toString = "CMIM"
 }
 
@@ -114,6 +123,7 @@ final class Icap extends InfoThCriterion {
     cappedLoss += math.max(0.0, mi - cmi); k += 1; this
   }
   override def score: Double = relevance - cappedLoss
+  override def needsCmi: Boolean = true
   override def toString = "ICAP"
 }
 

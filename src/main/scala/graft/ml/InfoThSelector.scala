@@ -30,8 +30,10 @@ trait InfoThSelectorParams extends Params
     (s: String) => InfoThCriterionFactory.all.contains(s.toLowerCase))
   def getCriterion: String = $(criterion)
 
-  /** Redundancy weight for MIFS (reference factory beta). */
-  final val beta = new DoubleParam(this, "beta", "MIFS redundancy weight")
+  /** Redundancy weight for MIFS (reference factory beta); finite, since
+    * a NaN or infinite weight makes every MIFS score NaN. */
+  final val beta = new DoubleParam(this, "beta", "MIFS redundancy weight (finite)",
+    (b: Double) => !b.isNaN && !b.isInfinite)
   def getBeta: Double = $(beta)
 
   setDefault(numTopFeatures -> 10, criterion -> "mrmr", beta -> 0.0,
@@ -61,11 +63,15 @@ trait InfoThSelectorParams extends Params
  *  3. driver-side greedy loop (replaces the Flink bulk iteration,
  *     reference InfoSelector.scala:354-364 — criterion state is tiny, so
  *     distributed iteration state buys nothing): per round, one job
- *     builds 3-D histograms against the newly selected column — read from
+ *     builds histograms against the newly selected column — read from
  *     the same block as each candidate, with NO collect and NO broadcast
  *     of any column — and returns (feature, mi, cmi) rows the driver
- *     folds into the criteria. MIM short-circuits to top-k relevance
- *     (reference InfoSelector.scala:313-315) with zero extra passes.
+ *     folds into the criteria. The tables are 3-D (x, selected, class)
+ *     only for criteria that read the conditional term (JMI, CMIM, IF,
+ *     ICAP); MIFS and mRMR get 2-D (x, selected) tables, |Y| times
+ *     smaller, and cmi = 0. MIM, and MIFS at beta = 0 (whose score is its
+ *     relevance), short-circuit to top-k relevance (reference
+ *     InfoSelector.scala:313-315) with zero extra passes.
  *  4. model holds the sorted selected indices
  *     (reference InfoSelector.scala:491).
  *
@@ -129,10 +135,12 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
 
     val nToSelect = math.min(k, colData.nFeatures)
 
-    if (criterionKey == InfoThCriterionFactory.Mim) {
+    if (criterionKey == InfoThCriterionFactory.Mim ||
+        (criterionKey == InfoThCriterionFactory.Mifs && beta == 0.0)) {
       // MIM short-circuit: pure top-k on relevance, ties broken by
       // lowest index (the reference's tie behavior is nondeterministic
-      // — SURVEY §7 risk 4 — we fix it deterministically).
+      // — SURVEY §7 risk 4 — we fix it deterministically). MIFS at
+      // beta = 0 scores rel - 0.0 * redundancy, exactly its relevance.
       return relevances.sortBy { case (f, r) => (-r, f) }.take(nToSelect)
     }
 
@@ -140,6 +148,7 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
       case (f, rel) =>
         f -> InfoThCriterionFactory(criterionKey, beta).init(rel)
     }
+    val needsCmi = InfoThCriterionFactory(criterionKey, beta).needsCmi
 
     val selected = collection.mutable.ArrayBuffer.empty[(Int, Double)]
     while (selected.length < nToSelect) {
@@ -153,15 +162,23 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
       selected += ((maxFeat, maxCrit.score))
       maxCrit.setValid(false)
       if (selected.length < nToSelect) {
-        // One job: 3-D histograms vs. (selected, class) -> (mi, cmi)
+        // One job: histograms vs. the selected column -> (mi, cmi)
         // (reference: getRedundancies, InfoTheory.scala:445-461). Each
         // block pairs its own selected column with its candidates —
         // nothing is collected or broadcast; only the O(nFeatures)
-        // (mi, cmi) rows reach the driver.
+        // (mi, cmi) rows reach the driver. A criterion that never reads
+        // cmi gets the 2-D table miAndCmi would take its mi from: the
+        // same counts, so the same mi.
         val redundancies =
-          Histograms.histogram3D(colData, maxFeat)
-            .mapValues(h => InfoTheory.miAndCmi(h, n))
-            .collect().toMap
+          if (needsCmi) {
+            Histograms.histogram3D(colData, maxFeat)
+              .mapValues(h => InfoTheory.miAndCmi(h, n))
+              .collect().toMap
+          } else {
+            Histograms.histogram2D(colData, maxFeat)
+              .mapValues(h => (InfoTheory.mutualInfo(h, n), 0.0))
+              .collect().toMap
+          }
         criteria.foreach { case (f, cr) =>
           if (cr.valid) redundancies.get(f).foreach {
             case (mi, cmi) => cr.update(mi, cmi)
@@ -245,8 +262,12 @@ object InfoThSelectorModel extends MLReadable[InfoThSelectorModel] {
       extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
       GraftMlBridge.saveMetadata(instance, path, sparkSession)
-      val data = instance.selectionPath.map { case (f, s) => (f, s) }.toSeq
-      sparkSession.createDataFrame(data).toDF("feature", "score")
+      // the rank keeps the selection order: a reader may get the rows in
+      // any order
+      val data = instance.selectionPath.zipWithIndex.map {
+        case ((f, s), rank) => (rank, f, s)
+      }.toSeq
+      sparkSession.createDataFrame(data).toDF("rank", "feature", "score")
         .repartition(1).write.parquet(new Path(path, "data").toString)
     }
   }
@@ -255,8 +276,11 @@ object InfoThSelectorModel extends MLReadable[InfoThSelectorModel] {
     override def load(path: String): InfoThSelectorModel =
       GraftMlBridge.loadWithMetadata(path, sparkSession,
           classOf[InfoThSelectorModel]) { uid =>
-        val data = sparkSession.read.parquet(new Path(path, "data").toString)
-          .select("feature", "score").collect()
+        val raw = sparkSession.read.parquet(new Path(path, "data").toString)
+        // a directory written before the rank column is read in file order
+        val ranked =
+          if (raw.columns.contains("rank")) raw.orderBy("rank") else raw
+        val data = ranked.select("feature", "score").collect()
           .map(r => (r.getInt(0), r.getDouble(1)))
         new InfoThSelectorModel(uid, data.map(_._1).sorted, data)
       }

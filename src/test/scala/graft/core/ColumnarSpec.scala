@@ -112,6 +112,7 @@ class ColumnarSpec extends SparkSpec {
       assert(h.total == blocks.map(_.length).sum)
     }
     // y = a sparse feature, then y = the all-zero feature
+    val n = blocks.map(_.length).sum.toLong
     Seq(1, 3).foreach { yFeat =>
       val h3s = Histograms.histogram3D(sCol, yFeat).collect().toMap
       val h3d = Histograms.histogram3D(dCol, yFeat).collect().toMap
@@ -119,6 +120,22 @@ class ColumnarSpec extends SparkSpec {
       h3s.foreach { case (f, h) =>
         assert(h.counts.toSeq == h3d(f).counts.toSeq,
           s"3D mismatch at f=$f, y=$yFeat")
+      }
+      // the 2-D tables vs the same y: equal across layouts, the x-y
+      // marginal of the 3-D tables, and the very same mi
+      val h2ys = Histograms.histogram2D(sCol, yFeat).collect().toMap
+      val h2yd = Histograms.histogram2D(dCol, yFeat).collect().toMap
+      assert(h2ys.keySet == h3s.keySet && h2yd.keySet == h3s.keySet)
+      h2ys.foreach { case (f, h) =>
+        assert(h.counts.toSeq == h2yd(f).counts.toSeq,
+          s"2D vs y mismatch at f=$f, y=$yFeat")
+        val h3 = h3s(f)
+        val marginal = for (x <- 0 until h3.xs; y <- 0 until h3.ys)
+          yield (0 until h3.zs).map(h3(x, y, _)).sum
+        assert(h.xs == h3.xs && h.ys == h3.ys && h.counts.toSeq == marginal,
+          s"2D vs y is not the 3D x-y marginal at f=$f, y=$yFeat")
+        assert(InfoTheory.mutualInfo(h, n) == InfoTheory.miAndCmi(h3, n)._1,
+          s"2D vs 3D mi differ at f=$f, y=$yFeat")
       }
     }
     // frequencies kernel agrees too
@@ -293,6 +310,129 @@ class ColumnarSpec extends SparkSpec {
       assert(e.getMessage.contains(s"got $y"))
     }
     col.unpersist()
+  }
+
+  test("histogram2D takes the label or any feature as y and refuses the rest") {
+    val col = Columnar.fromLabeledDf(labeledDf(Seq(
+      (0.0, Array(1.0, 2.0, 0.0)), (1.0, Array(0.0, 3.0, 1.0)),
+      (1.0, Array(1.0, 3.0, 1.0)))))
+    val byLabel = Histograms.histogram2D(col).collect().toMap
+    val explicit = Histograms.histogram2D(col, col.nFeatures).collect().toMap
+    assert(byLabel.keySet == (0 until col.nFeatures).toSet)
+    assert(explicit.keySet == byLabel.keySet)
+    byLabel.foreach { case (f, h) =>
+      val e = explicit(f)
+      assert((h.xs, h.ys) == (e.xs, e.ys) && h.counts.toSeq == e.counts.toSeq,
+        s"mismatch at f=$f")
+    }
+    assert(Histograms.histogram2D(col, 1).keys.collect().toSet == Set(0, 2))
+    Seq(-1, col.nFeatures + 1).foreach { y =>
+      val e = intercept[IllegalArgumentException](Histograms.histogram2D(col, y))
+      assert(e.getMessage.contains(s"got $y"))
+    }
+    col.unpersist()
+  }
+
+  /** A working set built straight from rows `(label, values)` grouped
+    * into partitions: partition b holds one block of `parts(b)` (none
+    * when it is empty); odd partitions hold sparse blocks. */
+  private def directColumnar(parts: Seq[Seq[(Int, Array[Int])]], nf: Int) = {
+    val blocks = parts.zipWithIndex.map { case (rows, b) =>
+      if (rows.isEmpty) Seq.empty[ColumnBlock]
+      else Seq(ColumnBlock(Array.tabulate(nf) { f =>
+        val v = rows.map(_._2(f).toByte).toArray
+        if (b % 2 == 0) DenseBlock(v)
+        else {
+          val nz = v.indices.filter(v(_) != 0).toArray
+          SparseBlock(v.length, nz, nz.map(v))
+        }
+      }, rows.map(_._1.toByte).toArray))
+    }
+    val all = parts.flatten
+    val cards = (Array.tabulate(nf)(f => all.map(_._2(f))) :+ all.map(_._1))
+      .map(_.max + 1)
+    ColumnarData(spark.sparkContext.parallelize(blocks, blocks.length)
+      .flatMap(identity), all.length.toLong, nf, cards)
+  }
+
+  test("packed column ranges match brute-force tables") {
+    val rng = new scala.util.Random(23)
+    // (features, rows per partition; 0 = an empty partition): one feature
+    // over 5 partitions (one range, two for the frequencies with the
+    // label), 7 features over 3 partitions (ranges 0-1, 2-3, 4-6)
+    Seq(1 -> Seq(30, 0, 25, 40, 10), 7 -> Seq(50, 0, 60)).foreach { case (nf, sizes) =>
+      val parts = sizes.map(s => Seq.fill(s)((rng.nextInt(3),
+        Array.fill(nf)(if (rng.nextInt(3) == 0) 0 else rng.nextInt(5)))))
+      val col = directColumnar(parts, nf)
+      assert(col.data.getNumPartitions == sizes.length)
+      val all = parts.flatten
+      val xs = Array.tabulate(nf)(f => all.map(_._2(f)))
+      val lbl = all.map(_._1)
+      def what(f: Int, y: Int) = s"nf=$nf, f=$f, y=$y"
+      // y = the label, then a feature in the first and in the last range
+      (nf +: Seq(0, nf - 1).distinct).foreach { y =>
+        val ycol = if (y == nf) lbl else xs(y)
+        val h2 = Histograms.histogram2D(col, y).collect().toMap
+        assert(h2.keySet == (0 until nf).toSet - y, what(-1, y))
+        h2.foreach { case (f, h) =>
+          val b = Brute.hist2d(xs(f), ycol)
+          assert((h.xs, h.ys) == (b.xs, b.ys), what(f, y))
+          assert(h.counts.toSeq == b.counts.toSeq, what(f, y))
+        }
+        if (y < nf) {
+          val h3 = Histograms.histogram3D(col, y).collect().toMap
+          assert(h3.keySet == h2.keySet, what(-1, y))
+          h3.foreach { case (f, h) =>
+            val b = Brute.hist3d(xs(f), ycol, lbl)
+            assert((h.xs, h.ys, h.zs) == (b.xs, b.ys, b.zs), what(f, y))
+            assert(h.counts.toSeq == b.counts.toSeq, what(f, y))
+          }
+        }
+      }
+      val freqs = Histograms.frequenciesByFeature(col)
+      assert(freqs.keySet == (0 to nf).toSet)
+      (xs :+ lbl).zipWithIndex.foreach { case (c, f) =>
+        assert(freqs(f).toSeq == (0 until col.cardinality(f)).map(v => c.count(_ == v).toLong),
+          s"frequencies, nf=$nf, f=$f")
+      }
+    }
+  }
+
+  test("a histogram pass shuffles one record per (block, column range)") {
+    val rng = new scala.util.Random(29)
+    val nf = 7
+    // 3 partitions, one of them empty: 2 blocks x min(7, 3) ranges
+    val parts = Seq(40, 0, 35).map(s => Seq.fill(s)((rng.nextInt(2),
+      Array.fill(nf)(rng.nextInt(4)))))
+    val col = directColumnar(parts, nf)
+    val sc = spark.sparkContext
+    val group = s"records-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val stagesOf = new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]
+    val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => stagesOf.merge(g, j.stageIds, _ ++ _))
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        written.put(s.stageInfo.stageId,
+          s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one histogram2D pass")
+      try Histograms.histogram2D(col).collect() finally sc.clearJobGroup()
+      // events reach a listener in order: once the marker job is seen,
+      // every stage of the pass is
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!stagesOf.containsKey(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(stagesOf.containsKey(marker), "listener never saw the marker job")
+      val records = stagesOf.get(group).map(id => written.getOrDefault(id, 0L)).sum
+      assert(records == 2 * 3, s"$records shuffle records, not blocks x ranges = 6")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("histogram2D/3D match brute-force counts") {

@@ -133,6 +133,24 @@ class InfoThSelectorSpec extends SparkSpec {
     assert(upper.selectionPath.toSeq == lower.selectionPath.toSeq)
   }
 
+  test("MIFS at beta 0 takes the MIM short-circuit") {
+    val est = new InfoThSelector().setNumTopFeatures(3)
+    var mim: InfoThSelectorModel = null
+    var mifs: InfoThSelectorModel = null
+    val mimJobs = jobsRunBy { mim = est.fit(copyFixture, ParamMap(est.criterion -> "mim")) }
+    val mifsJobs = jobsRunBy {
+      mifs = est.fit(copyFixture, ParamMap(est.criterion -> "mifs", est.beta -> 0.0))
+    }
+    assert(mifsJobs == mimJobs, s"MIFS at beta 0 ran $mifsJobs jobs, MIM $mimJobs")
+    assert(mifs.selectionPath.toSeq == mim.selectionPath.toSeq)
+  }
+
+  test("a non-finite beta is refused") {
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { b =>
+      intercept[IllegalArgumentException](new InfoThSelector().setBeta(b))
+    }
+  }
+
   test("sparse input selects identically to its dense equivalent") {
     // the reference throws on sparse selection (InfoSelector.scala:378-386);
     // we support it via implicit-zero histogram kernels
@@ -323,5 +341,27 @@ class InfoThSelectorSpec extends SparkSpec {
       FrequencyDiscretizerModel.load(dir)
     }
     assert(e.getMessage.contains(classOf[InfoThSelectorModel].getName))
+  }
+
+  test("loaded selection path keeps its order whatever the data row order") {
+    val model = new InfoThSelector().setCriterion("mrmr")
+      .setNumTopFeatures(4).fit(copyFixture)
+    val path = model.selectionPath.toSeq
+    assert(path.length == 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
+    model.write.overwrite().save(dir)
+    val dataDir = new org.apache.hadoop.fs.Path(dir, "data").toString
+    // the rows read back in reverse selection order
+    val written = spark.read.parquet(dataDir)
+    val reversed = written.collect().reverse.toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(reversed, 1), written.schema)
+      .write.mode("overwrite").parquet(dataDir)
+    assert(spark.read.parquet(dataDir).select("feature").collect().map(_.getInt(0)).toSeq ==
+      path.map(_._1).reverse)
+    assert(InfoThSelectorModel.load(dir).selectionPath.toSeq == path)
+    // a directory without the rank column is read in file order
+    spark.createDataFrame(path).toDF("feature", "score").coalesce(1)
+      .write.mode("overwrite").parquet(dataDir)
+    assert(InfoThSelectorModel.load(dir).selectionPath.toSeq == path)
   }
 }
