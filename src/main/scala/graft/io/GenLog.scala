@@ -134,19 +134,22 @@ object GenLog {
   private val schemaMemo = scala.collection.concurrent.TrieMap
     .empty[(String, String), org.apache.spark.sql.types.StructType]
 
-  /** File-status signature of the commit-marker dir: count, total
-    * bytes, newest mtime, and the sorted name list's hash — changes
-    * whenever the committed generation set changes. Driver-side
-    * metadata read only. */
+  /** File-status signature of a directory: file count, total bytes,
+    * newest mtime, and the sorted name list's hash — so a rewrite that
+    * keeps count, bytes and mtime but changes the file set still
+    * changes it. Driver-side metadata read only. */
+  def dirSig(f: FileSystem, dir: Path): String = {
+    val sts = f.listStatus(dir)
+    sts.length.toString + ":" + sts.map(_.getLen).sum + ":" +
+      (if (sts.isEmpty) 0L else sts.map(_.getModificationTime).max) +
+      ":" + sts.map(_.getPath.getName).sorted.mkString(",").hashCode
+  }
+
+  /** [[dirSig]] of the commit-marker dir ("none" before the first
+    * commit) — changes whenever the committed generation set changes. */
   def commitsSig(f: FileSystem, path: String): String = {
     val dir = commitsDir(path)
-    if (!f.exists(dir)) "none"
-    else {
-      val sts = f.listStatus(dir)
-      sts.length.toString + ":" + sts.map(_.getLen).sum + ":" +
-        (if (sts.isEmpty) 0L else sts.map(_.getModificationTime).max) +
-        ":" + sts.map(_.getPath.getName).sorted.mkString(",").hashCode
-    }
+    if (!f.exists(dir)) "none" else dirSig(f, dir)
   }
 
   def memoSchema(root: String, sig: String)(

@@ -95,7 +95,12 @@ object FrequencyDiscretizer extends DefaultParamsReadable[FrequencyDiscretizer] 
   private[graft] def findSplitCandidates(
       samples: Array[Double], numSplits: Int): Array[Double] = {
     val valueCountMap = mutable.Map.empty[Double, Int]
-    samples.foreach { v => valueCountMap(v) = valueCountMap.getOrElse(v, 0) + 1 }
+    // `+ 0.0` turns -0.0 into 0.0: the boxed map merges the two zeros
+    // and would keep whichever came first as the split
+    samples.foreach { s =>
+      val v = s + 0.0
+      valueCountMap(v) = valueCountMap.getOrElse(v, 0) + 1
+    }
     val valueCounts = valueCountMap.toSeq.sortBy(_._1).toArray :+
       ((Double.MaxValue, 1))
     val possibleSplits = valueCounts.length - 1
@@ -160,7 +165,10 @@ object FrequencyDiscretizer extends DefaultParamsReadable[FrequencyDiscretizer] 
   /** D5: per-value bucket lookup (reference: binarySearchForBuckets,
     * FrequencyDiscretizer.scala:278-296; Bucketizer conventions). */
   private[graft] def binarySearchForBuckets(
-      splits: Array[Double], value: Double): Double = {
+      splits: Array[Double], raw: Double): Double = {
+    // `Arrays.binarySearch` orders -0.0 below 0.0; both zeros must
+    // land in one bucket
+    val value = raw + 0.0
     if (value == splits.last) {
       splits.length - 2
     } else {

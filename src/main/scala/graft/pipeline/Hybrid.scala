@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,6 +28,7 @@ import org.apache.spark.sql.functions._
  * corpus.
  */
 object Hybrid {
+  import Search.{rankPerQid, topOne, topPerQid}
 
   /** Deepening factor for the lexical fallback when the text index
     * lacks a filter column: fetch `nLex · FallbackDeepen` candidates,
@@ -53,6 +55,63 @@ object Hybrid {
     }
   }
 
+  /** The query key the single-query faces run their lists under: 0 for
+    * every row. It is derived from the row's id rather than written as
+    * a literal, because Spark folds a literal column out of a window's
+    * partition spec and would then plan the per-query windows below as
+    * one unpartitioned task; `xxhash64` is never null, so every row
+    * gets key 0. */
+  private def oneQid(id: Column): Column = pmod(xxhash64(id), lit(1L))
+
+  private def asOneQuery(lists: Seq[(DataFrame, String, String)])
+      : Seq[(DataFrame, String, String, String)] =
+    lists.map { case (df, idCol, scoreCol) =>
+      (df.withColumn("__q", oneQid(col(idCol))), "__q", idCol, scoreCol)
+    }
+
+  /** The one RRF: unranked `(qid, id, rrf)` over per-query candidate
+    * lists `(df, qidCol, idCol, scoreCol)`. A list's rank is its
+    * position within `(qid, list)` by (score desc, id asc) — for a list
+    * holding each id once (every retriever output), that is
+    * 1 + |rows strictly better|; fusion sums within qid and rounds to
+    * 8 places. */
+  private def rrfScores(lists: Seq[(DataFrame, String, String, String)],
+      k0: Int, weights: Seq[Double], face: String): DataFrame = {
+    require(lists.nonEmpty, s"$face needs at least one ranked list")
+    require(k0 > 0, s"k0 $k0 must be > 0")
+    val ws = resolvedWeights(lists.length, weights, face)
+    lists.zip(ws).map { case ((df, qidCol, idCol, scoreCol), wt) =>
+      rankPerQid(df.select(col(qidCol).as("qid"), col(idCol).as("id"),
+          col(scoreCol).as("__s")), "__s")
+        .select(col("qid"), col("id"),
+          (lit(wt) / (lit(k0) + col("__rk"))).as("__c"))
+    }.reduce(_.unionByName(_))
+      .groupBy("qid", "id").agg(round(sum("__c"), 8).as("rrf"))
+  }
+
+  /** The one min-max fusion: unranked `(qid, id, fused)`. Each
+    * `(qid, list)` slice normalizes over itself (min and max over a
+    * qid-partitioned window of the bounded candidate list); a
+    * constant-score slice normalizes to 1.0. Fusion sums within qid,
+    * rounded to 8. */
+  private def minMaxScores(lists: Seq[(DataFrame, String, String, String)],
+      weights: Seq[Double], face: String): DataFrame = {
+    require(lists.nonEmpty, s"$face needs at least one ranked list")
+    val ws = resolvedWeights(lists.length, weights, face)
+    val slice = Window.partitionBy("qid")
+    lists.zip(ws).map { case ((df, qidCol, idCol, scoreCol), w) =>
+      df.select(col(qidCol).as("qid"), col(idCol).as("id"),
+          col(scoreCol).cast("double").as("__s"))
+        .withColumn("__mn", min("__s").over(slice))
+        .withColumn("__mx", max("__s").over(slice))
+        .select(col("qid"), col("id"),
+          (lit(w) * when(col("__mx") === col("__mn"), lit(1.0))
+            .otherwise((col("__s") - col("__mn"))
+              / (col("__mx") - col("__mn")))).as("__c"))
+    }.reduce(_.unionByName(_))
+      .groupBy("qid", "id").agg(round(sum("__c"), 8).as("fused"))
+  }
+
   /** Fuse ranked candidate lists by RRF. Each list is an `(idCol,
     * scoreCol)` frame already bounded to its top-N (the retriever's
     * job); ranks are assigned per list by (score desc, id asc).
@@ -60,36 +119,10 @@ object Hybrid {
     * `score(d) = Σ_i w_i / (k0 + rank_i(d))`, the per-list knob every
     * hybrid deployment tunes first (lexical-heavy vs semantic-heavy).
     * Returns (id, rrf) — fused score rounded to 8 — limited to
-    * `topK` by (rrf desc, id asc). */
+    * `topK` by (rrf desc, id asc), in rank order. */
   def rrf(lists: Seq[(DataFrame, String, String)], k0: Int = 60,
-      topK: Int = 10, weights: Seq[Double] = Nil): DataFrame = {
-    require(lists.nonEmpty, "rrf needs at least one ranked list")
-    require(k0 > 0 && topK > 0, s"k0 $k0 and topK $topK must be > 0")
-    val ws = resolvedWeights(lists.length, weights, "rrf")
-    val contribs = lists.zip(ws).map { case ((df, idCol, scoreCol), w) =>
-      val a = df.select(col(idCol).as("id"), col(scoreCol).as("__s"))
-      val b = a.select(col("id").as("__bid"), col("__s").as("__bs"))
-      // rank = 1 + |rows strictly better| under (score desc, id asc).
-      // A deliberate bounded N² self-join instead of a global window:
-      // lists are top-N retriever outputs (hundreds of rows), so the
-      // pairing is tiny, broadcast-nested-loop planned, and avoids
-      // the unpartitioned WindowExec a single-partition rank would
-      // plan (the scale-killer shape PlanAuditSpec bans — here it
-      // would be bounded, but the plan can't prove that).
-      a.join(b,
-          col("__bs") > col("__s") ||
-            (col("__bs") === col("__s") && col("__bid") < col("id")),
-          "left_outer")
-        .groupBy("id", "__s")
-        .agg((count(col("__bid")) + 1).cast("int").as("__rank"))
-        .select(col("id"),
-          (lit(w) / (lit(k0) + col("__rank"))).as("__c"))
-    }
-    contribs.reduce(_.unionByName(_))
-      .groupBy("id").agg(round(sum("__c"), 8).as("rrf"))
-      // global top-k as sort+limit (TakeOrdered), never a window
-      .orderBy(col("rrf").desc, col("id").asc).limit(topK)
-  }
+      topK: Int = 10, weights: Seq[Double] = Nil): DataFrame =
+    topOne(rrfScores(asOneQuery(lists), k0, weights, "rrf"), "rrf", topK)
 
   /** MIN-MAX score fusion — the rank-free alternative to [[rrf]]:
     * each list's scores normalize to [0, 1] over ITS OWN candidate
@@ -99,125 +132,22 @@ object Hybrid {
     * contributing 0. Keeps score MAGNITUDE information RRF discards
     * (a runaway BM25 top hit stays runaway) at the cost of being
     * sensitive to each list's score distribution — the second fusion
-    * knob real deployments tune. Normalization constants come from a
-    * 1-row aggregate broadcast-joined back (lists are bounded top-N
-    * frames; no unpartitioned window). Returns (id, fused) rounded
-    * to 8, limited to `topK` by (fused desc, id asc). */
+    * knob real deployments tune. Returns (id, fused) rounded to 8,
+    * limited to `topK` by (fused desc, id asc), in rank order. */
   def minMaxFuse(lists: Seq[(DataFrame, String, String)],
-      weights: Seq[Double] = Nil, topK: Int = 10): DataFrame = {
-    require(lists.nonEmpty, "minMaxFuse needs at least one ranked list")
-    require(topK > 0, s"topK $topK must be > 0")
-    val ws = resolvedWeights(lists.length, weights, "minMaxFuse")
-    val contribs = lists.zip(ws).map { case ((df, idCol, scoreCol), w) =>
-      val a = df.select(col(idCol).as("id"),
-        col(scoreCol).cast("double").as("__s"))
-      val mm = a.agg(min("__s").as("__mn"), max("__s").as("__mx"))
-      a.crossJoin(broadcast(mm))
-        .select(col("id"),
-          (lit(w) * when(col("__mx") === col("__mn"), lit(1.0))
-            .otherwise((col("__s") - col("__mn"))
-              / (col("__mx") - col("__mn")))).as("__c"))
-    }
-    contribs.reduce(_.unionByName(_))
-      .groupBy("id").agg(round(sum("__c"), 8).as("fused"))
-      .orderBy(col("fused").desc, col("id").asc).limit(topK)
-  }
+      weights: Seq[Double] = Nil, topK: Int = 10): DataFrame =
+    topOne(minMaxScores(asOneQuery(lists), weights, "minMaxFuse"), "fused",
+      topK)
 
   /** BATCHED [[minMaxFuse]]: normalization constants are per
-    * `(qid, list)` — each query's candidate slice normalizes over
-    * itself (one groupBy over the bounded candidate frame, joined
-    * back on qid), fusion sums within qid, ranking is a
+    * `(qid, list)`, fusion sums within qid, ranking is a
     * qid-partitioned window. Per-query results identical to
     * [[minMaxFuse]] on that query's slices. Returns (qid, id, fused)
     * with at most `topK` rows per qid. */
   def minMaxFuseBatch(lists: Seq[(DataFrame, String, String, String)],
-      weights: Seq[Double] = Nil, topK: Int = 10): DataFrame = {
-    require(lists.nonEmpty,
-      "minMaxFuseBatch needs at least one ranked list")
-    require(topK > 0, s"topK $topK must be > 0")
-    import org.apache.spark.sql.expressions.Window
-    val ws = resolvedWeights(lists.length, weights, "minMaxFuseBatch")
-    val contribs = lists.zip(ws).map {
-      case ((df, qidCol, idCol, scoreCol), w) =>
-        val a = df.select(col(qidCol).as("qid"), col(idCol).as("id"),
-          col(scoreCol).cast("double").as("__s"))
-        val mm = a.groupBy("qid")
-          .agg(min("__s").as("__mn"), max("__s").as("__mx"))
-        a.join(mm, "qid")
-          .select(col("qid"), col("id"),
-            (lit(w) * when(col("__mx") === col("__mn"), lit(1.0))
-              .otherwise((col("__s") - col("__mn"))
-                / (col("__mx") - col("__mn")))).as("__c"))
-    }
-    val wf = Window.partitionBy("qid")
-      .orderBy(col("fused").desc, col("id").asc)
-    contribs.reduce(_.unionByName(_))
-      .groupBy("qid", "id").agg(round(sum("__c"), 8).as("fused"))
-      .withColumn("__rk", row_number().over(wf))
-      .filter(col("__rk") <= topK)
-      .select("qid", "id", "fused")
-  }
-
-  /** One-call hybrid serve for a single query: BM25 top-`nLex` for
-    * `terms` from the text index + cosine top-`nSem` for `queryVec`
-    * from the vector index (probed IVF — both reads stay pruned),
-    * RRF-fused to `topK`. `queryVec` is a one-row (id, vec) frame;
-    * its id is excluded from the semantic candidates (the usual
-    * self-match rule), so pass a non-corpus id for an external query.
-    * An optional metadata `filter` applies to BOTH sides, below each
-    * retriever's top-k: the semantic read takes it on the probed scan
-    * (the [[VecIndex]] filtered-serve contract) and the lexical side
-    * takes it through [[Search.searchBm25]]'s own filtered serve when
-    * the TEXT index stores the referenced columns — both candidate
-    * lists stay FULL among matching docs. When the text index lacks
-    * the column(s), the lexical side DEEPENS-then-filters: it fetches
-    * `nLex · FallbackDeepen` candidates, semi-joins the VECTOR
-    * index's stored metadata, and keeps the top `nLex` survivors —
-    * full-k semantics whenever the top-`nLex` matching docs sit
-    * inside the deepened pool (exact-equal to the metadata-ingested
-    * filtered serve there; a filter selective beyond 1/FallbackDeepen
-    * can still under-fill — ingest the metadata at `writeIndex` for
-    * the unconditional path). Either way a violating id NEVER
-    * surfaces. */
-  /** Fusion-mode dispatch shared by the single and batch faces:
-    * `"rrf"` (rank-only, optional per-list weights) or `"minmax"`
-    * (per-list [0, 1] score normalization, weighted sum). */
-  private def requireFusion(fusion: String): Unit =
-    require(fusion == "rrf" || fusion == "minmax",
-      s"fusion must be 'rrf' or 'minmax', got '$fusion'")
-
-  def hybridTopK(spark: SparkSession, textIdx: Search.Index,
-      vecIdx: VecIndex.Index, terms: Seq[String], queryVec: DataFrame,
-      nProbe: Int = 2, nLex: Int = 20, nSem: Int = 20, k0: Int = 60,
-      topK: Int = 10,
-      filter: Option[Column] = None,
-      weights: Seq[Double] = Nil,
-      fusion: String = "rrf"): DataFrame = {
-    requireFusion(fusion)
-    val lex = filter match {
-      case None => Search.searchBm25(spark, textIdx, terms, topK = nLex)
-      case Some(flt) =>
-        try Search.searchBm25(spark, textIdx, terms, topK = nLex,
-          filter = Some(flt))
-        catch {
-          // ONLY the typed filter-column-not-stored refusal switches
-          // to the deepened fallback; other argument errors propagate
-          case _: FilterUnresolved =>
-            val ok = VecIndex.liveVecs(spark, vecIdx, Seq("id"),
-              preFilter = Some(flt))
-            Search.searchBm25(spark, textIdx, terms,
-                topK = nLex * FallbackDeepen)
-              .join(ok.select("id"), Seq("id"), "left_semi")
-              .orderBy(col("score").desc, col("id").asc)
-              .limit(nLex)
-        }
-    }
-    val sem = VecIndex.ivfTopK(spark, queryVec, vecIdx, nProbe, nSem,
-      filter = filter)
-    val lists = Seq((lex, "id", "score"), (sem, "nid", "cos"))
-    if (fusion == "rrf") rrf(lists, k0, topK, weights)
-    else minMaxFuse(lists, weights, topK)
-  }
+      weights: Seq[Double] = Nil, topK: Int = 10): DataFrame =
+    topPerQid(minMaxScores(lists, weights, "minMaxFuseBatch"), "fused",
+      topK)
 
   /** BATCHED RRF: fuse per-query ranked lists for a whole batch.
     * Each list is a `(df, qidCol, idCol, scoreCol)` frame holding
@@ -226,34 +156,87 @@ object Hybrid {
     * qid — per-query results identical to [[rrf]] on that query's
     * slices. Ranking is a qid-PARTITIONED window (each query's
     * candidate list is top-N-bounded, so partitions are tiny and the
-    * shuffle is by qid — the scale-safe shape; the single-query
-    * [[rrf]]'s bounded self-join exists precisely because it has no
-    * partitioning key). Returns (qid, id, rrf) with at most `topK`
+    * shuffle is by qid). Returns (qid, id, rrf) with at most `topK`
     * rows per qid. */
   def rrfBatch(lists: Seq[(DataFrame, String, String, String)],
       k0: Int = 60, topK: Int = 10,
-      weights: Seq[Double] = Nil): DataFrame = {
-    require(lists.nonEmpty, "rrfBatch needs at least one ranked list")
-    require(k0 > 0 && topK > 0, s"k0 $k0 and topK $topK must be > 0")
-    import org.apache.spark.sql.expressions.Window
-    val ws = resolvedWeights(lists.length, weights, "rrfBatch")
-    val contribs = lists.zip(ws).map {
-      case ((df, qidCol, idCol, scoreCol), wt) =>
-        val a = df.select(col(qidCol).as("qid"), col(idCol).as("id"),
-          col(scoreCol).as("__s"))
-        val w = Window.partitionBy("qid")
-          .orderBy(col("__s").desc, col("id").asc)
-        a.withColumn("__rank", row_number().over(w))
-          .select(col("qid"), col("id"),
-            (lit(wt) / (lit(k0) + col("__rank"))).as("__c"))
+      weights: Seq[Double] = Nil): DataFrame =
+    topPerQid(rrfScores(lists, k0, weights, "rrfBatch"), "rrf", topK)
+
+  /** Fusion-mode dispatch shared by the single and batch faces:
+    * `"rrf"` (rank-only, optional per-list weights) or `"minmax"`
+    * (per-list [0, 1] score normalization, weighted sum). */
+  private def requireFusion(fusion: String): Unit =
+    require(fusion == "rrf" || fusion == "minmax",
+      s"fusion must be 'rrf' or 'minmax', got '$fusion'")
+
+  private def fusedCol(fusion: String): String =
+    if (fusion == "rrf") "rrf" else "fused"
+
+  /** The hybrid serve shared by both faces: unranked fused
+    * `(qid, id, rrf|fused)` of the lexical list `lexical(k, filter)`
+    * (`(qid, id, score)`, top-k per qid) and the semantic list `sem`
+    * (`(qid, nid, cos)`). With a `filter` the text index cannot
+    * resolve ([[FilterUnresolved]] — only that class; other argument
+    * errors propagate), the lexical side DEEPENS-then-filters: it
+    * fetches `nLex · FallbackDeepen` candidates per query, semi-joins
+    * the VECTOR index's stored metadata and keeps the top `nLex`
+    * survivors per qid. */
+  private def hybridScores(spark: SparkSession, vecIdx: VecIndex.Index,
+      lexical: (Int, Option[Column]) => DataFrame, sem: => DataFrame,
+      nLex: Int, k0: Int, filter: Option[Column],
+      weights: Seq[Double], fusion: String, face: String): DataFrame = {
+    val lex = filter match {
+      case None => lexical(nLex, None)
+      case Some(flt) =>
+        try lexical(nLex, Some(flt))
+        catch {
+          case _: FilterUnresolved =>
+            val ok = VecIndex.liveVecs(spark, vecIdx, Seq("id"),
+              preFilter = Some(flt))
+            topPerQid(lexical(nLex * FallbackDeepen, None)
+              .join(ok.select("id"), Seq("id"), "left_semi"), "score", nLex)
+        }
     }
-    val wf = Window.partitionBy("qid")
-      .orderBy(col("rrf").desc, col("id").asc)
-    contribs.reduce(_.unionByName(_))
-      .groupBy("qid", "id").agg(round(sum("__c"), 8).as("rrf"))
-      .withColumn("__rk", row_number().over(wf))
-      .filter(col("__rk") <= topK)
-      .select("qid", "id", "rrf")
+    val lists = Seq((lex, "qid", "id", "score"), (sem, "qid", "nid", "cos"))
+    if (fusion == "rrf") rrfScores(lists, k0, weights, face)
+    else minMaxScores(lists, weights, face)
+  }
+
+  /** One-call hybrid serve for a single query: BM25 top-`nLex` for
+    * `terms` from the text index + cosine top-`nSem` for `queryVec`
+    * from the vector index (probed IVF — both reads stay pruned),
+    * fused to `topK` (rows in rank order). `queryVec` is a one-row
+    * (id, vec) frame; its id is excluded from the semantic candidates
+    * (the usual self-match rule), so pass a non-corpus id for an
+    * external query. An optional metadata `filter` applies to BOTH
+    * sides, below each retriever's top-k: the semantic read takes it
+    * on the probed scan (the [[VecIndex]] filtered-serve contract) and
+    * the lexical side takes it through [[Search.searchBm25]]'s own
+    * filtered serve when the TEXT index stores the referenced columns
+    * — both candidate lists stay FULL among matching docs. When the
+    * text index lacks the column(s), the lexical side
+    * DEEPENS-then-filters against the vector index's metadata: full-k
+    * semantics whenever the top-`nLex` matching docs sit inside the
+    * deepened pool (a filter selective beyond 1/FallbackDeepen can
+    * still under-fill — ingest the metadata at `writeIndex` for the
+    * unconditional path). Either way a violating id NEVER surfaces. */
+  def hybridTopK(spark: SparkSession, textIdx: Search.Index,
+      vecIdx: VecIndex.Index, terms: Seq[String], queryVec: DataFrame,
+      nProbe: Int = 2, nLex: Int = 20, nSem: Int = 20, k0: Int = 60,
+      topK: Int = 10,
+      filter: Option[Column] = None,
+      weights: Seq[Double] = Nil,
+      fusion: String = "rrf"): DataFrame = {
+    requireFusion(fusion)
+    def lexical(k: Int, flt: Option[Column]) =
+      Search.searchBm25(spark, textIdx, terms, topK = k, filter = flt)
+        .withColumn("qid", oneQid(col("id")))
+    def sem = VecIndex.ivfTopK(spark, queryVec, vecIdx, nProbe, nSem,
+        filter = filter)
+      .withColumn("qid", oneQid(col("nid")))
+    topOne(hybridScores(spark, vecIdx, lexical, sem, nLex, k0, filter,
+      weights, fusion, "hybridTopK"), fusedCol(fusion), topK)
   }
 
   /** BATCHED hybrid serve: [[hybridTopK]] for a whole frame of
@@ -263,8 +246,8 @@ object Hybrid {
     * ([[Search.searchBm25Batch]]), the semantic side is the
     * already-batched probed read ([[VecIndex.ivfTopK]], one probe
     * pass per codebook-version group regardless of query count), and
-    * fusion is [[rrfBatch]] (qid-partitioned windows over the bounded
-    * candidate lists). Per-query results identical to [[hybridTopK]]
+    * fusion ranks in qid-partitioned windows over the bounded
+    * candidate lists. Per-query results identical to [[hybridTopK]]
     * on that query alone. A query's own qid is excluded from its
     * semantic candidates (the usual self-match rule — pass non-corpus
     * qids for external queries). `filter` binds to both sides below
@@ -287,47 +270,26 @@ object Hybrid {
       weights: Seq[Double] = Nil,
       fusion: String = "rrf"): DataFrame = {
     requireFusion(fusion)
-    val qterms0 = queries.select("qid", "terms")
-    // fuzzy rewrite materializes once as (qid, tok) pairs and feeds
-    // the pair face of the batch BM25 serve directly — no collect_set
-    // → re-explode round trip between expansion and serve
-    val qtPairs =
+    val qterms = queries.select("qid", "terms")
+    // the fuzzy rewrite materializes once as (qid, tok) pairs and feeds
+    // the pair face of the batch BM25 serve directly
+    val pairs =
       if (fuzzyDist > 0)
-        Some(Search.expandQueriesFuzzyPairs(spark, textIdx, qterms0,
-          fuzzyDist, fuzzyPrefixLen, fuzzyMaxExpansions))
+        Some(Search.expandQueriesFuzzyPairs(spark, textIdx, qterms,
+          fuzzyDist, fuzzyPrefixLen, fuzzyMaxExpansions, "hybridTopKBatch"))
       else None
-    def bm25(k: Int, flt: Option[Column]) = qtPairs match {
+    def lexical(k: Int, flt: Option[Column]) = pairs match {
       case Some(qt) =>
         Search.searchBm25BatchPairs(spark, textIdx, qt, topK = k,
           filter = flt)
       case None =>
-        Search.searchBm25Batch(spark, textIdx, qterms0, topK = k,
+        Search.searchBm25Batch(spark, textIdx, qterms, topK = k,
           filter = flt)
     }
-    val lex = filter match {
-      case None => bm25(nLex, None)
-      case Some(flt) =>
-        try bm25(nLex, Some(flt))
-        catch {
-          case _: FilterUnresolved =>
-            val ok = VecIndex.liveVecs(spark, vecIdx, Seq("id"),
-              preFilter = Some(flt))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("qid")
-              .orderBy(col("score").desc, col("id").asc)
-            bm25(nLex * FallbackDeepen, None)
-              .join(ok.select("id"), Seq("id"), "left_semi")
-              .withColumn("__rk", row_number().over(w))
-              .filter(col("__rk") <= nLex)
-              .select("qid", "id", "score")
-        }
-    }
-    val sem = VecIndex.ivfTopK(spark,
+    def sem = VecIndex.ivfTopK(spark,
       queries.select(col("qid").as("id"), col("vec")), vecIdx,
       nProbe, nSem, filter = filter)
-    val lists =
-      Seq((lex, "qid", "id", "score"), (sem, "qid", "nid", "cos"))
-    if (fusion == "rrf") rrfBatch(lists, k0, topK, weights)
-    else minMaxFuseBatch(lists, weights, topK)
+    topPerQid(hybridScores(spark, vecIdx, lexical, sem, nLex, k0, filter,
+      weights, fusion, "hybridTopKBatch"), fusedCol(fusion), topK)
   }
 }

@@ -737,126 +737,68 @@ object Search {
   val Bm25K1: Double = 1.2
   val Bm25B: Double = 0.75
 
+  /** Driver-side refusal shared by the single-query faces: an empty
+    * list, or a null element (which matches nothing and would silently
+    * narrow the query), fails loudly naming the face. */
+  private def requireQuery(face: String, what: String,
+      q: Seq[String]): Unit = {
+    require(q.nonEmpty, s"$face: empty $what list")
+    require(!q.contains(null), s"$face: null $what — a null matches " +
+      "nothing, so the query would silently narrow")
+  }
+
+  /** The single-query ranking step of the Search and Hybrid faces: drop
+    * the constant qid, then global top-k by (score desc, id asc) as
+    * sort + limit (TakeOrdered), rows in rank order. */
+  private[pipeline] def topOne(scores: DataFrame, scoreCol: String,
+      topK: Int): DataFrame = {
+    require(topK > 0, s"topK $topK must be > 0")
+    scores.drop("qid").orderBy(col(scoreCol).desc, col("id").asc)
+      .limit(topK)
+  }
+
+  /** `__rk` = position within the row's qid by (score desc, id asc) —
+    * a qid-PARTITIONED window, never a global sort. */
+  private[pipeline] def rankPerQid(df: DataFrame,
+      scoreCol: String): DataFrame =
+    df.withColumn("__rk", row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy("qid")
+        .orderBy(col(scoreCol).desc, col("id").asc)))
+
+  /** The batch ranking step: at most `topK` rows per qid. */
+  private[pipeline] def topPerQid(df: DataFrame, scoreCol: String,
+      topK: Int): DataFrame = {
+    require(topK > 0, s"topK $topK must be > 0")
+    rankPerQid(df, scoreCol).filter(col("__rk") <= topK)
+      .select("qid", "id", scoreCol)
+  }
+
   /**
    * BM25-ranked disjunctive (OR-of-terms) search: top-k docs by the
    * Lucene-variant BM25 score (idf = ln((N-df+0.5)/(df+0.5) + 1), never
-   * negative). Same bucket-pruned postings read as [[searchAll]]; df
-   * per term falls out of the already-filtered postings (a term's df IS
-   * its postings count), and dlen rides in the postings row, so the
-   * serve path touches nothing but |terms| buckets plus the driver-side
+   * negative). Same bucket-pruned postings read as [[searchAll]], with
+   * the terms as a literal `tok IN (...)` scan filter; df per term
+   * falls out of the already-filtered postings (a term's df IS its
+   * postings count), and dlen rides in the postings row, so the serve
+   * path touches nothing but |terms| buckets plus the driver-side
    * marker stats. Scores are rounded before the id-tie-broken rank so
-   * the exact top-k is reproducible across engines.
+   * the exact top-k is reproducible across engines. A repeated term
+   * counts once. An empty term list, a null term or `topK <= 0`
+   * refuses with an `IllegalArgumentException`. `filter` is the Lucene
+   * filtered-query contract: the predicate restricts CANDIDATES only —
+   * corpus constants (N, avgdl) and per-term df stay unfiltered, so a
+   * doc's score never changes under a filter and top-k stays FULL
+   * among matching docs.
    */
   def searchBm25(spark: SparkSession, idx: Index, terms: Seq[String],
       topK: Int,
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(terms.nonEmpty, "empty term list")
-    import spark.implicits._
+    requireQuery("searchBm25", "term", terms)
+    require(topK > 0, s"searchBm25: topK $topK must be > 0")
     // unresolvable filter fails at analysis time, before any job runs
     val fdocs = filter.map(flt => filteredDocIds(spark, idx, flt))
-    val (nDocs, sumDlen) = stats(spark, idx)
-    val avgdl = sumDlen.toDouble / nDocs
-    val buckets = terms.toDF("tok")
-      .select(bucketOf(col("tok"), idx.nBuckets).as("tb"))
-      .distinct().as[Int].collect().toSeq
-    val postAll = postings(spark, idx)
-      .filter(col("tb").isin(buckets: _*) && col("tok").isin(terms: _*))
-    // Lucene's filtered-query semantics: the predicate restricts
-    // CANDIDATES only — corpus constants (N, avgdl) and per-term df
-    // stay unfiltered, so a doc's score never changes under a filter
-    // and top-k stays FULL among matching docs (never post-filter an
-    // unfiltered top-k; that silently under-fills)
-    val dfPerTerm = postAll.groupBy("tok").agg(count(lit(1)).as("dfc"))
-    val post = fdocs match {
-      case None => postAll
-      case Some(ids) => postAll.join(ids, Seq("id"), "left_semi")
-    }
-    post.join(dfPerTerm, "tok")
-      .withColumn("idf",
-        log((lit(nDocs.toDouble) - col("dfc") + 0.5) / (col("dfc") + 0.5)
-          + 1.0))
-      .withColumn("s",
-        col("idf") * (col("tf") * (Bm25K1 + 1.0))
-          / (col("tf") + lit(Bm25K1)
-            * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dlen") / avgdl)))
-      .groupBy("id").agg(round(sum("s"), 6).as("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(topK)
-  }
-
-  /**
-   * [[searchBm25]] with the term set held in a DATAFRAME instead of a
-   * driver-side Seq — the serve face for vocabulary EXPANSIONS
-   * ([[searchFuzzy]]/[[searchPrefix]]), whose variant sets are
-   * dictionary-derived and must never round-trip through the driver:
-   * a short prefix over a corpus-scale (heavy-tailed, hundreds of
-   * millions of tokens) vocabulary would otherwise collect millions
-   * of variants and compile a multi-million-entry `In` literal —
-   * driver OOM plus a codegen blow-up. `variants` is a one-column
-   * (`tok`) frame; it is deduped, materialized once
-   * (`localCheckpoint` — the expansion plan must not recompute for
-   * the bucket probe AND the postings join), and semi-joined into
-   * the postings read: the [[searchBm25Batch]] vocabulary-join shape.
-   * The only driver collect is the distinct bucket list, bounded by
-   * the index's `nBuckets` constant regardless of variant count.
-   * Scores, rounding, and the (score desc, id) top-k tie-break
-   * replicate [[searchBm25]] exactly; an empty variant frame yields
-   * an empty (id, score) result.
-   */
-  def searchBm25Vocab(spark: SparkSession, idx: Index,
-      variants: DataFrame, topK: Int,
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    searchBm25VocabDf(spark, idx, variants.select("tok"), topK, filter)
-
-  /** [[searchBm25Vocab]] that REUSES a per-token df the expansion
-    * probe already computed when the variant frame carries a `__df`
-    * column (the [[fuzzyExpandBatchDf]] shape — exact, the prunings
-    * keep whole tokens): the serve plan then reads the postings ONCE
-    * instead of scanning them a second time for the df aggregate. A
-    * plain `tok`-only frame serves identically with the df aggregate
-    * inline. */
-  private def searchBm25VocabDf(spark: SparkSession, idx: Index,
-      variants: DataFrame, topK: Int,
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(topK > 0, s"topK $topK must be > 0")
-    import spark.implicits._
-    val carriesDf = variants.columns.contains("__df")
-    val fdocs = filter.map(flt => filteredDocIds(spark, idx, flt))
-    val (nDocs, sumDlen) = stats(spark, idx)
-    val avgdl = sumDlen.toDouble / nDocs
-    val v0 = (if (carriesDf) variants.select(col("tok"),
-        col("__df").as("dfc"))
-      else variants.select(col("tok")))
-      .distinct().localCheckpoint()
-    val v = v0.select("tok")
-    val buckets = v.select(bucketOf(col("tok"), idx.nBuckets).as("tb"))
-      .distinct().as[Int].collect().toSeq
-    if (buckets.isEmpty)
-      return postings(spark, idx).select("id").limit(0)
-        .withColumn("score", lit(0.0))
-    // the variant frame is expansion-capped upstream (per-term
-    // maxExpansions), so the broadcast is bounded by |terms|·cap
-    val postAll = postings(spark, idx)
-      .filter(col("tb").isin(buckets: _*))
-      .join(broadcast(v), Seq("tok"), "left_semi")
-    val dfPerTerm =
-      if (carriesDf) broadcast(v0)
-      else postAll.groupBy("tok").agg(count(lit(1)).as("dfc"))
-    val post = fdocs match {
-      case None => postAll
-      case Some(ids) => postAll.join(ids, Seq("id"), "left_semi")
-    }
-    post.join(dfPerTerm, "tok")
-      .withColumn("idf",
-        log((lit(nDocs.toDouble) - col("dfc") + 0.5) / (col("dfc") + 0.5)
-          + 1.0))
-      .withColumn("s",
-        col("idf") * (col("tf") * (Bm25K1 + 1.0))
-          / (col("tf") + lit(Bm25K1)
-            * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dlen") / avgdl)))
-      .groupBy("id").agg(round(sum("s"), 6).as("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(topK)
+    topOne(bm25Scores(spark, idx, Left(terms.distinct), fdocs), "score",
+      topK)
   }
 
   /**
@@ -872,385 +814,326 @@ object Search {
    * `maxExpansions` rewrite cap (default 50), for the same reason:
    * a 1-char-prefix term over a heavy-tailed vocabulary expands
    * unboundedly, and the highest-df variants are the ones that can
-   * actually rank.
-   *
-   * Scale shape: the probe reads ONE column (`tok`) of the postings
-   * with the terms' prefix disjunction PUSHED to the parquet scan —
-   * postings are written tok-sorted, so `StringStartsWith` row-group
-   * stats skip every block outside the prefix ranges; the per-token
-   * df (the cap's ranking key) is one aggregate over that same
-   * pruned read; the banded `levenshtein(_, _, maxDist)` (gives up
-   * after O(len·maxDist) work) runs only on the surviving
-   * prefix-blocked candidates, exactly [[Dedup.editNearDup]]'s
-   * blocking idea pointed at a dictionary. The cap is a
-   * term-PARTITIONED window — no global sort, no driver collect.
+   * actually rank. A null term refuses. The probe is [[expandVocab]].
    */
   def fuzzyExpand(spark: SparkSession, idx: Index, terms: Seq[String],
       maxDist: Int, prefixLen: Int = 1,
       maxExpansions: Int = 50): DataFrame =
-    fuzzyExpandDf(spark, idx, terms, maxDist, prefixLen, maxExpansions)
-      .select("term", "tok")
+    fuzzyExpandDf(spark, idx, "fuzzyExpand", terms, maxDist, prefixLen,
+      maxExpansions).select(col("key").as("term"), col("tok"))
 
-  /** [[fuzzyExpand]] keeping the probe's per-token postings count
-    * (`__df`) so the serve can skip its own df pass — see
-    * [[fuzzyExpandBatchDf]]. */
-  private def fuzzyExpandDf(spark: SparkSession, idx: Index,
+  /** [[fuzzyExpand]] as `(key, tok, __df)`: validation on the driver,
+    * then the shared vocabulary probe with the terms' prefixes pushed
+    * to the scan. */
+  private def fuzzyExpandDf(spark: SparkSession, idx: Index, face: String,
       terms: Seq[String], maxDist: Int, prefixLen: Int,
       maxExpansions: Int): DataFrame = {
-    require(terms.nonEmpty, "empty term list")
+    requireQuery(face, "term", terms)
+    requireFuzzy(maxDist, prefixLen, maxExpansions)
+    val ts = terms.distinct
+    require(ts.forall(_.length >= prefixLen),
+      s"$face: every term needs at least prefixLen=$prefixLen characters")
+    expandVocab(spark, idx, spark.createDataFrame(ts.map(Tuple1(_)))
+        .toDF("key"), fuzzyMatch(maxDist, prefixLen),
+      ts.map(_.take(prefixLen)).distinct, maxExpansions)
+  }
+
+  private def requireFuzzy(maxDist: Int, prefixLen: Int,
+      maxExpansions: Int): Unit = {
     require(maxDist >= 0 && maxDist <= 2,
       s"maxDist $maxDist out of the useful fuzzy band [0, 2]")
     require(prefixLen >= 1,
       "prefixLen must be >= 1: the shared prefix is what keeps the " +
         "vocabulary probe pruned (Lucene FuzzyQuery prefix_length)")
     require(maxExpansions >= 1,
-      s"maxExpansions $maxExpansions must be >= 1 (Lucene FuzzyQuery " +
+      s"maxExpansions $maxExpansions must be >= 1 (Lucene " +
         "maxExpansions — the rewrite cap that bounds the variant set)")
-    val ts = terms.distinct
-    require(ts.forall(_.length >= prefixLen),
-      s"every term needs at least prefixLen=$prefixLen characters")
-    val preFilter = ts
-      .map(t => col("tok").startsWith(lit(t.take(prefixLen))))
-      .reduce(_ || _)
-    // vocabulary slice WITH per-token df (postings rows per tok = docs
-    // containing it): one aggregate over the pruned tok-only read —
-    // df is exact because the prefix filter prunes whole tokens
-    val vocab = postings(spark, idx).filter(preFilter)
-      .groupBy("tok").agg(count(lit(1)).as("__df"))
-    val tf = spark.createDataFrame(ts.map(Tuple1(_))).toDF("term")
+  }
+
+  /** Fuzzy match of a vocabulary `tok` to a query `key`: shared
+    * `prefixLen` prefix, then the banded `levenshtein` (gives up after
+    * O(len·maxDist) work) on the prefix-blocked survivors only. */
+  private def fuzzyMatch(maxDist: Int, prefixLen: Int) =
+    col("tok").startsWith(substring(col("key"), 1, prefixLen)) &&
+      abs(length(col("tok")) - length(col("key"))) <= maxDist &&
+      levenshtein(col("tok"), col("key"), maxDist) >= 0
+
+  private def prefixMatch = col("tok").startsWith(col("key"))
+
+  /** The one vocabulary expansion: `(key, tok, __df)` for every stored
+    * token matching a key of `keys` (one `key` column), capped per key
+    * at the `maxExpansions` highest-df tokens (df desc, tok asc).
+    *
+    * Scale shape: the probe reads ONE column (`tok`) of the postings
+    * with the `pushed` prefix disjunction on the parquet scan —
+    * postings are written tok-sorted, so `StringStartsWith` row-group
+    * stats skip every block outside the prefix ranges (no prefixes =
+    * the full tok-only dictionary column, still never the corpus).
+    * The per-token df (the cap's ranking key, and `__df`) is one
+    * aggregate over that read — exact, because a prefix filter keeps
+    * whole tokens — and the cap is a key-PARTITIONED window: no global
+    * sort, no driver collect of the variants. */
+  private def expandVocab(spark: SparkSession, idx: Index,
+      keys: DataFrame, matches: org.apache.spark.sql.Column,
+      pushed: Seq[String], maxExpansions: Int): DataFrame = {
+    val dict = postings(spark, idx)
+    val pruned =
+      if (pushed.isEmpty) dict
+      else dict.filter(pushed.map(p => col("tok").startsWith(lit(p)))
+        .reduce(_ || _))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("term").orderBy(col("__df").desc, col("tok").asc)
-    vocab.join(broadcast(tf),
-        col("tok").startsWith(substring(col("term"), 1, prefixLen)) &&
-          abs(length(col("tok")) - length(col("term"))) <= maxDist &&
-          levenshtein(col("tok"), col("term"), maxDist) >= 0)
+      .partitionBy("key").orderBy(col("__df").desc, col("tok").asc)
+    pruned.groupBy("tok").agg(count(lit(1)).as("__df"))
+      .join(broadcast(keys), matches)
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= maxExpansions)
-      .select("term", "tok", "__df")
+      .select("key", "tok", "__df")
+  }
+
+  /** Serve one query's expansion `(key, tok, __df)` through the BM25
+    * core: the variant set stays a DATAFRAME (materialized once — the
+    * core's bucket collect and the serve plan both read it), so a
+    * short prefix over a web-scale vocabulary is a capped window + a
+    * broadcast join, never a driver collect or a literal in-list. */
+  private def serveExpansion(spark: SparkSession, idx: Index,
+      exp: DataFrame, topK: Int): DataFrame = {
+    val qt = exp.select(lit(0L).as("qid"), col("tok"), col("__df"))
+      .distinct().localCheckpoint()
+    topOne(bm25Scores(spark, idx, Right(qt), None), "score", topK)
   }
 
   /** PREFIX search (Lucene `PrefixQuery` / `term*` semantics): every
     * vocabulary token starting with a query prefix — capped per
     * prefix at the `maxExpansions` highest-df variants (Lucene's
     * rewrite cap, default 50; df desc, tok asc tie-break) — served
-    * through the [[searchBm25Vocab]] path: the
-    * autocomplete/search-as-you-type retrieval shape. The vocabulary
-    * probe is the same pruned dictionary read as [[fuzzyExpand]]
-    * (tok-only column read, `StringStartsWith` pushed to the
-    * tok-sorted postings scan, per-token df from one aggregate over
-    * it); the variant set stays a DATAFRAME end-to-end — never a
-    * driver collect, so `searchPrefix(Seq("s"), …)` over a web-scale
-    * vocabulary is a capped window + semi-join, not a driver OOM.
-    * Nothing matching → empty result. */
+    * through the BM25 core: the autocomplete/search-as-you-type
+    * retrieval shape. The vocabulary probe is [[expandVocab]] with
+    * the prefixes pushed to the scan; the variant set never
+    * round-trips through the driver. Nothing matching → empty result.
+    * An empty list, a null or empty-string prefix, or `topK <= 0`
+    * refuses. */
   def searchPrefix(spark: SparkSession, idx: Index,
       prefixes: Seq[String], topK: Int,
       maxExpansions: Int = 50): DataFrame = {
-    require(prefixes.nonEmpty, "empty prefix list")
-    require(prefixes.forall(_.nonEmpty), "empty-string prefix " +
-      "matches the whole vocabulary — give at least one character")
+    requireQuery("searchPrefix", "prefix", prefixes)
+    require(prefixes.forall(_.nonEmpty), "searchPrefix: empty-string " +
+      "prefix matches the whole vocabulary — give at least one character")
     require(maxExpansions >= 1,
       s"maxExpansions $maxExpansions must be >= 1 (Lucene PrefixQuery " +
         "rewrite cap — what bounds a 1-char prefix over a web-scale " +
         "vocabulary)")
+    require(topK > 0, s"searchPrefix: topK $topK must be > 0")
     val ps = prefixes.distinct
-    val preFilter = ps.map(p => col("tok").startsWith(lit(p)))
-      .reduce(_ || _)
-    val vocab = postings(spark, idx).filter(preFilter)
-      .groupBy("tok").agg(count(lit(1)).as("__df"))
-    val pf = spark.createDataFrame(ps.map(Tuple1(_))).toDF("prefix")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("prefix").orderBy(col("__df").desc, col("tok").asc)
-    val variants = vocab.join(broadcast(pf),
-        col("tok").startsWith(col("prefix")))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= maxExpansions)
-      .select("tok", "__df")
-    searchBm25VocabDf(spark, idx, variants, topK)
+    serveExpansion(spark, idx, expandVocab(spark, idx,
+      spark.createDataFrame(ps.map(Tuple1(_))).toDF("key"), prefixMatch,
+      ps, maxExpansions), topK)
   }
 
   /** Typo-tolerant BM25 search: expand each query term against the
     * vocabulary ([[fuzzyExpand]] — per-term df-ranked cap at
     * `maxExpansions`, Lucene parity) and serve the UNION of expansion
-    * variants through the [[searchBm25Vocab]] path — each variant
-    * scores with its own df/idf (rare corrections outweigh common
-    * ones, the property fuzzy retrieval wants) and the postings read
-    * stays bucket-pruned to the expanded terms. The variant set stays
-    * a DATAFRAME from expansion through serve (capped window →
-    * semi-join — no driver collect, no literal in-list). A term with
-    * no expansion contributes nothing; if NOTHING expands, the result
-    * is empty. */
+    * variants through the BM25 core — each variant scores with its
+    * own df/idf (rare corrections outweigh common ones, the property
+    * fuzzy retrieval wants) and the postings read stays bucket-pruned
+    * to the expanded terms. A term with no expansion contributes
+    * nothing; if NOTHING expands, the result is empty. An empty list,
+    * a null term or `topK <= 0` refuses. */
   def searchFuzzy(spark: SparkSession, idx: Index, terms: Seq[String],
       maxDist: Int, topK: Int, prefixLen: Int = 1,
       maxExpansions: Int = 50): DataFrame = {
-    val variants = fuzzyExpandDf(spark, idx, terms, maxDist, prefixLen,
-      maxExpansions).select("tok", "__df")
-    searchBm25VocabDf(spark, idx, variants, topK)
+    require(topK > 0, s"searchFuzzy: topK $topK must be > 0")
+    serveExpansion(spark, idx, fuzzyExpandDf(spark, idx, "searchFuzzy",
+      terms, maxDist, prefixLen, maxExpansions), topK)
   }
 
-  /** Prefix-pushdown cap for the BATCH fuzzy expansion: the batch's
-    * distinct term prefixes are collected only to build the
+  /** Prefix-pushdown cap for the BATCH expansions: the batch's
+    * distinct key prefixes are collected only to build the
     * `StringStartsWith` scan filter; past this many the disjunction
     * stops paying (and the filter tree stops being codegen-friendly),
     * so the probe falls back to the full tok-only dictionary column
     * read — still one narrow column, never the corpus. */
   private val MaxPrefixPushdown = 64
 
-  /** BATCHED [[fuzzyExpand]]: expansion pairs for a whole FRAME of
-    * terms (col `term`) — the expansion is computed ONCE over the
-    * batch's distinct vocabulary and shared by every query that uses
-    * a term. Same per-term df-ranked `maxExpansions` cap; the term
-    * frame is never collected (the only driver read is the distinct
-    * PREFIX set for the scan pushdown, capped at
-    * [[MaxPrefixPushdown]] — past that the probe reads the full
-    * tok-only dictionary column instead). */
-  def fuzzyExpandBatch(spark: SparkSession, idx: Index,
-      terms: DataFrame, maxDist: Int, prefixLen: Int = 1,
-      maxExpansions: Int = 50): DataFrame =
-    fuzzyExpandBatchDf(spark, idx, terms, maxDist, prefixLen,
-      maxExpansions).select("term", "tok")
-
-  /** [[fuzzyExpandBatch]] KEEPING the per-token postings count
-    * (`__df`) the expansion probe already aggregates: `__df` per tok
-    * equals the serve-side df exactly (the prefix/bucket prunings both
-    * keep whole tokens), so a downstream BM25 serve can reuse it and
-    * skip its own second postings pass. */
-  private def fuzzyExpandBatchDf(spark: SparkSession, idx: Index,
-      terms: DataFrame, maxDist: Int, prefixLen: Int,
-      maxExpansions: Int): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 2,
-      s"maxDist $maxDist out of the useful fuzzy band [0, 2]")
-    require(prefixLen >= 1, "prefixLen must be >= 1")
-    require(maxExpansions >= 1,
-      s"maxExpansions $maxExpansions must be >= 1")
-    import spark.implicits._
-    val ts = terms.select(col("term")).distinct().localCheckpoint()
-    require(ts.filter(col("term").isNull
-        || length(col("term")) < prefixLen).isEmpty,
-      s"every term needs at least prefixLen=$prefixLen characters " +
-        "(null/short terms cannot anchor the vocabulary probe)")
-    val prefs = ts.select(substring(col("term"), 1, prefixLen).as("p"))
-      .distinct().limit(MaxPrefixPushdown + 1).as[String].collect()
-    val dict = postings(spark, idx)
-    val pruned =
-      if (prefs.length <= MaxPrefixPushdown)
-        dict.filter(prefs.map(p => col("tok").startsWith(lit(p)))
-          .reduce(_ || _))
-      else dict
-    val vocab = pruned.groupBy("tok").agg(count(lit(1)).as("__df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("term").orderBy(col("__df").desc, col("tok").asc)
-    vocab.join(broadcast(ts),
-        col("tok").startsWith(substring(col("term"), 1, prefixLen)) &&
-          abs(length(col("tok")) - length(col("term"))) <= maxDist &&
-          levenshtein(col("tok"), col("term"), maxDist) >= 0)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= maxExpansions)
-      .select("term", "tok", "__df")
+  /** The prefixes a batch expansion pushes to the scan: the distinct
+    * values of `prefixes` (one string column), or none past
+    * [[MaxPrefixPushdown]]. */
+  private def pushable(prefixes: DataFrame): Seq[String] = {
+    val ps = prefixes.distinct().limit(MaxPrefixPushdown + 1)
+      .collect().map(_.getString(0))
+    if (ps.length <= MaxPrefixPushdown) ps.toSeq else Nil
   }
+
+  /** A query batch's distinct `(qid, key)` rows from its `listCol`
+    * array, materialized once. `explode_outer` keeps a null/empty list
+    * visible as a null key, so a null/empty list and a null element
+    * refuse together on the materialized frame (one job over the
+    * caller's subtree, not a separate refusal scan); `bad` adds the
+    * face's own per-key refusal. The single-query faces refuse the same
+    * inputs, and a batch must not silently drop the query instead. */
+  private def queryKeys(queries: DataFrame, listCol: String, face: String,
+      what: String, bad: org.apache.spark.sql.Column = lit(false),
+      badWhy: String = ""): DataFrame = {
+    val qk = queries
+      .select(col("qid"), explode_outer(col(listCol)).as("key"))
+      .distinct().localCheckpoint()
+    require(qk.filter(col("key").isNull || bad).isEmpty,
+      s"$face: a query has a null/empty $what list or a null $what" +
+        badWhy + " — the single-query faces refuse these, and a batch " +
+        "must not silently drop the query")
+    qk
+  }
+
+  /** Join a batch's `(qid, key)` rows to their expansion, as the
+    * materialized `(qid, tok, __df)` DISTINCT-pair frame the BM25 core
+    * consumes directly (query-count-bounded: qids × capped variants).
+    * Materialized ONCE: the core's bucket collect would otherwise
+    * re-run the dictionary scan; `__df` rides along so the serve skips
+    * its own df aggregate — one postings scan in the fused plan. A
+    * query none of whose keys expands drops from the frame. */
+  private def expansionPairs(qk: DataFrame, exp: DataFrame): DataFrame =
+    qk.join(exp, "key").select(col("qid"), col("tok"), col("__df"))
+      .distinct().localCheckpoint()
 
   /** Rewrite a `(qid, terms)` query batch to its FUZZY-EXPANDED form:
     * each query's terms are replaced by the union of their
-    * [[fuzzyExpandBatch]] variants (shared expansion across the
-    * batch's vocabulary, per-term capped). A query whose terms ALL
-    * fail to expand drops from the frame — the batch analogue of the
-    * single-query "nothing expands → empty result". The result plugs
+    * [[fuzzyExpand]] variants (expansion computed once over the
+    * batch's distinct terms and shared, per-term capped). A query
+    * whose terms ALL fail to expand drops from the frame — the batch
+    * analogue of the single-query "nothing expands → empty result". A
+    * null/empty term list or a null term refuses. The result plugs
     * straight into [[searchBm25Batch]] / the batched hybrid serve. */
   def expandQueriesFuzzy(spark: SparkSession, idx: Index,
       queries: DataFrame, maxDist: Int, prefixLen: Int = 1,
       maxExpansions: Int = 50): DataFrame =
     expandQueriesFuzzyPairs(spark, idx, queries, maxDist, prefixLen,
-        maxExpansions)
+        maxExpansions, "expandQueriesFuzzy")
       .groupBy("qid").agg(collect_set(col("tok")).as("terms"))
 
-  /** `(qid, tok)` DISTINCT-pair face of [[expandQueriesFuzzy]] —
-    * the shape [[searchBm25BatchPairs]] consumes directly, skipping
-    * the collect_set → re-explode round trip (two shuffles of the
-    * bounded expansion plus re-materialization) the array-of-terms
-    * contract forces. Materialized once (query-count-bounded: qids ×
-    * capped variants); the query subtree executes exactly ONE job
-    * (`explode_outer` keeps a null/empty term list visible as a null
-    * term row, so the refusal check rides the same materialized
-    * frame instead of re-running the caller's plan). */
+  /** `(qid, tok, __df)` pair face of [[expandQueriesFuzzy]] — the
+    * shape [[searchBm25BatchPairs]] consumes directly, skipping the
+    * collect_set → re-explode round trip. The term frame is never
+    * collected: the only driver read is the distinct PREFIX set for
+    * the scan pushdown ([[pushable]]). */
   private[pipeline] def expandQueriesFuzzyPairs(spark: SparkSession,
-      idx: Index, queries: DataFrame, maxDist: Int, prefixLen: Int = 1,
-      maxExpansions: Int = 50): DataFrame = {
-    val qt = queries
-      .select(col("qid"), explode_outer(col("terms")).as("term"))
-      .distinct().localCheckpoint()
-    require(qt.filter(col("term").isNull).isEmpty,
-      "expandQueriesFuzzy: a query has a null/empty term list — the " +
-        "single-query contract refuses empty term lists, and a batch " +
-        "must not silently drop the query")
-    val exp = fuzzyExpandBatchDf(spark, idx, qt.select("term"), maxDist,
-      prefixLen, maxExpansions)
-    // materialize the expansion ONCE: the result feeds the batch BM25
-    // serve, whose eager bucket collect and row count would otherwise
-    // each re-execute this subtree's dictionary scan (the expansion is
-    // query-count-bounded — qids × capped variants). `__df` (per-tok
-    // postings count, exact) rides along so the serve skips its own
-    // df aggregate — one postings scan in the fused plan, not two.
-    qt.join(exp, "term")
-      .select(col("qid"), col("tok"), col("__df")).distinct()
-      .localCheckpoint()
+      idx: Index, queries: DataFrame, maxDist: Int, prefixLen: Int,
+      maxExpansions: Int, face: String): DataFrame = {
+    requireFuzzy(maxDist, prefixLen, maxExpansions)
+    val qk = queryKeys(queries, "terms", face, "term",
+      length(col("key")) < prefixLen,
+      s", or a term shorter than prefixLen=$prefixLen")
+    val keys = qk.select("key").distinct()
+    expansionPairs(qk, expandVocab(spark, idx, keys,
+      fuzzyMatch(maxDist, prefixLen),
+      pushable(keys.select(substring(col("key"), 1, prefixLen))),
+      maxExpansions))
   }
 
-  /** Rewrite a `(qid, prefixes)` query batch to its PREFIX-EXPANDED
-    * form: each query's prefixes replace themselves with the
-    * per-prefix df-ranked top-`maxExpansions` vocabulary tokens
-    * (expansion computed once over the batch's distinct prefixes,
-    * shared across queries; same driver-bounded pushdown contract as
-    * [[fuzzyExpandBatch]]). A query none of whose prefixes match
-    * drops from the frame — the batch analogue of the single-query
-    * empty result. Plugs into [[searchBm25Batch]] / the batched
-    * hybrid serve. */
-  def expandQueriesPrefix(spark: SparkSession, idx: Index,
-      queries: DataFrame, maxExpansions: Int = 50): DataFrame =
-    expandQueriesPrefixPairs(spark, idx, queries, maxExpansions)
-      .groupBy("qid").agg(collect_set(col("tok")).as("terms"))
-
-  /** `(qid, tok)` DISTINCT-pair face of [[expandQueriesPrefix]] —
-    * same contract/rationale as [[expandQueriesFuzzyPairs]]: one
-    * materialization of the query subtree (`explode_outer` keeps a
-    * null/empty prefix list visible as a null row for the refusal),
-    * one materialization of the expansion, no collect_set →
-    * re-explode round trip before the batch BM25 serve. */
+  /** `(qid, tok, __df)` pairs of a `(qid, prefixes)` batch: each
+    * query's prefixes replace themselves with the per-prefix df-ranked
+    * top-`maxExpansions` vocabulary tokens (expansion computed once
+    * over the batch's distinct prefixes and shared). A null/empty
+    * prefix list, a null or an empty-string prefix refuses. */
   private[pipeline] def expandQueriesPrefixPairs(spark: SparkSession,
-      idx: Index, queries: DataFrame,
-      maxExpansions: Int = 50): DataFrame = {
+      idx: Index, queries: DataFrame, maxExpansions: Int,
+      face: String): DataFrame = {
     require(maxExpansions >= 1,
       s"maxExpansions $maxExpansions must be >= 1")
-    import spark.implicits._
-    val qp = queries
-      .select(col("qid"), explode_outer(col("prefixes")).as("prefix"))
-      .distinct().localCheckpoint()
-    require(qp.filter(col("prefix").isNull
-        || length(col("prefix")) === 0).isEmpty,
-      "expandQueriesPrefix: a query has a null/empty prefix list or " +
-        "an empty-string prefix — the single-query contract refuses " +
-        "both (an empty prefix matches the whole vocabulary), and a " +
-        "batch must not silently drop the query")
-    val ps = qp.select("prefix").distinct()
-    val prefs = ps.limit(MaxPrefixPushdown + 1).as[String].collect()
-    val dict = postings(spark, idx)
-    val pruned =
-      if (prefs.length <= MaxPrefixPushdown)
-        dict.filter(prefs.map(p => col("tok").startsWith(lit(p)))
-          .reduce(_ || _))
-      else dict
-    val vocab = pruned.groupBy("tok").agg(count(lit(1)).as("__df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("prefix").orderBy(col("__df").desc, col("tok").asc)
-    val exp = vocab.join(broadcast(ps),
-        col("tok").startsWith(col("prefix")))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= maxExpansions)
-      .select("prefix", "tok", "__df")
-    // materialize ONCE — same rationale as expandQueriesFuzzyPairs:
-    // the downstream batch serve's eager checks would re-run the
-    // dictionary scan per action on a lazy expansion; `__df` rides
-    // along so the serve skips its own df aggregate (one postings
-    // scan in the fused plan, not two)
-    qp.join(exp, "prefix")
-      .select(col("qid"), col("tok"), col("__df")).distinct()
-      .localCheckpoint()
+    val qk = queryKeys(queries, "prefixes", face, "prefix",
+      length(col("key")) === 0,
+      ", or an empty-string prefix (it matches the whole vocabulary)")
+    val keys = qk.select("key").distinct()
+    expansionPairs(qk, expandVocab(spark, idx, keys, prefixMatch,
+      pushable(keys), maxExpansions))
   }
 
   /** BATCHED prefix (autocomplete) search: [[searchPrefix]] for a
     * whole `(qid, prefixes)` frame in one pass — shared capped
-    * expansion ([[expandQueriesPrefix]]) + the one-pass batched BM25
-    * pipe. Per-query results identical to [[searchPrefix]]. */
+    * expansion + the one-pass batched BM25 pipe. Per-query results
+    * identical to [[searchPrefix]]; a query whose prefixes all match
+    * nothing drops. */
   def searchPrefixBatch(spark: SparkSession, idx: Index,
       queries: DataFrame, topK: Int, maxExpansions: Int = 50,
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val expanded = expandQueriesPrefixPairs(spark, idx, queries,
-      maxExpansions)
-    searchBm25BatchPairs(spark, idx, expanded, topK, filter)
-  }
+      filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    searchBm25BatchPairs(spark, idx, expandQueriesPrefixPairs(spark, idx,
+      queries, maxExpansions, "searchPrefixBatch"), topK, filter)
 
   /** BATCHED typo-tolerant BM25: [[searchFuzzy]] for a whole
     * `(qid, terms)` frame in one pass — the expansion is shared
     * across the batch vocabulary ([[expandQueriesFuzzy]]) and the
-    * serve is the ordinary [[searchBm25Batch]] pipe (one
-    * bucket-pruned postings read, shared df/idf, qid-partitioned
-    * ranking). Per-query results identical to [[searchFuzzy]] on
-    * that query alone; `filter` carries the same Lucene
-    * filtered-query contract. */
+    * serve is the batched BM25 pipe (one bucket-pruned postings read,
+    * shared df/idf, qid-partitioned ranking). Per-query results
+    * identical to [[searchFuzzy]] on that query alone; `filter`
+    * carries the same Lucene filtered-query contract. */
   def searchFuzzyBatch(spark: SparkSession, idx: Index,
       queries: DataFrame, maxDist: Int, topK: Int, prefixLen: Int = 1,
       maxExpansions: Int = 50,
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val expanded = expandQueriesFuzzyPairs(spark, idx, queries, maxDist,
-      prefixLen, maxExpansions)
-    searchBm25BatchPairs(spark, idx, expanded, topK, filter)
-  }
+      filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    searchBm25BatchPairs(spark, idx, expandQueriesFuzzyPairs(spark, idx,
+        queries, maxDist, prefixLen, maxExpansions, "searchFuzzyBatch"),
+      topK, filter)
 
   /**
    * BATCHED [[searchBm25]]: per-query BM25 top-k for a whole frame of
    * queries — `queries` is `(qid, terms: array<string>)` — in ONE
    * bucket-pruned postings pass, the offline-evaluation /
    * multi-tenant serve shape where looping the driver one query at a
-   * time would fan out |queries| Spark jobs.
-   *
-   * Scale shape: the postings scan is pruned to the UNION of the
-   * batch's term buckets (a driver collect bounded by the index's
-   * `nBuckets` constant — never by query count), restricted to the
-   * batch vocabulary by a distributed semi-join (query terms are
-   * never collected), per-term df/idf is computed ONCE and shared
-   * across queries, and the per-(qid, doc) scores fan out through one
-   * broadcast join against the exploded (qid, tok) frame. Ranking is
-   * a per-qid window — partitioned by query, never a global sort.
-   * Scores and per-query ranking replicate [[searchBm25]] exactly
-   * (same df, same rounding, same id tie-break); `filter` is the same
-   * Lucene filtered-query contract (candidates restricted BELOW the
-   * top-k, corpus constants unfiltered).
+   * time would fan out |queries| Spark jobs. Scores and per-query
+   * ranking replicate [[searchBm25]] exactly (same core, same id
+   * tie-break, duplicate terms inside one query count once); ranking
+   * is a per-qid window. A null/empty term list or a null term
+   * refuses; `filter` is the same Lucene filtered-query contract.
    */
   def searchBm25Batch(spark: SparkSession, idx: Index,
       queries: DataFrame, topK: Int,
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(topK > 0, s"topK $topK must be > 0")
+    require(topK > 0, s"searchBm25Batch: topK $topK must be > 0")
     // a filter that can't resolve fails HERE, at analysis time,
-    // before any of the batch's eager work below runs (the fallback
-    // path in hybridTopKBatch relies on the refusal being cheap)
+    // before any of the batch's eager work below runs (the hybrid
+    // lexical fallback relies on the refusal being cheap)
     val fdocs = filter.map(flt => filteredDocIds(spark, idx, flt))
-    // the single-query face refuses an empty term list loudly; the
-    // batch face must not silently DROP such a query instead
-    // (explode_outer keeps it visible as a null tok row on the
-    // materialized frame — one job over the caller's subtree instead
-    // of a separate refusal scan)
-    // duplicate terms inside one query contribute once (the Seq face
-    // dedups via its isin filter — same rule here)
-    val qt = queries
-      .select(col("qid"), explode_outer(col("terms")).as("tok"))
-      .distinct().localCheckpoint()
-    require(qt.filter(col("tok").isNull).isEmpty,
-      "searchBm25Batch: a query has a null/empty term list — the " +
-        "single-query contract refuses empty term lists, and a batch " +
-        "must not silently drop the query")
-    searchBm25BatchResolved(spark, idx, qt, topK, fdocs, None)
+    val qt = queryKeys(queries, "terms", "searchBm25Batch", "term")
+      .select(col("qid"), col("key").as("tok"))
+    topPerQid(bm25Scores(spark, idx, Right(qt), fdocs), "score", topK)
   }
 
-  /** Serve face of [[searchBm25Batch]] for a `(qid, tok, __df)`
-    * DISTINCT pair frame that is ALREADY materialized (the [[
-    * expandQueriesFuzzyPairs]]/[[expandQueriesPrefixPairs]] output
-    * shape): skips the array explode + distinct + re-materialization
-    * the public contract pays, and reuses the expansion's exact
-    * per-token df instead of re-aggregating the postings — ONE
-    * postings scan in the serve plan. Pair rows must be distinct,
-    * non-null, and backed by a checkpoint (the eager bucket collect
-    * and row count below re-execute the frame's plan otherwise). */
+  /** Serve face of [[searchBm25Batch]] for a materialized DISTINCT
+    * `(qid, tok, __df)` pair frame (the [[expandQueriesFuzzyPairs]] /
+    * [[expandQueriesPrefixPairs]] output): no explode, and the
+    * expansion's exact per-token df replaces the serve's own df
+    * aggregate. */
   private[pipeline] def searchBm25BatchPairs(spark: SparkSession,
       idx: Index, pairs: DataFrame, topK: Int,
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(topK > 0, s"topK $topK must be > 0")
     val fdocs = filter.map(flt => filteredDocIds(spark, idx, flt))
-    val dfPre = pairs.select(col("tok"), col("__df").as("dfc")).distinct()
-    searchBm25BatchResolved(spark, idx, pairs.select("qid", "tok"),
-      topK, fdocs, Some(dfPre))
+    topPerQid(bm25Scores(spark, idx, Right(pairs), fdocs), "score", topK)
   }
 
-  private def searchBm25BatchResolved(spark: SparkSession, idx: Index,
-      qt: DataFrame, topK: Int, fdocs: Option[DataFrame],
-      dfPre: Option[DataFrame]): DataFrame = {
+  /**
+   * The one BM25 score: unranked `(qid, id, score)` for a `query` that
+   * is either the single BM25 face's validated terms (`Left`: one query,
+   * qid 0) or validated DISTINCT `(qid, tok)` pairs (`Right`: local or
+   * checkpointed, since the bucket collect below and the serve plan
+   * both read them). A pair frame that carries `__df` (an expansion's
+   * exact per-token postings count) has its df reused instead of
+   * aggregated from the postings a second time.
+   *
+   * Scale shape: the postings scan is pruned to the UNION of the
+   * query's term buckets and restricted to its vocabulary — a literal
+   * `tok IN (...)` scan filter for the terms, a broadcast join that
+   * also attaches qid and df for an expansion, a semi-join otherwise.
+   * df/idf per term is computed ONCE and shared across queries, and
+   * scores fan out to the qids through one join. `fdocs` restricts
+   * candidates below the score (corpus constants and df stay
+   * unfiltered). Scores round to 6 places before any ranking.
+   */
+  private def bm25Scores(spark: SparkSession, idx: Index,
+      query: Either[Seq[String], DataFrame],
+      fdocs: Option[DataFrame]): DataFrame = {
+    val qt = query.fold(
+      ts => spark.createDataFrame(ts.map(t => (0L, t))).toDF("qid", "tok"),
+      identity)
+    val carriesDf = qt.columns.contains("__df")
     val (nDocs, sumDlen) = stats(spark, idx)
     val avgdl = sumDlen.toDouble / nDocs
     // ONE bounded action gives both serve-planning inputs: the
@@ -1268,21 +1151,29 @@ object Search {
     val qtRows = perBucket.map(_.getLong(1)).sum
     def small(df: DataFrame): DataFrame =
       if (qtRows <= 1000000L) broadcast(df) else df
-    val vocab = qt.select("tok").distinct()
-    val postAll = postings(spark, idx)
-      .filter(col("tb").isin(buckets: _*))
-      .join(small(vocab), Seq("tok"), "left_semi")
-    // per-term df: reuse the expansion probe's exact count when the
-    // caller carried it (dfPre — bounded, derived from a checkpointed
-    // pair frame) instead of a SECOND aggregate pass over the
-    // bucket-pruned postings scan
-    val dfPerTerm = dfPre.map(small)
-      .getOrElse(postAll.groupBy("tok").agg(count(lit(1)).as("dfc")))
-    val post = fdocs match {
-      case None => postAll
-      case Some(ids) => postAll.join(ids, Seq("id"), "left_semi")
+    val scan = postings(spark, idx).filter(col("tb").isin(buckets: _*))
+    val matched = query match {
+      case Left(ts) => scan.filter(col("tok").isin(ts: _*))
+      case Right(_) if carriesDf =>
+        scan.join(small(qt.select(col("qid"), col("tok"),
+          col("__df").as("dfc"))), "tok")
+      case Right(_) =>
+        scan.join(small(qt.select("tok").distinct()), Seq("tok"),
+          "left_semi")
     }
-    val perTok = post.join(dfPerTerm, "tok")
+    val post = fdocs match {
+      case None => matched
+      case Some(ids) => matched.join(ids, Seq("id"), "left_semi")
+    }
+    val perPair =
+      if (carriesDf) post
+      else {
+        val withDf = post.join(
+          matched.groupBy("tok").agg(count(lit(1)).as("dfc")), "tok")
+        if (query.isLeft) withDf.withColumn("qid", lit(0L))
+        else withDf.join(small(qt.select("qid", "tok")), "tok")
+      }
+    perPair
       .withColumn("idf",
         log((lit(nDocs.toDouble) - col("dfc") + 0.5) / (col("dfc") + 0.5)
           + 1.0))
@@ -1290,12 +1181,6 @@ object Search {
         col("idf") * (col("tf") * (Bm25K1 + 1.0))
           / (col("tf") + lit(Bm25K1)
             * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dlen") / avgdl)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("score").desc, col("id").asc)
-    perTok.join(small(qt), "tok")
       .groupBy("qid", "id").agg(round(sum("s"), 6).as("score"))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= topK)
-      .select("qid", "id", "score")
   }
 }

@@ -110,9 +110,9 @@ object VecIndex {
     * reload a <= C·dim-doubles structure that never changes for a
     * given version — pure per-query driver overhead (guide §1.2: don't
     * recompute what is constant). Keyed by the sidecar directory PLUS
-    * its file-status signature (file count, total bytes, newest
-    * mtime), so a test re-initializing an index under the same tmp
-    * path invalidates naturally. This memoizes INDEX STRUCTURE — the
+    * its [[GenLog.dirSig]] (file count, total bytes, newest mtime,
+    * sorted file-name hash), so re-initializing an index under the
+    * same path invalidates naturally. This memoizes INDEX STRUCTURE — the
     * at-rest codebook, exactly like the memoized index fixtures — not
     * query results: every serve still scans the probed lists and
     * scores them. Cleared with the other session caches. */
@@ -120,15 +120,9 @@ object VecIndex {
 
   private[graft] def clearBookMemo(): Unit = bookMemo.clear()
 
-  private def dirSig(f: FileSystem, dir: Path): String = {
-    val sts = f.listStatus(dir)
-    sts.length.toString + ":" + sts.map(_.getLen).sum + ":" +
-      (if (sts.isEmpty) 0L else sts.map(_.getModificationTime).max)
-  }
-
   private def memoBook[T <: AnyRef](f: FileSystem, dir: String)(
       load: => T): T =
-    bookMemo.getOrElseUpdate((dir, dirSig(f, new Path(dir))), load)
+    bookMemo.getOrElseUpdate((dir, GenLog.dirSig(f, new Path(dir))), load)
       .asInstanceOf[T]
 
   /** [[Similarity.collectCodebook]] of the version-`v` centroids

@@ -63,6 +63,33 @@ class FrequencyDiscretizerSpec extends SparkSpec {
     }
   }
 
+  test("-0.0 and 0.0 are one value: the splits do not depend on sample " +
+      "order and both zeros land in one bucket") {
+    def bits(a: Array[Double]) =
+      a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    val fwd = Array(-0.0, 0.0, 0.0, 1.0, 2.0)
+    val a = FrequencyDiscretizer.findSplitCandidates(fwd, 3)
+    val b = FrequencyDiscretizer.findSplitCandidates(fwd.reverse, 3)
+    assert(bits(a) == bits(b) && bits(a) == bits(Array(0.0, 1.0, 2.0)),
+      s"${a.toSeq} vs ${b.toSeq}")
+    for (splits <- Seq(Array(Double.NegativeInfinity, 0.0, 1.0,
+        Double.PositiveInfinity), Array(Double.NegativeInfinity, -0.0, 1.0,
+        Double.PositiveInfinity)))
+      assert(FrequencyDiscretizer.binarySearchForBuckets(splits, -0.0) ==
+        FrequencyDiscretizer.binarySearchForBuckets(splits, 0.0),
+        s"splits ${splits.toSeq}")
+    // end to end through the native bucketize kernel, both sample orders
+    for (order <- Seq(fwd.toSeq, fwd.reverse.toSeq)) {
+      val df = spark.createDataFrame(order.map(v => Tuple1(Vectors.dense(v))))
+        .toDF("features")
+      val out = new FrequencyDiscretizer().setNumBuckets(4).fit(df)
+        .transform(df).select("discFeatures").collect()
+        .map(_.getAs[Vector](0)(0))
+      val zeros = order.zip(out).filter(_._1 == 0.0).map(_._2).distinct
+      assert(zeros.size == 1, s"order $order buckets ${out.toSeq}")
+    }
+  }
+
   test("discretized output feeds the selector (end-to-end chain)") {
     val rng = new scala.util.Random(3)
     val rows = (0 until 1000).map { _ =>

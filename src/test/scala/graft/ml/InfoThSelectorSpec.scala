@@ -95,33 +95,6 @@ class InfoThSelectorSpec extends SparkSpec {
     }
   }
 
-  /** Number of Spark jobs `body` starts, counted by a SparkListener. A
-    * marker job run afterwards flushes the listener queue: events reach a
-    * listener in order, so once the marker is seen every job of `body` is. */
-  private def jobsRunBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(marker), "listener never saw the marker job")
-      groups.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("criterion case does not change the work: MIM runs the jobs mim does") {
     val est = new InfoThSelector().setNumTopFeatures(3)
     var lower: InfoThSelectorModel = null
