@@ -2561,12 +2561,13 @@ object Stress {
     spark.stop()
   }
 
-  /** Incremental-ingest stress: Jaccard working set over nDocs base
-    * documents, then ONE 1%-sized shard folded in via
-    * [[graft.pipeline.Dedup.jaccardMerge]] vs a full recompute over the
-    * union — the 100 TB claim under test is that shard ingest costs
-    * the delta neighborhood, not the corpus. Every 10th shard doc
-    * near-dups a base doc so the merge produces real new pairs. */
+  /** Incremental-ingest stress: the at-rest Jaccard working set over
+    * nDocs base documents, then ONE 1%-sized shard folded in via
+    * [[graft.pipeline.Dedup.jaccardRestMerge]] vs a full recompute over
+    * the union ([[graft.pipeline.Dedup.ngramJaccard]] at n = 1) — the
+    * 100 TB claim under test is that shard ingest costs the delta
+    * neighborhood, not the corpus. Every 10th shard doc near-dups a
+    * base doc so the fold produces real new pairs. */
   private def incDedupStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
     import graft.pipeline.Dedup
     // 5M-token vocabulary -> mean token df ~ nDocs*40/5M (~8 at 1M
@@ -2592,46 +2593,29 @@ object Stress {
           .otherwise(col("id") + nDocs).as("base")))
 
     val t0 = System.nanoTime()
-    val st = Dedup.jaccardInit(base, "doc_id", "text", 0.5, 256L)
-    val nBasePairs = st.pairs.count()
-    val tInit = (System.nanoTime() - t0) / 1e9
+    val nFullPairs = Dedup.ngramJaccard(base.unionByName(delta),
+      "doc_id", "text", 1, 0.5, 256L).count()
+    val tFull = (System.nanoTime() - t0) / 1e9
 
-    val t1 = System.nanoTime()
-    val merged = Dedup.jaccardMerge(st, delta, "doc_id", "text", 0.5, 256L)
-    val nMergedPairs = merged.pairs.count()
-    val tMerge = (System.nanoTime() - t1) / 1e9
-    st.release()
-
-    val t2 = System.nanoTime()
-    val full = Dedup.jaccardInit(base.unionByName(delta),
-      "doc_id", "text", 0.5, 256L)
-    val nFullPairs = full.pairs.count()
-    val tFull = (System.nanoTime() - t2) / 1e9
-    full.release(); merged.release()
-
-    require(nMergedPairs == nFullPairs,
-      s"incremental merge diverged: $nMergedPairs vs full $nFullPairs")
-
-    // at-rest variant: postings bucketed on disk, fold cost = pruned
-    // probes + delta writes (no in-memory working set at all)
+    // postings bucketed on disk, fold cost = pruned probes + delta writes
     val restPath = "target/tmp/jrest-stress"
-    val t3 = System.nanoTime()
+    val t1 = System.nanoTime()
     val rst = Dedup.jaccardRestInit(base, "doc_id", "text", 0.5, 256L,
       restPath, nBuckets = 64)
-    val tRestInit = (System.nanoTime() - t3) / 1e9
-    val t4 = System.nanoTime()
+    val tRestInit = (System.nanoTime() - t1) / 1e9
+    val nBasePairs = Dedup.jaccardRestPairs(spark, rst).count()
+    val t2 = System.nanoTime()
     val rst2 = Dedup.jaccardRestMerge(rst, delta, "doc_id", "text")
-    val tRestMerge = (System.nanoTime() - t4) / 1e9
-    val t5 = System.nanoTime()
+    val tRestMerge = (System.nanoTime() - t2) / 1e9
+    val t3 = System.nanoTime()
     val nRestPairs = Dedup.jaccardRestPairs(spark, rst2).count()
-    val tRestRead = (System.nanoTime() - t5) / 1e9
+    val tRestRead = (System.nanoTime() - t3) / 1e9
     require(nRestPairs == nFullPairs,
       s"at-rest merge diverged: $nRestPairs vs full $nFullPairs")
     Dedup.jaccardRestDrop(spark, restPath)
 
     println(s"""{"metric":"stress_incdedup","docs":$nDocs,"delta":$nDelta,""" +
-      s""""init_sec":$tInit,"base_pairs":$nBasePairs,""" +
-      s""""merge_sec":$tMerge,"merged_pairs":$nMergedPairs,""" +
+      s""""base_pairs":$nBasePairs,""" +
       s""""full_recompute_sec":$tFull,"full_pairs":$nFullPairs,""" +
       s""""rest_init_sec":$tRestInit,"rest_merge_sec":$tRestMerge,""" +
       s""""rest_pairs_read_sec":$tRestRead,"rest_pairs":$nRestPairs}""")

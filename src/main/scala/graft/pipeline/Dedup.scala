@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -87,159 +88,7 @@ object Dedup {
     }
   }
 
-  // ---------- incremental corpus addition ----------
-
-  /** Jaccard dedup working set for a corpus ingested in shards:
-    * UNCAPPED postings, the token document-frequency table, and the
-    * scored pairs — all PERSISTED and MATERIALIZED (ingest is an
-    * eager operation: each fold's heavy lifting must run exactly once,
-    * not once per downstream consumer). Call [[release]] on a
-    * superseded state once the next one is built. */
-  final case class JaccardState(post: DataFrame, dfTab: DataFrame,
-      pairs: DataFrame) {
-    private[Dedup] def materialize(persistPost: Boolean): JaccardState = {
-      val frames = (if (persistPost) Seq(post) else Nil) ++ Seq(dfTab, pairs)
-      frames.foreach(
-        _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      frames.foreach(_.count())
-      this
-    }
-    /** Drop the frames THIS state persisted. A merged state's postings
-      * are a lazy union over the INITIAL state's cache (re-persisting
-      * the corpus every shard would rewrite it), so in a chain of
-      * merges release the init state last. */
-    def release(): Unit =
-      Seq(post, dfTab, pairs).foreach(_.unpersist(blocking = false))
-  }
-
-  /** Build the initial [[JaccardState]] from the first shard. */
-  def jaccardInit(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxDf: Long): JaccardState = {
-    val post = postings(df, idCol, textCol)
-    val dfTab = post.groupBy("tok").agg(count("*").as("dfc"))
-    val capped = post
-      .join(dfTab.filter(col("dfc") <= maxDf).select("tok"), "tok")
-      .select("id", "tok")
-    JaccardState(post, dfTab, jaccardFromPostings(capped, threshold))
-      .materialize(persistPost = true)
-  }
-
-  /**
-   * Fold one new shard into a [[JaccardState]], producing the state a
-   * full [[jaccardInit]] over the union would produce (the spec pins
-   * exact equality) at DELTA cost, not corpus cost:
-   *
-   * - postings/df: the shard's postings are unioned in; the df table
-   *   merges by partial-agg (vocabulary-sized — never the corpus).
-   * - the df cap makes incremental scoring non-additive at the margin:
-   *   a token the shard pushes past `maxDf` leaves the index, which
-   *   changes the capped sizes and intersections of OLD documents that
-   *   carry it. Those "affected" docs are bounded by construction
-   *   (each crossed token had <= maxDf old docs), and only pairs with
-   *   an affected or shard-new side can change — everything else is
-   *   carried over from the previous state untouched.
-   * - rescoring joins ONLY the affected/new docs' postings against
-   *   their token-sharing partners — the same inverted-index shape as
-   *   the full job, restricted to the delta neighborhood.
-   *
-   * Document ids must be unique across shards (the caller's contract).
-   */
-  def jaccardMerge(state: JaccardState, delta: DataFrame, idCol: String,
-      textCol: String, threshold: Double, maxDf: Long): JaccardState = {
-    import org.apache.spark.storage.StorageLevel
-    val dPost = postings(delta, idCol, textCol)
-    val dDf = dPost.groupBy("tok").agg(count("*").as("dfc"))
-    // the next state's df table: an aggregate over the PERSISTED old
-    // table + the shard's — vocabulary-sized, never a corpus rescan.
-    // Materialized first so everything below reads it, not its lineage.
-    val mergedDf = state.dfTab.unionByName(dDf)
-      .groupBy("tok").agg(sum("dfc").as("dfc"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    mergedDf.count()
-    val post2 = state.post.unionByName(dPost)
-    // tokens the shard pushed over the cap: indexed before, hot now.
-    // Only tokens IN the shard can cross, so this is the (small) shard
-    // vocabulary probing the persisted df table — never vocab x vocab.
-    val crossed = dDf.select(col("tok"), col("dfc").as("ddfc"))
-      .join(state.dfTab, "tok")
-      .filter(col("dfc") <= maxDf && col("dfc") + col("ddfc") > maxDf)
-      .select("tok")
-      .localCheckpoint(true)
-    val hasCrossed = crossed.limit(1).count() > 0
-    // docs whose capped token set changed: old docs carrying a crossed
-    // token, plus every shard doc. Eagerly checkpointed (small by
-    // construction: <= maxDf docs per crossed token + the shard) — it
-    // feeds the joins below and must not recompute per consumer. The
-    // old-postings probe is SKIPPED entirely when nothing crossed (the
-    // common shard).
-    val affected = (if (hasCrossed)
-        state.post.join(crossed, "tok").select("id").distinct()
-          .unionByName(delta.select(col(idCol).as("id"))).distinct()
-      else delta.select(col(idCol).as("id")).distinct())
-      .localCheckpoint(true)
-    // The fold never builds merged capped postings over the corpus —
-    // that join IS the full job's cost. Instead: the corpus is touched
-    // by exactly TWO scans of the persisted postings with a SMALL
-    // build side (the partner probe and the neighborhood extract), and
-    // the df cap is applied to the delta neighborhood only.
-    val okTokOf = (toks: DataFrame) =>
-      toks.join(mergedDf.filter(col("dfc") <= maxDf).select("tok"), "tok")
-    // capped tokens of affected docs -> their pair partners. With no
-    // crossings the affected docs ARE the shard, whose postings we
-    // already hold — no corpus scan to fetch them.
-    val aTokSrc =
-      if (hasCrossed)
-        post2.join(affected, Seq("id"), "left_semi").select("tok").distinct()
-      else dPost.select("tok").distinct()
-    val aTok = okTokOf(aTokSrc).localCheckpoint(true)
-    val nbrIds = post2.join(aTok, "tok").select("id").distinct()
-      .localCheckpoint(true)
-    // full postings of the neighborhood (affected + partners), capped
-    // against the merged df table
-    val rUncapped = post2.join(nbrIds, Seq("id"), "left_semi")
-      .localCheckpoint(true)
-    val restricted = rUncapped
-      .join(okTokOf(rUncapped.select("tok").distinct()), "tok")
-      .select("id", "tok")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Rescore exactly the pairs with >= 1 affected side — never the
-    // full neighborhood self-join (O(affected x df) pair rows instead
-    // of O(neighborhood^2)): affected-x-partner pairs from an
-    // asymmetric join (pair order normalized), affected-x-affected
-    // pairs from the small self-join; the two sets are disjoint by
-    // construction. Sizes come from the capped neighborhood postings.
-    // The checkpoint forces the whole fold to run ONCE, here.
-    val sizes = restricted.groupBy("id").agg(count("*").as("sz"))
-    val aP = restricted.join(affected, Seq("id"), "left_semi")
-    val pP = restricted.join(affected, Seq("id"), "left_anti")
-    val inter = aP.as("a").join(pP.as("b"), col("a.tok") === col("b.tok"))
-      .select(least(col("a.id"), col("b.id")).as("ida"),
-        greatest(col("a.id"), col("b.id")).as("idb"))
-      .unionByName(aP.as("a").join(aP.as("b"),
-          col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("ida"), col("b.id").as("idb")))
-      .groupBy("ida", "idb").agg(count("*").as("i"))
-    val rescored = inter
-      .join(sizes.withColumnRenamed("id", "ida")
-        .withColumnRenamed("sz", "sa"), "ida")
-      .join(sizes.withColumnRenamed("id", "idb")
-        .withColumnRenamed("sz", "sb"), "idb")
-      .select(col("ida"), col("idb"),
-        round(col("i").cast("double") / (col("sa") + col("sb") - col("i")), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
-    restricted.unpersist(blocking = false)
-    // pairs with NO affected side carry over verbatim
-    val carried = state.pairs
-      .join(affected.withColumnRenamed("id", "ida"), Seq("ida"), "left_anti")
-      .join(affected.withColumnRenamed("id", "idb"), Seq("idb"), "left_anti")
-      .select("ida", "idb", "jaccard")
-    JaccardState(post2, mergedDf, carried.unionByName(rescored))
-      .materialize(persistPost = false)
-  }
-
-  // ---------- incremental corpus addition, AT REST ----------
+  // ---------- incremental corpus addition, at rest ----------
 
   /** Handle to a [[jaccardRestInit]]-built on-disk working set. Nothing
     * is persisted in executor memory between folds — the state IS the
@@ -247,7 +96,7 @@ object Dedup {
   final case class JaccardRest(path: String, nBuckets: Int, fold: Int,
       threshold: Double, maxDf: Long)
 
-  private def bucketOf(c: org.apache.spark.sql.Column, n: Int) =
+  private def bucketOf(c: Column, n: Int) =
     pmod(xxhash64(c), lit(n)).cast("int")
 
   /** Append `df` under `dir` as a parquet table DIRECTORY-PARTITIONED
@@ -269,22 +118,55 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"${st.path}/meta")
   }
 
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Present under a set's path from a fold's first append until its
+    * meta commits. A fold that died in between left a shard's postings
+    * and df deltas in the logs; folding that shard again would count
+    * them twice. */
+  private val FoldMarker = "_FOLD_IN_PROGRESS"
+
+  private def requireNoInterruptedFold(spark: SparkSession, path: String): Unit =
+    if (fsOf(spark, path).exists(new Path(path, FoldMarker)))
+      throw new IllegalStateException(s"at-rest Jaccard set $path holds an " +
+        s"interrupted fold ($FoldMarker): its logs may count a shard twice; " +
+        "the set must be rebuilt with jaccardRestInit")
+
+  /** Per-id row count `n` and non-null-text count `nt` of a shard. */
+  private def shardIds(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.groupBy(col(idCol).as("id"))
+      .agg(count(lit(1)).as("n"), count(col(textCol)).as("nt"))
+
+  /** Refuses a shard holding a null or repeated id: postings explode per
+    * row, so two rows of one id would score as one document holding
+    * both token sets. One job over `ids` ([[shardIds]]); returns the
+    * shard's row count with text. */
+  private def requireUniqueIds(ids: DataFrame, idCol: String, who: String): Long = {
+    val (bad, texts) = ids.rdd
+      .map(r => (if (r.isNullAt(0) || r.getLong(1) > 1) Some(String.valueOf(r.get(0)))
+        else None, r.getLong(2)))
+      .fold((None, 0L)) { case ((a, x), (b, y)) => (a.orElse(b), x + y) }
+    require(bad.isEmpty, s"$who: id column '$idCol' holds a null or repeated " +
+      s"id (${bad.get}); ids must be non-null and unique within a shard")
+    texts
+  }
+
   /** Reopen an at-rest working set written by a previous session. */
   def jaccardRestOpen(spark: SparkSession, path: String): JaccardRest = {
+    requireNoInterruptedFold(spark, path)
     val m = spark.read.parquet(s"$path/meta").head()
     JaccardRest(path, m.getInt(0), m.getInt(1), m.getDouble(2), m.getLong(3))
   }
 
   /**
-   * Build the Jaccard dedup working set AT REST — the scale shape of
-   * [[jaccardInit]]/[[jaccardMerge]]. The in-memory variant's shard
-   * fold pays TWO full scans of the persisted corpus postings (partner
-   * probe + neighborhood extract) with join-shuffle on the corpus
-   * side; here the corpus lives on disk as bucket-partitioned parquet
-   * and every fold touches it through (bucket, key) equi-joins whose
-   * probe side is delta-sized — partition-pruned when the probe's
-   * buckets are few, broadcast (zero corpus shuffle) when AQE sees the
-   * probe is small, and at worst ONE sort-merge pass, never two.
+   * Build the Jaccard dedup working set AT REST from a first shard;
+   * [[jaccardRestMerge]] folds in the next ones. The corpus lives on
+   * disk as bucket-partitioned parquet, and a fold touches it only
+   * through (bucket, key) equi-joins whose probe side is delta-sized —
+   * partition-pruned when the probe's buckets are few, broadcast (zero
+   * corpus shuffle) when AQE sees the probe is small, and at worst ONE
+   * sort-merge pass over the corpus postings.
    *
    * Layout under `path` (all plain parquet, append-only logs):
    *  - `post_tok/tb=B/` postings partitioned by token hash bucket —
@@ -306,10 +188,19 @@ object Dedup {
    * [[jaccardRestPairs]] resolves pairs+wm; compaction (rewriting the
    * logs resolved) is the same checkpoint lever as the versioned
    * table's and is left to the caller's cadence.
+   *
+   * Refused before an existing set at `path` is dropped: `nBuckets <= 0`,
+   * a shard without postings (empty, or every text null) and a null or
+   * repeated id.
    */
   def jaccardRestInit(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDf: Long, path: String,
       nBuckets: Int = 64): JaccardRest = {
+    require(nBuckets > 0, s"jaccardRestInit: nBuckets must be positive, got $nBuckets")
+    val texts = requireUniqueIds(shardIds(df, idCol, textCol), idCol,
+      "jaccardRestInit")
+    require(texts > 0, "jaccardRestInit: the shard has no postings (it is " +
+      s"empty or every '$textCol' is null)")
     val spark = df.sparkSession
     jaccardRestDrop(spark, path)
     val post = postings(df, idCol, textCol)
@@ -347,9 +238,9 @@ object Dedup {
       .agg(max(struct(col("fold"), col("sz"))).getField("sz").as("sz"))
 
   /**
-   * Fold one shard into an at-rest working set — same semantics as
-   * [[jaccardMerge]] (spec pins equality with a full recompute,
-   * including df-cap crossings), delta-cost reads:
+   * Fold one shard into an at-rest working set. The resolved pairs
+   * equal a full recompute over the union (spec-pinned, including
+   * df-cap crossings); every read is delta-sized:
    *  - crossing check = pruned (tb, tok) probe of the df log by the
    *    shard vocabulary;
    *  - affected old docs (crossings only) = pruned probe of `post_tok`
@@ -357,10 +248,13 @@ object Dedup {
    *  - partner/intersection rows = ONE probe of `post_tok` by the
    *    affected docs' capped tokens. Intersections of affected pairs
    *    only ever involve the affected side's own tokens, so this probe
-   *    is the complete rescore input — the in-memory variant's second
-   *    full scan (neighborhood extract keyed by id) is replaced by the
+   *    is the complete rescore input; partner sizes come from the
    *    maintained sizes log.
-   * Document ids must be unique across shards (caller's contract).
+   * A null or repeated id within the shard is refused before anything
+   * is written; ids must also be unique across shards (caller's
+   * contract). A marker under `path` spans the first append to the meta
+   * commit, so a fold that dies in between makes every later use of the
+   * set refuse until it is rebuilt.
    */
   def jaccardRestMerge(st: JaccardRest, delta: DataFrame, idCol: String,
       textCol: String): JaccardRest = {
@@ -369,20 +263,14 @@ object Dedup {
     val nB = st.nBuckets
     val fold = st.fold + 1
     val path = st.path
-    // stage-attribution timing for stress profiling (off in production)
-    val debugT = sys.env.contains("SPARK_GRAFT_DEBUG_TIMING")
-    var lastT = System.nanoTime()
-    def mark(label: String): Unit = if (debugT) {
-      val now = System.nanoTime()
-      println(f"[jrest] $label%-14s ${(now - lastT) / 1e9}%.2fs")
-      lastT = now
-    }
+    requireNoInterruptedFold(spark, path)
+    val deltaIds = shardIds(delta, idCol, textCol).localCheckpoint(true)
+    requireUniqueIds(deltaIds, idCol, "jaccardRestMerge")
     val dPost = postings(delta, idCol, textCol)
       .withColumn("tb", bucketOf(col("tok"), nB))
       .localCheckpoint(true)
     val dDf = dPost.groupBy("tb", "tok").agg(count(lit(1)).as("dfc"))
       .localCheckpoint(true)
-    mark("delta")
     // tokens the shard pushes over the cap: pre-shard df of the SHARD
     // vocabulary only (pruned probe of the df log)
     val crossed = spark.read.parquet(s"$path/dflog")
@@ -393,18 +281,14 @@ object Dedup {
       .select("tb", "tok")
       .localCheckpoint(true)
     val hasCrossed = crossed.limit(1).count() > 0
-    mark("crosscheck")
-    val deltaIds = delta.select(col(idCol).as("id")).distinct()
-      .localCheckpoint(true)
     val affectedOld =
       if (hasCrossed)
         spark.read.parquet(s"$path/post_tok")
           .join(crossed, Seq("tb", "tok")).select("id").distinct()
           .localCheckpoint(true)
       else spark.range(0).select(col("id"))
-    val affected = affectedOld.unionByName(deltaIds).distinct()
+    val affected = affectedOld.unionByName(deltaIds.select("id")).distinct()
       .localCheckpoint(true)
-    mark("affected")
     // full token sets of affected OLD docs, via the id-bucketed copy;
     // materialized BEFORE the shard is appended (lazy reads would see
     // the new files)
@@ -416,39 +300,34 @@ object Dedup {
           .unionByName(dPost.select("id", "tok", "tb"))
       else dPost.select("id", "tok", "tb"))
       .localCheckpoint(true)
-    mark("affpost")
     // publish the shard (postings + df deltas); everything below reads
     // the merged state
+    val marker = new Path(path, FoldMarker)
+    fsOf(spark, path).create(marker, false).close()
     writeBucketed(dPost.select("id", "tok", "tb"), s"$path/post_tok", "tb", "tok")
     writeBucketed(dPost.select(col("id"), col("tok"),
       bucketOf(col("id"), nB).as("ib")), s"$path/post_id", "ib", "id")
     writeBucketed(dDf, s"$path/dflog", "tb", "tok")
-    mark("publish")
     // capped tokens of affected docs against the MERGED df (pruned sum)
     val aTok = spark.read.parquet(s"$path/dflog")
       .join(affPost.select("tb", "tok").distinct(), Seq("tb", "tok"))
       .groupBy("tb", "tok").agg(sum("dfc").as("dfc"))
       .filter(col("dfc") <= st.maxDf)
-
       .select("tb", "tok")
       .localCheckpoint(true)
-    mark("atok")
     // THE corpus probe: every (id, tok in aTok) row, shard included —
     // one pruned/broadcast-joined pass, materialized once
     val nbrRows = spark.read.parquet(s"$path/post_tok")
       .join(aTok, Seq("tb", "tok")).select("id", "tok")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (debugT) { nbrRows.count(); mark("nbrrows") }
     val aP = nbrRows.join(affected, Seq("id"), "left_semi")
     val pP = nbrRows.join(affected, Seq("id"), "left_anti")
     // capped sizes: affected recomputed (aP IS their capped postings),
     // partners from the sizes log (unchanged by this fold)
     val szAff = aP.groupBy("id").agg(count(lit(1)).as("sz"))
       .localCheckpoint(true)
-    mark("sizes")
     val szPart = latestSizes(spark, path)
       .join(pP.select("id").distinct(), Seq("id"), "left_semi")
-    val sizes = szAff.unionByName(szPart)
     val inter = aP.as("a").join(pP.as("b"), col("a.tok") === col("b.tok"))
       .select(least(col("a.id"), col("b.id")).as("ida"),
         greatest(col("a.id"), col("b.id")).as("idb"))
@@ -456,25 +335,17 @@ object Dedup {
           col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
         .select(col("a.id").as("ida"), col("b.id").as("idb")))
       .groupBy("ida", "idb").agg(count(lit(1)).as("i"))
-    val rescored = inter
-      .join(sizes.withColumnRenamed("id", "ida")
-        .withColumnRenamed("sz", "sa"), "ida")
-      .join(sizes.withColumnRenamed("id", "idb")
-        .withColumnRenamed("sz", "sb"), "idb")
-      .select(col("ida"), col("idb"),
-        round(col("i").cast("double") / (col("sa") + col("sb") - col("i")), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= st.threshold)
-    rescored.withColumn("fold", lit(fold))
+    scorePairs(inter, szAff.unionByName(szPart), st.threshold)
+      .withColumn("fold", lit(fold))
       .write.mode("append").parquet(s"$path/pairs")
     affected.withColumn("fold", lit(fold))
       .write.mode("append").parquet(s"$path/wm")
     szAff.withColumn("fold", lit(fold))
       .write.mode("append").parquet(s"$path/sizes")
-    mark("rescore+write")
     nbrRows.unpersist(blocking = false)
     val next = st.copy(fold = fold)
     writeRestMeta(next)
+    fsOf(spark, path).delete(marker, false)
     next
   }
 
@@ -484,6 +355,7 @@ object Dedup {
     * it touched, so an older emission involving a touched doc is dead
     * by construction). */
   def jaccardRestPairs(spark: SparkSession, st: JaccardRest): DataFrame = {
+    requireNoInterruptedFold(spark, st.path)
     val latest = spark.read.parquet(s"${st.path}/pairs")
       .groupBy("ida", "idb")
       .agg(max(struct(col("fold"), col("jaccard"))).as("s"))
@@ -512,15 +384,14 @@ object Dedup {
    */
   def jaccardRestCompact(spark: SparkSession, st: JaccardRest): JaccardRest = {
     val path = st.path
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireNoInterruptedFold(spark, path)
+    val f = fsOf(spark, path)
     def swapIn(sub: String)(write: String => Unit): Unit = {
       val tmp = s"$path/.compact-$sub"
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      f.delete(new Path(tmp), true)
       write(tmp)
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
-      f.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/$sub"))
+      f.delete(new Path(s"$path/$sub"), true)
+      f.rename(new Path(tmp), new Path(s"$path/$sub"))
       ()
     }
     // each swap WRITES the resolved view to a temp dir (reading the
@@ -561,8 +432,8 @@ object Dedup {
    */
   def jaccardRestVacuum(spark: SparkSession, st: JaccardRest,
       horizonMs: Long = 3600L * 1000): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(st.path)
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(st.path)
+    val f = fsOf(spark, st.path)
     if (!f.exists(root)) return Nil
     val now = System.currentTimeMillis()
     f.listStatus(root).toSeq
@@ -573,9 +444,8 @@ object Dedup {
 
   /** Destroy an at-rest working set. */
   def jaccardRestDrop(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(p)) { f.delete(p, true); () }
+    fsOf(spark, path).delete(new Path(path), true)
+    ()
   }
 
   /**
@@ -610,14 +480,25 @@ object Dedup {
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("ida"), col("b.id").as("idb"))
       .agg(count("*").as("i"))
+    scorePairs(inter, sizes, threshold)
+  }
+
+  /** The score every Jaccard pair path emits: |A ∩ B| / |A ∪ B| from the
+    * intersection and the two set sizes, rounded to 6 places — the
+    * rounding the DuckDB oracle reproduces. */
+  private def jaccardScore(i: Column, sa: Column, sb: Column): Column =
+    round(i.cast("double") / (sa + sb - i), 6)
+
+  /** (ida, idb, i) intersection counts joined to (id, sz) set sizes and
+    * scored; pairs below `threshold` are dropped. */
+  private def scorePairs(inter: DataFrame, sizes: DataFrame,
+      threshold: Double): DataFrame =
     inter
       .join(sizes.withColumnRenamed("id", "ida").withColumnRenamed("sz", "sa"), "ida")
       .join(sizes.withColumnRenamed("id", "idb").withColumnRenamed("sz", "sb"), "idb")
       .select(col("ida"), col("idb"),
-        round(col("i").cast("double") / (col("sa") + col("sb") - col("i")), 6)
-          .as("jaccard"))
+        jaccardScore(col("i"), col("sa"), col("sb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
   /**
    * Cross-corpus Jaccard (decontamination core): similarity of every
@@ -664,8 +545,7 @@ object Dedup {
       .join(lsz.withColumnRenamed("id", "lid"), "lid")
       .join(rsz.withColumnRenamed("id", "rid"), "rid")
       .select(col("lid"), col("rid"),
-        round(col("i").cast("double") / (col("lsz") + col("rsz") - col("i")), 6)
-          .as("jaccard"))
+        jaccardScore(col("i"), col("lsz"), col("rsz")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -924,8 +804,7 @@ object Dedup {
       .groupBy("ida", "idb", "sa", "sb").agg(count("*").as("i"))
     inter
       .select(col("ida"), col("idb"),
-        round(col("i").cast("double") / (col("sa") + col("sb") - col("i")), 6)
-          .as("jaccard"))
+        jaccardScore(col("i"), col("sa"), col("sb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

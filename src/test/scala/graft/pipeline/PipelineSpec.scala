@@ -918,7 +918,7 @@ class TextOpsSpec extends SparkSpec {
     assert(graft.functions.NormalizeNfc.compute(composed) eq composed)
   }
 
-  test("jaccardMerge equals a full recompute over the union, including cap crossings") {
+  test("one-bucket at-rest fold equals a full recompute, incl. cap crossings") {
     import graft.pipeline.Dedup
     val base = Seq(
       (1L, "hot a b c d"),
@@ -934,29 +934,37 @@ class TextOpsSpec extends SparkSpec {
       (7L, "zz yy")).toDF("doc_id", "text")
     val threshold = 0.1
     val maxDf = 3L
+    val path = "target/tmp/jrest-one-bucket"
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val merged = Dedup.jaccardMerge(
-      Dedup.jaccardInit(base, "doc_id", "text", threshold, maxDf),
-      delta, "doc_id", "text", threshold, maxDf)
-    val full = Dedup.jaccardInit(base.unionByName(delta),
-      "doc_id", "text", threshold, maxDf)
-    assert(pairsOf(merged.pairs) == pairsOf(full.pairs))
-    assert(pairsOf(merged.pairs).nonEmpty)
+    def fullPairs(df: org.apache.spark.sql.DataFrame) =
+      pairsOf(Dedup.ngramJaccard(df, "doc_id", "text", 1, threshold, maxDf))
+    // one bucket: every token and id hashes to it, so no probe prunes
+    val st = Dedup.jaccardRestMerge(
+      Dedup.jaccardRestInit(base, "doc_id", "text", threshold, maxDf,
+        path, nBuckets = 1),
+      delta, "doc_id", "text")
+    val union = base.unionByName(delta)
+    val merged = pairsOf(Dedup.jaccardRestPairs(spark, st))
+    assert(merged == fullPairs(union))
+    assert(merged.nonEmpty)
     // the crossing actually happened and re-scored an old pair
-    val mergedDf = merged.dfTab.collect()
+    val mergedDf = spark.read.parquet(s"$path/dflog")
+      .groupBy("tok").agg(sum("dfc")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(mergedDf("hot") == 4L)
-    val oldPair12 = pairsOf(Dedup.jaccardInit(base,
-      "doc_id", "text", threshold, maxDf).pairs)
+    val oldPair12 = fullPairs(base)
       .find(p => p._1 == 1L && p._2 == 2L).get._3
-    val newPair12 = pairsOf(merged.pairs)
+    val newPair12 = merged
       .find(p => p._1 == 1L && p._2 == 2L).get._3
     assert(oldPair12 != newPair12,
       s"fixture never exercised the rescore path ($oldPair12)")
     // df table matches the recomputed one exactly
-    assert(mergedDf == full.dfTab.collect()
+    assert(mergedDf == union
+      .select(explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .groupBy("tok").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    Dedup.jaccardRestDrop(spark, path)
   }
 
   test("at-rest jaccard: init + two folds equal full recomputes, incl. cap crossing") {
@@ -966,7 +974,7 @@ class TextOpsSpec extends SparkSpec {
       (2L, "hot a b c e"),
       (3L, "hot x y z w"),
       (4L, "p q r s")).toDF("doc_id", "text")
-    // shard 1 = the in-memory spec's fixture: a near-dup, a cap
+    // shard 1 = the one-bucket spec's fixture: a near-dup, a cap
     // crossing ('hot' passes maxDf=3), and an unrelated doc
     val delta1 = Seq(
       (5L, "a b c d f"),
@@ -981,38 +989,32 @@ class TextOpsSpec extends SparkSpec {
     val path = "target/tmp/jrest-spec"
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def fullPairs(df: org.apache.spark.sql.DataFrame) =
+      pairsOf(Dedup.ngramJaccard(df, "doc_id", "text", 1, threshold, maxDf))
     val st0 = Dedup.jaccardRestInit(base, "doc_id", "text", threshold, maxDf,
       path, nBuckets = 8)
-    assert(pairsOf(Dedup.jaccardRestPairs(spark, st0)) ==
-      pairsOf(Dedup.jaccardInit(base, "doc_id", "text", threshold, maxDf).pairs))
+    assert(pairsOf(Dedup.jaccardRestPairs(spark, st0)) == fullPairs(base))
     val st1 = Dedup.jaccardRestMerge(st0, delta1, "doc_id", "text")
-    val full1 = Dedup.jaccardInit(base.unionByName(delta1),
-      "doc_id", "text", threshold, maxDf)
     val got1 = pairsOf(Dedup.jaccardRestPairs(spark, st1))
-    assert(got1 == pairsOf(full1.pairs))
+    assert(got1 == fullPairs(base.unionByName(delta1)))
     assert(got1.nonEmpty)
     // the crossing actually exercised the rescore path (1-2 changed)
-    val pre12 = pairsOf(Dedup.jaccardInit(base, "doc_id", "text",
-      threshold, maxDf).pairs).find(p => p._1 == 1L && p._2 == 2L).get._3
+    val pre12 = fullPairs(base).find(p => p._1 == 1L && p._2 == 2L).get._3
     assert(got1.find(p => p._1 == 1L && p._2 == 2L).get._3 != pre12)
     // second fold on the reopened state (the durable-handle path)
     val st1r = Dedup.jaccardRestOpen(spark, path)
     assert(st1r == st1)
     val st2 = Dedup.jaccardRestMerge(st1r, delta2, "doc_id", "text")
-    val full2 = Dedup.jaccardInit(base.unionByName(delta1).unionByName(delta2),
-      "doc_id", "text", threshold, maxDf)
     val got2 = pairsOf(Dedup.jaccardRestPairs(spark, st2))
-    assert(got2 == pairsOf(full2.pairs))
+    assert(got2 == fullPairs(base.unionByName(delta1).unionByName(delta2)))
     // compaction rewrites every log resolved: same pairs, and a
     // POST-compact fold still equals the full recompute
     val stC = Dedup.jaccardRestCompact(spark, st2)
     assert(pairsOf(Dedup.jaccardRestPairs(spark, stC)) == got2)
     val delta3 = Seq((10L, "a b c d h"), (11L, "hot v")).toDF("doc_id", "text")
     val st3 = Dedup.jaccardRestMerge(stC, delta3, "doc_id", "text")
-    val full3 = Dedup.jaccardInit(
-      base.unionByName(delta1).unionByName(delta2).unionByName(delta3),
-      "doc_id", "text", threshold, maxDf)
-    assert(pairsOf(Dedup.jaccardRestPairs(spark, st3)) == pairsOf(full3.pairs))
+    assert(pairsOf(Dedup.jaccardRestPairs(spark, st3)) == fullPairs(
+      base.unionByName(delta1).unionByName(delta2).unionByName(delta3)))
     Dedup.jaccardRestDrop(spark, path)
   }
 
@@ -1046,8 +1048,8 @@ class TextOpsSpec extends SparkSpec {
       Dedup.jaccardRestVacuum(spark, st)
       postCompactCounts = postCompactCounts :+ fileCount()
       // resolve stays equal to the full recompute after every cycle
-      assert(pairsOf(st) == Dedup.jaccardInit(all.toDF("doc_id", "text"),
-          "doc_id", "text", threshold, maxDf).pairs.collect()
+      assert(pairsOf(st) == Dedup.ngramJaccard(all.toDF("doc_id", "text"),
+          "doc_id", "text", 1, threshold, maxDf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     }
     // bounded: once every hash bucket is populated the post-compact
@@ -1068,6 +1070,101 @@ class TextOpsSpec extends SparkSpec {
     assert(swept.exists(_.endsWith(".compact-pairs")))
     assert(!Files.exists(stale))
     assert(Files.exists(fresh))
+    Dedup.jaccardRestDrop(spark, path)
+  }
+
+  test("at-rest init refuses an input with no postings or nBuckets <= 0, " +
+      "keeping the existing set") {
+    val path = "target/tmp/jrest-refuse-init"
+    val good = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
+    def pairsAt() = Dedup.jaccardRestPairs(spark, Dedup.jaccardRestOpen(spark, path))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    Dedup.jaccardRestInit(good, "doc_id", "text", 0.1, 10L, path, nBuckets = 4)
+    val before = pairsAt()
+    assert(before.nonEmpty)
+    def refused(df: org.apache.spark.sql.DataFrame, nBuckets: Int,
+        names: String): Unit = {
+      val e = intercept[IllegalArgumentException](Dedup.jaccardRestInit(
+        df, "doc_id", "text", 0.1, 10L, path, nBuckets))
+      assert(e.getMessage.contains(names), e.getMessage)
+      assert(pairsAt() == before, "the refused init touched the existing set")
+    }
+    refused(good.limit(0), 4, "no postings")
+    refused(Seq((1L, null: String), (2L, null: String)).toDF("doc_id", "text"),
+      4, "no postings")
+    refused(good, 0, "nBuckets")
+    refused(good, -3, "nBuckets")
+    Dedup.jaccardRestDrop(spark, path)
+  }
+
+  test("at-rest init and fold refuse a null or repeated id within a shard") {
+    val path = "target/tmp/jrest-refuse-ids"
+    def init(df: org.apache.spark.sql.DataFrame) =
+      Dedup.jaccardRestInit(df, "doc_id", "text", 0.1, 10L, path, nBuckets = 4)
+    // id 1 twice would score against doc 2 as one doc of 5 tokens
+    // (jaccard 0.75) — neither row's score, nor their union's
+    val repeated = Seq((1L, "a b c"), (1L, "a d"), (2L, "a b"))
+      .toDF("doc_id", "text")
+    val nullId = Seq((Option.empty[Long], "a b c"), (Some(2L), "a b"))
+      .toDF("doc_id", "text")
+    def refused(body: => Any, id: String): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("'doc_id'") && e.getMessage.contains(s"($id)"),
+        e.getMessage)
+    }
+    refused(init(repeated), "1")
+    refused(init(nullId), "null")
+    val st = init(Seq((1L, "a b c"), (2L, "a b")).toDF("doc_id", "text"))
+    def state() = (Dedup.jaccardRestOpen(spark, path),
+      spark.read.parquet(s"$path/post_tok").count(),
+      Dedup.jaccardRestPairs(spark, st).collect().toSet)
+    val before = state()
+    refused(Dedup.jaccardRestMerge(st,
+      Seq((3L, "a b c"), (3L, "x"), (4L, "a")).toDF("doc_id", "text"),
+      "doc_id", "text"), "3")
+    refused(Dedup.jaccardRestMerge(st,
+      Seq((Option.empty[Long], "a b c"), (Some(4L), "a")).toDF("doc_id", "text"),
+      "doc_id", "text"), "null")
+    assert(state() == before, "a refused fold appended to the set")
+    Dedup.jaccardRestDrop(spark, path)
+  }
+
+  test("an interrupted at-rest fold leaves a marker that refuses reuse " +
+      "until the set is rebuilt") {
+    import java.nio.file.{Files, Paths}
+    val path = "target/tmp/jrest-interrupted"
+    val marker = Paths.get(path, "_FOLD_IN_PROGRESS")
+    val base = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
+    val shard1 = Seq((3L, "a b c f")).toDF("doc_id", "text")
+    val shard2 = Seq((4L, "a b c g")).toDF("doc_id", "text")
+    val st0 = Dedup.jaccardRestInit(base, "doc_id", "text", 0.1, 10L, path,
+      nBuckets = 4)
+    val st1 = Dedup.jaccardRestMerge(st0, shard1, "doc_id", "text")
+    assert(!Files.exists(marker), "an honest fold left its marker")
+    // the next fold dies after appending the shard: its pairs log is a
+    // plain file, so the pairs write fails
+    val pairsDir = new java.io.File(path, "pairs")
+    org.apache.commons.io.FileUtils.deleteDirectory(pairsDir)
+    Files.write(pairsDir.toPath, Array[Byte](1))
+    intercept[Exception](Dedup.jaccardRestMerge(st1, shard2, "doc_id", "text"))
+    assert(Files.exists(marker), "the interrupted fold left no marker")
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(path) && e.getMessage.contains("rebuilt"),
+        e.getMessage)
+    }
+    refused(Dedup.jaccardRestOpen(spark, path))
+    refused(Dedup.jaccardRestMerge(st1, shard2, "doc_id", "text"))
+    refused(Dedup.jaccardRestPairs(spark, st1))
+    refused(Dedup.jaccardRestCompact(spark, st1))
+    // rebuilding drops the half-folded set, marker included
+    val all = base.unionByName(shard1).unionByName(shard2)
+    Dedup.jaccardRestInit(all, "doc_id", "text", 0.1, 10L, path, nBuckets = 4)
+    assert(!Files.exists(marker))
+    def pairsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(pairsOf(Dedup.jaccardRestPairs(spark, Dedup.jaccardRestOpen(spark, path))) ==
+      pairsOf(Dedup.ngramJaccard(all, "doc_id", "text", 1, 0.1, 10L)))
     Dedup.jaccardRestDrop(spark, path)
   }
 

@@ -635,56 +635,12 @@ class StreamingOpsSpec extends SparkSpec {
     t = fold(t, st, day, 160L, "c"); assert(t == List(10L, 110L, 150L))
   }
 
-  test("foreachBatch shard ingest: streamed jaccardMerge converges to batch init over the union") {
+  test("foreachBatch shard ingest into the AT-REST dedup set converges to batch") {
     import graft.pipeline.Dedup
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // shard 2 near-dups doc 1 and pushes 'hot' over maxDf=3 (the
     // non-additive cap-crossing case), shard 3 is disjoint
-    val shards = Seq(
-      Seq((1L, "hot a b c d"), (2L, "hot a b c e"), (3L, "hot x y z")),
-      Seq((4L, "a b c d f"), (5L, "hot m n")),
-      Seq((6L, "p q r s")))
-    val threshold = 0.1
-    val maxDf = 3L
-    var st: Option[Dedup.JaccardState] = None
-    val stream = MemoryStream[(Long, String)]
-    val query = stream.toDS().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // pin the micro-batch's rows before folding (the batch frame is
-        // only valid during the call; the state outlives it)
-        val rows = batch.collect().map(r => (r.getLong(0), r.getString(1)))
-        val b = rows.toSeq.toDF("doc_id", "text")
-        st = Some(st match {
-          case None => Dedup.jaccardInit(b, "doc_id", "text", threshold, maxDf)
-          case Some(s) =>
-            // chained states share the earliest postings cache — per the
-            // JaccardState contract, prior states release AFTER the run
-            Dedup.jaccardMerge(s, b, "doc_id", "text", threshold, maxDf)
-        })
-        ()
-      }
-      .start()
-    try {
-      shards.foreach { chunk =>
-        stream.addData(chunk)
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val streamed = pairsOf(st.get.pairs)
-    val batchAll = pairsOf(Dedup.jaccardInit(
-      shards.flatten.toDF("doc_id", "text"),
-      "doc_id", "text", threshold, maxDf).pairs)
-    assert(streamed == batchAll, s"streamed=$streamed batch=$batchAll")
-    assert(streamed.nonEmpty)
-  }
-
-  test("foreachBatch shard ingest into the AT-REST dedup set converges to batch") {
-    import graft.pipeline.Dedup
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val shards = Seq(
       Seq((1L, "hot a b c d"), (2L, "hot a b c e"), (3L, "hot x y z")),
       Seq((4L, "a b c d f"), (5L, "hot m n")),
@@ -720,9 +676,9 @@ class StreamingOpsSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val streamed = pairsOf(Dedup.jaccardRestPairs(spark,
       Dedup.jaccardRestOpen(spark, path)))
-    val batchAll = pairsOf(Dedup.jaccardInit(
+    val batchAll = pairsOf(Dedup.ngramJaccard(
       shards.flatten.toDF("doc_id", "text"),
-      "doc_id", "text", threshold, maxDf).pairs)
+      "doc_id", "text", 1, threshold, maxDf))
     assert(streamed == batchAll, s"streamed=$streamed batch=$batchAll")
     assert(streamed.nonEmpty)
     Dedup.jaccardRestDrop(spark, path)
