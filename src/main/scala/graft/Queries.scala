@@ -702,7 +702,7 @@ object Queries {
     val raw = Tables.read(spark, dir, "lineitem")
       .select(col("l_quantity").cast("double").as("q"))
     // The vector frame is consumed three times (fit's count, fit's
-    // sample collect, the transform) — persist it for the query's
+    // sample-and-search job, the transform) — persist it for the query's
     // lifetime, and assemble via the codegen'd `array_to_vector`
     // instead of a Dataset.map (which deserialized every row through
     // a Scala closure — the q_discretize row's hottest stage in the

@@ -2,12 +2,14 @@ package graft.ml
 
 import scala.collection.mutable
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.ml.{Estimator, GraftMlBridge, Model}
-import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
+import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.{HasInputCol, HasOutputCol, HasSeed}
 import org.apache.spark.ml.util._
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -38,9 +40,12 @@ trait FrequencyDiscretizerParams extends Params
  * Reference-faithful re-expression of the reference discretizer
  * (reference: FrequencyDiscretizer.scala:157-296, itself an adaptation of
  * Spark 1.6's QuantileDiscretizer): Bernoulli-sample
- * max(numBuckets^2, 10000) rows, collect, per-feature sorted
- * value-count split search, +/-Inf sentinel normalization. Fit cost:
- * one count + one sampled collect, independent of nInstances.
+ * max(numBuckets^2, 10000) rows, per-feature sorted value-count split
+ * search, +/-Inf sentinel normalization. The reference collects the
+ * sample and searches on the driver; here the sampled values are
+ * shuffled by feature range and each range's task sorts and searches its
+ * own features, so only the splits reach the driver. Fit cost: one count
+ * + one sample-and-search job, independent of nInstances.
  */
 class FrequencyDiscretizer(override val uid: String)
     extends Estimator[FrequencyDiscretizerModel]
@@ -60,22 +65,34 @@ class FrequencyDiscretizer(override val uid: String)
       .setParent(this))
   }
 
-  /** Reference-parity path: Bernoulli sample + collect + stride scan
-    * (reference: getSampledInput, FrequencyDiscretizer.scala:172-179). */
+  /**
+   * Reference-parity sample (reference: getSampledInput,
+   * FrequencyDiscretizer.scala:172-179), searched on the executors. Each
+   * sample partition ships its values as one record per contiguous
+   * feature range, `min(nf, partitions)` ranges; range r's reduce task
+   * gets every partition's record for r and runs [[findSplitCandidates]]
+   * on each of its features. The driver collects a few candidates per
+   * feature instead of the sample.
+   */
   private def fitSampled(vecs: DataFrame): Array[Array[Double]] = {
     val total = vecs.count()
     require(total > 0, "empty input")
     val requiredSamples = math.max($(numBuckets) * $(numBuckets), 10000)
     val fraction = math.min(requiredSamples.toDouble / total, 1.0)
     val sample = vecs.sample(withReplacement = false, fraction, $(seed))
-      .collect().map(_.getAs[Vector](0))
-    require(sample.nonEmpty, "sample is empty; increase input size")
-    val nf = sample.head.size
-    Array.tabulate(nf) { j =>
-      val colSample = sample.map(_(j))
-      val candidates = FrequencyDiscretizer
-        .findSplitCandidates(colSample, $(numBuckets) - 1)
-      val splits = FrequencyDiscretizer.getSplits(candidates)
+      .queryExecution.toRdd
+    val column = $(inputCol)
+    val numSplits = $(numBuckets) - 1
+    val parts = sample.getNumPartitions
+    val candidates = sample
+      .mapPartitions(FrequencyDiscretizer.shipByRange(_, column, parts))
+      .partitionBy(new HashPartitioner(parts))
+      .mapPartitions(FrequencyDiscretizer.searchRange(_, column, numSplits))
+      .collect()
+    require(candidates.nonEmpty,
+      s"sample of column $column is empty or holds zero-width vectors")
+    candidates.sortBy(_._1).map { case (_, c) =>
+      val splits = FrequencyDiscretizer.getSplits(c)
       FrequencyDiscretizer.checkSplits(splits)
       splits
     }
@@ -87,43 +104,151 @@ class FrequencyDiscretizer(override val uid: String)
   override def copy(extra: ParamMap): FrequencyDiscretizer = defaultCopy(extra)
 }
 
+/** One sample partition's values of features `[first, first +
+  * values.length)`: the nonzeros of feature `first + i` in `values(i)`;
+  * the rest of the partition's `rows` sampled rows are zero there. `nf`
+  * is the vector width the partition read. */
+private[ml] final case class SampleRange(
+    nf: Int, first: Int, rows: Int, values: Array[Array[Double]])
+
 object FrequencyDiscretizer extends DefaultParamsReadable[FrequencyDiscretizer] {
+
+  /**
+   * Map side of the split search: one partition's sampled vectors, read
+   * as primitives straight from the VectorUDT struct, into one growing
+   * `double[]` per feature. Zeros (either sign, explicit or implicit) are
+   * not stored: they are the rows a feature's array does not cover. The
+   * width is read from the partition's first row; a null vector or a row
+   * of another width is refused by column name.
+   */
+  private def shipByRange(rows: Iterator[InternalRow], column: String,
+      parts: Int): Iterator[(Int, SampleRange)] = {
+    var nf = -1
+    var n = 0
+    var values: Array[mutable.ArrayBuilder.ofDouble] = null
+    rows.foreach { row =>
+      if (row.isNullAt(0)) throw new IllegalArgumentException(
+        s"null vector in column $column: the discretizer's input must be non-null")
+      // ml.VectorUDT layout: struct<type:byte, size:int,
+      //   indices:array<int>, values:array<double>>; type 0 = sparse
+      val vec = row.getStruct(0, 4)
+      val sparse = vec.getByte(0) == 0
+      val vals = vec.getArray(3)
+      val size = if (sparse) vec.getInt(1) else vals.numElements()
+      if (nf < 0) {
+        nf = size
+        values = Array.fill(nf)(new mutable.ArrayBuilder.ofDouble)
+      } else if (size != nf) throw widthMismatch(column, nf, size)
+      if (sparse) {
+        val ids = vec.getArray(2)
+        var k = 0
+        while (k < ids.numElements()) {
+          val v = vals.getDouble(k)
+          if (v != 0.0) values(ids.getInt(k)) += v
+          k += 1
+        }
+      } else {
+        var j = 0
+        while (j < nf) {
+          val v = vals.getDouble(j)
+          if (v != 0.0) values(j) += v
+          j += 1
+        }
+      }
+      n += 1
+    }
+    // the range split of Histograms.packed: range r holds features
+    // [lo(r), lo(r + 1)); zero-width rows still send range 0 a record, so
+    // the reduce side sees their width
+    val ranges = if (nf < 0) 0 else math.min(math.max(nf, 1), parts)
+    def lo(r: Int) = (r.toLong * nf / ranges).toInt
+    Iterator.tabulate(ranges) { r =>
+      (r, SampleRange(nf, lo(r), n,
+        Array.tabulate(lo(r + 1) - lo(r))(i => values(lo(r) + i).result())))
+    }
+  }
+
+  /** Reduce side of the split search: every partition's record of one
+    * feature range; per feature, its nonzeros after one run of zeros go
+    * through [[findSplitCandidates]]. Records of different widths are
+    * refused by column name. */
+  private def searchRange(records: Iterator[(Int, SampleRange)],
+      column: String, numSplits: Int): Iterator[(Int, Array[Double])] = {
+    val recs = records.map(_._2).toArray
+    recs.foreach { s =>
+      if (s.nf != recs.head.nf) throw widthMismatch(column, recs.head.nf, s.nf)
+    }
+    val rows = recs.iterator.map(_.rows).sum
+    val width = if (recs.isEmpty) 0 else recs.head.values.length
+    Iterator.tabulate(width) { i =>
+      val f = recs.head.first + i
+      // the implicit zeros fill the front; each record's nonzeros follow
+      val sample = new Array[Double](rows)
+      var at = rows
+      recs.foreach { s =>
+        val v = s.values(i)
+        at -= v.length
+        System.arraycopy(v, 0, sample, at, v.length)
+      }
+      (f, findSplitCandidates(sample, numSplits, s"column $column, feature $f"))
+    }
+  }
+
+  private def widthMismatch(column: String, a: Int, b: Int) =
+    new IllegalArgumentException(
+      s"vectors of different widths in column $column: $a and $b")
 
   /** D2: equal-frequency split search over one feature's sample
     * (reference: findSplitCandidates, FrequencyDiscretizer.scala:185-225 —
-    * the Spark 1.6 stride-scan algorithm, kept verbatim in semantics). */
-  private[graft] def findSplitCandidates(
-      samples: Array[Double], numSplits: Int): Array[Double] = {
-    val valueCountMap = mutable.Map.empty[Double, Int]
-    // `+ 0.0` turns -0.0 into 0.0: the boxed map merges the two zeros
-    // and would keep whichever came first as the split
-    samples.foreach { s =>
-      val v = s + 0.0
-      valueCountMap(v) = valueCountMap.getOrElse(v, 0) + 1
+    * the Spark 1.6 stride-scan algorithm, kept verbatim in semantics),
+    * on a sorted copy: its runs are the reference's value counts. A NaN
+    * in the sample is refused, naming `where`. */
+  private[graft] def findSplitCandidates(samples: Array[Double],
+      numSplits: Int, where: String = "the sample"): Array[Double] = {
+    val n = samples.length
+    // `+ 0.0` turns -0.0 into 0.0: the sort orders -0.0 below 0.0 and
+    // would split the zeros into two runs
+    val sorted = new Array[Double](n)
+    var i = 0
+    while (i < n) { sorted(i) = samples(i) + 0.0; i += 1 }
+    java.util.Arrays.sort(sorted)
+    // the sort places NaN last; counted as mass it would shift the stride
+    if (n > 0 && sorted(n - 1).isNaN) throw new IllegalArgumentException(
+      s"NaN in $where: the discretizer's input must hold no NaN")
+    // distinct values and their run lengths
+    val distinct = new Array[Double](n)
+    val counts = new Array[Int](n)
+    var k = 0
+    i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n && sorted(j) == sorted(i)) j += 1
+      distinct(k) = sorted(i)
+      counts(k) = j - i
+      k += 1
+      i = j
     }
-    val valueCounts = valueCountMap.toSeq.sortBy(_._1).toArray :+
-      ((Double.MaxValue, 1))
-    val possibleSplits = valueCounts.length - 1
-    if (possibleSplits <= numSplits) {
+    if (k <= numSplits) {
       // few distincts -> every value is a split
       // (reference: FrequencyDiscretizer.scala:196-198)
-      valueCounts.dropRight(1).map(_._1)
+      java.util.Arrays.copyOf(distinct, k)
     } else {
       // reference FrequencyDiscretizer.scala:200 rounds the stride UP;
       // without the ceil the target-count walk crosses boundaries one
       // distinct value earlier on non-divisible sample sizes
-      val stride = math.ceil(samples.length.toDouble / (numSplits + 1))
-      val splitsBuilder = mutable.ArrayBuilder.make[Double]
+      val stride = math.ceil(n.toDouble / (numSplits + 1))
+      val splitsBuilder = new mutable.ArrayBuilder.ofDouble
       var index = 1
-      var currentCount = valueCounts(0)._2
+      var currentCount = counts(0)
       var targetCount = stride
-      while (index < valueCounts.length) {
+      while (index <= k) {
         val previousCount = currentCount
-        currentCount += valueCounts(index)._2
+        // run k is the reference's (MaxValue, 1) sentinel
+        currentCount += (if (index < k) counts(index) else 1)
         val previousGap = math.abs(previousCount - targetCount)
         val currentGap = math.abs(currentCount - targetCount)
         if (previousGap < currentGap) {
-          splitsBuilder += valueCounts(index - 1)._1
+          splitsBuilder += distinct(index - 1)
           targetCount += stride
         }
         index += 1

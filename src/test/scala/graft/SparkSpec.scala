@@ -9,19 +9,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Number of Spark jobs `body` starts, counted by a SparkListener. A
-    * marker job run afterwards flushes the listener queue: events reach a
-    * listener in order, so once the marker is seen every job of `body` is. */
-  protected def jobsRunBy(body: => Unit): Int = {
+  /** Number of Spark jobs `body` starts, counted by a SparkListener. */
+  protected def jobsRunBy(body: => Unit): Int = workOf(body).jobs
+
+  /** The Spark jobs `body` starts, their tasks and the bytes those tasks
+    * return to the driver, seen by a SparkListener. A marker job run
+    * afterwards flushes the listener queue: events reach a listener in
+    * order, so once the marker is seen every event of `body` is. */
+  protected def workOf(body: => Unit): SparkSpec.Work = {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     val marker = s"$group-marker"
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        if (g == group) j.stageIds.foreach(stages.add(_))
+        groups.add(g)
+      }
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId)) {
+          tasks.incrementAndGet()
+          if (t.taskMetrics != null) resultBytes.addAndGet(t.taskMetrics.resultSize)
+        }
     }
     sc.addSparkListener(listener)
     try {
@@ -32,7 +48,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
       assert(groups.contains(marker), "listener never saw the marker job")
-      groups.toArray.count(_ == group)
+      SparkSpec.Work(groups.toArray.count(_ == group), tasks.get, resultBytes.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -40,6 +56,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** What [[SparkSpec.workOf]] saw. */
+  final case class Work(jobs: Int, tasks: Int, resultBytes: Long)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
