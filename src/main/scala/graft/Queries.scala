@@ -54,31 +54,30 @@ object Queries {
 
   // ---- Spark-side shared state ----
 
-  /** Columnar working set per (session, dir) — queries share one
-    * transpose within a Verify/Bench run. Built under a lock so two
-    * concurrent first calls can't each persist a copy; [[clearCache]]
-    * unpersists everything (called when a Verify/Bench run finishes). */
-  private val colCache = TrieMap.empty[(SparkSession, String), ColumnarData]
+  /** Columnar working sets per (session, dir, shape) — queries share
+    * one transpose per shape within a Verify/Bench run. Built under one
+    * lock so two concurrent first calls can't each persist a copy;
+    * [[clearCache]] unpersists everything (called when a Verify/Bench
+    * run finishes). */
+  private val workingSets =
+    TrieMap.empty[(SparkSession, String, String), ColumnarData]
+
+  private def workingSet(spark: SparkSession, dir: String, shape: String)(
+      build: => ColumnarData): ColumnarData =
+    workingSets.synchronized {
+      workingSets.getOrElseUpdate((spark, dir, shape), build)
+    }
 
   private[graft] def columnar(spark: SparkSession, dir: String): ColumnarData =
-    colCache.synchronized {
-      colCache.getOrElseUpdate((spark, dir),
-        Columnar.fromIntColumns(SparkEntry.lineitemFeatures(spark, dir),
-          Seq("f0", "f1", "f2", "f3"), "label"))
+    workingSet(spark, dir, "lineitem") {
+      Columnar.fromIntColumns(SparkEntry.lineitemFeatures(spark, dir),
+        Seq("f0", "f1", "f2", "f3"), "label")
     }
 
   private[graft] def clearCache(): Unit = {
-    colCache.synchronized {
-      colCache.values.foreach(_.unpersist())
-      colCache.clear()
-    }
-    wideCache.synchronized {
-      wideCache.values.foreach(_.unpersist())
-      wideCache.clear()
-    }
-    sparseCache.synchronized {
-      sparseCache.values.foreach(_.unpersist())
-      sparseCache.clear()
+    workingSets.synchronized {
+      workingSets.values.foreach(_.unpersist())
+      workingSets.clear()
     }
     PipelineQueries.clearCache()
   }
@@ -426,24 +425,20 @@ object Queries {
   private def Dedup_B(i: Int) =
     graft.pipeline.Dedup.MinhashB(i % 16) + i / 16
 
-  private val wideCache = TrieMap.empty[(SparkSession, String), ColumnarData]
-
   private[graft] def wideColumnar(spark: SparkSession, dir: String): ColumnarData =
-    wideCache.synchronized {
-      wideCache.getOrElseUpdate((spark, dir), {
-        // repartition the RAW source before projecting: the 32 feature
-        // expressions then evaluate across all cores (and the shuffle
-        // ships 4 narrow columns, not 33 computed ones)
-        val li = Tables.read(spark, dir, "lineitem")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val cols = (0 until WideN).map(i =>
-          expr(wideFeatureExpr(i)).cast("int").as(s"w$i"))
-        val df = li.select(cols :+
-          (when(col("l_returnflag") === "A", 0)
-            .when(col("l_returnflag") === "N", 1)
-            .otherwise(2)).cast("int").as("label"): _*)
-        Columnar.fromIntColumns(df, (0 until WideN).map(i => s"w$i"), "label")
-      })
+    workingSet(spark, dir, "wide") {
+      // repartition the RAW source before projecting: the 32 feature
+      // expressions then evaluate across all cores (and the shuffle
+      // ships 4 narrow columns, not 33 computed ones)
+      val li = Tables.read(spark, dir, "lineitem")
+        .repartition(spark.sparkContext.defaultParallelism)
+      val cols = (0 until WideN).map(i =>
+        expr(wideFeatureExpr(i)).cast("int").as(s"w$i"))
+      val df = li.select(cols :+
+        (when(col("l_returnflag") === "A", 0)
+          .when(col("l_returnflag") === "N", 1)
+          .otherwise(2)).cast("int").as("label"): _*)
+      Columnar.fromIntColumns(df, (0 until WideN).map(i => s"w$i"), "label")
     }
 
   /** O2 at width: MIM top-8 over the 32 wide features — the full
@@ -485,25 +480,21 @@ object Queries {
 
   private val SparseN = 8
 
-  private val sparseCache = TrieMap.empty[(SparkSession, String), ColumnarData]
-
   /** Columnar set built through the SPARSE path: rows become ml
     * SparseVectors, so the transpose packs [[graft.core.SparseBlock]]s
     * and every downstream kernel runs the implicit-zero branch. */
   private[graft] def sparseColumnar(spark: SparkSession, dir: String): ColumnarData =
-    sparseCache.synchronized {
-      sparseCache.getOrElseUpdate((spark, dir), {
-        import org.apache.spark.ml.linalg.{Vectors, Vector => MlVector}
-        val li = Tables.read(spark, dir, "lineitem")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val cols = (0 until SparseN).map(j => expr(sparseFeatExpr(j)).cast("double"))
-        val toSparseVec = udf { a: Seq[Double] =>
-          Vectors.dense(a.toArray).toSparse: MlVector
-        }
-        val df = li.select(expr(ySql).cast("double").as("label"),
-          toSparseVec(array(cols: _*)).as("features"))
-        Columnar.fromLabeledDf(df)
-      })
+    workingSet(spark, dir, "sparse") {
+      import org.apache.spark.ml.linalg.{Vectors, Vector => MlVector}
+      val li = Tables.read(spark, dir, "lineitem")
+        .repartition(spark.sparkContext.defaultParallelism)
+      val cols = (0 until SparseN).map(j => expr(sparseFeatExpr(j)).cast("double"))
+      val toSparseVec = udf { a: Seq[Double] =>
+        Vectors.dense(a.toArray).toSparse: MlVector
+      }
+      val df = li.select(expr(ySql).cast("double").as("label"),
+        toSparseVec(array(cols: _*)).as("features"))
+      Columnar.fromLabeledDf(df)
     }
 
   /** A3/A4 sparse: 2-D contingency tables through the SparseBlock kernel

@@ -1,37 +1,39 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.Columnar
+import graft.io.{MatView, SketchView, Versioned}
 import graft.ml.InfoThSelector
+import graft.obs.{Plans, Work}
+import graft.pipeline.{Bpe, Dedup, Graph, Hybrid, IndexSync, Search, Similarity,
+  Sketches, Splits, TextOps, VecIndex}
 
 /**
- * Scale-stress entrypoint (not driver-run): synthesizes an nRows x 32
- * byte-feature table DISTRIBUTED via `spark.range` (no driver
- * materialization anywhere) and runs the full selector core — transpose
- * + stats, then greedy mRMR — printing one JSON line of timings.
+ * Scale-stress entrypoint (not driver-run). Every mode synthesizes its
+ * input DISTRIBUTED via `spark.range` (no driver materialization
+ * anywhere), asserts its claim in-run with `require`s and prints one
+ * JSON line of timings and counts.
  *
- * Usage: runMain graft.Stress [nRows] [k]
- * Default 10M rows x 32 features + label ~ 330 MB columnar working set:
- * 16x the sf0.1 bench row count, exercising exactly the code paths the
- * 100 TB design arguments are about (block-major transpose, partition-
- * local histogram passes, O(nFeatures) driver traffic per round).
+ * Usage: runMain graft.Stress [mode] [size...]
+ * The mode defaults to `selector`; sizes are positional and replace the
+ * mode's defaults in [[modes]] in order. `SPARK_GRAFT_CPUS` (default 32)
+ * sets the local cores and the shuffle partitions.
+ *
+ * The default run, `selector` at 10M rows x 32 byte features + label
+ * (~330 MB columnar working set, 16x the sf0.1 bench row count), runs
+ * the full selector core — transpose + stats, then greedy mRMR —
+ * exercising exactly the code paths the 100 TB design arguments are
+ * about (block-major transpose, partition-local histogram passes,
+ * O(nFeatures) driver traffic per round).
  */
 object Stress {
   def main(args: Array[String]): Unit = {
-    val modes = Set("selector", "wide", "dedup", "ann", "annserve",
-      "kmeans", "text", "bpe", "semdedup", "pq", "spans", "events",
-      "eventskew", "incdedup", "vtable", "search", "sketch", "graph",
-      "mv", "skview", "curation", "vecidx", "annprobed", "sinkstream",
-      "dppscan", "inccompact", "lakeloop", "annpq", "searchfold",
-      "dmlrace", "maintain", "cdc", "retrainpolicy", "hybrid",
-      "replicate", "colbert", "idxsync")
-    val mode = args.headOption.filter(modes).getOrElse("selector")
-    val numArgs = args.dropWhile(modes)
-    val nRows = numArgs.headOption.map(_.toLong)
-      .getOrElse(if (mode == "selector") 10000000L else 1000000L)
-    val k = if (numArgs.length > 1) numArgs(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -41,270 +43,282 @@ object Stress {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args.toSeq, cpus.toInt) finally spark.stop()
+  }
 
-    if (mode == "dedup") { dedupStress(spark, nRows, cpus.toInt); return }
-    if (mode == "ann") { annStress(spark, nRows, cpus.toInt); return }
-    if (mode == "curation") {
-      val nd = numArgs.headOption.map(_.toLong).getOrElse(5000000L)
-      curationStress(spark, nd, cpus.toInt); return
-    }
-    if (mode == "vecidx") {
-      val nv = numArgs.headOption.map(_.toLong).getOrElse(1000000L)
-      vecIdxStress(spark, nv, cpus.toInt); return
-    }
-    if (mode == "annserve") {
-      val nv = numArgs.headOption.map(_.toLong).getOrElse(50000L)
-      val nq = if (numArgs.length > 1) numArgs(1).toInt else 10000
-      annServeStress(spark, nv, nq, cpus.toInt); return
-    }
-    if (mode == "annprobed") {
-      val nv = numArgs.headOption.map(_.toLong).getOrElse(200000L)
-      val nq = if (numArgs.length > 1) numArgs(1).toInt else 2000
-      annProbedStress(spark, nv, nq, cpus.toInt); return
-    }
-    if (mode == "hybrid") {
-      val nd = numArgs.headOption.map(_.toLong).getOrElse(1000000L)
-      val nq = if (numArgs.length > 1) numArgs(1).toInt else 1000
-      hybridStress(spark, nd, nq, cpus.toInt); return
-    }
-    if (mode == "colbert") {
-      val nc = numArgs.headOption.map(_.toLong).getOrElse(1000000L)
-      val nq = if (numArgs.length > 1) numArgs(1).toInt else 1000
-      colbertStress(spark, nc, nq, cpus.toInt); return
-    }
-    if (mode == "idxsync") {
-      val nd = numArgs.headOption.map(_.toLong).getOrElse(1000000L)
-      val dl = if (numArgs.length > 1) numArgs(1).toInt else 8
-      idxSyncStress(spark, nd, dl, cpus.toInt); return
-    }
-    if (mode == "replicate") {
-      val nr = numArgs.headOption.map(_.toLong).getOrElse(5000000L)
-      val nd = if (numArgs.length > 1) numArgs(1).toInt else 8
-      replicateStress(spark, nr, nd, cpus.toInt); return
-    }
-    if (mode == "retrainpolicy") {
-      val nv = numArgs.headOption.map(_.toLong).getOrElse(200000L)
-      val nq = if (numArgs.length > 1) numArgs(1).toInt else 2000
-      retrainPolicyStress(spark, nv, nq, cpus.toInt); return
-    }
-    if (mode == "annpq") {
-      val nv = numArgs.headOption.map(_.toLong).getOrElse(200000L)
-      val nq = if (numArgs.length > 1) numArgs(1).toInt else 500
-      annPqStress(spark, nv, nq, cpus.toInt); return
-    }
-    if (mode == "searchfold") {
-      val nd = numArgs.headOption.map(_.toLong).getOrElse(1000000L)
-      searchFoldStress(spark, nd, cpus.toInt); return
-    }
-    if (mode == "dmlrace") {
-      val nr = numArgs.headOption.map(_.toLong).getOrElse(200000L)
-      val nt = if (numArgs.length > 1) numArgs(1).toInt else 4
-      dmlRaceStress(spark, nr, nt, cpus.toInt); return
-    }
-    if (mode == "sinkstream") {
-      val nb = if (numArgs.length > 1) numArgs(1).toInt else 3
-      sinkStreamStress(spark, nRows, nb, cpus.toInt); return
-    }
-    if (mode == "dppscan") {
-      val nr = numArgs.headOption.map(_.toLong).getOrElse(10000000L)
-      dppScanStress(spark, nr, cpus.toInt); return
-    }
-    if (mode == "inccompact") {
-      val nr = numArgs.headOption.map(_.toLong).getOrElse(10000000L)
-      val nd = if (numArgs.length > 1) numArgs(1).toInt else 8
-      incCompactStress(spark, nr, nd, cpus.toInt); return
-    }
-    if (mode == "maintain") {
-      val nr = numArgs.headOption.map(_.toLong).getOrElse(5000000L)
-      val nc = if (numArgs.length > 1) numArgs(1).toInt else 10
-      maintainStress(spark, nr, nc, cpus.toInt); return
-    }
-    if (mode == "lakeloop") {
-      val nr = numArgs.headOption.map(_.toLong).getOrElse(5000000L)
-      val nc = if (numArgs.length > 1) numArgs(1).toInt else 8
-      lakeLoopStress(spark, nr, nc, cpus.toInt); return
-    }
-    if (mode == "kmeans") { kmeansStress(spark, nRows, cpus.toInt); return }
-    if (mode == "pq") { pqStress(spark, nRows, cpus.toInt); return }
-    if (mode == "text") { textStress(spark, nRows, cpus.toInt); return }
-    if (mode == "search") { searchStress(spark, nRows, cpus.toInt); return }
-    if (mode == "sketch") { sketchStress(spark, nRows, cpus.toInt); return }
-    if (mode == "mv") { mvStress(spark, nRows, cpus.toInt); return }
-    if (mode == "skview") { skviewStress(spark, nRows, cpus.toInt); return }
-    if (mode == "graph") { graphStress(spark, nRows, cpus.toInt); return }
-    if (mode == "bpe") { bpeStress(spark, nRows, cpus.toInt); return }
-    if (mode == "semdedup") { semDedupStress(spark, nRows, cpus.toInt); return }
-    if (mode == "spans") { spansStress(spark, nRows, cpus.toInt); return }
-    if (mode == "incdedup") { incDedupStress(spark, nRows, cpus.toInt); return }
-    if (mode == "vtable") { vtableStress(spark, nRows, cpus.toInt); return }
-    if (mode == "cdc") {
-      val nr = numArgs.headOption.map(_.toLong).getOrElse(10000000L)
-      cdcStress(spark, nr, cpus.toInt); return
-    }
-    if (mode == "events") { eventsStress(spark, nRows, cpus.toInt); return }
-    if (mode == "eventskew") {
-      eventsStress(spark, nRows, cpus.toInt, skewed = true); return
-    }
+  /** A mode: its default sizes, and its body, called with the session,
+    * the sizes and the core count. */
+  private[graft] final case class Mode(defaults: Seq[Long],
+      body: (SparkSession, IndexedSeq[Long], Int) => Unit)
 
-    // "selector": the default 10M x 32 shape. "wide": SURVEY §1's real
-    // dataset width — default nf = 631 features (E. coli promoter-style
-    // wide byte matrix), mRMR k = 10 — pinning that the (k+1)-scan cost
-    // model and the O(nFeatures)-rows-per-round driver traffic hold at
-    // real width, not just at 32. An optional third arg widens further
-    // (`wide <rows> <k> <nf>`, e.g. nf=5000 — the 100x-width story).
-    val (nf, kk, rows) =
-      if (mode == "wide")
-        (if (numArgs.length > 2) numArgs(2).toInt else 631,
-          if (numArgs.length > 1) numArgs(1).toInt else 10,
-          if (numArgs.nonEmpty) nRows else 1000000L)
-      else (32, k, nRows)
-    selectorStress(spark, rows, nf, kk, cpus.toInt)
+  /** Runs `args` (`[mode] [size...]`) on `spark`; the caller owns the
+    * session. */
+  private[graft] def run(spark: SparkSession, args: Seq[String],
+      cpus: Int): Unit = {
+    val mode = modes(args.headOption.filter(modes.contains).getOrElse("selector"))
+    val given = args.dropWhile(modes.contains).take(mode.defaults.size)
+    mode.body(spark, (given.map(_.toLong) ++ mode.defaults.drop(given.size))
+      .toIndexedSeq, cpus)
+  }
+
+  /** Every mode by name. "selector" is the default 10M x 32 shape.
+    * "wide" is SURVEY §1's real dataset width — nf = 631 features
+    * (E. coli promoter-style wide byte matrix), mRMR k = 10 — pinning
+    * that the (k+1)-scan cost model and the O(nFeatures)-rows-per-round
+    * driver traffic hold at real width, not just at 32; its third size
+    * widens further (`wide <rows> <k> <nf>`, e.g. nf=5000 — the
+    * 100x-width story). */
+  private[graft] val modes: Map[String, Mode] = Map(
+    "selector" -> Mode(Seq(10000000L, 3),
+      (s, a, c) => selectorStress(s, a(0), 32, a(1).toInt, c)),
+    "wide" -> Mode(Seq(1000000L, 10, 631),
+      (s, a, c) => selectorStress(s, a(0), a(2).toInt, a(1).toInt, c)),
+    "dedup" -> Mode(Seq(1000000L), (s, a, c) => dedupStress(s, a(0), c)),
+    "ann" -> Mode(Seq(1000000L), (s, a, c) => annStress(s, a(0), c)),
+    "annserve" -> Mode(Seq(50000L, 10000),
+      (s, a, c) => annServeStress(s, a(0), a(1).toInt, c)),
+    "kmeans" -> Mode(Seq(1000000L), (s, a, c) => kmeansStress(s, a(0), c)),
+    "text" -> Mode(Seq(1000000L), (s, a, c) => textStress(s, a(0), c)),
+    "bpe" -> Mode(Seq(1000000L), (s, a, c) => bpeStress(s, a(0), c)),
+    "semdedup" -> Mode(Seq(1000000L), (s, a, c) => semDedupStress(s, a(0), c)),
+    "pq" -> Mode(Seq(1000000L), (s, a, c) => pqStress(s, a(0), c)),
+    "spans" -> Mode(Seq(1000000L), (s, a, c) => spansStress(s, a(0), c)),
+    "events" -> Mode(Seq(1000000L),
+      (s, a, c) => eventsStress(s, a(0), c, skewed = false)),
+    "eventskew" -> Mode(Seq(1000000L),
+      (s, a, c) => eventsStress(s, a(0), c, skewed = true)),
+    "incdedup" -> Mode(Seq(1000000L), (s, a, c) => incDedupStress(s, a(0), c)),
+    "vtable" -> Mode(Seq(1000000L), (s, a, c) => vtableStress(s, a(0), c)),
+    "search" -> Mode(Seq(1000000L), (s, a, c) => searchStress(s, a(0), c)),
+    "sketch" -> Mode(Seq(1000000L), (s, a, c) => sketchStress(s, a(0), c)),
+    "graph" -> Mode(Seq(1000000L), (s, a, c) => graphStress(s, a(0), c)),
+    "mv" -> Mode(Seq(1000000L), (s, a, c) => mvStress(s, a(0), c)),
+    "skview" -> Mode(Seq(1000000L), (s, a, c) => skviewStress(s, a(0), c)),
+    "curation" -> Mode(Seq(5000000L), (s, a, c) => curationStress(s, a(0), c)),
+    "vecidx" -> Mode(Seq(1000000L), (s, a, c) => vecIdxStress(s, a(0), c)),
+    "annprobed" -> Mode(Seq(200000L, 2000),
+      (s, a, c) => annProbedStress(s, a(0), a(1).toInt, c)),
+    "sinkstream" -> Mode(Seq(1000000L, 3),
+      (s, a, c) => sinkStreamStress(s, a(0), a(1).toInt, c)),
+    "dppscan" -> Mode(Seq(10000000L), (s, a, c) => dppScanStress(s, a(0))),
+    "inccompact" -> Mode(Seq(10000000L, 8),
+      (s, a, c) => incCompactStress(s, a(0), a(1).toInt, c)),
+    "lakeloop" -> Mode(Seq(5000000L, 8),
+      (s, a, c) => lakeLoopStress(s, a(0), a(1).toInt, c)),
+    "annpq" -> Mode(Seq(200000L, 500),
+      (s, a, c) => annPqStress(s, a(0), a(1).toInt, c)),
+    "searchfold" -> Mode(Seq(1000000L),
+      (s, a, c) => searchFoldStress(s, a(0), c)),
+    "dmlrace" -> Mode(Seq(200000L, 4),
+      (s, a, c) => dmlRaceStress(s, a(0), a(1).toInt, c)),
+    "maintain" -> Mode(Seq(5000000L, 10),
+      (s, a, c) => maintainStress(s, a(0), a(1).toInt, c)),
+    "cdc" -> Mode(Seq(10000000L), (s, a, c) => cdcStress(s, a(0), c)),
+    "retrainpolicy" -> Mode(Seq(200000L, 2000),
+      (s, a, c) => retrainPolicyStress(s, a(0), a(1).toInt, c)),
+    "hybrid" -> Mode(Seq(1000000L, 1000),
+      (s, a, c) => hybridStress(s, a(0), a(1).toInt, c)),
+    "replicate" -> Mode(Seq(5000000L, 8),
+      (s, a, c) => replicateStress(s, a(0), a(1).toInt, c)),
+    "colbert" -> Mode(Seq(1000000L, 1000),
+      (s, a, c) => colbertStress(s, a(0), a(1).toInt, c)),
+    "idxsync" -> Mode(Seq(1000000L, 8),
+      (s, a, c) => idxSyncStress(s, a(0), a(1).toInt, c)))
+
+  // ---- shared helpers ----
+
+  /** Seconds `f` took, and its result. */
+  private def timed[T](f: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = f
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+
+  /** A timed serve and its per-query result sets (qid -> the ids in
+    * `idCol`): one collect, bounded at nQueries * k rows. */
+  private def timedSets(df: DataFrame, idCol: String = "nid")
+      : (Double, Map[Long, Set[Long]]) = {
+    val (sec, rows) = timed(df.select("qid", idCol).collect())
+    (sec, rows.groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet })
+  }
+
+  /** recall@k of `got` against `truth`, averaged over truth's queries. */
+  private def recall(truth: Map[Long, Set[Long]],
+      got: Map[Long, Set[Long]]): Double =
+    truth.map { case (q, want) =>
+      got.getOrElse(q, Set.empty).intersect(want).size.toDouble / want.size
+    }.sum / truth.size
+
+  /** Deletes `paths` recursively, so a mode starts from empty dirs. */
+  private def fresh(paths: String*): Unit =
+    paths.foreach(p => FileUtils.deleteQuietly(new java.io.File(p)))
+
+  private val Dim = 64
+
+  /** The deterministic 64-component embedding of the row id: component
+    * j is the float ((id*(1103515245+j) + j*12345 + seed) mod
+    * 100003)/100003 - 0.5, in [-0.5, 0.5). */
+  private def embedding(seed: Long = 0L): Column =
+    array((0 until Dim).map { j =>
+      (((col("id") * (1103515245L + j) + (j * 12345L + seed)) % 100003L)
+        .cast("double") / 100003.0 - 0.5).cast("float")
+    }: _*)
+
+  /** (id, vec) rows: `ids` with the [[embedding]] of each id. */
+  private def embed(ids: Dataset[_], seed: Long = 0L): DataFrame =
+    ids.select(col("id"), embedding(seed).as("vec"))
+
+  /** nVecs embedded ids over cpus * 4 partitions. */
+  private def vectors(spark: SparkSession, nVecs: Long, cpus: Int): DataFrame =
+    embed(spark.range(nVecs).repartition(cpus * 4))
+
+  /** The first n rows of an embedding as a (cid, cvec) codebook. */
+  private def centroidsOf(emb: DataFrame, n: Long): DataFrame =
+    emb.filter(col("id") < n).select(col("id").as("cid"), col("vec").as("cvec"))
+
+  private val TokMod = 100000007L
+
+  /** Synthetic doc tokens j in `js`: "t<(base*(31+j) + j*7) mod tokMod>".
+    * With the row id as base they are doc-unique; docs sharing a base
+    * share them. */
+  private def toks(js: Range, base: Column = col("id"),
+      tokMod: Long = TokMod): Seq[Column] =
+    js.map(j => concat(lit("t"), (base * (31 + j) + j * 7) % tokMod))
+
+  /** The first n tokens of one of 1000 stock openings, picked by id mod
+    * 1000: "b<((id mod 1000)*(17+j)+j) mod 1000>" (boilerplate shared
+    * across docs). */
+  private def opening(n: Int): Seq[Column] =
+    (0 until n).map(j =>
+      concat(lit("b"), ((col("id") % 1000) * (17 + j) + j) % 1000))
+
+  /** (doc_id, text) docs: `nOpen` opening tokens, then `nBody` body
+    * tokens. */
+  private def docs(ids: Dataset[_], nOpen: Int, nBody: Int): DataFrame =
+    ids.select(col("id").as("doc_id"),
+      concat_ws(" ", opening(nOpen) ++ toks(0 until nBody): _*).as("text"))
+
+  /** Fails unless every parquet scan in `df`'s executed plan filters on
+    * one of the bucket partition columns `buckets`. */
+  private def requireBucketPruned(df: DataFrame, buckets: Set[String],
+      what: String): Unit = {
+    val scans = Plans.nodes(df.queryExecution.executedPlan)
+      .collect { case s: FileSourceScanExec => s }
+    require(scans.nonEmpty, s"$what: expected parquet scans")
+    scans.foreach { s =>
+      require(s.partitionFilters.exists(_.references.exists(r =>
+          buckets.contains(r.name))),
+        s"$what: corpus-shaped scan ${s.nodeName} " +
+          s"partitionFilters=${s.partitionFilters.mkString(",")}")
+    }
+  }
+
+  // ---- modes ----
+
+  /** The selector's input: deterministic byte features from the row id
+    * (pure codegen, no data generation on the driver); label = 3-way
+    * hash class. */
+  private[graft] def selectorFrame(spark: SparkSession, nRows: Long,
+      nf: Int, cpus: Int): DataFrame = {
+    val feats = (0 until nf).map { j =>
+      ((col("id") * (2654435761L + j) + j) % 64).cast("int").as(s"f$j")
+    }
+    spark.range(nRows).repartition(cpus * 4)
+      .select(feats :+ ((col("id") * 40503L) % 3).cast("int").as("label"): _*)
   }
 
   private def selectorStress(spark: SparkSession, nRows: Long, nf: Int,
       k: Int, cpus: Int): Unit = {
-    // max per-task execution memory across the run (the 3-D histogram
-    // working set is per-task; this is the number that must stay under
-    // an executor's task share at any width)
-    val peakTaskMem = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            peakTaskMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        }
-      })
-    // deterministic byte features from the row id (pure codegen, no data
-    // generation on the driver); label = 3-way hash class
-    val feats = (0 until nf).map { j =>
-      ((col("id") * (2654435761L + j) + j) % 64).cast("int").as(s"f$j")
-    }
-    val df = spark.range(nRows).repartition(cpus * 4)
-      .select(feats :+ ((col("id") * 40503L) % 3).cast("int").as("label"): _*)
-
-    val t0 = System.nanoTime()
-    val colData = Columnar.fromIntColumns(df,
-      (0 until nf).map(j => s"f$j"), "label")
-    val tTranspose = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val selected = InfoThSelector.select(colData, "mrmr", k, 0.0)
-    val tSelect = (System.nanoTime() - t1) / 1e9
-
+    val df = selectorFrame(spark, nRows, nf, cpus)
+    // peak task memory: the max per-task execution memory across the run
+    // (the 3-D histogram working set is per-task; this is the number
+    // that must stay under an executor's task share at any width)
+    val (work, ((tTranspose, colData), (tSelect, selected))) =
+      Work.of(spark) {
+        val t = timed(Columnar.fromIntColumns(df,
+          (0 until nf).map(j => s"f$j"), "label"))
+        (t, timed(InfoThSelector.select(t._2, "mrmr", k, 0.0)))
+      }
     // greedy cost model: 1 relevance pass + k CMI passes over the
     // columnar blocks; driver traffic = nf criterion rows per round
     println(s"""{"metric":"stress","rows":$nRows,"features":$nf,"k":$k,""" +
       s""""transpose_stats_sec":$tTranspose,"greedy_mrmr_sec":$tSelect,""" +
       s""""per_round_sec":${tSelect / math.max(k, 1)},""" +
       s""""driver_rows_per_round":$nf,""" +
-      s""""peak_task_memory_bytes":${peakTaskMem.get()},""" +
+      s""""peak_task_memory_bytes":${work.peakTaskMemory},""" +
       s""""selected":[${selected.map(_._1).mkString(",")}]}""")
     colData.unpersist()
-    spark.stop()
   }
 
-  /** Dedup-family stress: nDocs synthetic 40-token documents (50k-token
-    * vocabulary, distributed synthesis; every 10th doc is an exact
-    * duplicate of its predecessor) through exact dedup and the full
-    * MinHash+LSH pipeline (signatures, banding join, verification). */
+  /** Dedup-family stress: nDocs synthetic 40-token documents (every
+    * 10th doc is an exact duplicate of its predecessor) through exact
+    * dedup and the full MinHash+LSH pipeline (signatures, banding join,
+    * verification). */
   private def dedupStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Dedup
     // dupe every 10th doc: base id collapses i and i-1 when i%10==0.
-    // Token modulus is a prime well above nDocs so distinct base ids
-    // can never share a full token set (a composite modulus ~nDocs/20
-    // makes every doc ~20-way duplicated — the max-skew case, measured
-    // separately below).
-    val tokMod = 100000007L
+    // The token modulus is a prime well above nDocs so distinct base
+    // ids can never share a full token set (a composite modulus
+    // ~nDocs/20 makes every doc ~20-way duplicated — the max-skew case).
     val base = when(col("id") % 10 === 0, col("id") - 1).otherwise(col("id"))
     val docs = spark.range(nDocs).repartition(cpus * 4)
       .select(col("id").as("doc_id"),
-        concat_ws(" ", (0 until 40).map(j =>
-          concat(lit("t"), (base * (31 + j) + j * 7) % tokMod)): _*).as("text"))
-
-    val t0 = System.nanoTime()
-    val nExact = Dedup.exact(docs, "doc_id", "text")
-      .filter(col("doc_id") === col("keeper")).count()
-    val tExact = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val pairs = Dedup.minhashLsh(docs, "doc_id", "text", 0.5, 100000L)
-      .persist()
-    val nPairs = pairs.count()
-    val tMinhash = (System.nanoTime() - t1) / 1e9
-
-    val t2 = System.nanoTime()
-    val nComps = Dedup.connectedComponents(pairs).count()
-    val tCc = (System.nanoTime() - t2) / 1e9
+        concat_ws(" ", toks(0 until 40, base): _*).as("text"))
+    val (tExact, nExact) = timed(Dedup.exact(docs, "doc_id", "text")
+      .filter(col("doc_id") === col("keeper")).count())
+    val (tMinhash, (pairs, nPairs)) = timed {
+      val p = Dedup.minhashLsh(docs, "doc_id", "text", 0.5, 100000L).persist()
+      (p, p.count())
+    }
+    val (tCc, nComps) = timed(Dedup.connectedComponents(pairs).count())
     pairs.unpersist(blocking = false)
-
     println(s"""{"metric":"stress_dedup","docs":$nDocs,""" +
       s""""exact_sec":$tExact,"exact_keepers":$nExact,""" +
       s""""minhash_lsh_sec":$tMinhash,"neardup_pairs":$nPairs,""" +
       s""""cc_sec":$tCc,"cc_labeled_nodes":$nComps}""")
-    spark.stop()
   }
 
   /** ANN stress: nVecs synthetic 64-dim embeddings, 256-centroid IVF
     * (assign the whole corpus, probe 4/256 clusters for 100 queries). */
   private def annStress(spark: SparkSession, nVecs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Similarity
-    val dim = 64
-    // deterministic floats in [-0.5, 0.5): ((id*a + j*b) mod m)/m - 0.5
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
-    val centroids = emb.filter(col("id") < 256)
-      .select(col("id").as("cid"), col("vec").as("cvec"))
+    val emb = vectors(spark, nVecs, cpus)
     val queries = emb.filter(col("id") < 100)
-
-    val t0 = System.nanoTime()
-    val n = Similarity.ivfTopK(queries, emb, centroids, 4, 10).count()
-    val tIvf = (System.nanoTime() - t0) / 1e9
-
+    val (tIvf, n) = timed(Similarity.ivfTopK(queries, emb,
+      centroidsOf(emb, 256), 4, 10).count())
     // binary-quantized path vs brute cosine on the SAME queries: the
     // prefilter reads 2 packed longs per corpus vector (static
     // xor+popcount), the float vectors only for the 40-row shortlists;
     // brute reads 64 floats per pair. Rerank must contain the brute
     // winner set (oversampled shortlist on smooth synthetic data).
     val q3 = emb.filter(col("id") < 10)
-    val t1 = System.nanoTime()
-    val bin = Similarity.binaryTopK(q3, emb, dim, 40, 10).persist()
-    val nBin = bin.count()
-    val tBin = (System.nanoTime() - t1) / 1e9
-    val t2 = System.nanoTime()
-    val brute = Similarity.cosineTopK(q3, emb, 10).persist()
-    val nBrute = brute.count()
-    val tBrute = (System.nanoTime() - t2) / 1e9
+    val (tBin, (bin, nBin)) = timed {
+      val b = Similarity.binaryTopK(q3, emb, Dim, 40, 10).persist()
+      (b, b.count())
+    }
+    val (tBrute, (brute, nBrute)) = timed {
+      val b = Similarity.cosineTopK(q3, emb, 10).persist()
+      (b, b.count())
+    }
     val overlap = bin.select("qid", "nid")
       .intersect(brute.select("qid", "nid")).count()
     bin.unpersist(blocking = false)
     brute.unpersist(blocking = false)
     require(nBin == nBrute, s"binary topk rows $nBin != brute $nBrute")
-
     // at-rest serve: index written once, the prefilter then reads ONLY
     // the (id, bwords) columns of the files (column pruning) — no
     // per-query-batch re-packing of the float corpus
     val idxPath = "target/tmp/stress-binidx"
-    val t3 = System.nanoTime()
-    Similarity.binaryIndexWrite(emb, dim, idxPath)
-    val tIdx = (System.nanoTime() - t3) / 1e9
-    val t4 = System.nanoTime()
-    val rest = Similarity.binaryTopKAtRest(spark, q3, idxPath, dim, 40, 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val tRest = (System.nanoTime() - t4) / 1e9
+    val (tIdx, _) = timed(Similarity.binaryIndexWrite(emb, Dim, idxPath))
+    val (tRest, rest) = timed(
+      Similarity.binaryTopKAtRest(spark, q3, idxPath, Dim, 40, 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     require(rest.size == nBin.toInt,
       s"at-rest binary rows ${rest.size} != inline $nBin")
-
-    println(s"""{"metric":"stress_ann","vecs":$nVecs,"dim":$dim,""" +
+    println(s"""{"metric":"stress_ann","vecs":$nVecs,"dim":$Dim,""" +
       s""""ivf_topk_sec":$tIvf,"result_rows":$n,""" +
       s""""binary_topk_sec":$tBin,"brute_topk_sec":$tBrute,""" +
       s""""binary_rows":$nBin,"binary_brute_overlap":$overlap,""" +
       s""""binary_index_write_sec":$tIdx,"binary_rest_sec":$tRest}""")
-    spark.stop()
   }
 
   /** Generational vector-index stress: `vecidx <nVecs>` (default 1M).
@@ -316,48 +330,29 @@ object Stress {
     * batch as the `ann` mode) and compact+vacuum. */
   private def vecIdxStress(spark: SparkSession, nVecs: Long,
       cpus: Int): Unit = {
-    import graft.pipeline.{Similarity, VecIndex}
-    val dim = 64
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    def vecs(ids: org.apache.spark.sql.DataFrame) =
-      ids.select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
-    val base = vecs(spark.range(nVecs).toDF().repartition(cpus * 4))
+    val base = vectors(spark, nVecs, cpus)
     val nDelta = math.max(nVecs / 100, 1000L)
-    val delta = vecs(spark.range(nDelta).toDF()
-      .select((col("id") + nVecs).as("id")))
-    val path = "target/tmp/stress-vecidx"
-
-    val t0 = System.nanoTime()
-    val idx = VecIndex.init(base, dim, path)
-    val tInit = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    VecIndex.append(delta, idx)
-    val tFold = (System.nanoTime() - t1) / 1e9
+    val delta = embed(spark.range(nDelta).select((col("id") + nVecs).as("id")))
+    val (tInit, idx) = timed(VecIndex.init(base, Dim, "target/tmp/stress-vecidx"))
+    val (tFold, _) = timed(VecIndex.append(delta, idx))
     // the write-once alternative: full re-encode of base+delta
-    val t2 = System.nanoTime()
-    Similarity.binaryIndexWrite(base.unionByName(delta), dim,
-      "target/tmp/stress-vecidx-rewrite")
-    val tRewrite = (System.nanoTime() - t2) / 1e9
+    val (tRewrite, _) = timed(Similarity.binaryIndexWrite(
+      base.unionByName(delta), Dim, "target/tmp/stress-vecidx-rewrite"))
     require(VecIndex.countVecs(spark, idx) == nVecs + nDelta)
     // serve across the 2-generation index
-    val q = vecs(spark.range(10).toDF())
-    val t3 = System.nanoTime()
-    val n = VecIndex.binaryTopK(spark, q, idx, 40, 10).count()
-    val tServe = (System.nanoTime() - t3) / 1e9
+    val (tServe, n) = timed(
+      VecIndex.binaryTopK(spark, embed(spark.range(10)), idx, 40, 10).count())
     require(n == 100, s"serve rows $n")
-    val t4 = System.nanoTime()
-    VecIndex.compact(spark, idx)
-    VecIndex.vacuum(spark, idx)
-    val tCompact = (System.nanoTime() - t4) / 1e9
+    val (tCompact, _) = timed {
+      VecIndex.compact(spark, idx)
+      VecIndex.vacuum(spark, idx)
+    }
     require(tFold < tInit / 4,
       f"fold $tFold%.1fs not << init $tInit%.1fs")
     println(s"""{"metric":"stress_vecidx","vecs":$nVecs,""" +
       s""""delta_vecs":$nDelta,"init_sec":$tInit,"fold_sec":$tFold,""" +
       s""""full_rewrite_sec":$tRewrite,"serve_sec":$tServe,""" +
       s""""compact_vacuum_sec":$tCompact}""")
-    spark.stop()
   }
 
   /** At-rest binary-ANN SERVE stress at offline-batch query scale:
@@ -370,37 +365,24 @@ object Stress {
     * hand the optimizer an unplannable multi-thousand-literal IN). */
   private def annServeStress(spark: SparkSession, nVecs: Long,
       nQueries: Int, cpus: Int): Unit = {
-    import graft.pipeline.Similarity
-    val dim = 64
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
+    val emb = vectors(spark, nVecs, cpus)
     val idxPath = "target/tmp/stress-binidx-serve"
-    val t0 = System.nanoTime()
-    Similarity.binaryIndexWrite(emb, dim, idxPath)
-    val tIdx = (System.nanoTime() - t0) / 1e9
+    val (tIdx, _) = timed(Similarity.binaryIndexWrite(emb, Dim, idxPath))
     val queries = emb.filter(col("id") < nQueries)
-    val t1 = System.nanoTime()
-    val n = Similarity.binaryTopKAtRest(spark, queries, idxPath, dim, 40, 10)
-      .count()
-    val tServe = (System.nanoTime() - t1) / 1e9
+    val (tServe, n) = timed(Similarity.binaryTopKAtRest(spark, queries,
+      idxPath, Dim, 40, 10).count())
     require(n == nQueries * 10L,
       s"at-rest serve returned $n rows, expected ${nQueries * 10L}")
     // small-batch pushdown variant for comparison (100 queries — the
     // regime the isin path is FOR)
-    val t2 = System.nanoTime()
-    val nSmall = Similarity.binaryTopKAtRest(spark,
-      emb.filter(col("id") < 100), idxPath, dim, 40, 10,
-      idPushdown = true).count()
-    val tPush = (System.nanoTime() - t2) / 1e9
+    val (tPush, nSmall) = timed(Similarity.binaryTopKAtRest(spark,
+      emb.filter(col("id") < 100), idxPath, Dim, 40, 10,
+      idPushdown = true).count())
     require(nSmall == 1000L, s"pushdown serve returned $nSmall rows")
     println(s"""{"metric":"stress_annserve","vecs":$nVecs,""" +
       s""""queries":$nQueries,"index_write_sec":$tIdx,""" +
       s""""serve_distributed_sec":$tServe,"rows":$n,""" +
       s""""pushdown_100q_sec":$tPush}""")
-    spark.stop()
   }
 
   /** V2 streaming-SINK throughput: `sinkstream <rowsPerBatch>
@@ -418,11 +400,10 @@ object Stress {
   private def sinkStreamStress(spark: SparkSession, nRows: Long,
       nBatches: Int, cpus: Int): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Versioned
+    import org.apache.spark.sql.streaming.StreamingQuery
     val wh = "target/tmp/stress-sink-wh"
-    Versioned.drop(spark, s"$wh/sink")
     val ckpt = "target/tmp/stress-sink-ckpt"
-    Versioned.drop(spark, ckpt) // plain recursive delete
+    fresh(s"$wh/sink", ckpt)
     spark.conf.set("spark.sql.catalog.graft_stress",
       "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_stress.warehouse", wh)
@@ -430,26 +411,27 @@ object Stress {
       "TBLPROPERTIES ('key' = 'k')")
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
+    // an untimed warmup epoch (negative keys) pays JIT + codegen +
+    // first-epoch planning before the clock starts, the same for every
+    // arm; then nBatches timed epochs and the query's stop
+    val warm = 1024L
+    def drive(ms: MemoryStream[Long], q: StreamingQuery): Double = {
+      ms.addData(-warm until 0L)
+      q.processAllAvailable()
+      timed {
+        (0 until nBatches).foreach { b =>
+          ms.addData(b * nRows until (b + 1) * nRows)
+          q.processAllAvailable()
+        }
+        q.stop()
+      }._1
+    }
     val ms = MemoryStream[Long]
-    val q = ms.toDF()
+    val tSink = drive(ms, ms.toDF()
       .select(col("value").as("k"), (col("value") * 7).as("x"))
       .repartition(cpus)
       .writeStream.option("checkpointLocation", ckpt)
-      .toTable("graft_stress.sink")
-    // untimed warmup epoch (negative keys): JIT + codegen + first-epoch
-    // planning paid before the clock starts, same for both arms
-    val warm = 1024L
-    ms.addData(-warm until 0L)
-    q.processAllAvailable()
-    val t0 = System.nanoTime()
-    var off = 0L
-    (0 until nBatches).foreach { _ =>
-      ms.addData(off until (off + nRows))
-      q.processAllAvailable()
-      off += nRows
-    }
-    q.stop()
-    val tSink = (System.nanoTime() - t0) / 1e9
+      .toTable("graft_stress.sink"))
     val nSink = Versioned.current(spark, s"$wh/sink", "k").count()
     require(nSink == nRows * nBatches + warm,
       s"sink table holds $nSink rows, expected ${nRows * nBatches + warm}")
@@ -457,29 +439,17 @@ object Stress {
     // fn = appendBatch — identical source/engine costs, so the delta
     // is the commit machinery alone
     val p2 = "target/tmp/stress-sink-ab"
-    Versioned.drop(spark, p2)
     val ckpt2 = "target/tmp/stress-sink-ckpt2"
-    Versioned.drop(spark, ckpt2)
+    fresh(p2, ckpt2)
     val ms2 = MemoryStream[Long]
-    val q2 = ms2.toDF()
+    val tAb = drive(ms2, ms2.toDF()
       .select(col("value").as("k"), (col("value") * 7).as("x"))
       .repartition(cpus)
       .writeStream.option("checkpointLocation", ckpt2)
       .foreachBatch { (df: DataFrame, id: Long) =>
         Versioned.appendBatch(df, p2, id); ()
       }
-      .start()
-    ms2.addData(-warm until 0L)
-    q2.processAllAvailable()
-    val t1 = System.nanoTime()
-    off = 0L
-    (0 until nBatches).foreach { _ =>
-      ms2.addData(off until (off + nRows))
-      q2.processAllAvailable()
-      off += nRows
-    }
-    q2.stop()
-    val tAb = (System.nanoTime() - t1) / 1e9
+      .start())
     val nAb = Versioned.current(spark, p2, "k").count()
     require(nAb == nSink, s"appendBatch table diverged: $nAb vs $nSink")
     // DEAD-LETTER arms: same source through the V2 sink with a CHECK
@@ -489,9 +459,8 @@ object Stress {
     // divert path (quarantine commit + clean-slice rewrite per epoch).
     def quarArm(name: String, viol: Boolean): Double = {
       val tbl = s"sinkq_$name"
-      Seq(s"$wh/$tbl", s"$wh/${tbl}_dead").foreach(Versioned.drop(spark, _))
       val ck = s"target/tmp/stress-sink-ckpt-$name"
-      Versioned.drop(spark, ck)
+      fresh(s"$wh/$tbl", s"$wh/${tbl}_dead", ck)
       spark.sql(s"CREATE TABLE graft_stress.$tbl (k BIGINT, x BIGINT) " +
         "TBLPROPERTIES ('key' = 'k', 'check.x_pos' = 'x >= 0', " +
         s"'quarantine.path' = '${tbl}_dead')")
@@ -501,21 +470,10 @@ object Stress {
         when(col("value") % 101 === 0 && col("value") >= 0, lit(-1L))
           .otherwise(xBase)
       else xBase
-      val qq = m.toDF().select(col("value").as("k"), xExpr.as("x"))
+      val el = drive(m, m.toDF().select(col("value").as("k"), xExpr.as("x"))
         .repartition(cpus)
         .writeStream.option("checkpointLocation", ck)
-        .toTable(s"graft_stress.$tbl")
-      m.addData(-warm until 0L)
-      qq.processAllAvailable()
-      val t = System.nanoTime()
-      var o = 0L
-      (0 until nBatches).foreach { _ =>
-        m.addData(o until (o + nRows))
-        qq.processAllAvailable()
-        o += nRows
-      }
-      qq.stop()
-      val el = (System.nanoTime() - t) / 1e9
+        .toTable(s"graft_stress.$tbl"))
       val nMain = Versioned.current(spark, s"$wh/$tbl", "k").count()
       val nDead = if (viol)
         Versioned.current(spark, s"$wh/${tbl}_dead", "k").count() else 0L
@@ -532,7 +490,6 @@ object Stress {
       s""""appendBatch_sec":$tAb,""" +
       s""""sink_quarantine_clean_sec":$tQ0,""" +
       s""""sink_quarantine_viol1pct_sec":$tQ1}""")
-    spark.stop()
   }
 
   /** IVF×binary PROBED serve stress: `annprobed <corpusVecs>
@@ -548,53 +505,25 @@ object Stress {
     * q_ann_binary_ivf_gen); this run measures the scale shape. */
   private def annProbedStress(spark: SparkSession, nVecs: Long,
       nQueries: Int, cpus: Int): Unit = {
-    import graft.pipeline.VecIndex
-    val dim = 64
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
+    val emb = vectors(spark, nVecs, cpus)
     val nCent = 64
-    val centroids = emb.filter(col("id") < nCent)
-      .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = "target/tmp/stress-vecidx-probed"
-    val t0 = System.nanoTime()
-    val idx = VecIndex.init(emb, dim, path,
-      centroids = Some(centroids), cbBuckets = 32)
-    val tIdx = (System.nanoTime() - t0) / 1e9
+    val (tIdx, idx) = timed(VecIndex.init(emb, Dim,
+      "target/tmp/stress-vecidx-probed",
+      centroids = Some(centroidsOf(emb, nCent)), cbBuckets = 32))
     val queries = emb.filter(col("id") < nQueries)
-    // timed serve + per-query result sets (for recall@k): one pass
-    // collects the (qid, nid) pairs — bounded at nQueries * k rows
-    def timedSets(df: DataFrame): (Double, Map[Long, Set[Long]]) = {
-      val t = System.nanoTime()
-      val rows = df.select("qid", "nid").collect()
-      val sec = (System.nanoTime() - t) / 1e9
-      (sec, rows.groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet })
-    }
+    def probed(nProbe: Int) = timedSets(VecIndex.binaryTopKProbed(spark,
+      queries, idx, nProbe = nProbe, cands = 40, k = 10))
     val (tBrute, brute) = timedSets(
       VecIndex.binaryTopK(spark, queries, idx, 40, 10))
-    val (tP1, p1) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 1, cands = 40, k = 10))
-    val (tP4, p4) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 4, cands = 40, k = 10))
-    val (tP16, p16) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 16, cands = 40, k = 10))
+    val (tP1, p1) = probed(1)
+    val (tP4, p4) = probed(4)
+    val (tP16, p16) = probed(16)
     require(brute.values.map(_.size).sum == nQueries * 10 &&
       p4.values.map(_.size).sum == nQueries * 10 &&
       p16.values.map(_.size).sum == nQueries * 10,
       "serve row counts diverged")
     require(tP4 < tBrute,
       f"probed serve ($tP4%.1fs) must beat the brute scan ($tBrute%.1fs)")
-    // recall@10 vs the exhaustive serve: the nProbe quality/speed
-    // frontier a user tunes against (VecIndexSpec pins recall = 1.0 at
-    // nProbe = C exactly — probed == brute there)
-    def recall(got: Map[Long, Set[Long]]): Double =
-      brute.map { case (q, want) =>
-        got.getOrElse(q, Set.empty).intersect(want).size.toDouble /
-          want.size
-      }.sum / brute.size
     // r11 retrain roll on the same index: a NEW codebook (shifted ids)
     // staged + re-encoded in the background while the old index stays
     // fully servable; the swap is one marker. Cost ≈ the paid-once
@@ -602,33 +531,24 @@ object Stress {
     // zero extra serve cost after, not a cheaper rewrite.
     val centroids2 = emb.filter(col("id") >= nCent && col("id") < 2L * nCent)
       .select((col("id") - nCent).as("cid"), col("vec").as("cvec"))
-    val tR0 = System.nanoTime()
-    VecIndex.retrain(spark, idx, centroids = Some(centroids2))
-    val tRoll = (System.nanoTime() - tR0) / 1e9
-    val (tP4b, p4b) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 4, cands = 40, k = 10))
+    val (tRoll, _) = timed(
+      VecIndex.retrain(spark, idx, centroids = Some(centroids2)))
+    val (tP4b, p4b) = probed(4)
     require(p4b.values.map(_.size).sum == nQueries * 10,
       "post-roll serve row count diverged")
+    // recall@10 vs the exhaustive serve: the nProbe quality/speed
+    // frontier a user tunes against (VecIndexSpec pins recall = 1.0 at
+    // nProbe = C exactly — probed == brute there)
     println(f"""{"metric":"stress_annprobed","vecs":$nVecs,""" +
       s""""queries":$nQueries,"centroids":$nCent,"index_sec":$tIdx,""" +
       s""""brute_sec":$tBrute,"probed1_sec":$tP1,"probed4_sec":$tP4,""" +
       s""""probed16_sec":$tP16,""" +
-      f""""recall1":${recall(p1)}%.4f,"recall4":${recall(p4)}%.4f,""" +
-      f""""recall16":${recall(p16)}%.4f,""" +
+      f""""recall1":${recall(brute, p1)}%.4f,""" +
+      f""""recall4":${recall(brute, p4)}%.4f,""" +
+      f""""recall16":${recall(brute, p16)}%.4f,""" +
       s""""retrain_sec":$tRoll,"probed4_postroll_sec":$tP4b}""")
-    spark.stop()
   }
 
-  /** STREAMING-REPLICATION stress: `replicate <rows> [<deltas>]`
-    * (default 5M × 8). Bulk-load a source table, bootstrap a replica
-    * through [[graft.io.Versioned.replicateStreamTo]], commit
-    * `deltas` 1%-sized upsert commits plus one delete commit, then
-    * drain them incrementally — the claim under test is that the
-    * incremental drain costs the DELTAS (each epoch folds ≤ cap
-    * versions of ~1% rows), not the table: it must beat rebuilding
-    * the replica from `current(src)` (the naive full copy, timed as
-    * the reference) while `current(replica)` stays exactly equal to
-    * `current(src)` end to end. */
   /** Table→index CDC-sync stress: `idxsync <docs> [<deltas>]`
     * (default 1M × 8). The claim under test is the incremental-drain
     * cost shape of [[graft.pipeline.IndexSync.syncSearch]]: after a
@@ -641,27 +561,16 @@ object Stress {
     * and the incremental drain beats the rebuild. */
   private def idxSyncStress(spark: SparkSession, nDocs: Long,
       nDeltas: Int, cpus: Int): Unit = {
-    import graft.io.Versioned
-    import graft.pipeline.{IndexSync, Search}
     val tbl = "target/tmp/stress-idxsync-tbl"
     val sp = "target/tmp/stress-idxsync-idx"
     val full = "target/tmp/stress-idxsync-full"
-    Seq(tbl, sp, full).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    val tokMod = 100000007L
-    def gen(ids: DataFrame) = {
-      val body = (0 until 24).map(j =>
-        concat(lit("t"), (col("id") * (31 + j) + j * 7) % tokMod))
-      ids.select(col("id").as("k"),
-        concat_ws(" ", (lit("alpha") +: body): _*).as("text"))
-    }
-    Versioned.append(gen(spark.range(nDocs).repartition(cpus * 2)
-      .toDF()), tbl)                                            // v1
+    fresh(tbl, sp, full)
+    def gen(ids: Dataset[_]) = ids.select(col("id").as("k"),
+      concat_ws(" ", lit("alpha") +: toks(0 until 24): _*).as("text"))
+    Versioned.append(gen(spark.range(nDocs).repartition(cpus * 2)), tbl) // v1
     val sIdx = Search.writeIndex(
-      gen(spark.range(0).toDF()).limit(0), "k", "text", sp)
-    val t0 = System.nanoTime()
-    IndexSync.syncSearch(spark, tbl, "k", "text", sIdx)
-    val tBoot = (System.nanoTime() - t0) / 1e9
+      gen(spark.range(0)).limit(0), "k", "text", sp)
+    val (tBoot, _) = timed(IndexSync.syncSearch(spark, tbl, "k", "text", sIdx))
     // deltas: 1%-sized upsert commits + one delete commit
     val deltaN = math.max(1L, nDocs / 100)
     (1 to nDeltas).foreach { d =>
@@ -670,23 +579,18 @@ object Stress {
     }
     Versioned.delete(spark.range(deltaN)
       .select((col("id") * 37) % nDocs).distinct().toDF("k"), tbl)
-    val t1 = System.nanoTime()
-    val (fromV, toV) = IndexSync.syncSearch(spark, tbl, "k", "text",
-      sIdx)
-    val tInc = (System.nanoTime() - t1) / 1e9
+    val (tInc, (fromV, toV)) = timed(
+      IndexSync.syncSearch(spark, tbl, "k", "text", sIdx))
     require(toV > fromV, s"drain folded nothing ($fromV, $toV]")
     // the naive alternative: rebuild the index from current()
-    val t2 = System.nanoTime()
-    val fIdx = Search.writeIndex(Versioned.current(spark, tbl, "k"),
-      "k", "text", full)
-    val tFull = (System.nanoTime() - t2) / 1e9
+    val (tFull, fIdx) = timed(Search.writeIndex(
+      Versioned.current(spark, tbl, "k"), "k", "text", full))
     // served state identical — ids AND BM25 scores (corpus constants
     // ride the sync's marker deltas; any drift shows here)
     val qs = Seq("alpha", "t12345", "t777")
-    val a = Search.searchBm25(spark, sIdx, qs, 100)
+    def served(idx: Search.Index) = Search.searchBm25(spark, idx, qs, 100)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = Search.searchBm25(spark, fIdx, qs, 100)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val (a, b) = (served(sIdx), served(fIdx))
     require(a == b && a.nonEmpty,
       s"synced serve diverges from the fresh rebuild (${a.take(3)} " +
         s"vs ${b.take(3)})")
@@ -697,24 +601,29 @@ object Stress {
       s""""deltas":$nDeltas,"bootstrap_sec":$tBoot,""" +
       s""""incremental_sec":$tInc,"full_rebuild_sec":$tFull,""" +
       s""""range":[$fromV,$toV]}""")
-    spark.stop()
   }
 
+  /** STREAMING-REPLICATION stress: `replicate <rows> [<deltas>]`
+    * (default 5M × 8). Bulk-load a source table, bootstrap a replica
+    * through [[graft.io.Versioned.replicateStreamTo]], commit
+    * `deltas` 1%-sized upsert commits plus one delete commit, then
+    * drain them incrementally — the claim under test is that the
+    * incremental drain costs the DELTAS (each epoch folds ≤ cap
+    * versions of ~1% rows), not the table: it must beat rebuilding
+    * the replica from `current(src)` (the naive full copy, timed as
+    * the reference) while `current(replica)` stays exactly equal to
+    * `current(src)` end to end. */
   private def replicateStress(spark: SparkSession, nRows: Long,
       nDeltas: Int, cpus: Int): Unit = {
-    import graft.io.Versioned
     val src = "target/tmp/stress-repl-src"
     val dst = "target/tmp/stress-repl-dst"
     val full = "target/tmp/stress-repl-full"
     val ckpt = "target/tmp/stress-repl-ckpt"
-    Seq(src, dst, full, ckpt).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    fresh(src, dst, full, ckpt)
     Versioned.append(spark.range(nRows).repartition(cpus * 2)
       .select(col("id").as("k"), (col("id") * 2).as("x")), src)
-    val t0 = System.nanoTime()
-    Versioned.replicateStreamTo(spark, src, "k", dst, ckpt,
-      maxVersionsPerTrigger = 4).awaitTermination()
-    val tBoot = (System.nanoTime() - t0) / 1e9
+    val (tBoot, _) = timed(Versioned.replicateStreamTo(spark, src, "k", dst,
+      ckpt, maxVersionsPerTrigger = 4).awaitTermination())
     val deltaN = math.max(1L, nRows / 100)
     for (i <- 1 to nDeltas)
       Versioned.append(spark.range(deltaN).repartition(cpus)
@@ -723,14 +632,12 @@ object Stress {
         .groupBy("k").agg(max("x").as("x")), src)
     Versioned.delete(spark.range(deltaN / 2)
       .select(((col("id") * 7) % nRows).as("k")).distinct(), src)
-    val t1 = System.nanoTime()
-    Versioned.replicateStreamTo(spark, src, "k", dst, ckpt)
-      .awaitTermination() // default cap 16: the 9 commits drain as 1 epoch
-    val tInc = (System.nanoTime() - t1) / 1e9
+    // default cap 16: the 9 commits drain as 1 epoch
+    val (tInc, _) = timed(Versioned.replicateStreamTo(spark, src, "k", dst,
+      ckpt).awaitTermination())
     // reference: rebuild the replica from the source's resolved head
-    val t2 = System.nanoTime()
-    Versioned.append(Versioned.current(spark, src, "k"), full)
-    val tFull = (System.nanoTime() - t2) / 1e9
+    val (tFull, _) = timed(
+      Versioned.append(Versioned.current(spark, src, "k"), full))
     val curSrc = Versioned.current(spark, src, "k").select("k", "x")
     val curDst = Versioned.current(spark, dst, "k").select("k", "x")
     val nSrc = curSrc.count()
@@ -745,7 +652,6 @@ object Stress {
       s""""deltas":$nDeltas,"bootstrap_sec":$tBoot,""" +
       s""""incremental_sec":$tInc,"fullcopy_sec":$tFull,""" +
       s""""current_rows":$nSrc}""")
-    spark.stop()
   }
 
   /** HYBRID fused-serve stress: `hybrid <nDocs> [<nQueries>]`
@@ -763,37 +669,15 @@ object Stress {
     * serves combined (fusion touches only candidate lists). */
   private def hybridStress(spark: SparkSession, nDocs: Long,
       nQueries: Int, cpus: Int): Unit = {
-    import graft.pipeline.{Hybrid, Search, VecIndex}
-    val tokMod = 100000007L
-    val dim = 64
-    def gen(ids: DataFrame) = {
-      val opening = (0 until 8).map(j =>
-        concat(lit("b"), ((col("id") % 1000) * (17 + j) + j) % 1000))
-      val body = (0 until 32).map(j =>
-        concat(lit("t"), (col("id") * (31 + j) + j * 7) % tokMod))
-      ids.select(col("id").as("doc_id"),
-        concat_ws(" ", opening ++ body: _*).as("text"))
-    }
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val docs = gen(spark.range(nDocs).repartition(cpus * 4).toDF())
-    val emb = spark.range(nDocs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
     val tPath = "target/tmp/stress-hybrid-text"
     val vPath = "target/tmp/stress-hybrid-vec"
-    Seq(tPath, vPath).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    val t0 = System.nanoTime()
-    val sIdx = Search.writeIndex(docs, "doc_id", "text", tPath)
-    val tText = (System.nanoTime() - t0) / 1e9
-    val nCent = 64
-    val centroids = emb.filter(col("id") < nCent)
-      .select(col("id").as("cid"), col("vec").as("cvec"))
-    val t1 = System.nanoTime()
-    val vIdx = VecIndex.init(emb, dim, vPath,
-      centroids = Some(centroids), cbBuckets = 32)
-    val tVec = (System.nanoTime() - t1) / 1e9
+    fresh(tPath, vPath)
+    val emb = vectors(spark, nDocs, cpus)
+    val (tText, sIdx) = timed(Search.writeIndex(
+      docs(spark.range(nDocs).repartition(cpus * 4), 8, 32),
+      "doc_id", "text", tPath))
+    val (tVec, vIdx) = timed(VecIndex.init(emb, Dim, vPath,
+      centroids = Some(centroidsOf(emb, 64)), cbBuckets = 32))
     // per-query: 3 opening-family terms (all in-vocabulary) + an
     // external query vector; qids above the corpus (no self-match)
     val qFrame = spark.range(nQueries).repartition(cpus).select(
@@ -803,12 +687,8 @@ object Stress {
           concat(lit("b"), pmod(col("id") * 7 + 1, lit(1000))),
           concat(lit("b"), pmod(col("id") * 13 + 2, lit(1000))))
           .as("terms"),
-        array((0 until dim).map(comp): _*).as("vec"))
+        embedding().as("vec"))
       .localCheckpoint()
-    def timed[T](f: => T): (Double, T) = {
-      val s = System.nanoTime(); val r = f
-      ((System.nanoTime() - s) / 1e9, r)
-    }
     val (tLex, nLex) = timed(Search.searchBm25Batch(spark, sIdx,
       qFrame.select("qid", "terms"), topK = 20).count())
     val (tSem, nSem) = timed(VecIndex.ivfTopK(spark,
@@ -823,22 +703,7 @@ object Stress {
       s"fused serve must fill top-10 for every query, got $nHyb")
     // index-bounded: every parquet scan in the fused plan carries a
     // bucket partition filter (tb for postings, cb for IVF lists)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case s: QueryStageExec => flatten(s.plan)
-      case o => o.children.flatMap(flatten)
-    })
-    val scans = flatten(hyb.queryExecution.executedPlan)
-      .collect { case s: FileSourceScanExec => s }
-    require(scans.nonEmpty, "expected parquet scans in the fused plan")
-    scans.foreach { s =>
-      require(s.partitionFilters.exists(_.references.exists(r =>
-          r.name == "tb" || r.name == "cb")),
-        s"corpus-shaped scan in the fused serve: ${s.nodeName} " +
-          s"partitionFilters=${s.partitionFilters.mkString(",")}")
-    }
+    requireBucketPruned(hyb, Set("tb", "cb"), "fused serve")
     require(tHyb <= 2.0 * (tLex + tSem),
       f"fused serve $tHyb%.1fs blew past 2x the standalone serves " +
         f"(${tLex + tSem}%.1fs combined)")
@@ -870,7 +735,6 @@ object Stress {
       s""""hybrid_sec":$tHyb,"fused_rows":$nHyb,""" +
       s""""fuzzy_sec":$tFz,"prefix_sec":$tPf,""" +
       s""""fuzzy_batch_sec":$tFzB,"fuzzy_batch_rows":$nFzB}""")
-    spark.stop()
   }
 
   /** ColBERT late-interaction serve stress: `colbert <chunks>
@@ -886,35 +750,19 @@ object Stress {
     * top-k. */
   private def colbertStress(spark: SparkSession, nChunks: Long,
       nQueries: Int, cpus: Int): Unit = {
-    import graft.pipeline.VecIndex
-    val dim = 64
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nChunks).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
-    val chunks = emb.withColumn("doc", expr("id div 16"))
     val vPath = "target/tmp/stress-colbert-vec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(vPath))
-    val nCent = 256
-    val centroids = emb.filter(col("id") < nCent)
-      .select(col("id").as("cid"), col("vec").as("cvec"))
-    val t0 = System.nanoTime()
-    val vIdx = VecIndex.init(chunks, dim, vPath,
-      centroids = Some(centroids), cbBuckets = 32)
-    val tIdx = (System.nanoTime() - t0) / 1e9
+    fresh(vPath)
+    val emb = vectors(spark, nChunks, cpus)
+    val (tIdx, vIdx) = timed(VecIndex.init(
+      emb.withColumn("doc", expr("id div 16")), Dim, vPath,
+      centroids = Some(centroidsOf(emb, 256)), cbBuckets = 32))
     // nQueries queries × T tokens each: qids above the corpus, qtoks
     // globally unique and non-corpus (the multi-vector contract)
     def queryFrame(t: Int) = spark.range(nQueries.toLong * t)
       .repartition(cpus)
       .select((expr(s"id div $t") + nChunks).as("qid"),
-        (col("id") + 2L * nChunks).as("qtok"),
-        array((0 until dim).map(comp): _*).as("vec"))
+        (col("id") + 2L * nChunks).as("qtok"), embedding().as("vec"))
       .localCheckpoint()
-    def timed[T](f: => T): (Double, T) = {
-      val s = System.nanoTime(); val r = f
-      ((System.nanoTime() - s) / 1e9, r)
-    }
     val perTok = Seq(4, 16, 32).map { t =>
       val serve = VecIndex.maxSimTopKMulti(spark, queryFrame(t), vIdx,
         "doc", nProbe = 4, nChunks = 16, k = 10)
@@ -923,22 +771,7 @@ object Stress {
         s"t=$t: serve under-filled, $n of ${nQueries * 10}")
       // bucket-pruned, never corpus-shaped: every parquet scan in the
       // served plan carries a cb partition filter
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{
-        AdaptiveSparkPlanExec, QueryStageExec}
-      def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-        case s: QueryStageExec => flatten(s.plan)
-        case o => o.children.flatMap(flatten)
-      })
-      val scans = flatten(serve.queryExecution.executedPlan)
-        .collect { case s: FileSourceScanExec => s }
-      require(scans.nonEmpty, s"t=$t: expected parquet scans")
-      scans.foreach { s =>
-        require(s.partitionFilters.exists(
-            _.references.exists(_.name == "cb")),
-          s"t=$t: corpus-shaped scan in the maxsim serve: ${s.nodeName}")
-      }
+      requireBucketPruned(serve, Set("cb"), s"t=$t maxsim serve")
       (t, sec)
     }
     val byT = perTok.map { case (t, s) => s""""t$t":$s""" }.mkString(",")
@@ -955,7 +788,6 @@ object Stress {
     println(s"""{"metric":"stress_colbert","chunks":$nChunks,""" +
       s""""queries":$nQueries,"index_sec":$tIdx,$byT,""" +
       f""""tok_scaling_32_over_4":${t32 / t4}%.2f}""")
-    spark.stop()
   }
 
   /** Codebook-retrain POLICY stress: `retrainpolicy <corpusVecs>
@@ -970,14 +802,8 @@ object Stress {
     * the now-installed candidate measures ~0 drift and does nothing. */
   private def retrainPolicyStress(spark: SparkSession, nVecs: Long,
       nQueries: Int, cpus: Int): Unit = {
-    import graft.pipeline.VecIndex
-    val dim = 64
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
     val half = nVecs / 2
-    val d0 = spark.range(half).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
+    val d0 = vectors(spark, half, cpus)
     // the DRIFTED arrivals: 32 tight topic clusters the old codebook
     // never saw — topic prototype + small per-id noise
     // noise wide enough (±0.5 on unit-ish prototypes) that a topic's
@@ -990,15 +816,13 @@ object Stress {
         + (((col("id") * 7 + j * 3) % 21).cast("double") - 10.0) / 20.0)
         .cast("float")
     val d1 = spark.range(half, nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(tcomp): _*).as("vec"))
-    val staleCents = d0.filter(col("id") < 64)
-      .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = "target/tmp/stress-vecidx-retrainpolicy"
-    val t0 = System.nanoTime()
-    val idx = VecIndex.init(d0, dim, path,
-      centroids = Some(staleCents), cbBuckets = 32)
-    VecIndex.append(d1, idx)
-    val tIdx = (System.nanoTime() - t0) / 1e9
+      .select(col("id"), array((0 until Dim).map(tcomp): _*).as("vec"))
+    val (tIdx, idx) = timed {
+      val i = VecIndex.init(d0, Dim, "target/tmp/stress-vecidx-retrainpolicy",
+        centroids = Some(centroidsOf(d0, 64)), cbBuckets = 32)
+      VecIndex.append(d1, i)
+      i
+    }
     // OUT-OF-CORPUS queries between two topic prototypes (60/40 mix):
     // their true neighbors are the dominant topic's members, but a
     // codebook that never saw the topics assigns the query and its
@@ -1014,27 +838,14 @@ object Stress {
         .cast("float")
     }
     val queries = spark.range(nVecs, nVecs + nQueries)
-      .select(col("id"), array((0 until dim).map(qcomp): _*).as("vec"))
-    def timedSets(df: DataFrame): (Double, Map[Long, Set[Long]]) = {
-      val t = System.nanoTime()
-      val rows = df.select("qid", "nid").collect()
-      val sec = (System.nanoTime() - t) / 1e9
-      (sec, rows.groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet })
-    }
+      .select(col("id"), array((0 until Dim).map(qcomp): _*).as("vec"))
+    def probed(nProbe: Int) = timedSets(VecIndex.binaryTopKProbed(spark,
+      queries, idx, nProbe = nProbe, cands = 40, k = 10))
     val (tBrute, brute) = timedSets(
       VecIndex.binaryTopK(spark, queries, idx, 40, 10))
-    def recall(got: Map[Long, Set[Long]]): Double =
-      brute.map { case (q, want) =>
-        got.getOrElse(q, Set.empty).intersect(want).size.toDouble /
-          want.size
-      }.sum / brute.size
-    val (tB1, b1) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 1, cands = 40, k = 10))
-    val (tB2, b2) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 2, cands = 40, k = 10))
-    val (tB4, b4) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 4, cands = 40, k = 10))
+    val (tB1, b1) = probed(1)
+    val (tB2, b2) = probed(2)
+    val (tB4, b4) = probed(4)
     // the candidate a nightly trainer would hand the sweep: the 32
     // topic prototypes + a 32-vector slice of the old distribution
     val cand = d1.filter(col("id") < half + 32)
@@ -1042,25 +853,20 @@ object Stress {
       .unionByName(d0.filter(col("id") < 32)
         .select((col("id") + 32).as("cid"), col("vec").as("cvec")))
     val drift = VecIndex.assignmentDrift(spark, idx, cand)
-    val tR0 = System.nanoTime()
-    val acts = VecIndex.maintain(spark, idx,
-      candidateCentroids = Some(cand), retrainFrac = 0.2)
-    val tRoll = (System.nanoTime() - tR0) / 1e9
+    val (tRoll, acts) = timed(VecIndex.maintain(spark, idx,
+      candidateCentroids = Some(cand), retrainFrac = 0.2))
     require(acts.exists(_._1 == "retrain"),
       s"policy did not roll under drift $drift: $acts")
-    val (tA1, a1) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 1, cands = 40, k = 10))
-    val (tA2, a2) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 2, cands = 40, k = 10))
-    val (tA4, a4) = timedSets(VecIndex.binaryTopKProbed(spark, queries,
-      idx, nProbe = 4, cands = 40, k = 10))
+    val (tA1, a1) = probed(1)
+    val (tA2, a2) = probed(2)
+    val (tA4, a4) = probed(4)
     // the RECOVERY point: at nProbe=4 the rolled codebook must buy
     // back real recall (nProbe=1 is structurally capped here — the
     // between-topic queries' neighbors span two clusters, which one
     // probe cannot cover under ANY codebook)
-    require(recall(a4) >= recall(b4) + 0.1,
+    require(recall(brute, a4) >= recall(brute, b4) + 0.1,
       f"post-roll recall@10 nProbe=4 did not recover: " +
-        f"${recall(b4)}%.4f -> ${recall(a4)}%.4f")
+        f"${recall(brute, b4)}%.4f -> ${recall(brute, a4)}%.4f")
     // control: the installed candidate measures ~0 drift — no re-roll
     val again = VecIndex.maintain(spark, idx,
       candidateCentroids = Some(cand), retrainFrac = 0.2)
@@ -1068,16 +874,15 @@ object Stress {
     println(f"""{"metric":"stress_retrainpolicy","vecs":$nVecs,""" +
       s""""queries":$nQueries,"index_sec":$tIdx,"brute_sec":$tBrute,""" +
       f""""drift":$drift%.4f,"retrain_sec":$tRoll,""" +
-      f""""recall1_before":${recall(b1)}%.4f,""" +
-      f""""recall1_after":${recall(a1)}%.4f,""" +
-      f""""recall2_before":${recall(b2)}%.4f,""" +
-      f""""recall2_after":${recall(a2)}%.4f,""" +
-      f""""recall4_before":${recall(b4)}%.4f,""" +
-      f""""recall4_after":${recall(a4)}%.4f,""" +
+      f""""recall1_before":${recall(brute, b1)}%.4f,""" +
+      f""""recall1_after":${recall(brute, a1)}%.4f,""" +
+      f""""recall2_before":${recall(brute, b2)}%.4f,""" +
+      f""""recall2_after":${recall(brute, a2)}%.4f,""" +
+      f""""recall4_before":${recall(brute, b4)}%.4f,""" +
+      f""""recall4_after":${recall(brute, a4)}%.4f,""" +
       s""""probed1_before_sec":$tB1,"probed1_after_sec":$tA1,""" +
       s""""probed2_before_sec":$tB2,"probed2_after_sec":$tA2,""" +
       s""""probed4_before_sec":$tB4,"probed4_after_sec":$tA4}""")
-    spark.stop()
   }
 
   /** Text-index maintenance stress: `searchfold <nDocs>` (default 1M).
@@ -1092,44 +897,27 @@ object Stress {
     * then pays the full compact on the same index for the ratio. */
   private def searchFoldStress(spark: SparkSession, nDocs: Long,
       cpus: Int): Unit = {
-    import graft.pipeline.Search
-    val tokMod = 100000007L
-    def gen(ids: org.apache.spark.sql.DataFrame) = {
-      val opening = (0 until 8).map(j =>
-        concat(lit("b"), ((col("id") % 1000) * (17 + j) + j) % 1000))
-      val body = (0 until 32).map(j =>
-        concat(lit("t"), (col("id") * (31 + j) + j * 7) % tokMod))
-      ids.select(col("id").as("doc_id"),
-        concat_ws(" ", opening ++ body: _*).as("text"))
-    }
     val path = "target/tmp/stress-searchfold"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    val t0 = System.nanoTime()
-    val idx = Search.writeIndex(
-      gen(spark.range(nDocs).repartition(cpus * 4).toDF()),
-      "doc_id", "text", path)
-    val tBuild = (System.nanoTime() - t0) / 1e9
-    val shard = gen(spark.range(nDocs, nDocs + nDocs / 100)
-      .repartition(cpus).toDF()).localCheckpoint()
+    fresh(path)
+    val (tBuild, idx) = timed(Search.writeIndex(
+      docs(spark.range(nDocs).repartition(cpus * 4), 8, 32),
+      "doc_id", "text", path))
+    val shard = docs(spark.range(nDocs, nDocs + nDocs / 100)
+      .repartition(cpus), 8, 32).localCheckpoint()
     Search.append(shard, "doc_id", "text", idx)
     Search.delete(spark.range(0, nDocs / 1000)
       .select(col("id").as("doc_id")), "doc_id", idx)
-    val t1 = System.nanoTime()
-    Search.compactIncremental(spark, idx)
-    val tFold = (System.nanoTime() - t1) / 1e9
+    val (tFold, _) = timed(Search.compactIncremental(spark, idx))
     val terms = Seq("b0", "b1", "b2")
     val nConj = Search.searchAll(spark, idx, terms).count()
     require(nConj > 0, "post-fold serve returned nothing")
-    val t2 = System.nanoTime()
-    Search.compact(spark, idx)
-    val tFull = (System.nanoTime() - t2) / 1e9
+    val (tFull, _) = timed(Search.compact(spark, idx))
     require(Search.searchAll(spark, idx, terms).count() == nConj,
       "full compact changed answers")
     println(s"""{"metric":"stress_searchfold","docs":$nDocs,""" +
       s""""build_sec":$tBuild,"fold1pct_sec":$tFold,""" +
       s""""full_compact_sec":$tFull,"conj_docs":$nConj,""" +
       f""""fold_vs_full":${tFold / tFull}%.3f}""")
-    spark.stop()
   }
 
   /** PQ/ADC recall-frontier stress: `annpq <corpusVecs> [<nQueries>]`
@@ -1146,67 +934,42 @@ object Stress {
     * The numbers land in SCALING.md's serve-frontier table. */
   private def annPqStress(spark: SparkSession, nVecs: Long,
       nQueries: Int, cpus: Int): Unit = {
-    import graft.pipeline.{Similarity, VecIndex}
-    import org.apache.spark.sql.expressions.Window
-    val dim = 64
-    def comp(seed: Long)(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L + seed) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp(0L)): _*).as("vec"))
-      .localCheckpoint()
+    val emb = vectors(spark, nVecs, cpus).localCheckpoint()
     // queries are NOT corpus members (distinct seed): no self-hit slot
     val qdf = spark.range(nQueries)
-      .select(col("id").as("qid"),
-        array((0 until dim).map(comp(77777L)): _*).as("qvec"))
+      .select(col("id").as("qid"), embedding(77777L).as("qvec"))
       .localCheckpoint()
     val queriesSeq = qdf.collect().map(r => r.getLong(0) ->
       r.getSeq[Float](1).map(_.toDouble)).toSeq
     // exact euclidean top-10 (ground truth): corpus x broadcast(queries)
-    val t0 = System.nanoTime()
-    val scored = emb
-      .select(col("id").as("nid"), col("vec"),
-        Similarity.norm(col("vec")).as("cn"))
-      .crossJoin(broadcast(qdf
-        .select(col("qid"), col("qvec"),
-          Similarity.norm(col("qvec")).as("qn"))))
-      .select(col("qid"), col("nid"),
-        (col("cn") * col("cn") + col("qn") * col("qn") -
-          lit(2.0) * Similarity.dot(col("vec"), col("qvec"))).as("d2"))
-    val w = Window.partitionBy("qid").orderBy(asc("d2"), asc("nid"))
-    val exact = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 10).select("qid", "nid").collect()
-      .groupBy(_.getLong(0)).map { case (q, rs) =>
-        q -> rs.map(_.getLong(1)).toSet }
-    val tExact = (System.nanoTime() - t0) / 1e9
-    require(exact.size == nQueries, "ground truth lost queries")
-    def recall(got: Map[Long, Set[Long]]): Double =
-      exact.map { case (q, want) =>
-        got.getOrElse(q, Set.empty).intersect(want).size.toDouble /
-          want.size
-      }.sum / exact.size
-    def timedSets(df: org.apache.spark.sql.DataFrame)
-        : (Double, Map[Long, Set[Long]]) = {
-      val t = System.nanoTime()
-      val rows = df.select("qid", "vec_id").collect()
-      ((System.nanoTime() - t) / 1e9, rows.groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet })
+    val (tExact, exact) = timed {
+      val scored = emb
+        .select(col("id").as("nid"), col("vec"),
+          Similarity.norm(col("vec")).as("cn"))
+        .crossJoin(broadcast(qdf
+          .select(col("qid"), col("qvec"),
+            Similarity.norm(col("qvec")).as("qn"))))
+        .select(col("qid"), col("nid"),
+          (col("cn") * col("cn") + col("qn") * col("qn") -
+            lit(2.0) * Similarity.dot(col("vec"), col("qvec"))).as("d2"))
+      val w = Window.partitionBy("qid").orderBy(asc("d2"), asc("nid"))
+      scored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= 10).select("qid", "nid").collect()
+        .groupBy(_.getLong(0)).map { case (q, rs) =>
+          q -> rs.map(_.getLong(1)).toSet }
     }
+    require(exact.size == nQueries, "ground truth lost queries")
     // PQ books trained on a corpus sample (m=8 subspaces x 8 dims,
     // 256 codes: 8 bytes/vector — the 32x compression point)
-    val tT0 = System.nanoTime()
-    val books = Similarity.pqTrainCodebooks(
+    val (tTrain, books) = timed(Similarity.pqTrainCodebooks(
       emb.filter(col("id") < 25000L), m = 8, subDim = 8, k = 256,
-      iters = 2)
-    val tTrain = (System.nanoTime() - tT0) / 1e9
+      iters = 2))
     // flat ADC serve
-    val pqPath = "target/tmp/stress-annpq-flat"
-    val tI0 = System.nanoTime()
-    val idxPq = VecIndex.init(emb, dim, pqPath, pq = Some(books))
-    val tIdxPq = (System.nanoTime() - tI0) / 1e9
-    val (tPq, pqSets) = timedSets(VecIndex.pqTopK(spark, queriesSeq,
-      idxPq, 10))
-    val rPq = recall(pqSets)
+    val (tIdxPq, idxPq) = timed(VecIndex.init(emb, Dim,
+      "target/tmp/stress-annpq-flat", pq = Some(books)))
+    val (tPq, pqSets) = timedSets(
+      VecIndex.pqTopK(spark, queriesSeq, idxPq, 10), "vec_id")
+    val rPq = recall(exact, pqSets)
     // IVFADC: 64 coarse centroids from corpus rows; the PQ books are
     // trained on RESIDUALS (vector minus its coarse centroid) — the
     // codes encode residuals, so raw-trained books would waste their
@@ -1221,47 +984,42 @@ object Stress {
         graft.functions.VectorFunctions.nearestCentroids(
           col("vec"), coarse.toArray, cn2,
           coarse.indices.map(_.toLong).toArray, 1, euclidean = true), 1))
-      .select(col("id"), array((0 until dim).map(i =>
+      .select(col("id"), array((0 until Dim).map(i =>
         col("vec").getItem(i).cast("double") -
-          element_at(flatC, col("ccid").cast("int") * dim + i + 1)): _*)
+          element_at(flatC, col("ccid").cast("int") * Dim + i + 1)): _*)
         .as("vec"))
     val resBooks = Similarity.pqTrainCodebooks(resDf, m = 8, subDim = 8,
       k = 256, iters = 2, initFrom = 64L)
-    val ivfPath = "target/tmp/stress-annpq-ivf"
-    val tI1 = System.nanoTime()
-    val idxIvf = VecIndex.init(emb, dim, ivfPath, cbBuckets = 32,
-      ivfPq = Some((coarse, resBooks)))
-    val tIdxIvf = (System.nanoTime() - tI1) / 1e9
+    val (tIdxIvf, idxIvf) = timed(VecIndex.init(emb, Dim,
+      "target/tmp/stress-annpq-ivf", cbBuckets = 32,
+      ivfPq = Some((coarse, resBooks))))
     val qArr = queriesSeq.map { case (q, v) => q -> v.toArray }
-    val (tP1, p1) = timedSets(VecIndex.ivfPqTopK(spark, qArr, idxIvf, 1, 10))
-    val (tP4, p4) = timedSets(VecIndex.ivfPqTopK(spark, qArr, idxIvf, 4, 10))
-    val (tP16, p16) = timedSets(VecIndex.ivfPqTopK(spark, qArr, idxIvf,
-      16, 10))
+    def serve(idx: VecIndex.Index, nProbe: Int) =
+      timedSets(VecIndex.ivfPqTopK(spark, qArr, idx, nProbe, 10), "vec_id")
+    val (tP1, p1) = serve(idxIvf, 1)
+    val (tP4, p4) = serve(idxIvf, 4)
+    val (tP16, p16) = serve(idxIvf, 16)
     // the COMPRESSION-recall axis: m=16 x 4-dim subspaces (16 bytes/
     // vector, 16x compression) against the m=8 point above — the
     // recall ceiling is the quantizer's, so doubling the code budget
     // at the same nProbe must buy recall
     val resBooks16 = Similarity.pqTrainCodebooks(resDf, m = 16,
       subDim = 4, k = 256, iters = 2, initFrom = 64L)
-    val ivf16Path = "target/tmp/stress-annpq-ivf16"
-    val tI2 = System.nanoTime()
-    val idxIvf16 = VecIndex.init(emb, dim, ivf16Path, cbBuckets = 32,
-      ivfPq = Some((coarse, resBooks16)))
-    val tIdxIvf16 = (System.nanoTime() - tI2) / 1e9
-    val (tM16, m16) = timedSets(VecIndex.ivfPqTopK(spark, qArr,
-      idxIvf16, 4, 10))
+    val (tIdxIvf16, idxIvf16) = timed(VecIndex.init(emb, Dim,
+      "target/tmp/stress-annpq-ivf16", cbBuckets = 32,
+      ivfPq = Some((coarse, resBooks16))))
+    val (tM16, m16) = serve(idxIvf16, 4)
     println(s"""{"metric":"stress_annpq","vecs":$nVecs,""" +
       s""""queries":$nQueries,"exact_sec":$tExact,""" +
       s""""train_sec":$tTrain,"pq_index_sec":$tIdxPq,""" +
       f""""pq_sec":$tPq,"pq_recall10":$rPq%.4f,""" +
       s""""ivfpq_index_sec":$tIdxIvf,""" +
-      f""""ivfpq1_sec":$tP1,"ivfpq1_recall10":${recall(p1)}%.4f,""" +
-      f""""ivfpq4_sec":$tP4,"ivfpq4_recall10":${recall(p4)}%.4f,""" +
-      f""""ivfpq16_sec":$tP16,"ivfpq16_recall10":${recall(p16)}%.4f,""" +
+      f""""ivfpq1_sec":$tP1,"ivfpq1_recall10":${recall(exact, p1)}%.4f,""" +
+      f""""ivfpq4_sec":$tP4,"ivfpq4_recall10":${recall(exact, p4)}%.4f,""" +
+      f""""ivfpq16_sec":$tP16,"ivfpq16_recall10":${recall(exact, p16)}%.4f,""" +
       s""""ivfpq_m16_index_sec":$tIdxIvf16,""" +
       f""""ivfpq4_m16_sec":$tM16,""" +
-      f""""ivfpq4_m16_recall10":${recall(m16)}%.4f}""")
-    spark.stop()
+      f""""ivfpq4_m16_recall10":${recall(exact, m16)}%.4f}""")
   }
 
   /** Incremental-compaction stress: `inccompact <nRows> [<nDeltas>]`
@@ -1277,10 +1035,9 @@ object Stress {
     * checkpoint run costs the dirty set, not the table. */
   private def incCompactStress(spark: SparkSession, nRows: Long,
       nDeltas: Int, cpus: Int): Unit = {
-    import graft.io.Versioned
     val pInc = "target/tmp/stress-inccompact"
     val pFull = "target/tmp/stress-inccompact-full"
-    Seq(pInc, pFull).foreach(Versioned.drop(spark, _))
+    fresh(pInc, pFull)
     val nFiles = 64
     val base = spark.range(nRows).repartition(cpus * 4)
       .select(col("id").as("k"), (col("id") * 7 % 1000).as("x"))
@@ -1292,18 +1049,15 @@ object Stress {
       Versioned.append(spark.range(lo, lo + nRows / nFiles / 4)
         .select(col("id").as("k"), lit(-1L).as("x")).coalesce(2), t)
     }
-    def timed(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    val tLoad = timed {
+    val (tLoad, _) = timed {
       Seq(pInc, pFull).foreach { t =>
         Versioned.append(base, t)
         Versioned.compact(spark, t, "k", nFiles)
         deltas(t)
       }
     }
-    val tInc = timed { Versioned.compactIncremental(spark, pInc, "k"); () }
-    val tFull = timed { Versioned.compact(spark, pFull, "k", nFiles); () }
+    val (tInc, _) = timed(Versioned.compactIncremental(spark, pInc, "k"))
+    val (tFull, _) = timed(Versioned.compact(spark, pFull, "k", nFiles))
     val vi = Versioned.latestVersion(spark, pInc)
     val man = {
       val src = scala.io.Source.fromFile(s"$pInc/v=$vi/_MANIFEST.tsv")
@@ -1314,7 +1068,7 @@ object Stress {
     require(man >= nFiles - nDeltas - 1,
       s"expected >= ${nFiles - nDeltas - 1} carried refs, got $man")
     // resolve equivalence off both checkpoints
-    val tResInc = timed {
+    val (tResInc, _) = timed {
       val a = Versioned.current(spark, pInc, "k")
         .agg(count(lit(1)), sum("x")).head()
       val b = Versioned.current(spark, pFull, "k")
@@ -1329,7 +1083,6 @@ object Stress {
       s""""incremental_sec":$tInc,"full_sec":$tFull,""" +
       s""""carried_files":$man,"rewritten_files":$rewrote,""" +
       s""""resolve_check_sec":$tResInc}""")
-    spark.stop()
   }
 
   /** AUTO-MAINTENANCE policy vs always-full-compact:
@@ -1345,28 +1098,22 @@ object Stress {
     * touched files) where B re-writes O(table) per cycle. */
   private def maintainStress(spark: SparkSession, nRows: Long,
       cycles: Int, cpus: Int): Unit = {
-    import graft.io.Versioned
     val pA = "target/tmp/stress-maintain-auto"
     val pB = "target/tmp/stress-maintain-full"
-    Seq(pA, pB).foreach(Versioned.drop(spark, _))
+    fresh(pA, pB)
     val nFiles = 64
     val base = spark.range(nRows).repartition(cpus * 4)
       .select(col("id").as("k"), (col("id") % 1000).as("x"))
-    val tLoad = {
-      val t = System.nanoTime()
+    val (tLoad, _) = timed {
       Seq(pA, pB).foreach { p =>
         Versioned.append(base, p)
         Versioned.compact(spark, p, "k", nFiles)
       }
-      (System.nanoTime() - t) / 1e9
     }
     // thresholds sized to the actual checkpoint so the policy keeps
     // ~nFiles-sized files (what an operator would set as table props)
-    val fsys = new org.apache.hadoop.fs.Path(pA)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckBytes = fsys.listStatus(new org.apache.hadoop.fs.Path(
-      s"$pA/v=${Versioned.latestVersion(spark, pA)}"))
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    val ckBytes = new java.io.File(s"$pA/v=${Versioned.latestVersion(spark, pA)}")
+      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
     // deltaCommits = 4 with 3 commits/cycle → the policy folds every
     // OTHER cycle and no-ops between (each cycle's delta bytes sit far
     // under deltaBytesFrac): deciding when work is needed is half the
@@ -1388,16 +1135,14 @@ object Stress {
           .select(col("id").as("k")).coalesce(1), p)
       }
       mutate(pA); mutate(pB)
-      val t0 = System.nanoTime()
-      Versioned.maintain(spark, pA, "k", cfg)
-      tAuto += (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      Versioned.compact(spark, pB, "k", nFiles)
-      // the naive loop retains history on the same horizon — vacuum
-      // rides on both sides so the comparison is maintenance-for-
-      // maintenance, not maintenance-vs-unbounded-history
-      Versioned.vacuum(spark, pB, cfg.vacuumHorizon)
-      tFull += (System.nanoTime() - t1) / 1e9
+      tAuto += timed(Versioned.maintain(spark, pA, "k", cfg))._1
+      tFull += timed {
+        Versioned.compact(spark, pB, "k", nFiles)
+        // the naive loop retains history on the same horizon — vacuum
+        // rides on both sides so the comparison is maintenance-for-
+        // maintenance, not maintenance-vs-unbounded-history
+        Versioned.vacuum(spark, pB, cfg.vacuumHorizon)
+      }._1
       maxFanIn = math.max(maxFanIn,
         Versioned.current(spark, pA, "k").inputFiles.length)
     }
@@ -1415,22 +1160,8 @@ object Stress {
       s""""cycles":$cycles,"load_sec":$tLoad,""" +
       s""""auto_cumulative_sec":$tAuto,"full_cumulative_sec":$tFull,""" +
       s""""max_fan_in_files":$maxFanIn}""")
-    spark.stop()
   }
 
-  /** The LAKEHOUSE RHYTHM end-to-end: `lakeloop <baseRows> [<cycles>]`
-    * (default 5M × 8) — the continuous-ingest + periodic-MERGE loop
-    * the r11 verdict named as the day-one scale killer under the old
-    * checkpoint-head prerequisite. Each cycle: (1) a plain INSERT of
-    * new keys lands through the SQL catalog (dirty head), then (2) a
-    * MERGE INTO (matched-update + not-matched-insert over a disjoint
-    * key band) runs AT THAT DIRTY HEAD — auto-folding its snapshot
-    * incrementally; every third cycle vacuums. The claims under test:
-    * per-cycle MERGE wall-clock stays ~FLAT as the table grows (cost
-    * tracks the delta + dirty files, not table size — pre-r12 each
-    * cycle would pay a full-table compact), and the final resolved
-    * state matches the closed form exactly (disjoint bands → x = k +
-    * 1000 for merged keys, x = k elsewhere, inserted keys x = -k). */
   /** TRUE-CONCURRENCY DML race: `dmlrace <rows> [<threads>]` (default
     * 200k × 4). The OCC machinery's specs build their interleavings by
     * hand; this hammers it with REAL racing threads — each thread
@@ -1450,7 +1181,7 @@ object Stress {
   private def dmlRaceStress(spark: SparkSession, nRows: Long,
       nThreads: Int, cpus: Int): Unit = {
     val wh = "target/tmp/stress-dmlrace-wh"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
+    fresh(wh)
     spark.conf.set("spark.sql.catalog.graft_race",
       "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_race.warehouse", wh)
@@ -1464,109 +1195,111 @@ object Stress {
     val band = nRows / nThreads
     val retries = new java.util.concurrent.atomic.AtomicInteger
     val failures = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val t0 = System.nanoTime()
-    val threads = (0 until nThreads).map { t =>
-      new Thread(() => {
-        try {
-          val lo = t * band
-          val hi = if (t == nThreads - 1) nRows else lo + band
-          (1 to rounds).foreach { _ =>
-            var done = false
-            var attempts = 0
-            while (!done) {
-              try {
-                spark.sql(s"UPDATE graft_race.t SET x = x + 1 " +
-                  s"WHERE k >= $lo AND k < $hi")
-                done = true
-              } catch {
-                case e: Throwable
-                    if attempts < 50 &&
-                      (Option(e.getMessage).exists(m =>
-                        m.contains("concurrently") ||
-                        m.contains("in flight") ||
-                        m.contains("retry") || m.contains("claimed")) ||
-                      Option(e.getCause).exists(c =>
-                        c != null && Option(c.getMessage).exists(m =>
-                          m.contains("concurrently") ||
-                          m.contains("retry")))) =>
-                  attempts += 1
-                  retries.incrementAndGet()
-                  Thread.sleep(50L + scala.util.Random.nextInt(100))
+    def retryable(e: Throwable): Boolean =
+      Option(e.getMessage).exists(m =>
+        m.contains("concurrently") || m.contains("in flight") ||
+          m.contains("retry") || m.contains("claimed")) ||
+        Option(e.getCause).exists(c => Option(c.getMessage).exists(m =>
+          m.contains("concurrently") || m.contains("retry")))
+    val (wall, _) = timed {
+      val threads = (0 until nThreads).map { t =>
+        new Thread(() => {
+          try {
+            val lo = t * band
+            val hi = if (t == nThreads - 1) nRows else lo + band
+            (1 to rounds).foreach { _ =>
+              var done = false
+              var attempts = 0
+              while (!done) {
+                try {
+                  spark.sql(s"UPDATE graft_race.t SET x = x + 1 " +
+                    s"WHERE k >= $lo AND k < $hi")
+                  done = true
+                } catch {
+                  case e: Throwable if attempts < 50 && retryable(e) =>
+                    attempts += 1
+                    retries.incrementAndGet()
+                    Thread.sleep(50L + scala.util.Random.nextInt(100))
+                }
               }
             }
+          } catch {
+            case e: Throwable => failures.compareAndSet(null, e); ()
           }
-        } catch {
-          case e: Throwable => failures.compareAndSet(null, e); ()
-        }
-      }, s"dml-race-$t")
+        }, s"dml-race-$t")
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
     }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    val wall = (System.nanoTime() - t0) / 1e9
     require(failures.get() == null,
       s"a racing thread failed terminally: ${failures.get()}")
     // exactly-once invariant: every row saw exactly `rounds` +1s
-    val bad = graft.io.Versioned.current(spark, s"$wh/t", "k")
+    val bad = Versioned.current(spark, s"$wh/t", "k")
       .filter(col("x") =!= rounds.toLong).count()
     require(bad == 0, s"$bad rows lost or double-applied an update")
-    val nVersions = graft.io.Versioned.versions(spark, s"$wh/t").size
+    val nVersions = Versioned.versions(spark, s"$wh/t").size
     println(s"""{"metric":"stress_dmlrace","rows":$nRows,""" +
       s""""threads":$nThreads,"rounds":$rounds,"wall_sec":$wall,""" +
       s""""retries":${retries.get()},"versions":$nVersions,""" +
       s""""rows_wrong":$bad}""")
-    spark.stop()
   }
 
+  /** The LAKEHOUSE RHYTHM end-to-end: `lakeloop <baseRows> [<cycles>]`
+    * (default 5M × 8) — the continuous-ingest + periodic-MERGE loop
+    * the r11 verdict named as the day-one scale killer under the old
+    * checkpoint-head prerequisite. Each cycle: (1) a plain INSERT of
+    * new keys lands through the SQL catalog (dirty head), then (2) a
+    * MERGE INTO (matched-update + not-matched-insert over a disjoint
+    * key band) runs AT THAT DIRTY HEAD — auto-folding its snapshot
+    * incrementally; every third cycle vacuums. The claims under test:
+    * per-cycle MERGE wall-clock stays ~FLAT as the table grows (cost
+    * tracks the delta + dirty files, not table size — pre-r12 each
+    * cycle would pay a full-table compact), and the final resolved
+    * state matches the closed form exactly (disjoint bands → x = k +
+    * 1000 for merged keys, x = k elsewhere, inserted keys x = -k). */
   private def lakeLoopStress(spark: SparkSession, baseRows: Long,
       cycles: Int, cpus: Int): Unit = {
     val wh = "target/tmp/stress-lake-wh"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
+    fresh(wh)
     spark.conf.set("spark.sql.catalog.graft_lake",
       "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_lake.warehouse", wh)
     spark.sql("CREATE TABLE graft_lake.t (k BIGINT, x BIGINT) " +
       "TBLPROPERTIES ('key' = 'k')")
-    val t0 = System.nanoTime()
-    spark.range(baseRows).selectExpr("id AS k", "id AS x")
-      .repartition(cpus).createOrReplaceTempView("lake_base")
-    spark.sql("INSERT INTO graft_lake.t SELECT k, x FROM lake_base")
-    spark.sql("CALL graft_lake.system.compact_sized('t', 64)")
-    val tLoad = (System.nanoTime() - t0) / 1e9
+    val (tLoad, _) = timed {
+      spark.range(baseRows).selectExpr("id AS k", "id AS x")
+        .repartition(cpus).createOrReplaceTempView("lake_base")
+      spark.sql("INSERT INTO graft_lake.t SELECT k, x FROM lake_base")
+      spark.sql("CALL graft_lake.system.compact_sized('t', 64)")
+    }
     val insertW = 100000L // new keys per cycle
     val bandW = 100000L   // merged band per cycle (disjoint across)
-    def timed(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
     val mergeSecs = (0 until cycles).map { c =>
       val newLo = baseRows + c * insertW
-      val tIns = timed {
-        spark.sql(s"INSERT INTO graft_lake.t SELECT id, id FROM " +
-          s"range($newLo, ${newLo + insertW})")
-      }
+      val (tIns, _) = timed(spark.sql(s"INSERT INTO graft_lake.t SELECT " +
+        s"id, id FROM range($newLo, ${newLo + insertW})"))
       val bandLo = c * bandW
       // matched bands update base keys; half the not-matched side
       // inserts brand-new far keys
-      val tMrg = timed {
-        spark.sql(
-          s"""MERGE INTO graft_lake.t t USING (
-             |  SELECT id AS k FROM range($bandLo, ${bandLo + bandW})
-             |  UNION ALL
-             |  SELECT id FROM range(${900000000L + c * insertW},
-             |    ${900000000L + c * insertW + insertW / 2})) s
-             |ON t.k = s.k
-             |WHEN MATCHED THEN UPDATE SET x = t.x + 1000
-             |WHEN NOT MATCHED THEN INSERT (k, x) VALUES (s.k, -s.k)
-             |""".stripMargin)
-      }
-      val tVac = if (c % 3 == 2) timed {
-        spark.sql("CALL graft_lake.system.vacuum('t', 4)"); ()
-      } else 0.0
+      val (tMrg, _) = timed(spark.sql(
+        s"""MERGE INTO graft_lake.t t USING (
+           |  SELECT id AS k FROM range($bandLo, ${bandLo + bandW})
+           |  UNION ALL
+           |  SELECT id FROM range(${900000000L + c * insertW},
+           |    ${900000000L + c * insertW + insertW / 2})) s
+           |ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET x = t.x + 1000
+           |WHEN NOT MATCHED THEN INSERT (k, x) VALUES (s.k, -s.k)
+           |""".stripMargin))
+      val tVac = if (c % 3 == 2)
+        timed(spark.sql("CALL graft_lake.system.vacuum('t', 4)"))._1
+      else 0.0
       println(f"[lakeloop] cycle $c insert $tIns%.1fs merge $tMrg%.1fs" +
         (if (tVac > 0) f" vacuum $tVac%.1fs" else ""))
       tMrg
     }
     // closed-form final state: every cycle's band is disjoint
-    val r = graft.io.Versioned.current(spark, s"$wh/t", "k")
+    val r = Versioned.current(spark, s"$wh/t", "k")
       .agg(count(lit(1)).as("n"), sum("x").as("s")).head()
     val nNew = cycles * insertW
     val nIns = cycles * (insertW / 2)
@@ -1587,7 +1320,6 @@ object Stress {
       s""""cycles":$cycles,"load_sec":$tLoad,""" +
       s""""merge_secs":[${mergeSecs.map(s => f"$s%.2f").mkString(",")}],""" +
       s""""final_rows":$wantN}""")
-    spark.stop()
   }
 
   /** COMPOSED curation stress — the chain a real 100 TB pass executes,
@@ -1605,13 +1337,12 @@ object Stress {
     *    another) actually die — asserted survivors < trimmed. */
   private def curationStress(spark: SparkSession, nDocs: Long,
       cpus: Int): Unit = {
-    import graft.pipeline.{Dedup, Sketches, Splits, TextOps}
-    import org.apache.spark.storage.StorageLevel
     val tokMod = 5000003L
+    val disk = StorageLevel.MEMORY_AND_DISK
     // synthetic corpus: 20..60 tokens/doc, ~14% stopword injection so
     // the quality score's stopword term discriminates, every 97th doc
     // a verbatim copy of another (cross- and in-shard duplicates)
-    def corpus(ids: org.apache.spark.sql.DataFrame) = {
+    def corpus(ids: Dataset[_]) = {
       val seed = when(pmod(col("id"), lit(97)) === 0, pmod(col("id") * 37, lit(nDocs)))
         .otherwise(col("id"))
       val toks = (0 until 60).map { j =>
@@ -1628,86 +1359,72 @@ object Stress {
             (pmod(seed, lit(41)) + 20).cast("int"))).as("text"))
     }
     val nDelta = math.max(nDocs / 100, 1000L)
-    val base = corpus(spark.range(nDocs).toDF().repartition(cpus * 4))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val delta = corpus(spark.range(nDelta).toDF()
-      .select((col("id") + nDocs).as("id")).repartition(cpus))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val base = corpus(spark.range(nDocs).repartition(cpus * 4)).persist(disk)
+    val delta = corpus(spark.range(nDelta)
+      .select((col("id") + nDocs).as("id")).repartition(cpus)).persist(disk)
     base.count(); delta.count() // untimed synth
 
     // 1) quality filter (one narrow scan per shard)
-    def scoreFilter(df: org.apache.spark.sql.DataFrame) =
+    def scoreFilter(df: DataFrame) =
       df.withColumn("q", TextOps.qualityScore(col("text")))
         .filter(col("q") >= 0.85).drop("q")
-    val t0 = System.nanoTime()
-    val curBase = scoreFilter(base).persist(StorageLevel.MEMORY_AND_DISK)
-    val curDelta = scoreFilter(delta).persist(StorageLevel.MEMORY_AND_DISK)
-    val nCur = curBase.count() + curDelta.count()
-    val tScore = (System.nanoTime() - t0) / 1e9
+    val curBase = scoreFilter(base).persist(disk)
+    val curDelta = scoreFilter(delta).persist(disk)
+    val (tScore, nCur) = timed(curBase.count() + curDelta.count())
 
     // 2) robust trim: per-language p99 n_chars cut from the quantile
     //    sketch (state ~2k rows/lang; the cut broadcasts)
-    val t1 = System.nanoTime()
-    val lens = curBase.select(col("lang"), length(col("text")).as("n_chars"))
-      .unionByName(curDelta.select(col("lang"),
-        length(col("text")).as("n_chars")))
-    val cut = Sketches.quantileEstimate(
-        Sketches.quantileBuckets(lens, "lang", "n_chars"), Seq(99))
-      .select(col("g").as("lang"), col("est_value").as("cut"))
-    def trim(df: org.apache.spark.sql.DataFrame) =
-      df.join(broadcast(cut), "lang")
-        .filter(length(col("text")) <= col("cut")).drop("cut")
-    val trBase = trim(curBase).persist(StorageLevel.MEMORY_AND_DISK)
-    val trDelta = trim(curDelta).persist(StorageLevel.MEMORY_AND_DISK)
-    val nTrimmed = trBase.count() + trDelta.count()
-    val tTrim = (System.nanoTime() - t1) / 1e9
+    val (tTrim, (trBase, trDelta, nTrimmed)) = timed {
+      val lens = curBase.select(col("lang"), length(col("text")).as("n_chars"))
+        .unionByName(curDelta.select(col("lang"),
+          length(col("text")).as("n_chars")))
+      val cut = Sketches.quantileEstimate(
+          Sketches.quantileBuckets(lens, "lang", "n_chars"), Seq(99))
+        .select(col("g").as("lang"), col("est_value").as("cut"))
+      def trim(df: DataFrame) =
+        df.join(broadcast(cut), "lang")
+          .filter(length(col("text")) <= col("cut")).drop("cut").persist(disk)
+      val (b, d) = (trim(curBase), trim(curDelta))
+      (b, d, b.count() + d.count())
+    }
 
     // 3) dedup AT REST: init over the main corpus (paid once), then
     //    the DELTA FOLD — the per-increment cost of a daily ingest
-    val restPath = "target/tmp/curation-jrest"
-    val t2 = System.nanoTime()
-    val st0 = Dedup.jaccardRestInit(trBase, "doc_id", "text", 0.5, 256L,
-      restPath, nBuckets = 64)
-    val tDedupInit = (System.nanoTime() - t2) / 1e9
-    val t3 = System.nanoTime()
-    val st1 = Dedup.jaccardRestMerge(st0, trDelta, "doc_id", "text")
-    val tDedupFold = (System.nanoTime() - t3) / 1e9
+    val (tDedupInit, st0) = timed(Dedup.jaccardRestInit(trBase, "doc_id",
+      "text", 0.5, 256L, "target/tmp/curation-jrest", nBuckets = 64))
+    val (tDedupFold, st1) = timed(
+      Dedup.jaccardRestMerge(st0, trDelta, "doc_id", "text"))
 
     // 4) duplicate drop: higher id of each surviving pair dies
-    val t4 = System.nanoTime()
-    val pairs = Dedup.jaccardRestPairs(spark, st1)
-    val dead = pairs.select(greatest(col("ida"), col("idb")).as("doc_id"))
-      .distinct()
-    val survivors = trBase.unionByName(trDelta)
-      .join(dead, Seq("doc_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nSurvivors = survivors.count()
-    val tDrop = (System.nanoTime() - t4) / 1e9
+    val (tDrop, (survivors, nSurvivors)) = timed {
+      val dead = Dedup.jaccardRestPairs(spark, st1)
+        .select(greatest(col("ida"), col("idb")).as("doc_id")).distinct()
+      val s = trBase.unionByName(trDelta)
+        .join(dead, Seq("doc_id"), "left_anti").persist(disk)
+      (s, s.count())
+    }
 
     // 5) mixture: stratified source sampling on the deduped corpus
-    val t5 = System.nanoTime()
     val rates = Map("web" -> 0.55, "books" -> 1.0, "code" -> 0.8,
       "wiki" -> 0.9)
-    val mixed = Splits.stratifiedSample(survivors, "doc_id", "source",
-        rates, salt = "curation")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nMixed = mixed.count()
-    val tMix = (System.nanoTime() - t5) / 1e9
+    val (tMix, (mixed, nMixed)) = timed {
+      val m = Splits.stratifiedSample(survivors, "doc_id", "source",
+        rates, salt = "curation").persist(disk)
+      (m, m.count())
+    }
 
     // 6) pack: per-language cumulative token budget -> training bins
-    val t6 = System.nanoTime()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang").orderBy("doc_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val packed = mixed
-      .select(col("doc_id"), col("lang"),
-        TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("cum", sum(col("n_tokens")).over(w) - col("n_tokens"))
-      .select(col("lang"), expr("cum div 2048").as("bin"))
-      .groupBy("lang").agg(countDistinct("bin").as("bins"))
-    val nBins = packed.agg(sum("bins")).head().getLong(0)
-    val tPack = (System.nanoTime() - t6) / 1e9
+    val (tPack, nBins) = timed {
+      val w = Window.partitionBy("lang").orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      mixed
+        .select(col("doc_id"), col("lang"),
+          TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
+        .withColumn("cum", sum(col("n_tokens")).over(w) - col("n_tokens"))
+        .select(col("lang"), expr("cum div 2048").as("bin"))
+        .groupBy("lang").agg(countDistinct("bin").as("bins"))
+        .agg(sum("bins")).head().getLong(0)
+    }
 
     require(nSurvivors < nTrimmed,
       s"planted duplicates survived: $nSurvivors of $nTrimmed")
@@ -1725,7 +1442,6 @@ object Stress {
       s""""drop_sec":$tDrop,"survivors":$nSurvivors,""" +
       s""""mix_sec":$tMix,"mixed":$nMixed,""" +
       s""""pack_sec":$tPack,"bins":$nBins}""")
-    spark.stop()
   }
 
   /** PQ stress at production shape: M=4 x k=256 codebooks over
@@ -1735,35 +1451,24 @@ object Stress {
     * scan. The claim under test: encode is corpus-scan-bound and search
     * cost is independent of the float payload. */
   private def pqStress(spark: SparkSession, nVecs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Similarity
-    val dim = 64
     val m = 4
-    val subDim = dim / m
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val subDim = Dim / m
+    val emb = vectors(spark, nVecs, cpus).persist(StorageLevel.MEMORY_AND_DISK)
     emb.count()
-    val t0 = System.nanoTime()
-    val books = Similarity.pqTrainCodebooks(emb, m, subDim, 256, 2)
-    val tTrain = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val codes = Similarity.pqEncode(emb, books, subDim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCodes = codes.count()
-    val tEncode = (System.nanoTime() - t1) / 1e9
+    val (tTrain, books) = timed(Similarity.pqTrainCodebooks(emb, m, subDim, 256, 2))
+    val (tEncode, (codes, nCodes)) = timed {
+      val c = Similarity.pqEncode(emb, books, subDim)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (c, c.count())
+    }
     val queries = emb.filter(col("id") < 10).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toSeq))
       .sortBy(_._1).toSeq
-    val t2 = System.nanoTime()
-    val nTop = Similarity.pqSearch(codes, books, queries, subDim, 10).count()
-    val tSearch = (System.nanoTime() - t2) / 1e9
-    println(s"""{"metric":"stress_pq","vecs":$nVecs,"dim":$dim,"m":$m,""" +
+    val (tSearch, nTop) = timed(
+      Similarity.pqSearch(codes, books, queries, subDim, 10).count())
+    println(s"""{"metric":"stress_pq","vecs":$nVecs,"dim":$Dim,"m":$m,""" +
       s""""k":256,"train_sec":$tTrain,"encode_sec":$tEncode,""" +
       s""""search_sec":$tSearch,"encoded_rows":$nCodes,"topk_rows":$nTop}""")
-    spark.stop()
   }
 
   /** Text-pipeline stress: repetition metrics + composed quality filter
@@ -1772,43 +1477,29 @@ object Stress {
     * doc shares one of 1000 stock 8-token openings — duplicated chunks
     * at corpus scale). */
   private def textStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
-    import graft.pipeline.{Dedup, TextOps}
-    val tokMod = 100000007L
-    // first 8 tokens: one of 1000 stock openings (boilerplate);
-    // remaining 32: doc-unique
-    val opening = (0 until 8).map(j =>
-      concat(lit("b"), ((col("id") % 1000) * (17 + j) + j) % 1000))
-    // half the docs carry stopwords so the low_stopword rule
-    // discriminates instead of dropping everything
-    val body = (0 until 32).map {
-      case 0 => when(col("id") % 2 === 0, lit("the"))
-        .otherwise(concat(lit("t"), col("id") % tokMod))
-      case 1 => when(col("id") % 2 === 0, lit("of"))
-        .otherwise(concat(lit("u"), col("id") % tokMod))
-      case j => concat(lit("t"), (col("id") * (31 + j) + j * 7) % tokMod)
-    }
+    // 8 opening tokens (boilerplate), then 32 doc-unique ones; half the
+    // docs carry stopwords so the low_stopword rule discriminates
+    // instead of dropping everything
+    val stop = Seq(
+      when(col("id") % 2 === 0, lit("the"))
+        .otherwise(concat(lit("t"), col("id") % TokMod)),
+      when(col("id") % 2 === 0, lit("of"))
+        .otherwise(concat(lit("u"), col("id") % TokMod)))
     val docs = spark.range(nDocs).repartition(cpus * 4)
       .select(col("id").as("doc_id"),
-        concat_ws(" ", opening ++ body: _*).as("text"))
-
-    val t0 = System.nanoTime()
-    val nKeep = docs.select(col("doc_id"),
+        concat_ws(" ", opening(8) ++ stop ++ toks(2 until 32): _*).as("text"))
+    val (tFilter, nKeep) = timed(docs.select(col("doc_id"),
         TextOps.filterReason(col("text")).as("reason"),
         TextOps.dupTokenFrac(col("text")).as("d"),
         TextOps.topBigramFrac(col("text")).as("g"))
-      .filter(col("reason") === "ok").count()
-    val tFilter = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val dedupedChunks = Dedup.chunkDedup(docs, "doc_id", "text", 8)
-      .filter(col("doc_id") === col("keeper_doc") &&
-        col("chunk_idx") === col("keeper_idx")).count()
-    val tChunk = (System.nanoTime() - t1) / 1e9
-
+      .filter(col("reason") === "ok").count())
+    val (tChunk, dedupedChunks) = timed(
+      Dedup.chunkDedup(docs, "doc_id", "text", 8)
+        .filter(col("doc_id") === col("keeper_doc") &&
+          col("chunk_idx") === col("keeper_idx")).count())
     println(s"""{"metric":"stress_text","docs":$nDocs,""" +
       s""""filter_sec":$tFilter,"kept_docs":$nKeep,""" +
       s""""chunk_dedup_sec":$tChunk,"kept_chunks":$dedupedChunks}""")
-    spark.stop()
   }
 
   /** Search stress: at-rest inverted-index build + serve + incremental
@@ -1817,66 +1508,41 @@ object Stress {
     * tokens). Serve queries hit opening tokens so postings are fat;
     * the fold appends a 10% shard and must cost O(shard). */
   private def searchStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Search
-    val tokMod = 100000007L
-    def gen(ids: org.apache.spark.sql.DataFrame) = {
-      val opening = (0 until 8).map(j =>
-        concat(lit("b"), ((col("id") % 1000) * (17 + j) + j) % 1000))
-      val body = (0 until 32).map(j =>
-        concat(lit("t"), (col("id") * (31 + j) + j * 7) % tokMod))
-      ids.select(col("id").as("doc_id"),
-        concat_ws(" ", opening ++ body: _*).as("text"))
-    }
-    val docs = gen(spark.range(nDocs).repartition(cpus * 4).toDF())
     val path = "target/tmp/stress-searchidx"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-
-    val t0 = System.nanoTime()
-    val idx = Search.writeIndex(docs, "doc_id", "text", path)
-    val tBuild = (System.nanoTime() - t0) / 1e9
-
+    fresh(path)
+    val (tBuild, idx) = timed(Search.writeIndex(
+      docs(spark.range(nDocs).repartition(cpus * 4), 8, 32),
+      "doc_id", "text", path))
     // doc family id % 1000 == 0 carries opening tokens b0 b1 b2 ...
     // adjacently, so conj/phrase both return that family
     val terms = Seq("b0", "b1", "b2")
     // cold-vs-warm: the first read after the giant index write absorbs
     // JIT/codegen/listing warmup — time a second pass to attribute the
     // serve path itself
-    def timed(f: => Long): (Double, Double, Long) = {
-      val c0 = System.nanoTime(); val n = f
-      val cold = (System.nanoTime() - c0) / 1e9
-      val w0 = System.nanoTime(); f
-      (cold, (System.nanoTime() - w0) / 1e9, n)
+    def coldWarm(f: => Long): (Double, Double, Long) = {
+      val (cold, n) = timed(f)
+      (cold, timed(f)._1, n)
     }
     val (tConj, tConjW, nConj) =
-      timed(Search.searchAll(spark, idx, terms).count())
+      coldWarm(Search.searchAll(spark, idx, terms).count())
     val (tBm, tBmW, nBm) =
-      timed(Search.searchBm25(spark, idx, terms, 10).count())
+      coldWarm(Search.searchBm25(spark, idx, terms, 10).count())
     val (tPhrase, tPhraseW, nPhrase) =
-      timed(Search.searchPhrase(spark, idx, Seq("b0", "b1")).count())
-
+      coldWarm(Search.searchPhrase(spark, idx, Seq("b0", "b1")).count())
     // checkpoint the shard so the timed region is the INGEST (postings
     // agg + bucketed write + sidecar + commit), not the synthetic text
     // generation re-running once per append-internal pass
-    val shard = gen(spark.range(nDocs, nDocs + nDocs / 10)
-      .repartition(cpus * 2).toDF()).localCheckpoint()
-    val t4 = System.nanoTime()
-    Search.append(shard, "doc_id", "text", idx)
-    val tFold = (System.nanoTime() - t4) / 1e9
-
+    val shard = docs(spark.range(nDocs, nDocs + nDocs / 10)
+      .repartition(cpus * 2), 8, 32).localCheckpoint()
+    val (tFold, _) = timed(Search.append(shard, "doc_id", "text", idx))
     println(s"""{"metric":"stress_search","docs":$nDocs,""" +
       s""""build_sec":$tBuild,""" +
       s""""conj_sec":$tConj,"conj_warm_sec":$tConjW,"conj_docs":$nConj,""" +
       s""""bm25_sec":$tBm,"bm25_warm_sec":$tBmW,"bm25_docs":$nBm,""" +
       s""""phrase_sec":$tPhrase,"phrase_warm_sec":$tPhraseW,""" +
       s""""phrase_docs":$nPhrase,"fold10pct_sec":$tFold}""")
-    spark.stop()
   }
 
-  /** Materialized-view stress: incremental refresh vs full recompute
-    * at nRows source rows (1000 groups). Bulk-load + init, then a 1%
-    * delta commit (upserts incl. group migrations + deletes) and ONE
-    * refresh — the refresh must cost O(delta + touched-group scan),
-    * not O(source), and its result must equal the full group-by. */
   /** SketchView stress: maintained distinct-count registers over an
     * nRows-keyed source (1000 groups). Measures init (full register
     * build), a 1%-insert APPEND-ONLY refresh (must take the fold path:
@@ -1884,75 +1550,65 @@ object Stress {
     * recompute, and the from-scratch register rebuild the view
     * replaces; registers must equal the rebuild bit for bit. */
   private def skviewStress(spark: SparkSession, nRows: Long, cpus: Int): Unit = {
-    import graft.io.{SketchView, Versioned}
-    import graft.pipeline.Sketches
     val srcPath = "target/tmp/stress-skv-src"
     val viewPath = "target/tmp/stress-skv-view"
-    Versioned.drop(spark, srcPath)
-    Versioned.drop(spark, viewPath)
+    fresh(srcPath, viewPath)
     val base = spark.range(nRows).repartition(cpus * 4)
       .select(col("id").as("k"),
         concat(lit("g"), col("id") % 1000).as("grp"),
         concat(lit("v"), col("id") % 2000000).as("v"))
-    val t0 = System.nanoTime()
-    Versioned.append(base, srcPath)
-    val h = SketchView.init(spark, srcPath, "k", "grp", "v", viewPath)
-    val tInit = (System.nanoTime() - t0) / 1e9
-
+    val (tInit, h) = timed {
+      Versioned.append(base, srcPath)
+      SketchView.init(spark, srcPath, "k", "grp", "v", viewPath)
+    }
     // 1% fresh inserts past the id range — the append-only fold path
     Versioned.append(
       spark.range(nRows, nRows + nRows / 100).repartition(cpus)
         .select(col("id").as("k"),
           concat(lit("g"), col("id") % 1000).as("grp"),
           concat(lit("w"), col("id")).as("v")), srcPath)
-    val t1 = System.nanoTime()
-    val (_, fast) = SketchView.refreshDetailed(spark, h)
-    val tFold = (System.nanoTime() - t1) / 1e9
+    val (tFold, (_, fast)) = timed(SketchView.refreshDetailed(spark, h))
     require(fast, "insert-only refresh must take the fold path")
-
     // 0.5% deletes — the scoped-recompute tier
     Versioned.delete(
       spark.range(nRows / 200).select((col("id") * 211 + 3).as("k"))
         .filter(col("k") < nRows), srcPath)
-    val t2 = System.nanoTime()
-    val (_, fast2) = SketchView.refreshDetailed(spark, h)
-    val tScoped = (System.nanoTime() - t2) / 1e9
+    val (tScoped, (_, fast2)) = timed(SketchView.refreshDetailed(spark, h))
     require(!fast2, "deletes must take the scoped recompute")
-
     // what the view replaces: from-scratch registers over the resolved
     // source — and the maintained state must equal it exactly
-    val t3 = System.nanoTime()
-    val full = Sketches.hllRegisters(
-      Versioned.current(spark, srcPath, "k").select("grp", "v"),
-      "grp", "v").localCheckpoint()
-    val nFull = full.count()
-    val tFull = (System.nanoTime() - t3) / 1e9
+    val (tFull, (full, nFull)) = timed {
+      val f = Sketches.hllRegisters(
+        Versioned.current(spark, srcPath, "k").select("grp", "v"),
+        "grp", "v").localCheckpoint()
+      (f, f.count())
+    }
     val view = SketchView.registers(spark, h)
     val drift = view.exceptAll(full).count() + full.exceptAll(view).count()
     require(drift == 0, s"maintained registers drifted: $drift rows")
-
     println(s"""{"metric":"stress_skview","rows":$nRows,""" +
       s""""init_sec":$tInit,"fold_refresh_sec":$tFold,""" +
       s""""scoped_refresh_sec":$tScoped,"full_rebuild_sec":$tFull,""" +
       s""""register_rows":$nFull,"register_drift":$drift}""")
-    spark.stop()
   }
 
+  /** Materialized-view stress: incremental refresh vs full recompute
+    * at nRows source rows (1000 groups). Bulk-load + init, then a 1%
+    * delta commit (upserts incl. group migrations + deletes) and ONE
+    * refresh — the refresh must cost O(delta + touched-group scan),
+    * not O(source), and its result must equal the full group-by. */
   private def mvStress(spark: SparkSession, nRows: Long, cpus: Int): Unit = {
-    import graft.io.{MatView, Versioned}
     val srcPath = "target/tmp/stress-mv-src"
     val viewPath = "target/tmp/stress-mv-view"
-    Versioned.drop(spark, srcPath)
-    Versioned.drop(spark, viewPath)
+    fresh(srcPath, viewPath)
     val base = spark.range(nRows).repartition(cpus * 4)
       .select(col("id").as("k"),
         concat(lit("g"), col("id") % 1000).as("grp"),
         (col("id") % 997).as("x"))
-    val t0 = System.nanoTime()
-    Versioned.append(base, srcPath)
-    val h = MatView.init(spark, srcPath, "k", "grp", Seq("x"), viewPath)
-    val tInit = (System.nanoTime() - t0) / 1e9
-
+    val (tInit, h) = timed {
+      Versioned.append(base, srcPath)
+      MatView.init(spark, srcPath, "k", "grp", Seq("x"), viewPath)
+    }
     // 1% delta: half upserts that MIGRATE groups (+1 group shift, new
     // value), half fresh inserts past the id range; plus 0.5% deletes
     val delta = spark.range(nRows / 200).repartition(cpus)
@@ -1968,26 +1624,22 @@ object Stress {
       .filter(col("k") < nRows)
     Versioned.append(delta, srcPath)
     Versioned.delete(dels, srcPath)
-    val t1 = System.nanoTime()
-    MatView.refresh(spark, h)
-    val tRefresh = (System.nanoTime() - t1) / 1e9
-
-    val t2 = System.nanoTime()
-    val full = Versioned.current(spark, srcPath, "k")
-      .groupBy("grp").agg(count(lit(1)).as("n_rows"), sum("x").as("sum_x"))
-      .localCheckpoint()
-    val nFull = full.count()
-    val tFull = (System.nanoTime() - t2) / 1e9
+    val (tRefresh, _) = timed(MatView.refresh(spark, h))
+    val (tFull, (full, nFull)) = timed {
+      val f = Versioned.current(spark, srcPath, "k")
+        .groupBy("grp").agg(count(lit(1)).as("n_rows"), sum("x").as("sum_x"))
+        .localCheckpoint()
+      (f, f.count())
+    }
     // equivalence: the maintained view IS the full group-by
     val view = MatView.read(spark, h)
     val drift = view.exceptAll(full).count() + full.exceptAll(view).count()
     require(drift == 0, s"view drifted from full recompute: $drift rows")
-
     // min/max maintenance: APPEND-ONLY refresh must run at delta cost
     // (monotone fold, no source resolve) vs the delete-triggered scoped
     // recompute that has to resolve the source
     val mmViewPath = "target/tmp/stress-mv-view-mm"
-    Versioned.drop(spark, mmViewPath)
+    fresh(mmViewPath)
     val hMm = MatView.init(spark, srcPath, "k", "grp", Seq("x"), mmViewPath,
       minMaxCols = Seq("x"))
     val inserts = spark.range(nRows * 2, nRows * 2 + nRows / 100)
@@ -1996,16 +1648,12 @@ object Stress {
         concat(lit("g"), col("id") % 1000).as("grp"),
         (col("id") % 977).as("x"))
     Versioned.append(inserts, srcPath)
-    val t3 = System.nanoTime()
-    val (_, fastPath) = MatView.refreshDetailed(spark, hMm)
-    val tMmFast = (System.nanoTime() - t3) / 1e9
+    val (tMmFast, (_, fastPath)) = timed(MatView.refreshDetailed(spark, hMm))
     require(fastPath, "append-only min/max refresh must take the fast path")
     val dels2 = spark.range(nRows / 200).repartition(cpus)
       .select((col("id") * 223 + 5).as("k")).filter(col("k") < nRows)
     Versioned.delete(dels2, srcPath)
-    val t4 = System.nanoTime()
-    val (_, fastPath2) = MatView.refreshDetailed(spark, hMm)
-    val tMmSlow = (System.nanoTime() - t4) / 1e9
+    val (tMmSlow, (_, fastPath2)) = timed(MatView.refreshDetailed(spark, hMm))
     require(!fastPath2, "a delete delta must take the scoped recompute")
     val fullMm = Versioned.current(spark, srcPath, "k")
       .groupBy("grp").agg(count(lit(1)).as("n_rows"), sum("x").as("sum_x"),
@@ -2014,13 +1662,11 @@ object Stress {
     val driftMm = viewMm.exceptAll(fullMm).count() +
       fullMm.exceptAll(viewMm).count()
     require(driftMm == 0, s"min/max view drifted: $driftMm rows")
-
     println(s"""{"metric":"stress_mv","rows":$nRows,""" +
       s""""init_sec":$tInit,"refresh_sec":$tRefresh,""" +
       s""""full_recompute_sec":$tFull,"groups":$nFull,"drift":$drift,""" +
       s""""minmax_append_only_fastpath_sec":$tMmFast,""" +
       s""""minmax_delete_recompute_sec":$tMmSlow,"drift_minmax":$driftMm}""")
-    spark.stop()
   }
 
   /** Sketch stress: the corpus-profile pass at nDocs synthetic docs —
@@ -2029,63 +1675,57 @@ object Stress {
     * two half-corpus register folds merged vs the full-corpus sketch
     * (must be row-identical — the shard-fold contract at scale). */
   private def sketchStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Sketches
-    val tokMod = 100000007L
-    val body = (0 until 36).map(j =>
-      concat(lit("t"), (col("id") * (31 + j) + j * 7) % tokMod))
     // 4 hot tokens appear in every doc — the heavy hitters
     val hot = (0 until 4).map(j => lit(s"hh$j"))
     val docs = spark.range(nDocs).repartition(cpus * 4)
       .select(col("id"), (col("id") % 8).cast("string").as("g"),
-        concat_ws(" ", hot ++ body: _*).as("text"))
+        concat_ws(" ", hot ++ toks(0 until 36): _*).as("text"))
       .localCheckpoint()
-    val toks = docs.select(col("g"),
+    val tokRows = docs.select(col("g"),
       explode(split(col("text"), " ")).as("tok"))
+    // rows of df in both directions of exceptAll: 0 iff equal multisets
+    def drift(a: DataFrame, b: DataFrame) =
+      a.exceptAll(b).count() + b.exceptAll(a).count()
+    // a persisted build, timed with its row count
+    def built(df: => DataFrame) = timed {
+      val d = df.persist()
+      (d, d.count())
+    }
 
-    val t0 = System.nanoTime()
-    val nHll = Sketches.hllDistinct(toks, "g", "tok").count()
-    val tHll = (System.nanoTime() - t0) / 1e9
+    val (tHll, nHll) = timed(Sketches.hllDistinct(tokRows, "g", "tok").count())
 
-    val t1 = System.nanoTime()
-    val counters = Sketches.countMinTable(toks, "tok").persist()
-    val nCells = counters.count()
-    val tCmBuild = (System.nanoTime() - t1) / 1e9
-    val t1b = System.nanoTime()
-    val cands = toks.filter(col("tok").startsWith("hh"))
-      .select(col("tok")).distinct()
-    val nCm = Sketches.countMinEstimate(counters, cands, "tok")
-      .filter(col("est_n") >= nDocs).count()
-    val tCmProbe = (System.nanoTime() - t1b) / 1e9
+    val (tCmBuild, (counters, nCells)) = built(Sketches.countMinTable(tokRows, "tok"))
+    val (tCmProbe, nCm) = timed {
+      val cands = tokRows.filter(col("tok").startsWith("hh"))
+        .select(col("tok")).distinct()
+      Sketches.countMinEstimate(counters, cands, "tok")
+        .filter(col("est_n") >= nDocs).count()
+    }
     counters.unpersist(blocking = false)
     val tCm = tCmBuild + tCmProbe
 
     // shard-fold: two half-corpus register tables merged == full
-    val t2 = System.nanoTime()
-    val half1 = Sketches.hllRegisters(
-      toks.filter(col("g").isin("0", "1", "2", "3")), "g", "tok")
-    val half2 = Sketches.hllRegisters(
-      toks.filter(!col("g").isin("0", "1", "2", "3")), "g", "tok")
-    val merged = Sketches.hllMerge(half1, half2)
-    val full = Sketches.hllRegisters(toks, "g", "tok")
-    val drift = merged.exceptAll(full).count() + full.exceptAll(merged).count()
-    val tMerge = (System.nanoTime() - t2) / 1e9
-    require(drift == 0, s"shard-fold register drift: $drift rows")
+    val (tMerge, regDrift) = timed {
+      val half1 = Sketches.hllRegisters(
+        tokRows.filter(col("g").isin("0", "1", "2", "3")), "g", "tok")
+      val half2 = Sketches.hllRegisters(
+        tokRows.filter(!col("g").isin("0", "1", "2", "3")), "g", "tok")
+      drift(Sketches.hllMerge(half1, half2),
+        Sketches.hllRegisters(tokRows, "g", "tok"))
+    }
+    require(regDrift == 0, s"shard-fold register drift: $regDrift rows")
 
     // quantile sketch: per-group token-length-ish value distribution
     // (value = id-derived long, full exponent spread); build + p50/p95/
     // p99 read, then the exact shard-fold check like HLL's
     val vals = docs.select(col("g"), (col("id") * col("id") % 9999991L).as("x"))
-    val t3 = System.nanoTime()
-    val qs = Sketches.quantileBuckets(vals, "g", "x").persist()
-    val nQBuckets = qs.count()
-    val nQ = Sketches.quantileEstimate(qs, Seq(50, 95, 99)).count()
-    val tQs = (System.nanoTime() - t3) / 1e9
-    val t4 = System.nanoTime()
-    val qMerged = Sketches.quantileMerge(
+    val (tQs, (qs, nQBuckets, nQ)) = timed {
+      val q = Sketches.quantileBuckets(vals, "g", "x").persist()
+      (q, q.count(), Sketches.quantileEstimate(q, Seq(50, 95, 99)).count())
+    }
+    val (tQMerge, qDrift) = timed(drift(Sketches.quantileMerge(
       Sketches.quantileBuckets(vals.filter(col("g") < "4"), "g", "x"),
-      Sketches.quantileBuckets(vals.filter(col("g") >= "4"), "g", "x"))
-    val qDrift = qMerged.exceptAll(qs).count() + qs.exceptAll(qMerged).count()
-    val tQMerge = (System.nanoTime() - t4) / 1e9
+      Sketches.quantileBuckets(vals.filter(col("g") >= "4"), "g", "x")), qs))
     qs.unpersist(blocking = false)
     require(qDrift == 0, s"quantile shard-fold drift: $qDrift rows")
 
@@ -2094,16 +1734,9 @@ object Stress {
     val manyV = docs.select((col("id") % math.max(nDocs / 10, 1L))
         .cast("string").as("g"),
       (col("id") * col("id") % 9999991L).as("x"))
-    val t4b = System.nanoTime()
-    val qDecl = Sketches.quantileBuckets(manyV, "g", "x").persist()
-    val nQDecl = qDecl.count()
-    val tQDecl = (System.nanoTime() - t4b) / 1e9
-    val t4c = System.nanoTime()
-    val qNat = Sketches.quantileBucketsNative(manyV, "g", "x").persist()
-    val nQNat = qNat.count()
-    val tQNat = (System.nanoTime() - t4c) / 1e9
-    val qNatDrift = qNat.exceptAll(qDecl).count() +
-      qDecl.exceptAll(qNat).count()
+    val (tQDecl, (qDecl, nQDecl)) = built(Sketches.quantileBuckets(manyV, "g", "x"))
+    val (tQNat, (qNat, nQNat)) = built(Sketches.quantileBucketsNative(manyV, "g", "x"))
+    val qNatDrift = drift(qNat, qDecl)
     qDecl.unpersist(blocking = false)
     qNat.unpersist(blocking = false)
     require(qNatDrift == 0 && nQDecl == nQNat,
@@ -2119,20 +1752,19 @@ object Stress {
       when(col("id") % 10 < 3, concat(lit("h"), col("id") % 7))
         .otherwise(concat(lit("t"), col("id") % math.max(nDocs / 2, 1000L)))
         .as("item"))
-    val t4d = System.nanoTime()
-    val mgOut = Sketches.heavyHittersExact(mgItems, "item", 64)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    val tMg = (System.nanoTime() - t4d) / 1e9
-    val t4e = System.nanoTime()
-    val mgExactAll = mgItems.groupBy("item").agg(count(lit(1)).as("cnt"))
-      .persist()
-    val nMgTotal = mgItems.count()
-    val mgWant = mgExactAll
-      .filter(col("cnt") * 65 > nMgTotal)
-      .orderBy(col("cnt").desc, col("item"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    val tMgExact = (System.nanoTime() - t4e) / 1e9
-    mgExactAll.unpersist(blocking = false)
+    val (tMg, mgOut) = timed(Sketches.heavyHittersExact(mgItems, "item", 64)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq)
+    val (tMgExact, mgWant) = timed {
+      val mgExactAll = mgItems.groupBy("item").agg(count(lit(1)).as("cnt"))
+        .persist()
+      val nMgTotal = mgItems.count()
+      val want = mgExactAll
+        .filter(col("cnt") * 65 > nMgTotal)
+        .orderBy(col("cnt").desc, col("item"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+      mgExactAll.unpersist(blocking = false)
+      want
+    }
     require(mgOut == mgWant,
       s"MG heavy hitters diverge from exact: ${mgOut.size} vs ${mgWant.size}")
 
@@ -2143,16 +1775,9 @@ object Stress {
     val many = docs.select((col("id") % math.max(nDocs / 10, 1L))
         .cast("string").as("g"),
       explode(split(col("text"), " ")).as("tok"))
-    val t5 = System.nanoTime()
-    val declRes = Sketches.hllDistinct(many, "g", "tok").persist()
-    val nManyDecl = declRes.count()
-    val tManyDecl = (System.nanoTime() - t5) / 1e9
-    val t6 = System.nanoTime()
-    val natRes = Sketches.hllDistinctNative(many, "g", "tok").persist()
-    val nManyNat = natRes.count()
-    val tManyNat = (System.nanoTime() - t6) / 1e9
-    val natDrift = natRes.exceptAll(declRes).count() +
-      declRes.exceptAll(natRes).count()
+    val (tManyDecl, (declRes, nManyDecl)) = built(Sketches.hllDistinct(many, "g", "tok"))
+    val (tManyNat, (natRes, nManyNat)) = built(Sketches.hllDistinctNative(many, "g", "tok"))
+    val natDrift = drift(natRes, declRes)
     declRes.unpersist(blocking = false)
     natRes.unpersist(blocking = false)
     require(natDrift == 0, s"native-vs-declarative HLL drift: $natDrift")
@@ -2161,16 +1786,9 @@ object Stress {
     // KMV: the declarative build pays distinct()+window over the WHOLE
     // value space; the native bounded-state aggregate ships O(k) longs
     // per group per partition — and the bottom-k sets must be identical
-    val t7 = System.nanoTime()
-    val kvDecl = Sketches.kmvSketch(toks, "g", "tok").persist()
-    val nKvDecl = kvDecl.count()
-    val tKvDecl = (System.nanoTime() - t7) / 1e9
-    val t8 = System.nanoTime()
-    val kvNat = Sketches.kmvSketchNative(toks, "g", "tok").persist()
-    val nKvNat = kvNat.count()
-    val tKvNat = (System.nanoTime() - t8) / 1e9
-    val kvDrift = kvNat.exceptAll(kvDecl).count() +
-      kvDecl.exceptAll(kvNat).count()
+    val (tKvDecl, (kvDecl, nKvDecl)) = built(Sketches.kmvSketch(tokRows, "g", "tok"))
+    val (tKvNat, (kvNat, nKvNat)) = built(Sketches.kmvSketchNative(tokRows, "g", "tok"))
+    val kvDrift = drift(kvNat, kvDecl)
     kvDecl.unpersist(blocking = false)
     kvNat.unpersist(blocking = false)
     require(kvDrift == 0, s"native-vs-declarative KMV drift: $kvDrift")
@@ -2184,7 +1802,7 @@ object Stress {
       s""""kmv_rows":$nKvNat,"kmv_native_drift":$kvDrift,""" +
       s""""cm_sec":$tCm,"cm_build_sec":$tCmBuild,"cm_probe_sec":$tCmProbe,""" +
       s""""cm_cells":$nCells,"cm_heavy_confirmed":$nCm,""" +
-      s""""merge_check_sec":$tMerge,"register_drift":$drift,""" +
+      s""""merge_check_sec":$tMerge,"register_drift":$regDrift,""" +
       s""""quantile_sec":$tQs,"quantile_buckets":$nQBuckets,""" +
       s""""quantile_rows":$nQ,"quantile_merge_sec":$tQMerge,""" +
       s""""quantile_drift":$qDrift,""" +
@@ -2193,7 +1811,6 @@ object Stress {
       s""""mg_heavy_sec":$tMg,"mg_exact_sec":$tMgExact,""" +
       s""""mg_heavy_rows":${mgOut.size},""" +
       s""""quantile_native_drift":$qNatDrift}""")
-    spark.stop()
   }
 
   /** Graph stress: weighted PageRank on a power-law in-degree graph —
@@ -2204,7 +1821,6 @@ object Stress {
     * 5 iterations, and the dangling-mass variant (last 10% of nodes
     * have no out-edges). Salted and plain ranks must agree to 1e-9. */
   private def graphStress(spark: SparkSession, nEdges: Long, cpus: Int): Unit = {
-    import graft.pipeline.Graph
     val nNodes = math.max(nEdges / 20, 100L)
     // src uniform over non-dangling nodes; dst: 30% hub 0, rest uniform
     val edges = spark.range(nEdges).repartition(cpus * 4)
@@ -2214,35 +1830,24 @@ object Stress {
           .otherwise(col("id") * 40503L % nNodes).as("dst"),
         (col("id") % 7 + 1).cast("double").as("weight"))
       .localCheckpoint()
-
-    def ranksOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("node"), round(col("r"), 9).as("r"))
-
-    val t0 = System.nanoTime()
-    val plain = ranksOf(Graph.pageRank(edges, iters = 5, damping = 0.85))
-      .localCheckpoint()
-    val nPlain = plain.count()
-    val tPlain = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val salted = ranksOf(Graph.pageRank(edges, iters = 5, damping = 0.85,
-        saltBuckets = 16)).localCheckpoint()
-    val nSalted = salted.count()
-    val tSalted = (System.nanoTime() - t1) / 1e9
+    // ranks rounded to 1e-9, checkpointed, timed with their row count
+    def ranks(salt: Int) = timed {
+      val r = Graph.pageRank(edges, iters = 5, damping = 0.85,
+          saltBuckets = salt)
+        .select(col("node"), round(col("r"), 9).as("r")).localCheckpoint()
+      (r, r.count())
+    }
+    val (tPlain, (plain, nPlain)) = ranks(1)
+    val (tSalted, (salted, nSalted)) = ranks(16)
     val diverged = plain.as("a").join(salted.as("b"), col("a.node") === col("b.node"))
       .filter(abs(col("a.r") - col("b.r")) > 1e-9).count()
     require(diverged == 0 && nPlain == nSalted,
       s"salted ranks diverged on $diverged nodes")
-
-    val t2 = System.nanoTime()
-    Graph.pageRank(edges, iters = 5, damping = 0.85, dangling = true)
-      .count()
-    val tDangling = (System.nanoTime() - t2) / 1e9
-
+    val (tDangling, _) = timed(Graph.pageRank(edges, iters = 5,
+      damping = 0.85, dangling = true).count())
     println(s"""{"metric":"stress_graph","edges":$nEdges,"nodes":$nNodes,""" +
       s""""plain_sec":$tPlain,"salted_sec":$tSalted,""" +
       s""""dangling_sec":$tDangling,"salt_diverged":$diverged}""")
-    spark.stop()
   }
 
   /** Spans stress: winnowing fingerprints + duplicated-span coverage
@@ -2251,55 +1856,32 @@ object Stress {
     * doc-partitioned shuffle over O(chars) rows; span coverage joins
     * positional shingles to the bounded dup blocklist. */
   private def spansStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
-    import graft.pipeline.{Dedup, TextOps}
-    val tokMod = 100000007L
-    val opening = (0 until 10).map(j =>
-      concat(lit("b"), ((col("id") % 1000) * (17 + j) + j) % 1000))
-    val body = (0 until 30).map(j =>
-      concat(lit("t"), (col("id") * (31 + j) + j * 7) % tokMod))
-    val docs = spark.range(nDocs).repartition(cpus * 4)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", opening ++ body: _*).as("text"))
-
-    val t0 = System.nanoTime()
-    val nWinnow = TextOps.winnowFingerprints(docs, "doc_id", "text").count()
-    val tWinnow = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val nCovered = Dedup.dupSpanCoverage(docs, "doc_id", "text", 8)
-      .filter(col("n_dup_tokens") > 0).count()
-    val tSpans = (System.nanoTime() - t1) / 1e9
-
+    val spanDocs = docs(spark.range(nDocs).repartition(cpus * 4), 10, 30)
+    val (tWinnow, nWinnow) = timed(
+      TextOps.winnowFingerprints(spanDocs, "doc_id", "text").count())
+    val (tSpans, nCovered) = timed(
+      Dedup.dupSpanCoverage(spanDocs, "doc_id", "text", 8)
+        .filter(col("n_dup_tokens") > 0).count())
     // near-dup mining over a dup-bearing corpus (every 10th doc is a
     // truncated copy of its predecessor; the 1000 boilerplate openings
     // fall to the df cap, true copies survive it)
     val base = when(col("id") % 10 === 0, col("id") - 1).otherwise(col("id"))
-    val nd = (0 until 30).map(j =>
-      concat(lit("t"), (base * (31 + j) + j * 7) % tokMod))
     // originals carry a unique tail token; copies (id%10==0) omit it
     // (concat_ws skips NULL) -> the copy is a strict prefix, the
     // containment shape winnowNearDup exists for
     val dupDocs = spark.range(nDocs).repartition(cpus * 4)
       .select(col("id").as("doc_id"),
-        concat_ws(" ", nd :+
+        concat_ws(" ", toks(0 until 30, base) :+
           when(col("id") % 10 =!= 0, concat(lit("xx"), col("id"))): _*)
           .as("text"))
-    val t2 = System.nanoTime()
-    val nPairs = Dedup.winnowNearDup(dupDocs, "doc_id", "text").count()
-    val tWnd = (System.nanoTime() - t2) / 1e9
-
+    val (tWnd, nPairs) = timed(
+      Dedup.winnowNearDup(dupDocs, "doc_id", "text").count())
     println(s"""{"metric":"stress_spans","docs":$nDocs,""" +
       s""""winnow_sec":$tWinnow,"winnowed_docs":$nWinnow,""" +
       s""""span_coverage_sec":$tSpans,"covered_docs":$nCovered,""" +
       s""""winnow_neardup_sec":$tWnd,"neardup_pairs":$nPairs}""")
-    spark.stop()
   }
 
-  /** Versioned-table stress: nRows base version + 50 upsert versions
-    * (1% of keys each) + a tombstone version, then the merge-on-read
-    * resolve BEFORE vs AFTER a compact checkpoint — the claim under
-    * test: read cost tracks live data after compaction, not history
-    * length, while time travel below the checkpoint stays intact. */
   /** Runtime-filtering (DPP) + limit-pushdown scan stress on the V2
     * face: an nRows fact table written as 64 key-clustered commits
     * (tight zone maps per file), joined against a 16-key broadcast
@@ -2308,54 +1890,37 @@ object Stress {
     * key-covering files, not the table; at 100x the table size the
     * OFF cost grows linearly while the ON cost tracks the dim. Also
     * times LIMIT 100 (file-prefix pushdown: one file). */
-  private def dppScanStress(spark: SparkSession, nRows: Long,
-      cpus: Int): Unit = {
-    import graft.io.Versioned
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{
-      AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.{
-      BatchScanExec, FileScan}
-
+  private def dppScanStress(spark: SparkSession, nRows: Long): Unit = {
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
     val path = "target/tmp/dppscan-stress"
     val dimPath = "target/tmp/dppscan-dim"
-    Versioned.drop(spark, path)
+    fresh(path)
     val commits = 64
     val per = nRows / commits
-    val t0 = System.nanoTime()
-    (0 until commits).foreach { i =>
+    val (tBuild, _) = timed((0 until commits).foreach { i =>
       Versioned.append(
         spark.range(i * per, (i + 1) * per)
           .select(col("id").as("k"), (col("id") % 97).as("x"))
           .coalesce(1), path)
-    }
-    val tBuild = (System.nanoTime() - t0) / 1e9
+    })
     // 16 keys spread over 16 distinct commits' ranges
     spark.range(16).select((col("id") * (nRows / 16) + 7).as("dk"),
         lit("x").as("tag"))
       .coalesce(1).write.mode("overwrite").parquet(dimPath)
-
-    def graftFiles(pl: SparkPlan): Int = {
-      def all(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case a: AdaptiveSparkPlanExec => all(a.executedPlan)
-        case q: QueryStageExec => all(q.plan)
-        case o => o.children.flatMap(all)
-      })
-      all(pl).collectFirst {
-        case b: BatchScanExec
-            if b.scan.isInstanceOf[graft.sources.GraftScan] =>
+    // files the graft scan of a plan opened (-1: no graft scan)
+    def graftFiles(df: DataFrame): Int =
+      Plans.nodes(df.queryExecution.executedPlan).collectFirst {
+        case b: BatchScanExec if b.scan.isInstanceOf[graft.sources.GraftScan] =>
           b.scan.asInstanceOf[graft.sources.GraftScan].inner
             .asInstanceOf[FileScan].fileIndex.inputFiles.length
       }.getOrElse(-1)
-    }
     def joinRun(): (Double, Int, Long) = {
       val fact = spark.read.format("graft").load(path)
       val dim = spark.read.parquet(dimPath).filter(col("tag") === "x")
       val j = fact.join(broadcast(dim), col("k") === col("dk"))
         .agg(sum("x").as("s"))
-      val t = System.nanoTime()
-      val s = j.collect().head.getLong(0)
-      ((System.nanoTime() - t) / 1e9, graftFiles(j.queryExecution.executedPlan), s)
+      val (sec, s) = timed(j.collect().head.getLong(0))
+      (sec, graftFiles(j), s)
     }
     val (secFull, filesFull, sFull) = {
       spark.conf.set(
@@ -2368,19 +1933,10 @@ object Stress {
     require(sFull == sDpp, s"DPP changed the answer: $sFull vs $sDpp")
     require(filesDpp > 0 && filesDpp <= 16,
       s"expected <=16 key-covering files under DPP, got $filesDpp")
-
-    val tL = System.nanoTime()
     val lim = spark.read.format("graft").load(path).limit(100)
-    val nLim = lim.collect().length
-    val secLimit = (System.nanoTime() - tL) / 1e9
+    val (secLimit, nLim) = timed(lim.collect().length)
     require(nLim == 100, s"limit under-delivered: $nLim")
-    val filesLimit = lim.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec
-          if b.scan.isInstanceOf[graft.sources.GraftScan] =>
-        b.scan.asInstanceOf[graft.sources.GraftScan].inner
-          .asInstanceOf[FileScan].fileIndex.inputFiles.length
-    }.getOrElse(-1)
-
+    val filesLimit = graftFiles(lim)
     println(s"""{"metric":"dppscan","rows":$nRows,"files_total":$commits,""" +
       s""""sec_build":${f"$tBuild%.2f"},"sec_join_full":${f"$secFull%.2f"},""" +
       s""""files_full":$filesFull,"sec_join_dpp":${f"$secDpp%.2f"},""" +
@@ -2398,9 +1954,8 @@ object Stress {
     * touched-key subset instead of the whole table). Both must equal
     * the full changes() exactly. */
   private def cdcStress(spark: SparkSession, nRows: Long, cpus: Int): Unit = {
-    import graft.io.Versioned
     val path = "target/tmp/cdc-stress"
-    Versioned.drop(spark, path)
+    fresh(path)
     val base = spark.range(nRows).repartition(cpus * 4)
       .select(col("id").as("k"), (col("id") % 1000).as("x"))
     Versioned.append(base, path)
@@ -2422,23 +1977,18 @@ object Stress {
       .dropDuplicates("k"),
       path)
     val toV = Versioned.latestVersion(spark, path)
-
-    def timed[T](what: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[cdc] $what%-28s $s%8.2f s"); (r, s)
+    // change counts by type, timed and reported
+    def counts(what: String, changes: => DataFrame) = {
+      val (s, r) = timed(changes.groupBy("change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      println(f"[cdc] $what%-28s $s%8.2f s")
+      (s, r)
     }
     def run(from: Int, to: Int, tag: String): Unit = {
-      val (inc, tInc) = timed(s"incremental $tag") {
-        Versioned.changesIncremental(spark, path, "k", from, to)
-          .groupBy("change_type").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-      val (full, tFull) = timed(s"full $tag") {
-        Versioned.changes(spark, path, "k", from, to)
-          .groupBy("change_type").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
+      val (tInc, inc) = counts(s"incremental $tag",
+        Versioned.changesIncremental(spark, path, "k", from, to))
+      val (tFull, full) = counts(s"full $tag",
+        Versioned.changes(spark, path, "k", from, to))
       require(inc == full, s"cdc $tag: incremental $inc != full $full")
       println(f"[cdc] $tag: ${full.values.sum} changes, " +
         f"speedup ${tFull / tInc}%.1fx (full $tFull%.2f s / inc $tInc%.2f s)")
@@ -2452,51 +2002,41 @@ object Stress {
     run(fromV, toV, "both deltas")
   }
 
+  /** Versioned-table stress: nRows base version + 50 upsert versions
+    * (1% of keys each) + a tombstone version, then the merge-on-read
+    * resolve BEFORE vs AFTER a compact checkpoint — the claim under
+    * test: read cost tracks live data after compaction, not history
+    * length, while time travel below the checkpoint stays intact. */
   private def vtableStress(spark: SparkSession, nRows: Long, cpus: Int): Unit = {
-    import graft.io.Versioned
     val path = "target/tmp/vtable-stress"
-    Versioned.drop(spark, path)
+    fresh(path)
     val base = spark.range(nRows).repartition(cpus * 4)
       .select(col("id").as("k"), (col("id") % 97).as("x"))
-    val t0 = System.nanoTime()
-    Versioned.append(base, path)
-    (1 to 50).foreach { i =>
-      Versioned.append(
-        spark.range(nRows / 100)
-          .select((col("id") * 100 + i % 100).as("k"),
-            (col("id") + i).as("x")), path)
+    def nCurrent() = Versioned.current(spark, path, "k").count()
+    val (tBuild, _) = timed {
+      Versioned.append(base, path)
+      (1 to 50).foreach { i =>
+        Versioned.append(
+          spark.range(nRows / 100)
+            .select((col("id") * 100 + i % 100).as("k"),
+              (col("id") + i).as("x")), path)
+      }
+      Versioned.delete(spark.range(nRows / 100)
+        .select((col("id") * 101).as("k")), path)
     }
-    Versioned.delete(spark.range(nRows / 100)
-      .select((col("id") * 101).as("k")), path)
-    val tBuild = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val nPre = Versioned.current(spark, path, "k").count()
-    val tPre = (System.nanoTime() - t1) / 1e9
-
-    val t2 = System.nanoTime()
-    val cp = Versioned.compact(spark, path, "k")
-    val tCompact = (System.nanoTime() - t2) / 1e9
-
-    val t3 = System.nanoTime()
-    val nPost = Versioned.current(spark, path, "k").count()
-    val tPost = (System.nanoTime() - t3) / 1e9
+    val (tPre, nPre) = timed(nCurrent())
+    val (tCompact, cp) = timed(Versioned.compact(spark, path, "k"))
+    val (tPost, nPost) = timed(nCurrent())
     require(nPre == nPost, s"compact changed the resolved state: $nPre vs $nPost")
-
     // time travel below the checkpoint still resolves
-    val t4 = System.nanoTime()
-    val nTt = Versioned.currentAsOf(spark, path, "k", 25).count()
-    val tTt = (System.nanoTime() - t4) / 1e9
-
+    val (tTt, nTt) = timed(Versioned.currentAsOf(spark, path, "k", 25).count())
     // RESTORE to v25 at 10M rows: the diff commit re-states only rows
     // whose state changed after v25 (upsert streams touched ~2% of
     // keys per version x ~27 versions) — cost is two resolves + the
     // diff write, NOT a full-state rewrite; current afterwards must
     // equal the v25 resolve exactly
-    val t4b = System.nanoTime()
-    val rv = Versioned.restore(spark, path, "k", 25)
-    val tRestore = (System.nanoTime() - t4b) / 1e9
-    val nRestored = Versioned.current(spark, path, "k").count()
+    val (tRestore, rv) = timed(Versioned.restore(spark, path, "k", 25))
+    val nRestored = nCurrent()
     require(nRestored == nTt,
       s"restore drifted: current $nRestored vs asOf(25) $nTt")
     val restoredDrift = Versioned.current(spark, path, "k")
@@ -2504,7 +2044,6 @@ object Stress {
       .exceptAll(Versioned.currentAsOf(spark, path, "k", 25).select("k", "x"))
       .count()
     require(restoredDrift == 0, s"restore drift rows: $restoredDrift")
-
     // retention: 5 more post-checkpoint appends, then vacuum with a
     // 5-version horizon — base = the checkpoint, the 52 pre-checkpoint
     // dirs are reclaimed, the post-checkpoint tail is retained; the dir
@@ -2515,38 +2054,28 @@ object Stress {
           .select((col("id") * 100 + i % 100).as("k"),
             (col("id") + 1000L + i).as("x")), path)
     }
-    val nPreVac = Versioned.current(spark, path, "k").count()
-    val t5 = System.nanoTime()
-    val reclaimed = Versioned.vacuum(spark, path, 5)
-    val tVacuum = (System.nanoTime() - t5) / 1e9
+    val nPreVac = nCurrent()
+    val (tVacuum, reclaimed) = timed(Versioned.vacuum(spark, path, 5))
     val nDirs = Versioned.versions(spark, path).size
     require(reclaimed.nonEmpty && nDirs <= 7,
       s"vacuum reclaimed ${reclaimed.size} dirs, $nDirs remain")
-    val t6 = System.nanoTime()
-    val nPostVac = Versioned.current(spark, path, "k").count()
-    val tPostVac = (System.nanoTime() - t6) / 1e9
+    val nPostVac = nCurrent()
     require(nPostVac == nPreVac,
       s"vacuum changed the resolved state: $nPreVac vs $nPostVac")
-
     // Bloom point-lookup index over the post-vacuum table (hash-spread
     // keys — zone maps alone cannot skip): index build, then point
     // lookups with and without the index, counting files opened
-    val t7 = System.nanoTime()
-    val nIndexed = Versioned.bloomIndex(spark, path, "k")
-    val tIndex = (System.nanoTime() - t7) / 1e9
+    val (tIndex, nIndexed) = timed(Versioned.bloomIndex(spark, path, "k"))
     // a base key untouched by the upsert (k%100 in 1..50) and delete
     // (k%101 == 0) streams
     val probe = 4299L
-    val t8 = System.nanoTime()
     val hit = Versioned.currentPoint(spark, path, "k", probe)
-    val nHit = hit.count()
-    val tPoint = (System.nanoTime() - t8) / 1e9
+    val (tPoint, nHit) = timed(hit.count())
     val filesOpened = hit.inputFiles.length
     val filesTotal = Versioned.current(spark, path, "k").inputFiles.length
     require(nHit == 1L, s"point lookup found $nHit rows for key $probe")
     require(filesOpened < filesTotal,
       s"bloom pruned nothing: $filesOpened of $filesTotal")
-
     println(s"""{"metric":"stress_vtable","rows":$nRows,"versions":${cp},""" +
       s""""build_sec":$tBuild,"resolve_pre_compact_sec":$tPre,""" +
       s""""live_rows":$nPre,"compact_sec":$tCompact,""" +
@@ -2558,7 +2087,6 @@ object Stress {
       s""""point_files_total":$filesTotal,""" +
       s""""restore_sec":$tRestore,"restore_version":$rv,""" +
       s""""restored_rows":$nRestored}""")
-    spark.stop()
   }
 
   /** Incremental-ingest stress: the at-rest Jaccard working set over
@@ -2569,7 +2097,6 @@ object Stress {
     * neighborhood, not the corpus. Every 10th shard doc near-dups a
     * base doc so the fold produces real new pairs. */
   private def incDedupStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Dedup
     // 5M-token vocabulary -> mean token df ~ nDocs*40/5M (~8 at 1M
     // docs): moderate sharing, so the FULL job's candidate volume is
     // sum(df^2) over the vocabulary (superlinear in corpus growth)
@@ -2577,12 +2104,8 @@ object Stress {
     // regime incremental ingest exists for. (A near-unique-token corpus
     // makes the full pair join linear and trivially cheap, which
     // benchmarks the wrong thing.)
-    val tokMod = 5000003L
-    def corpus(ids: org.apache.spark.sql.DataFrame) =
-      ids.select(col("id").as("doc_id"),
-        concat_ws(" ", (0 until 40).map(j =>
-          concat(lit("t"), (col("base") * (31 + j) + j * 7) % tokMod)): _*)
-          .as("text"))
+    def corpus(ids: DataFrame) = ids.select(col("id").as("doc_id"),
+      concat_ws(" ", toks(0 until 40, col("base"), 5000003L): _*).as("text"))
     val base = corpus(spark.range(nDocs).repartition(cpus * 4)
       .select(col("id"), col("id").as("base")))
     val nDelta = math.max(nDocs / 100, 1000L)
@@ -2591,35 +2114,25 @@ object Stress {
       .select((col("id") + nDocs).as("id"),
         when(col("id") % 10 === 0, col("id") * 97 % nDocs)
           .otherwise(col("id") + nDocs).as("base")))
-
-    val t0 = System.nanoTime()
-    val nFullPairs = Dedup.ngramJaccard(base.unionByName(delta),
-      "doc_id", "text", 1, 0.5, 256L).count()
-    val tFull = (System.nanoTime() - t0) / 1e9
-
+    val (tFull, nFullPairs) = timed(Dedup.ngramJaccard(
+      base.unionByName(delta), "doc_id", "text", 1, 0.5, 256L).count())
     // postings bucketed on disk, fold cost = pruned probes + delta writes
     val restPath = "target/tmp/jrest-stress"
-    val t1 = System.nanoTime()
-    val rst = Dedup.jaccardRestInit(base, "doc_id", "text", 0.5, 256L,
-      restPath, nBuckets = 64)
-    val tRestInit = (System.nanoTime() - t1) / 1e9
+    val (tRestInit, rst) = timed(Dedup.jaccardRestInit(base, "doc_id",
+      "text", 0.5, 256L, restPath, nBuckets = 64))
     val nBasePairs = Dedup.jaccardRestPairs(spark, rst).count()
-    val t2 = System.nanoTime()
-    val rst2 = Dedup.jaccardRestMerge(rst, delta, "doc_id", "text")
-    val tRestMerge = (System.nanoTime() - t2) / 1e9
-    val t3 = System.nanoTime()
-    val nRestPairs = Dedup.jaccardRestPairs(spark, rst2).count()
-    val tRestRead = (System.nanoTime() - t3) / 1e9
+    val (tRestMerge, rst2) = timed(
+      Dedup.jaccardRestMerge(rst, delta, "doc_id", "text"))
+    val (tRestRead, nRestPairs) = timed(
+      Dedup.jaccardRestPairs(spark, rst2).count())
     require(nRestPairs == nFullPairs,
       s"at-rest merge diverged: $nRestPairs vs full $nFullPairs")
     Dedup.jaccardRestDrop(spark, restPath)
-
     println(s"""{"metric":"stress_incdedup","docs":$nDocs,"delta":$nDelta,""" +
       s""""base_pairs":$nBasePairs,""" +
       s""""full_recompute_sec":$tFull,"full_pairs":$nFullPairs,""" +
       s""""rest_init_sec":$tRestInit,"rest_merge_sec":$tRestMerge,""" +
       s""""rest_pairs_read_sec":$tRestRead,"rest_pairs":$nRestPairs}""")
-    spark.stop()
   }
 
   /** Event-OLAP stress: funnel, as-of join, and attribution over
@@ -2640,7 +2153,7 @@ object Stress {
     * the whale exists in the answer by definition — the reason the
     * as-of/window formulation, not the pair join, is the scale path). */
   private def eventsStress(spark: SparkSession, nRows: Long, cpus: Int,
-      skewed: Boolean = false): Unit = {
+      skewed: Boolean): Unit = {
     import graft.streaming.StreamingOps
     val base = 1700000000000000L // micros
     val userExpr =
@@ -2665,39 +2178,31 @@ object Stress {
           array(lit("view"), lit("click"), lit("purchase"), lit("signup"),
             lit("error")),
           ((col("id") * 40503L) % 5 + 1).cast("int")).as("event_type"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     ev.count() // materialize so each op times its own work
-
-    val t0 = System.nanoTime()
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-    val day = expr("INTERVAL 24 HOURS")
-    val s1 = ev.withColumn("tv",
-      min(when(col("event_type") === "view", col("ts"))).over(w))
-    val s2 = s1.withColumn("tc",
-      min(when(col("event_type") === "click"
-        && col("ts") >= col("tv") && col("ts") <= col("tv") + day,
-        col("ts"))).over(w))
-    val nFunnel = s2.groupBy("user_id")
-      .agg(max("tv").as("tv"), max("tc").as("tc"))
-      .filter(col("tc").isNotNull).count()
-    val tFunnel = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val nAsof = StreamingOps.asofJoin(
-      ev.filter(col("event_type") === "click")
+    def ofType(t: String) = ev.filter(col("event_type") === t)
+    val (tFunnel, nFunnel) = timed {
+      val w = Window.partitionBy("user_id")
+      val day = expr("INTERVAL 24 HOURS")
+      val s1 = ev.withColumn("tv",
+        min(when(col("event_type") === "view", col("ts"))).over(w))
+      val s2 = s1.withColumn("tc",
+        min(when(col("event_type") === "click"
+          && col("ts") >= col("tv") && col("ts") <= col("tv") + day,
+          col("ts"))).over(w))
+      s2.groupBy("user_id")
+        .agg(max("tv").as("tv"), max("tc").as("tc"))
+        .filter(col("tc").isNotNull).count()
+    }
+    val (tAsof, nAsof) = timed(StreamingOps.asofJoin(
+      ofType("click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts")),
-      ev.filter(col("event_type") === "purchase")
+      ofType("purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"), col("ts")),
       "user_id", "ts", "click_id", "purchase_id")
-      .filter(col("click_id").isNotNull).count()
-    val tAsof = (System.nanoTime() - t1) / 1e9
-
-    val t2 = System.nanoTime()
-    val nAttr = StreamingOps.attributionJoin(
-      ev.filter(col("event_type") === "click"),
-      ev.filter(col("event_type") === "purchase"), "2 hours").count()
-    val tAttr = (System.nanoTime() - t2) / 1e9
-
+      .filter(col("click_id").isNotNull).count())
+    val (tAttr, nAttr) = timed(StreamingOps.attributionJoin(
+      ofType("click"), ofType("purchase"), "2 hours").count())
     val whale = if (!skewed) "" else {
       val n = ev.filter(col("user_id") === 0L).count()
       s""""whale_events":$n,"""
@@ -2708,7 +2213,6 @@ object Stress {
       s""""asof_sec":$tAsof,"asof_matched":$nAsof,""" +
       s""""attribution_sec":$tAttr,"attribution_pairs":$nAttr}""")
     ev.unpersist(blocking = false)
-    spark.stop()
   }
 
   /** BPE stress: distributed pair counting + 3 greedy merge rounds over
@@ -2717,7 +2221,6 @@ object Stress {
     * O(distinct pairs) after partial agg, and the merge rounds scan
     * only the word-frequency table. */
   private def bpeStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Bpe
     val vocabMod = 200003L
     val docs = spark.range(nDocs).repartition(cpus * 4)
       .select(col("id").as("doc_id"),
@@ -2725,16 +2228,11 @@ object Stress {
           // word = base-26 rendering of a doc/pos-derived number
           conv((col("id") * (31 + j) + j * 7) % vocabMod, 10, 26)): _*)
           .as("text"))
-    val t0 = System.nanoTime()
-    val nPairs = Bpe.pairCounts(docs, "text").count()
-    val tCount = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val merges = Bpe.train(docs, "text", 3)
-    val tTrain = (System.nanoTime() - t1) / 1e9
+    val (tCount, nPairs) = timed(Bpe.pairCounts(docs, "text").count())
+    val (tTrain, merges) = timed(Bpe.train(docs, "text", 3))
     println(s"""{"metric":"stress_bpe","docs":$nDocs,""" +
       s""""pair_count_sec":$tCount,"distinct_pairs":$nPairs,""" +
       s""""train3_sec":$tTrain,"merges":"${merges.map(m => m._1 + m._2).mkString(",")}"}""")
-    spark.stop()
   }
 
   /** SemDeDup stress: semantic dedup of nVecs 64-dim embeddings against
@@ -2745,40 +2243,20 @@ object Stress {
     * 12 min); 2048 takes it to ~250M. Real deployments size k so mean
     * cluster occupancy stays in the hundreds. */
   private def semDedupStress(spark: SparkSession, nVecs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Similarity
-    val dim = 64
     val k = 2048
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
-    val centroids = emb.filter(col("id") < k)
-      .select(col("id").as("cid"), col("vec").as("cvec"))
-    val t0 = System.nanoTime()
-    val nDups = Similarity.semanticNearDup(emb, centroids, 0.9)
-      .filter(col("keeper") =!= col("id")).count()
-    val t = (System.nanoTime() - t0) / 1e9
-    println(s"""{"metric":"stress_semdedup","vecs":$nVecs,"dim":$dim,""" +
+    val emb = vectors(spark, nVecs, cpus)
+    val (t, nDups) = timed(Similarity.semanticNearDup(emb,
+      centroidsOf(emb, k), 0.9).filter(col("keeper") =!= col("id")).count())
+    println(s"""{"metric":"stress_semdedup","vecs":$nVecs,"dim":$Dim,""" +
       s""""clusters":$k,"semdedup_sec":$t,"dup_rows":$nDups}""")
-    spark.stop()
   }
 
   /** k-means stress: 2 Lloyd iterations, 256 centroids, 64-dim — the
     * large-codebook case the NearestCentroids expression exists for. */
   private def kmeansStress(spark: SparkSession, nVecs: Long, cpus: Int): Unit = {
-    import graft.pipeline.Similarity
-    val dim = 64
-    def comp(j: Int) =
-      (((col("id") * (1103515245L + j) + j * 12345L) % 100003L)
-        .cast("double") / 100003.0 - 0.5).cast("float")
-    val emb = spark.range(nVecs).repartition(cpus * 4)
-      .select(col("id"), array((0 until dim).map(comp): _*).as("vec"))
-    val t0 = System.nanoTime()
-    val n = Similarity.kmeansCentroids(emb, 256, 2).count()
-    val t = (System.nanoTime() - t0) / 1e9
-    println(s"""{"metric":"stress_kmeans","vecs":$nVecs,"dim":$dim,""" +
+    val emb = vectors(spark, nVecs, cpus)
+    val (t, n) = timed(Similarity.kmeansCentroids(emb, 256, 2).count())
+    println(s"""{"metric":"stress_kmeans","vecs":$nVecs,"dim":$Dim,""" +
       s""""k":256,"iters":2,"fit_sec":$t,"centroid_rows":$n}""")
-    spark.stop()
   }
 }

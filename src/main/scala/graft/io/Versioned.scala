@@ -1647,7 +1647,7 @@ object Versioned {
 
   private def mergedSchemaOf(spark: SparkSession, files: Seq[String])
       : org.apache.spark.sql.types.StructType =
-    mergedSchemaMemo.getOrElseUpdate(files.sorted.mkString(" "),
+    mergedSchemaMemo.getOrElseUpdate(files.sorted.mkString("\u0000"),
       spark.read.option("mergeSchema", "true").parquet(files: _*).schema)
 
   private[io] def readDirs(spark: SparkSession, path: String,

@@ -405,34 +405,8 @@ class ColumnarSpec extends SparkSpec {
     val parts = Seq(40, 0, 35).map(s => Seq.fill(s)((rng.nextInt(2),
       Array.fill(nf)(rng.nextInt(4)))))
     val col = directColumnar(parts, nf)
-    val sc = spark.sparkContext
-    val group = s"records-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val stagesOf = new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]
-    val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => stagesOf.merge(g, j.stageIds, _ ++ _))
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        written.put(s.stageInfo.stageId,
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one histogram2D pass")
-      try Histograms.histogram2D(col).collect() finally sc.clearJobGroup()
-      // events reach a listener in order: once the marker job is seen,
-      // every stage of the pass is
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!stagesOf.containsKey(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(stagesOf.containsKey(marker), "listener never saw the marker job")
-      val records = stagesOf.get(group).map(id => written.getOrDefault(id, 0L)).sum
-      assert(records == 2 * 3, s"$records shuffle records, not blocks x ranges = 6")
-    } finally sc.removeSparkListener(listener)
+    val records = workOf(Histograms.histogram2D(col).collect()).shuffleRecordsWritten
+    assert(records == 2 * 3, s"$records shuffle records, not blocks x ranges = 6")
   }
 
   test("histogram2D/3D match brute-force counts") {

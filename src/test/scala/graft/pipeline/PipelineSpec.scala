@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.obs.{Plans, Work}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -313,27 +314,15 @@ class SimilaritySpec extends SparkSpec {
     // DEFAULT path is fully distributed: building the frame must run
     // ZERO Spark jobs (the old shape collected the shortlist through
     // the driver at call time — a 50M-row round-trip at offline-batch
-    // scale). Count jobs across construction to pin that.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val rest =
-      try {
-        val df = Similarity.binaryTopKAtRest(spark, qs, path, 64, 12, 4)
-        Thread.sleep(1000) // listener events post asynchronously
-        // <= 1: the single parquet footer/schema-inference job is
-        // metadata-only; the old collect-based shape ran the whole
-        // prefilter (shuffle + window + collect — several jobs) here
-        assert(jobs.get() <= 1,
-          s"default binaryTopKAtRest ran ${jobs.get()} driver-side jobs " +
-            "during construction — shortlist must stay distributed")
-        df
-      } finally spark.sparkContext.removeSparkListener(listener)
+    // scale). Count the jobs construction runs to pin that.
+    val (work, rest) = Work.of(spark)(
+      Similarity.binaryTopKAtRest(spark, qs, path, 64, 12, 4))
+    // <= 1: the single parquet footer/schema-inference job is
+    // metadata-only; the old collect-based shape ran the whole
+    // prefilter (shuffle + window + collect — several jobs) here
+    assert(work.jobs <= 1,
+      s"default binaryTopKAtRest ran ${work.jobs} driver-side jobs " +
+        "during construction — shortlist must stay distributed")
     val inline = Similarity.binaryTopK(qs, corpus, 64, 12, 4)
     val inlineSet = inline.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -411,18 +400,11 @@ class SimilaritySpec extends SparkSpec {
       val big = Similarity.ivfTopKAssigned(
         queries, spark.table("ivf_idx_spec"), centroids, 2, 3)
       big.collect()
-      // collect() does not descend into AQE wrappers — flatten through
-      // AdaptiveSparkPlanExec / QueryStageExec explicitly
+      // collect() does not descend into AQE wrappers — Plans.nodes does
       import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }).flatMap(flatten)
       val plan = big.queryExecution.executedPlan
-      val nodes = flatten(plan)
-      def hasBucketedScan(p: SparkPlan): Boolean = flatten(p).exists {
+      val nodes = Plans.nodes(plan)
+      def hasBucketedScan(p: SparkPlan): Boolean = Plans.nodes(p).exists {
         case f: FileSourceScanExec => f.bucketedScan
         case _ => false
       }
@@ -437,7 +419,7 @@ class SimilaritySpec extends SparkSpec {
       }.flatten
       assert(scanSides.nonEmpty, s"no join over the bucketed scan:\n$plan")
       scanSides.foreach { side =>
-        val shuffled = flatten(side).collect { case e: ShuffleExchangeExec => e }
+        val shuffled = Plans.nodes(side).collect { case e: ShuffleExchangeExec => e }
         assert(shuffled.isEmpty,
           s"corpus side of the IVF probe join was shuffled:\n$plan")
       }

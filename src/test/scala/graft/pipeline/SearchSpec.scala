@@ -1,11 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.obs.Plans
 
 class SearchSpec extends SparkSpec {
   import spark.implicits._
@@ -656,12 +655,7 @@ class SearchSpec extends SparkSpec {
   test("searchAll: scan is partition-pruned to the term buckets") {
     val q = Search.searchAll(spark, idx, Seq("alpha"))
     q.collect()
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case s: QueryStageExec => flatten(s.plan)
-      case o => o.children.flatMap(flatten)
-    })
-    val scans = flatten(q.queryExecution.executedPlan)
+    val scans = Plans.nodes(q.queryExecution.executedPlan)
       .collect { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty)
     // the bucket predicate must land in partitionFilters (planning-time
@@ -771,14 +765,9 @@ class SearchSpec extends SparkSpec {
       Search.searchPrefix(spark, fidx, Seq(""), 10)
     }
     // probe plan: prefix pushed to the parquet scan, tok-only read
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case s: QueryStageExec => flatten(s.plan)
-      case o => o.children.flatMap(flatten)
-    })
     val exp = Search.fuzzyExpand(spark, fidx, Seq("alphq"), 1)
     exp.collect()
-    val scans = flatten(exp.queryExecution.executedPlan)
+    val scans = Plans.nodes(exp.queryExecution.executedPlan)
       .collect { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty)
     assert(scans.forall(_.requiredSchema.fieldNames.toSet == Set("tok")),

@@ -157,15 +157,7 @@ class GraftDataSourceSpec extends SparkSpec {
       .select("k", "s", "tag")
     val rows = j.collect()
     assert(rows.map(_.getAs[Long]("k")).sorted.toSeq == Seq(42L, 255L))
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{
-      AdaptiveSparkPlanExec, QueryStageExec}
-    def allNodes(pl: SparkPlan): Seq[SparkPlan] = pl +: (pl match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: QueryStageExec => allNodes(q.plan)
-      case o => o.children.flatMap(allNodes)
-    })
-    val b = allNodes(j.queryExecution.executedPlan).collectFirst {
+    val b = graft.obs.Plans.nodes(j.queryExecution.executedPlan).collectFirst {
       case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
     }.getOrElse(fail("no graft BatchScan in final plan:\n" +
       j.queryExecution.executedPlan))
