@@ -1144,26 +1144,16 @@ object PipelineQueries {
     * estimator ((k-1) / kth-smallest normalized hash) is deterministic
     * — both engines hash with md5 and take the same 12 hex digits — so
     * the sketch itself is oracle-checkable, not just its error bound;
-    * the exact distinct count rides along to make the error visible. */
+    * the exact distinct count rides along to make the error visible.
+    * [[Sketches.kmvSketch]] builds the bottom-k and
+    * [[Sketches.kmvEstimate]] reads it. */
   def distinctKmv(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val k = 64
     val toks = Tables.read(spark, dir, "documents")
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
       .distinct()
-    val hashed = toks.select(col("lang"),
-      conv(substring(md5(col("tok")), 1, 12), 16, 10).cast("long").as("h"))
-    val w = Window.partitionBy("lang").orderBy("h")
-    hashed
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n"), max(col("h")).as("kth"))
-      .select(col("lang"),
-        when(col("n") < k, col("n"))
-          .otherwise(round(lit((k - 1).toDouble) * math.pow(16, 12).toLong
-            / col("kth").cast("double")).cast("long"))
-          .as("est_distinct"))
+    Sketches.kmvEstimate(Sketches.kmvSketch(toks, "lang", "tok", k), k)
+      .withColumnRenamed("g", "lang")
       .join(toks.groupBy("lang").agg(count(lit(1)).as("n_distinct")), "lang")
       .select("lang", "n_distinct", "est_distinct")
       .orderBy("lang")
@@ -1997,9 +1987,10 @@ object PipelineQueries {
     * ([[Sketches.hllDistinct]], m = 256 registers) beside the exact
     * count — the constant-state cousin of q_distinct_kmv. No
     * pre-distinct pass: the register max is idempotent, so the sketch
-    * build is one map-side-combinable groupBy whose state is 256 rows
+    * build is one groupBy whose state is one 256-byte register buffer
     * per language no matter the corpus size. The md5-derived registers
-    * make the ESTIMATE itself oracle-checkable. */
+    * make the ESTIMATE itself oracle-checkable. q_distinct_hll_native
+    * runs this same query against the same oracle SQL. */
   def distinctHll(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.read(spark, dir, "documents")
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
@@ -2020,24 +2011,6 @@ object PipelineQueries {
        |      FROM t0 GROUP BY 1)
        |SELECT hll.g AS lang, x.n_distinct, hll.est_distinct
        |FROM hll JOIN x ON hll.g = x.lang ORDER BY 1""".stripMargin
-
-  /** [[distinctHll]] through the native [[graft.functions.HllSketchAgg]]
-    * aggregate — one 256-byte buffer per group as the whole shuffle
-    * state instead of up to 256 register rows per group per partition.
-    * SAME oracle SQL as q_distinct_hll: the native buffer build, its
-    * byte-wise partial merges and its estimate algebra must land on
-    * the register-table path's numbers exactly. */
-  def distinctHllNative(spark: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.read(spark, dir, "documents")
-      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
-    val exact = toks.distinct()
-      .groupBy("lang").agg(count(lit(1)).as("n_distinct"))
-    Sketches.hllDistinctNative(toks, "lang", "tok")
-      .withColumnRenamed("g", "lang")
-      .join(exact, "lang")
-      .select("lang", "n_distinct", "est_distinct")
-      .orderBy("lang")
-  }
 
   /** Count-min heavy hitters ([[Sketches.countMinTable]], d=3 x
     * w=1024): the true top-20 tokens (deterministic tok tie-break)
@@ -2418,12 +2391,11 @@ object PipelineQueries {
     val toks = Tables.read(spark, dir, "documents")
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
     val dt = toks.distinct().localCheckpoint()
-    // native bounded-state build — row-identical to the declarative
-    // bottom-k (spec-pinned), so the oracle's window form still
-    // matches. Built from the materialized distinct (lang, tok) base
+    // the bounded-state bottom-k equals the oracle's distinct + rank
+    // window form. Built from the materialized distinct (lang, tok) base
     // instead of a SECOND documents scan+explode: the KMV state keeps
     // distinct hashes (TreeSet), so pre-deduped input is bit-identical
-    val sk = Sketches.kmvSketchNative(dt, "lang", "tok", k)
+    val sk = Sketches.kmvSketch(dt, "lang", "tok", k)
       .localCheckpoint()
     val langs = sk.select(col("g")).distinct()
     val pairs = langs.select(col("g").as("la"))
@@ -5358,8 +5330,8 @@ object PipelineQueries {
     * so a wide profiling suite on high-cardinality columns keeps the
     * one-scan constant-state story. Fully oracle-checkable because
     * [[graft.functions.HllSketchAgg]] is bit-compatible with the
-    * certified declarative HLL SQL (same md5 bucket/rank split, same
-    * estimate algebra — q_distinct_hll_native's contract): violations
+    * certified HLL SQL (same md5 bucket/rank split, same estimate
+    * algebra — q_distinct_hll's contract): violations
     * = GREATEST(count - estimate, 0) is the same integer on both
     * engines. Mixed suite: two approx checks beside two exact ones,
     * all in the single aggregation pass. */
@@ -5438,7 +5410,7 @@ object PipelineQueries {
     "q_quality_trim" -> qualityTrim _,
     "q_quality_trim_float" -> qualityTrimFloat _,
     "q_distinct_overlap" -> distinctOverlap _,
-    "q_distinct_hll_native" -> distinctHllNative _,
+    "q_distinct_hll_native" -> distinctHll _,
     "q_embed_quantize" -> embedQuantize _,
     "q_bloom_join" -> bloomJoin _,
     "q_dedup_minhash" -> dedupMinhash _,

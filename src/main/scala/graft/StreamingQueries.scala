@@ -388,12 +388,13 @@ object StreamingQueries {
       |SELECT day, user_id, n, rk FROM r WHERE rk <= 3
       |ORDER BY day, rk""".stripMargin
 
-  /** Daily distinct-user estimate via the mergeable HLL register
-    * sketch ([[graft.pipeline.Sketches.hllDistinct]]) beside the exact
+  /** Daily distinct-user estimate via the HLL sketch
+    * ([[graft.pipeline.Sketches.hllDistinct]]) beside the exact
     * count — the per-day cardinality profile an event pipeline
-    * publishes at CONSTANT state (256 register rows per day, no
-    * pre-distinct shuffle; the same register table streams under a
-    * watermarked event-time window, spec-pinned in SketchesSpec).
+    * publishes at CONSTANT state (one 256-byte register buffer per day,
+    * no pre-distinct shuffle; the mergeable register table streams
+    * under a watermarked event-time window, spec-pinned in
+    * SketchesSpec).
     * user_id is string-rendered before hashing so both engines md5
     * identical bytes. */
   def distinctDaily(spark: SparkSession, dir: String): DataFrame = {

@@ -1670,10 +1670,13 @@ object Stress {
   }
 
   /** Sketch stress: the corpus-profile pass at nDocs synthetic docs —
-    * HLL distinct tokens per group (256 registers) and count-min heavy
-    * hitters over ~40 tokens/doc. Also times the incremental story:
-    * two half-corpus register folds merged vs the full-corpus sketch
-    * (must be row-identical — the shard-fold contract at scale). */
+    * HLL distinct tokens per group (256 registers), KMV bottom-k,
+    * count-min and Misra-Gries heavy hitters, and quantile buckets over
+    * ~40 tokens/doc. Also times the incremental story: every at-rest
+    * state (HLL registers, KMV bottom-k, quantile buckets) folded from
+    * two halves must equal the full-corpus state (the shard-fold
+    * contract at scale), and the HLL aggregate must equal the estimate
+    * read off its at-rest register table. */
   private def sketchStress(spark: SparkSession, nDocs: Long, cpus: Int): Unit = {
     // 4 hot tokens appear in every doc — the heavy hitters
     val hot = (0 until 4).map(j => lit(s"hh$j"))
@@ -1681,8 +1684,9 @@ object Stress {
       .select(col("id"), (col("id") % 8).cast("string").as("g"),
         concat_ws(" ", hot ++ toks(0 until 36): _*).as("text"))
       .localCheckpoint()
-    val tokRows = docs.select(col("g"),
-      explode(split(col("text"), " ")).as("tok"))
+    def tokensOf(d: DataFrame) =
+      d.select(col("g"), explode(split(col("text"), " ")).as("tok"))
+    val tokRows = tokensOf(docs)
     // rows of df in both directions of exceptAll: 0 iff equal multisets
     def drift(a: DataFrame, b: DataFrame) =
       a.exceptAll(b).count() + b.exceptAll(a).count()
@@ -1704,12 +1708,13 @@ object Stress {
     counters.unpersist(blocking = false)
     val tCm = tCmBuild + tCmProbe
 
+    // the two doc halves every shard fold below merges: each group
+    // spans both, so a fold combines two partial states per group
+    val even = col("id") % 2 === 0
     // shard-fold: two half-corpus register tables merged == full
     val (tMerge, regDrift) = timed {
-      val half1 = Sketches.hllRegisters(
-        tokRows.filter(col("g").isin("0", "1", "2", "3")), "g", "tok")
-      val half2 = Sketches.hllRegisters(
-        tokRows.filter(!col("g").isin("0", "1", "2", "3")), "g", "tok")
+      val half1 = Sketches.hllRegisters(tokensOf(docs.filter(even)), "g", "tok")
+      val half2 = Sketches.hllRegisters(tokensOf(docs.filter(!even)), "g", "tok")
       drift(Sketches.hllMerge(half1, half2),
         Sketches.hllRegisters(tokRows, "g", "tok"))
     }
@@ -1718,29 +1723,17 @@ object Stress {
     // quantile sketch: per-group token-length-ish value distribution
     // (value = id-derived long, full exponent spread); build + p50/p95/
     // p99 read, then the exact shard-fold check like HLL's
-    val vals = docs.select(col("g"), (col("id") * col("id") % 9999991L).as("x"))
+    def vals(d: DataFrame) =
+      d.select(col("g"), (col("id") * col("id") % 9999991L).as("x"))
     val (tQs, (qs, nQBuckets, nQ)) = timed {
-      val q = Sketches.quantileBuckets(vals, "g", "x").persist()
+      val q = Sketches.quantileBuckets(vals(docs), "g", "x").persist()
       (q, q.count(), Sketches.quantileEstimate(q, Seq(50, 95, 99)).count())
     }
     val (tQMerge, qDrift) = timed(drift(Sketches.quantileMerge(
-      Sketches.quantileBuckets(vals.filter(col("g") < "4"), "g", "x"),
-      Sketches.quantileBuckets(vals.filter(col("g") >= "4"), "g", "x")), qs))
+      Sketches.quantileBuckets(vals(docs.filter(even)), "g", "x"),
+      Sketches.quantileBuckets(vals(docs.filter(!even)), "g", "x")), qs))
     qs.unpersist(blocking = false)
     require(qDrift == 0, s"quantile shard-fold drift: $qDrift rows")
-
-    // native bucket-map aggregate vs the declarative bucket rows at the
-    // many-group shape (cells must be identical)
-    val manyV = docs.select((col("id") % math.max(nDocs / 10, 1L))
-        .cast("string").as("g"),
-      (col("id") * col("id") % 9999991L).as("x"))
-    val (tQDecl, (qDecl, nQDecl)) = built(Sketches.quantileBuckets(manyV, "g", "x"))
-    val (tQNat, (qNat, nQNat)) = built(Sketches.quantileBucketsNative(manyV, "g", "x"))
-    val qNatDrift = drift(qNat, qDecl)
-    qDecl.unpersist(blocking = false)
-    qNat.unpersist(blocking = false)
-    require(qNatDrift == 0 && nQDecl == nQNat,
-      s"native-vs-declarative quantile drift: $qNatDrift")
 
     // Misra-Gries exact heavy hitters at a LARGE vocabulary: 30% of
     // rows over 7 genuinely heavy items (~4.3% each > 1/65), 70% over
@@ -1768,49 +1761,45 @@ object Stress {
     require(mgOut == mgWant,
       s"MG heavy hitters diverge from exact: ${mgOut.size} vs ${mgWant.size}")
 
-    // native byte-buffer HLL aggregate vs the register-table form at a
-    // MANY-GROUP profile shape (nDocs/10 groups): the declarative form
-    // shuffles up to m register rows per group, the native one a single
+    // the HLL aggregate vs the estimate off its at-rest register table
+    // at a MANY-GROUP profile shape (nDocs/10 groups): the register
+    // table shuffles up to m rows per group, the aggregate a single
     // 256-byte buffer per group — and the estimates must agree exactly
     val many = docs.select((col("id") % math.max(nDocs / 10, 1L))
         .cast("string").as("g"),
       explode(split(col("text"), " ")).as("tok"))
-    val (tManyDecl, (declRes, nManyDecl)) = built(Sketches.hllDistinct(many, "g", "tok"))
-    val (tManyNat, (natRes, nManyNat)) = built(Sketches.hllDistinctNative(many, "g", "tok"))
+    val (tManyDecl, (declRes, nManyDecl)) = built(
+      Sketches.hllEstimate(Sketches.hllRegisters(many, "g", "tok")))
+    val (tManyNat, (natRes, nManyNat)) = built(Sketches.hllDistinct(many, "g", "tok"))
     val natDrift = drift(natRes, declRes)
     declRes.unpersist(blocking = false)
     natRes.unpersist(blocking = false)
-    require(natDrift == 0, s"native-vs-declarative HLL drift: $natDrift")
+    require(natDrift == 0, s"aggregate-vs-register HLL drift: $natDrift")
     require(nManyDecl == nManyNat)
 
-    // KMV: the declarative build pays distinct()+window over the WHOLE
-    // value space; the native bounded-state aggregate ships O(k) longs
-    // per group per partition — and the bottom-k sets must be identical
-    val (tKvDecl, (kvDecl, nKvDecl)) = built(Sketches.kmvSketch(tokRows, "g", "tok"))
-    val (tKvNat, (kvNat, nKvNat)) = built(Sketches.kmvSketchNative(tokRows, "g", "tok"))
-    val kvDrift = drift(kvNat, kvDecl)
-    kvDecl.unpersist(blocking = false)
+    // KMV: the bounded-state build ships O(k) longs per group per
+    // partition; bottom-k of the two doc halves, folded through
+    // kmvMerge, must equal the full-corpus sketch
+    val (tKvNat, (kvNat, nKvNat)) = built(Sketches.kmvSketch(tokRows, "g", "tok"))
+    val kvDrift = drift(Sketches.kmvMerge(64)(
+      Sketches.kmvSketch(tokensOf(docs.filter(even)), "g", "tok"),
+      Sketches.kmvSketch(tokensOf(docs.filter(!even)), "g", "tok")), kvNat)
     kvNat.unpersist(blocking = false)
-    require(kvDrift == 0, s"native-vs-declarative KMV drift: $kvDrift")
-    require(nKvDecl == nKvNat)
+    require(kvDrift == 0, s"KMV shard-fold drift: $kvDrift rows")
 
     println(s"""{"metric":"stress_sketch","docs":$nDocs,""" +
       s""""hll_sec":$tHll,"hll_groups":$nHll,""" +
       s""""hll_many_groups":$nManyNat,"hll_many_decl_sec":$tManyDecl,""" +
       s""""hll_many_native_sec":$tManyNat,"hll_native_drift":$natDrift,""" +
-      s""""kmv_decl_sec":$tKvDecl,"kmv_native_sec":$tKvNat,""" +
-      s""""kmv_rows":$nKvNat,"kmv_native_drift":$kvDrift,""" +
+      s""""kmv_native_sec":$tKvNat,"kmv_rows":$nKvNat,"kmv_merge_drift":$kvDrift,""" +
       s""""cm_sec":$tCm,"cm_build_sec":$tCmBuild,"cm_probe_sec":$tCmProbe,""" +
       s""""cm_cells":$nCells,"cm_heavy_confirmed":$nCm,""" +
       s""""merge_check_sec":$tMerge,"register_drift":$regDrift,""" +
       s""""quantile_sec":$tQs,"quantile_buckets":$nQBuckets,""" +
       s""""quantile_rows":$nQ,"quantile_merge_sec":$tQMerge,""" +
       s""""quantile_drift":$qDrift,""" +
-      s""""quantile_many_decl_sec":$tQDecl,""" +
-      s""""quantile_many_native_sec":$tQNat,""" +
       s""""mg_heavy_sec":$tMg,"mg_exact_sec":$tMgExact,""" +
-      s""""mg_heavy_rows":${mgOut.size},""" +
-      s""""quantile_native_drift":$qNatDrift}""")
+      s""""mg_heavy_rows":${mgOut.size}}""")
   }
 
   /** Graph stress: weighted PageRank on a power-law in-degree graph —

@@ -9,17 +9,14 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native HyperLogLog aggregate: the whole sketch state is ONE 2^b-byte
- * register buffer per group, updated in place and merged byte-wise —
- * versus the declarative register-table form
- * ([[graft.pipeline.Sketches.hllRegisters]]) whose shuffle state is up
- * to m = 2^b ROWS per group per partition. At profile shapes with many
- * groups (per-day, per-source cardinality over an event log) that is a
- * ~m× reduction in shuffle rows and agg hash-table entries; the
- * register-table form remains the AT-REST state (shard folds of
- * persisted sketches), this is the serve/profile path.
+ * Native HyperLogLog aggregate, the one build of
+ * [[graft.pipeline.Sketches.hllDistinct]]: the whole sketch state is ONE
+ * 2^b-byte register buffer per group, updated in place and merged
+ * byte-wise, so partials ship one row per group per partition. The
+ * register-table form ([[graft.pipeline.Sketches.hllRegisters]]) is the
+ * AT-REST state that shard folds of persisted sketches take.
  *
- * BIT-COMPATIBLE with the register-table build and therefore with the
+ * BIT-COMPATIBLE with the register table and therefore with the
  * q_distinct_hll oracle: identical md5-derived 60-bit hash split
  * (top b bits index the register, next 48 bits are the rank value —
  * reference layout pinned by SketchesSpec), identical rho
@@ -124,16 +121,13 @@ object HllSketchAgg {
 }
 
 /**
- * Native KMV bottom-k aggregate: per group, the k smallest DISTINCT
- * 48-bit md5 hashes — kept as a bounded sorted-long-set buffer, so the
- * partial aggregation ships O(k) longs per group per partition. The
- * declarative build ([[graft.pipeline.Sketches.kmvSketch]]) must first
- * `distinct()` the whole (group, hash) space — a shuffle of EVERY
- * distinct value — before its rank window; this aggregate's state
- * discards everything above its k-th hash as it goes, which is the
- * build shape a 100 TB profile pass needs. Same hash, same bottom-k
- * set, so the two builds are row-identical (spec-pinned) and feed the
- * same [[graft.pipeline.Sketches.kmvSetOps]]/`kmvEstimate` algebra.
+ * Native KMV bottom-k aggregate, the one build of
+ * [[graft.pipeline.Sketches.kmvSketch]]: per group, the k smallest
+ * DISTINCT 48-bit md5 hashes — kept as a bounded sorted-long-set
+ * buffer, so the partial aggregation ships O(k) longs per group per
+ * partition and discards everything above its k-th hash as it goes,
+ * never shuffling the value space. Feeds the
+ * [[graft.pipeline.Sketches.kmvSetOps]]/`kmvEstimate` algebra.
  *
  * Returns the sorted hash array; explode to (g, h) rows for the
  * sketch-table form.
@@ -218,142 +212,21 @@ case class KmvSketchAgg(child: Expression, k: Int,
 }
 
 /**
- * Native quantile-sketch aggregate: the HDR-style log2-linear bucket
- * histogram ([[graft.pipeline.Sketches.quantileBuckets]]) as ONE
- * open-addressed (bucket → count) map per group — partials ship one
- * row of ~2k entries per group per partition instead of up to ~2k
- * (g, idx, cnt) rows. Bit-identical bucket ids: the same
- * `length(bin(x))` exponent (here `64 - numberOfLeadingZeros`) and
- * exact power-of-two division. Returns (idx, cnt) struct rows via
- * explode for the existing merge/estimate algebra.
+ * The buffer codec both Misra-Gries aggregates share: an (item -> count)
+ * map per group, merged by counter addition followed by a decrement of
+ * the (k+1)-st largest count (Agarwal et al., "Mergeable Summaries",
+ * PODS 2012, §3.1), which preserves the classic deterministic guarantee
+ * across any merge tree: every item with true frequency > n/(k+1)
+ * survives, with estimate >= true - n/(k+1). Returns (item, est) struct
+ * rows sorted by item (deterministic output independent of merge order
+ * is NOT guaranteed for `est` — only the survivor guarantee is; callers
+ * needing exact counts do the recount pass). The subclasses differ only
+ * in their children and `update`.
  */
-case class QuantileSketchAgg(child: Expression, k: Int,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.HashMap[Long, Long]]
-  with UnaryLike[Expression] {
+sealed abstract class MisraGriesSummary
+  extends TypedImperativeAggregate[java.util.HashMap[String, Long]] {
 
-  require(k >= 1 && k <= 16, s"k = $k out of range")
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("idx", LongType,
-          nullable = false),
-        org.apache.spark.sql.types.StructField("cnt", LongType,
-          nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quantile_sketch_agg expects bigint, got $other")
-  }
-
-  override def createAggregationBuffer(): java.util.HashMap[Long, Long] =
-    new java.util.HashMap[Long, Long]()
-
-  /** The bucket id — identical to Sketches.qsBucket's Column algebra:
-    * values below 2^(k+1) are exact; above, (e-k)*2^k plus the top k
-    * mantissa bits via floor(x / 2^(e-k)) (an exact shift for x >= 0). */
-  private def bucket(x: Long): Long =
-    if (x < (1L << (k + 1))) x
-    else {
-      val e = 63 - java.lang.Long.numberOfLeadingZeros(x)
-      val s = e - k
-      s.toLong * (1L << k) + (x >>> s)
-    }
-
-  override def update(buf: java.util.HashMap[Long, Long],
-      input: InternalRow): java.util.HashMap[Long, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val idx = bucket(v.asInstanceOf[Long])
-      buf.merge(idx, 1L, (a, b) => a + b)
-    }
-    buf
-  }
-
-  override def merge(a: java.util.HashMap[Long, Long],
-      other: java.util.HashMap[Long, Long]): java.util.HashMap[Long, Long] = {
-    val it = other.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      a.merge(e.getKey, e.getValue, (x, y) => x + y)
-    }
-    a
-  }
-
-  override def eval(buf: java.util.HashMap[Long, Long]): Any = {
-    val rows = new Array[org.apache.spark.sql.catalyst.InternalRow](buf.size)
-    val keys = new Array[Long](buf.size)
-    val it = buf.keySet().iterator()
-    var i = 0
-    while (it.hasNext) { keys(i) = it.next(); i += 1 }
-    java.util.Arrays.sort(keys)
-    i = 0
-    while (i < keys.length) {
-      rows(i) = InternalRow(keys(i), buf.get(keys(i)))
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(rows)
-  }
-
-  override def serialize(buf: java.util.HashMap[Long, Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.size * 16)
-    val it = buf.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      bb.putLong(e.getKey); bb.putLong(e.getValue)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte])
-      : java.util.HashMap[Long, Long] = {
-    val buf = new java.util.HashMap[Long, Long]()
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    while (bb.hasRemaining) { buf.put(bb.getLong, bb.getLong); () }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(
-      newOffset: Int): QuantileSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(
-      newOffset: Int): QuantileSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(
-      newChild: Expression): QuantileSketchAgg = copy(child = newChild)
-
-  override def prettyName: String = "graft_quantile_sketch"
-}
-
-/**
- * Native Misra-Gries heavy-hitter summary: k counters per group as ONE
- * (item -> count) map — the bounded-state ONE-PASS complement to the
- * count-min table ([[graft.pipeline.Sketches.countMinTable]]): no
- * fixed hash grid, no candidate list needed up front, state O(k) per
- * group regardless of vocabulary size. Partials merge by counter
- * addition followed by a decrement of the (k+1)-st largest count
- * (Agarwal et al., "Mergeable Summaries", PODS 2012, §3.1), which
- * preserves the classic deterministic guarantee across any merge
- * tree: every item with true frequency > n/(k+1) survives, with
- * estimate >= true - n/(k+1). The EXACT heavy-hitter set is then
- * recovered by one candidate-restricted recount
- * ([[graft.pipeline.Sketches.heavyHittersExact]]) — candidates are
- * <= k rows, so the recount join broadcasts.
- *
- * Returns (item, est) struct rows sorted by item (deterministic
- * output independent of merge order is NOT guaranteed for `est` —
- * only the survivor guarantee is; callers needing exact counts do
- * the recount pass).
- */
-case class MisraGriesAgg(child: Expression, k: Int,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.HashMap[String, Long]]
-  with UnaryLike[Expression] {
-
-  require(k >= 1 && k <= 100000, s"k = $k out of range")
+  def k: Int
 
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
@@ -364,40 +237,8 @@ case class MisraGriesAgg(child: Expression, k: Int,
           nullable = false))), containsNull = false)
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"misra_gries_agg expects string, got $other")
-  }
-
   override def createAggregationBuffer(): java.util.HashMap[String, Long] =
     new java.util.HashMap[String, Long]()
-
-  override def update(buf: java.util.HashMap[String, Long],
-      input: InternalRow): java.util.HashMap[String, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String].toString
-      // containsKey, NOT a get-against-null check: the Scala view of
-      // java.util.HashMap[String, Long] unboxes an absent key's null
-      // to 0L, and a primitive != null comparison lifts to the box
-      // (always true) — that shape silently turns the eviction branch
-      // into dead code and the bounded summary into an exact counter
-      if (buf.containsKey(s)) buf.put(s, buf.get(s) + 1L)
-      else if (buf.size < k) buf.put(s, 1L)
-      else {
-        // full: decrement every counter (the arriving item's implicit
-        // counter of 1 cancels against the global decrement), dropping
-        // counters that reach zero
-        val it = buf.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getValue == 1L) it.remove() else e.setValue(e.getValue - 1L)
-        }
-      }
-    }
-    buf
-  }
 
   override def merge(a: java.util.HashMap[String, Long],
       other: java.util.HashMap[String, Long])
@@ -407,7 +248,7 @@ case class MisraGriesAgg(child: Expression, k: Int,
       val e = it.next()
       a.merge(e.getKey, e.getValue, (x, y) => x + y)
     }
-    MisraGriesWeightedAgg.reduceToK(a, k)
+    MisraGriesSummary.reduceToK(a, k)
     a
   }
 
@@ -458,6 +299,77 @@ case class MisraGriesAgg(child: Expression, k: Int,
     }
     buf
   }
+}
+
+object MisraGriesSummary {
+  /** Subtract the (k+1)-st largest count from every counter and drop
+    * the non-positive — the mergeable-summaries reduction back to
+    * <= k counters. No-op while the map fits. */
+  private[functions] def reduceToK(
+      buf: java.util.HashMap[String, Long], k: Int): Unit = {
+    if (buf.size <= k) return
+    val counts = new Array[Long](buf.size)
+    var i = 0
+    val vit = buf.values().iterator()
+    while (vit.hasNext) { counts(i) = vit.next(); i += 1 }
+    java.util.Arrays.sort(counts)
+    val cut = counts(counts.length - 1 - k)
+    val eit = buf.entrySet().iterator()
+    while (eit.hasNext) {
+      val e = eit.next()
+      if (e.getValue <= cut) eit.remove()
+      else e.setValue(e.getValue - cut)
+    }
+  }
+}
+
+/**
+ * Native Misra-Gries heavy-hitter summary: k counters per group as ONE
+ * (item -> count) map — the bounded-state ONE-PASS complement to the
+ * count-min table ([[graft.pipeline.Sketches.countMinTable]]): no
+ * fixed hash grid, no candidate list needed up front, state O(k) per
+ * group regardless of vocabulary size. The EXACT heavy-hitter set is
+ * recovered by one candidate-restricted recount
+ * ([[graft.pipeline.Sketches.heavyHittersExact]]) — candidates are
+ * <= k rows, so the recount join broadcasts.
+ */
+case class MisraGriesAgg(child: Expression, k: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends MisraGriesSummary with UnaryLike[Expression] {
+
+  require(k >= 1 && k <= 100000, s"k = $k out of range")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"misra_gries_agg expects string, got $other")
+  }
+
+  override def update(buf: java.util.HashMap[String, Long],
+      input: InternalRow): java.util.HashMap[String, Long] = {
+    val v = child.eval(input)
+    if (v != null) {
+      val s = v.asInstanceOf[UTF8String].toString
+      // containsKey, NOT a get-against-null check: the Scala view of
+      // java.util.HashMap[String, Long] unboxes an absent key's null
+      // to 0L, and a primitive != null comparison lifts to the box
+      // (always true) — that shape silently turns the eviction branch
+      // into dead code and the bounded summary into an exact counter
+      if (buf.containsKey(s)) buf.put(s, buf.get(s) + 1L)
+      else if (buf.size < k) buf.put(s, 1L)
+      else {
+        // full: decrement every counter (the arriving item's implicit
+        // counter of 1 cancels against the global decrement), dropping
+        // counters that reach zero
+        val it = buf.entrySet().iterator()
+        while (it.hasNext) {
+          val e = it.next()
+          if (e.getValue == 1L) it.remove() else e.setValue(e.getValue - 1L)
+        }
+      }
+    }
+    buf
+  }
 
   override def withNewMutableAggBufferOffset(
       newOffset: Int): MisraGriesAgg =
@@ -486,22 +398,13 @@ case class MisraGriesAgg(child: Expression, k: Int,
  */
 case class MisraGriesWeightedAgg(item: Expression, weight: Expression,
     k: Int, mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.HashMap[String, Long]]
+  extends MisraGriesSummary
   with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
 
   require(k >= 1 && k <= 100000, s"k = $k out of range")
 
   override def left: Expression = item
   override def right: Expression = weight
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("item", StringType,
-          nullable = false),
-        org.apache.spark.sql.types.StructField("est", LongType,
-          nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult =
     (item.dataType, weight.dataType) match {
@@ -510,9 +413,6 @@ case class MisraGriesWeightedAgg(item: Expression, weight: Expression,
         s"misra_gries_weighted expects (string, bigint), got $other")
     }
 
-  override def createAggregationBuffer(): java.util.HashMap[String, Long] =
-    new java.util.HashMap[String, Long]()
-
   override def update(buf: java.util.HashMap[String, Long],
       input: InternalRow): java.util.HashMap[String, Long] = {
     val i = item.eval(input)
@@ -520,65 +420,7 @@ case class MisraGriesWeightedAgg(item: Expression, weight: Expression,
     if (i != null && w != null && w.asInstanceOf[Long] > 0L) {
       buf.merge(i.asInstanceOf[UTF8String].toString,
         w.asInstanceOf[Long], (a, b) => a + b)
-      MisraGriesWeightedAgg.reduceToK(buf, k)
-    }
-    buf
-  }
-
-  override def merge(a: java.util.HashMap[String, Long],
-      other: java.util.HashMap[String, Long])
-      : java.util.HashMap[String, Long] = {
-    val it = other.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      a.merge(e.getKey, e.getValue, (x, y) => x + y)
-    }
-    MisraGriesWeightedAgg.reduceToK(a, k)
-    a
-  }
-
-  override def eval(buf: java.util.HashMap[String, Long]): Any = {
-    val keys = new Array[String](buf.size)
-    val kit = buf.keySet().iterator()
-    var i = 0
-    while (kit.hasNext) { keys(i) = kit.next(); i += 1 }
-    java.util.Arrays.sort(keys, java.util.Comparator.naturalOrder[String]())
-    val rows = new Array[org.apache.spark.sql.catalyst.InternalRow](keys.length)
-    i = 0
-    while (i < keys.length) {
-      rows(i) = InternalRow(UTF8String.fromString(keys(i)), buf.get(keys(i)))
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(rows)
-  }
-
-  override def serialize(buf: java.util.HashMap[String, Long]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(buf.size)
-    val it = buf.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val kb = e.getKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.writeInt(kb.length); out.write(kb); out.writeLong(e.getValue)
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte])
-      : java.util.HashMap[String, Long] = {
-    val in = new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new java.util.HashMap[String, Long](n * 2)
-    var i = 0
-    while (i < n) {
-      val kb = new Array[Byte](in.readInt())
-      in.readFully(kb)
-      buf.put(new String(kb, java.nio.charset.StandardCharsets.UTF_8),
-        in.readLong())
-      i += 1
+      MisraGriesSummary.reduceToK(buf, k)
     }
     buf
   }
@@ -594,26 +436,4 @@ case class MisraGriesWeightedAgg(item: Expression, weight: Expression,
     copy(item = newLeft, weight = newRight)
 
   override def prettyName: String = "graft_misra_gries_weighted"
-}
-
-object MisraGriesWeightedAgg {
-  /** Subtract the (k+1)-st largest count from every counter and drop
-    * the non-positive — the mergeable-summaries reduction back to
-    * <= k counters. No-op while the map fits. */
-  private[functions] def reduceToK(
-      buf: java.util.HashMap[String, Long], k: Int): Unit = {
-    if (buf.size <= k) return
-    val counts = new Array[Long](buf.size)
-    var i = 0
-    val vit = buf.values().iterator()
-    while (vit.hasNext) { counts(i) = vit.next(); i += 1 }
-    java.util.Arrays.sort(counts)
-    val cut = counts(counts.length - 1 - k)
-    val eit = buf.entrySet().iterator()
-    while (eit.hasNext) {
-      val e = eit.next()
-      if (e.getValue <= cut) eit.remove()
-      else e.setValue(e.getValue - cut)
-    }
-  }
 }

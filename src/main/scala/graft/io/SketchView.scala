@@ -125,8 +125,7 @@ object SketchView {
       newest0.filter(col(Versioned.DeletedCol)).isEmpty &&
         (oldState == null || oldState.isEmpty)
     def regs(df: DataFrame) =
-      Sketches.hllRegisters(df.filter(col(h.valueCol).isNotNull)
-          .select(col(h.groupCol), col(h.valueCol)),
+      Sketches.hllRegisters(df.select(col(h.groupCol), col(h.valueCol)),
         h.groupCol, h.valueCol, h.b)
     val viewEmpty = Versioned.latestVersion(spark, h.viewPath) == 0
     def viewCur = Versioned.current(spark, h.viewPath, SkCol)

@@ -1,29 +1,39 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.functions._
 
 /**
  * Deterministic probabilistic sketches for corpus profiling at 100 TB
- * scale — additive surface beside the KMV bottom-k sketch (see
- * PipelineQueries.distinctKmv). Every hash is md5-derived, so the
- * sketches are reproducible across runs AND engines: the DuckDB oracle
- * recomputes the ESTIMATES themselves, not just error bounds.
+ * scale. Every hash is md5-derived, so the sketches are reproducible
+ * across runs AND engines: the DuckDB oracle recomputes the ESTIMATES
+ * themselves, not just error bounds.
  *
- * Scale shape: both sketches are one explode + one map-side-combinable
- * groupBy over fixed-size keyspaces (2^b registers / d*w counters) —
- * state is constant per group regardless of corpus size, the property
- * that lets a 1000-executor profile pass run in one shuffle of
- * sketch-sized partials.
+ * One build per sketch. HLL and KMV build through their native
+ * bounded-state aggregates ([[graft.functions.HllSketchAgg]],
+ * [[graft.functions.KmvSketchAgg]]): one small buffer per group per
+ * partition is the whole shuffle state. Quantiles build as bucket rows
+ * through a codegen'd groupBy, which measured faster than a map-state
+ * aggregate because the bucket keyspace is already bounded. The AT-REST
+ * forms — HLL register rows, KMV bottom-k rows, quantile bucket rows —
+ * are what the `*Merge` folds take as shard state. Every build skips
+ * null values.
  */
 object Sketches {
 
+  /** A native aggregate function as a Column. */
+  private def aggregate(f: AggregateFunction): Column =
+    GraftSqlBridge.column(f.toAggregateExpression())
+
+  private def expr(c: Column) = GraftSqlBridge.expression(c)
+
   /**
    * HyperLogLog distinct-count estimate per group (Flajolet et al.
-   * 2007), b register-index bits (m = 2^b registers, b in [4, 12]).
-   * The register update max(rho) is idempotent, so no pre-distinct
-   * pass is needed — the groupBy partial-aggregates map-side into at
-   * most m rows per group per partition.
+   * 2007), b register-index bits (m = 2^b registers, b in [4, 12]):
+   * (g, est_distinct). Built by [[graft.functions.HllSketchAgg]], one
+   * 2^b-byte register buffer per group, and bit-identical to
+   * `hllEstimate(hllRegisters(...))` — the at-rest register table.
    *
    * Bit layout: the md5's first 15 hex digits (60 bits, fits a signed
    * long) split by SHIFT/MASK — top b bits index the register, the
@@ -37,7 +47,12 @@ object Sketches {
    */
   def hllDistinct(df: DataFrame, groupCol: String, valueCol: String,
       b: Int = 8): DataFrame =
-    hllEstimate(hllRegisters(df, groupCol, valueCol, b), b)
+    // the aggregate skips nulls itself; the filter also drops a group
+    // of only nulls, which has no register rows either
+    df.filter(col(valueCol).isNotNull)
+      .groupBy(col(groupCol).as("g")).agg(aggregate(
+        graft.functions.HllSketchAgg(expr(col(valueCol).cast("string")), b))
+        .as("est_distinct"))
 
   private def requireB(b: Int): Unit =
     require(b >= 4 && b <= 12,
@@ -55,30 +70,14 @@ object Sketches {
     // 60 hash bits; top b index the register, next 48 are the value
     val h60 = conv(substring(md5(col(valueCol)), 1, 15), 16, 10)
       .cast("long")
-    df.select(col(groupCol).as("g"),
+    df.filter(col(valueCol).isNotNull)
+      .select(col(groupCol).as("g"),
         shiftright(h60, 60 - b).as("bucket"),
         shiftright(h60, 12 - b).bitwiseAND(lit((1L << 48) - 1)).as("v"))
       .withColumn("rho",
         when(col("v") === 0, lit(49L))
           .otherwise(lit(49L) - length(bin(col("v")))))
       .groupBy("g", "bucket").agg(max("rho").as("rmax"))
-  }
-
-  /** [[hllDistinct]] through the NATIVE
-    * [[graft.functions.HllSketchAgg]] aggregate: one 2^b-byte buffer
-    * per group as the whole agg state (vs up to m register ROWS per
-    * group per partition in the declarative form) — the serve-path
-    * profile aggregate when groups are many; bit-identical estimates
-    * (spec-pinned). */
-  def hllDistinctNative(df: DataFrame, groupCol: String, valueCol: String,
-      b: Int = 8): DataFrame = {
-    requireB(b)
-    import org.apache.spark.sql.GraftSqlBridge
-    val agg = GraftSqlBridge.column(
-      graft.functions.HllSketchAgg(
-        GraftSqlBridge.expression(col(valueCol).cast("string")), b)
-        .toAggregateExpression())
-    df.groupBy(col(groupCol).as("g")).agg(agg.as("est_distinct"))
   }
 
   /** Merge shard register tables (union + per-register max). */
@@ -104,7 +103,8 @@ object Sketches {
           .otherwise(col("e_raw"))).cast("long").as("est_distinct"))
   }
 
-  /** The [[hllDistinct]] recurrence as oracle SQL over rows (g, val). */
+  /** The [[hllDistinct]] recurrence as oracle SQL over rows (g, val),
+    * null values skipped. */
   def hllDistinctSql(fromClause: String, gCol: String, vCol: String): String = {
     val m = 256
     val alpha = 0.7213 / (1.0 + 1.079 / m)
@@ -115,7 +115,7 @@ object Sketches {
        |  SELECT $gCol AS g,
        |    CAST(('0x' || substr(md5($vCol), 1, 2)) AS BIGINT) AS bucket,
        |    CAST(('0x' || substr(md5($vCol), 3, 12)) AS BIGINT) AS v
-       |  FROM $fromClause),
+       |  FROM $fromClause WHERE $vCol IS NOT NULL),
        |hrho AS (
        |  SELECT g, bucket,
        |    MAX(CASE WHEN v = 0 THEN 49 ELSE 49 - length(bin(v)) END) AS rmax
@@ -233,6 +233,10 @@ object Sketches {
         + pow(lit(2.0), s).cast("long") - 1)
   }
 
+  private def requireK(k: Int): Unit =
+    require(k >= 1 && k <= 16,
+      s"k = $k out of range: need 1 <= k <= 16 sub-bucket bits")
+
   /**
    * The quantile sketch STATE: (g, idx, cnt) bucket rows — at most
    * ~2k rows per group for 64-bit values, map-side combinable like
@@ -240,36 +244,15 @@ object Sketches {
    * re-sum into the combined corpus's state (sum is associative), so
    * incremental ingest folds each shard's bucket rows and never
    * re-scans the corpus — the same at-rest contract as
-   * [[hllRegisters]].
+   * [[hllRegisters]]. Null values are skipped.
    */
   def quantileBuckets(df: DataFrame, groupCol: String, valueCol: String,
-      k: Int = QSubBits): DataFrame =
-    df.select(col(groupCol).as("g"),
+      k: Int = QSubBits): DataFrame = {
+    requireK(k)
+    df.filter(col(valueCol).isNotNull)
+      .select(col(groupCol).as("g"),
         qsBucket(col(valueCol).cast("long"), k).as("idx"))
       .groupBy("g", "idx").agg(count(lit(1)).as("cnt"))
-
-  /** [[quantileBuckets]] through the NATIVE
-    * [[graft.functions.QuantileSketchAgg]] aggregate: one ~2k-entry
-    * bucket map per group as the whole partial state — identical
-    * bucket ids and counts (spec-pinned), feeding the same
-    * merge/estimate algebra. MEASURED NOTE (sketch stress, 100k
-    * groups): the DECLARATIVE bucket build is the faster default here
-    * (1.7 s vs 2.4 s) — its keyspace is already bounded (~2k buckets/
-    * group) so codegen'd HashAggregate partials beat the object-state
-    * aggregate, unlike HLL/KMV whose declarative forms carry
-    * register-table rows or a full distinct shuffle. Prefer
-    * [[quantileBuckets]] unless per-partition group×bucket fan-out is
-    * the proven bottleneck. */
-  def quantileBucketsNative(df: DataFrame, groupCol: String,
-      valueCol: String, k: Int = QSubBits): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val agg = GraftSqlBridge.column(
-      graft.functions.QuantileSketchAgg(
-        GraftSqlBridge.expression(col(valueCol).cast("long")), k)
-        .toAggregateExpression())
-    df.groupBy(col(groupCol).as("g")).agg(agg.as("__b"))
-      .select(col("g"), explode(col("__b")).as("b"))
-      .select(col("g"), col("b.idx").as("idx"), col("b.cnt").as("cnt"))
   }
 
   /** Merge shard bucket states (union + per-bucket sum). */
@@ -289,22 +272,27 @@ object Sketches {
    * corpus-sized sort.
    */
   def quantileEstimate(sketch: DataFrame, percentiles: Seq[Int],
-      k: Int = QSubBits): DataFrame = {
+      k: Int = QSubBits): DataFrame =
+    rankHits(sketch, percentiles, k)
+      .select(col("g"), col("p"), qsUpper(col("idx"), k).as("est_value"))
+
+  /** The rank step of both estimates: (g, p, idx) — the bucket each
+    * requested percentile lands in. */
+  private def rankHits(sketch: DataFrame, percentiles: Seq[Int],
+      k: Int): DataFrame = {
+    requireK(k)
     require(percentiles.nonEmpty &&
       percentiles.forall(p => p >= 1 && p <= 100),
       s"percentiles must be in [1, 100]: $percentiles")
     val spark = sketch.sparkSession
     import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("g").orderBy("idx")
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("g")
     sketch
-      .withColumn("cum", sum("cnt").over(w))
-      .withColumn("n", sum("cnt").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("g")))
+      .withColumn("cum", sum("cnt").over(w.orderBy("idx")))
+      .withColumn("n", sum("cnt").over(w))
       .crossJoin(broadcast(percentiles.toDF("p")))
       .filter(col("cum") * 100 >= col("n") * col("p") &&
         (col("cum") - col("cnt")) * 100 < col("n") * col("p"))
-      .select(col("g"), col("p"), qsUpper(col("idx"), k).as("est_value"))
   }
 
   // ---- signed / fixed-point quantile domain (r10) ----
@@ -339,16 +327,19 @@ object Sketches {
    * identical on Spark and a SQL oracle), which opens the robust-trim
    * pattern to float quality/LM scores, the columns a curation pass
    * actually trims on. Same (g, idx, cnt) mergeable state as
-   * [[quantileBuckets]]: shard states union + re-sum exactly.
+   * [[quantileBuckets]]: shard states union + re-sum exactly. Null
+   * values are skipped.
    */
   def quantileBucketsSigned(df: DataFrame, groupCol: String,
       valueCol: String, scaleDigits: Int = 6,
       k: Int = QSubBits): DataFrame = {
+    requireK(k)
     require(scaleDigits >= 0 && scaleDigits <= 15,
       s"scaleDigits $scaleDigits out of range")
     val fx = round(col(valueCol).cast("double")
       * lit(math.pow(10, scaleDigits))).cast("long")
-    df.select(col(groupCol).as("g"), qsBucketSigned(fx, k).as("idx"))
+    df.filter(col(valueCol).isNotNull)
+      .select(col(groupCol).as("g"), qsBucketSigned(fx, k).as("idx"))
       .groupBy("g", "idx").agg(count(lit(1)).as("cnt"))
   }
 
@@ -359,26 +350,13 @@ object Sketches {
     * at presentation — both engines divide identical integers, so
     * even the float presentation hash-matches. */
   def quantileEstimateSigned(sketch: DataFrame, percentiles: Seq[Int],
-      k: Int = QSubBits): DataFrame = {
-    require(percentiles.nonEmpty &&
-      percentiles.forall(p => p >= 1 && p <= 100),
-      s"percentiles must be in [1, 100]: $percentiles")
-    val spark = sketch.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("g").orderBy("idx")
-    sketch
-      .withColumn("cum", sum("cnt").over(w))
-      .withColumn("n", sum("cnt").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("g")))
-      .crossJoin(broadcast(percentiles.toDF("p")))
-      .filter(col("cum") * 100 >= col("n") * col("p") &&
-        (col("cum") - col("cnt")) * 100 < col("n") * col("p"))
+      k: Int = QSubBits): DataFrame =
+    rankHits(sketch, percentiles, k)
       .select(col("g"), col("p"), qsUpperSigned(col("idx"), k).as("est_fx"))
-  }
 
   /** The signed fixed-point sketch-and-estimate recurrence as oracle
-    * SQL CTEs (CTE names prefixed `sq`) over rows (g, double expr) —
+    * SQL CTEs (CTE names prefixed `sq`) over rows (g, double expr),
+    * null values skipped —
     * the identical fixed-point/sign-split/rank integer algebra, so
     * `sqest(g, p, est_fx)` hash-matches [[quantileEstimateSigned]]
     * cell-for-cell. */
@@ -398,7 +376,7 @@ object Sketches {
     s"""sqraw AS (
        |  SELECT $gCol AS g,
        |    CAST(ROUND(CAST($vExpr AS DOUBLE) * $scale) AS BIGINT) AS fx
-       |  FROM $fromClause),
+       |  FROM $fromClause WHERE ($vExpr) IS NOT NULL),
        |sqabs AS (
        |  SELECT g, CASE WHEN fx >= 0 THEN 1 ELSE -1 END AS sgn,
        |    ABS(fx) AS x
@@ -430,15 +408,16 @@ object Sketches {
   }
 
   /** The full sketch-and-estimate recurrence as oracle SQL CTEs over
-    * rows (g, val >= 0) — the identical integer bucket/rank algebra,
-    * so estimates hash-match across engines. */
+    * rows (g, val >= 0), null values skipped — the identical integer
+    * bucket/rank algebra, so estimates hash-match across engines. */
   def quantileSketchSql(fromClause: String, gCol: String, vCol: String,
       percentiles: Seq[Int], k: Int = QSubBits): String = {
     val twoK = 1L << k
     val exact = 1L << (k + 1)
     val ps = percentiles.mkString(", ")
     s"""qraw AS (
-       |  SELECT $gCol AS g, CAST($vCol AS BIGINT) AS x FROM $fromClause),
+       |  SELECT $gCol AS g, CAST($vCol AS BIGINT) AS x FROM $fromClause
+       |  WHERE $vCol IS NOT NULL),
        |qidx AS (
        |  SELECT g,
        |    CASE WHEN x < $exact THEN x
@@ -474,47 +453,27 @@ object Sketches {
   /**
    * KMV bottom-k sketch STATE: (g, h) — the k smallest DISTINCT
    * 48-bit md5 hashes per group (theta-sketch shape, Dasgupta et al.
-   * "Theta sketch framework", Beyer et al. 2007 KMV). The per-group
-   * rank filter plans as WindowGroupLimit (per-partition top-k
-   * heaps), so the shuffle carries O(groups * k) rows, never the
-   * value space. Mergeable EXACTLY: any hash in the union's bottom-k
-   * is in its own shard's bottom-k, so [[kmvMerge]] of shard states
-   * reproduces the full-corpus sketch bit for bit.
+   * "Theta sketch framework", Beyer et al. 2007 KMV), null values
+   * skipped. Built by [[graft.functions.KmvSketchAgg]], whose state
+   * discards every hash above its k-th as it goes, so the shuffle
+   * carries O(k) longs per group per partition, never the value space.
+   * Mergeable EXACTLY: any hash in the union's bottom-k is in its own
+   * shard's bottom-k, so [[kmvMerge]] of shard states reproduces the
+   * full-corpus sketch bit for bit.
    */
   def kmvSketch(df: DataFrame, groupCol: String, valueCol: String,
-      k: Int = 64): DataFrame = {
-    require(k >= 2, s"k = $k too small for a KMV sketch")
-    val hashed = df.select(col(groupCol).as("g"),
-      conv(substring(md5(col(valueCol)), 1, 12), 16, 10)
-        .cast("long").as("h")).distinct()
-    bottomK(hashed, k)
-  }
-
-  /** [[kmvSketch]] through the NATIVE
-    * [[graft.functions.KmvSketchAgg]] aggregate: bounded k-smallest
-    * state per group per partition (O(k) longs shipped) instead of a
-    * distinct() of the whole value space feeding a rank window — the
-    * build shape for the 100 TB profile pass; row-identical output
-    * (spec-pinned). */
-  def kmvSketchNative(df: DataFrame, groupCol: String, valueCol: String,
-      k: Int = 64): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val agg = GraftSqlBridge.column(
-      graft.functions.KmvSketchAgg(
-        GraftSqlBridge.expression(col(valueCol).cast("string")), k)
-        .toAggregateExpression())
-    df.groupBy(col(groupCol).as("g")).agg(agg.as("__hs"))
+      k: Int = 64): DataFrame =
+    df.groupBy(col(groupCol).as("g")).agg(aggregate(
+      graft.functions.KmvSketchAgg(expr(col(valueCol).cast("string")), k))
+      .as("__hs"))
       .select(col("g"), explode(col("__hs")).as("h"))
-  }
 
   /** Merge shard sketches (union + distinct + re-bottom-k — exact). */
-  def kmvMerge(k: Int)(sketches: DataFrame*): DataFrame =
-    bottomK(sketches.reduce(_.unionByName(_)).distinct(), k)
-
-  private def bottomK(hashes: DataFrame, k: Int): DataFrame = {
+  def kmvMerge(k: Int)(sketches: DataFrame*): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("g").orderBy("h")
-    hashes.withColumn("rk", row_number().over(w))
+    sketches.reduce(_.unionByName(_)).distinct()
+      .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k).select("g", "h")
   }
 
@@ -590,18 +549,14 @@ object Sketches {
     * n_g/(k+1) threshold inputs from ONE scan, so the exact
     * heavy-hitter paths need two passes total, not three. */
   def mgCandidatesWithTotals(df: DataFrame, groupCol: String,
-      valueCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val agg = GraftSqlBridge.column(
-      graft.functions.MisraGriesAgg(
-        GraftSqlBridge.expression(col(valueCol).cast("string")), k)
-        .toAggregateExpression())
+      valueCol: String, k: Int): DataFrame =
     df.groupBy(col(groupCol).as("g"))
-      .agg(agg.as("__mg"), count(lit(1)).as("n"))
+      .agg(aggregate(graft.functions.MisraGriesAgg(
+          expr(col(valueCol).cast("string")), k)).as("__mg"),
+        count(lit(1)).as("n"))
       .select(col("g"), col("n"), explode(col("__mg")).as("c"))
       .select(col("g"), col("n"), col("c.item").as("item"),
         col("c.est").as("est"))
-  }
 
   /** Fold persisted per-shard Misra-Gries summaries — (g, item, est)
     * rows, <= k per (shard-scoped) group — into combined per-group
@@ -613,17 +568,13 @@ object Sketches {
     * register tables, KMV bottom-k rows and quantile buckets. Shard
     * scoping lives in the caller's `g` values: fold shards of one
     * logical group by mapping them to the same `g` first. */
-  def mgMerge(summaries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val agg = GraftSqlBridge.column(
-      graft.functions.MisraGriesWeightedAgg(
-        GraftSqlBridge.expression(col("item").cast("string")),
-        GraftSqlBridge.expression(col("est").cast("long")), k)
-        .toAggregateExpression())
-    summaries.groupBy(col("g")).agg(agg.as("__mg"))
+  def mgMerge(summaries: DataFrame, k: Int): DataFrame =
+    summaries.groupBy(col("g"))
+      .agg(aggregate(graft.functions.MisraGriesWeightedAgg(
+        expr(col("item").cast("string")), expr(col("est").cast("long")), k))
+        .as("__mg"))
       .select(col("g"), explode(col("__mg")).as("c"))
       .select(col("g"), col("c.item").as("item"), col("c.est").as("est"))
-  }
 
   /** EXACT heavy hitters — items with true count strictly above
     * n/(k+1) — in two bounded passes: a global Misra-Gries summary

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AdjacentPairs, CharPairs, DotProduct, HllSketchAgg, KmvSketchAgg, MergePair, MisraGriesAgg, MisraGriesWeightedAgg, NGramShingles, NormalizeNfc, QuantileSketchAgg, RepetitionStats}
+import graft.functions.{AdjacentPairs, CharPairs, DotProduct, HllSketchAgg, KmvSketchAgg, MergePair, MisraGriesAgg, MisraGriesWeightedAgg, NGramShingles, NormalizeNfc, RepetitionStats}
 
 /**
  * SparkSessionExtensions entry point: registers the engine's native
@@ -83,10 +83,6 @@ object GraftExtensions {
     ("graft_kmv", classOf[KmvSketchAgg],
       arity("graft_kmv", 2)(es =>
         KmvSketchAgg(es.head, literalInt("graft_kmv", es(1))))),
-    ("graft_quantile_sketch", classOf[QuantileSketchAgg],
-      arity("graft_quantile_sketch", 2)(es =>
-        QuantileSketchAgg(es.head,
-          literalInt("graft_quantile_sketch", es(1))))),
     ("graft_heavy_hitters", classOf[MisraGriesAgg],
       arity("graft_heavy_hitters", 2)(es =>
         MisraGriesAgg(es.head, literalInt("graft_heavy_hitters", es(1))))),

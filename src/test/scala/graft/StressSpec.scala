@@ -56,4 +56,29 @@ class StressSpec extends SparkSpec {
     assert(json.get("peak_task_memory_bytes").asLong > 0L)
     assert(spark.range(10).count() == 10L)
   }
+
+  test("sketch through the mode table: one JSON line in the documented " +
+      "key order, every drift 0") {
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out)(Stress.run(spark, Seq("sketch", "2000"), 4))
+    val lines = out.toString("UTF-8").split("\n").filter(_.startsWith("{"))
+    assert(lines.length == 1, lines.mkString("\n"))
+    val json = new ObjectMapper().readTree(lines.head)
+    val keys = json.fieldNames().asScala.toSeq
+    assert(keys == Seq("metric", "docs", "hll_sec", "hll_groups",
+      "hll_many_groups", "hll_many_decl_sec", "hll_many_native_sec",
+      "hll_native_drift", "kmv_native_sec", "kmv_rows", "kmv_merge_drift",
+      "cm_sec", "cm_build_sec", "cm_probe_sec", "cm_cells",
+      "cm_heavy_confirmed", "merge_check_sec", "register_drift",
+      "quantile_sec", "quantile_buckets", "quantile_rows",
+      "quantile_merge_sec", "quantile_drift", "mg_heavy_sec",
+      "mg_exact_sec", "mg_heavy_rows"))
+    assert(json.get("metric").asText == "stress_sketch" &&
+      json.get("docs").asLong == 2000L && json.get("hll_groups").asLong == 8L &&
+      json.get("kmv_rows").asLong == 8L * 64)
+    val drifts = keys.filter(_.endsWith("_drift"))
+    assert(drifts.size == 4)
+    drifts.foreach(d => assert(json.get(d).asLong == 0L, d))
+    assert(spark.range(10).count() == 10L)
+  }
 }

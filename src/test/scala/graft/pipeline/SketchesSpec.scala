@@ -282,8 +282,8 @@ class SketchesSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("hllDistinctNative: native byte-buffer aggregate lands on the " +
-      "register-table estimates EXACTLY, through forced partial merges") {
+  test("hllDistinct: the aggregate build lands on the register-table " +
+      "estimates EXACTLY, through forced partial merges") {
     for (b <- Seq(4, 8, 12)) {
       // many groups + 17-way repartition: every group's buffer is
       // built from multiple partials, exercising the byte-wise merge
@@ -291,42 +291,84 @@ class SketchesSpec extends SparkSpec {
         concat(lit("g"), col("id") % 23).as("g"),
         concat(lit("v"), col("id")).as("v"))
         .repartition(17)
-      val declarative = Sketches.hllDistinct(df, "g", "v", b)
+      val registers = Sketches.hllEstimate(
+          Sketches.hllRegisters(df, "g", "v", b), b)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val native = Sketches.hllDistinctNative(df, "g", "v", b)
+      val built = Sketches.hllDistinct(df, "g", "v", b)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(native == declarative, s"b=$b")
+      assert(built == registers, s"b=$b")
     }
     assertThrows[IllegalArgumentException](
-      Sketches.hllDistinctNative(
+      Sketches.hllDistinct(
         spark.range(1).select(lit("g").as("g"), lit("x").as("v")),
         "g", "v", b = 13))
   }
 
-  test("quantileBucketsNative: bucket-map aggregate equals the " +
-      "declarative bucket rows exactly, estimates unchanged") {
-    // full exponent spread incl. sub-2^(k+1) exact values, multiple
-    // groups, forced partial merges
-    val df = spark.range(80000).select(
-      concat(lit("g"), col("id") % 5).as("g"),
-      (col("id") * col("id") % 9999991L).as("x"))
-      .repartition(11)
-    val decl = Sketches.quantileBuckets(df, "g", "x")
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val native = Sketches.quantileBucketsNative(df, "g", "x")
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    assert(native == decl)
-    val eDecl = Sketches.quantileEstimate(
-        Sketches.quantileBuckets(df, "g", "x"), Seq(50, 95, 99))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2))
-      .toMap
-    val eNat = Sketches.quantileEstimate(
-        Sketches.quantileBucketsNative(df, "g", "x"), Seq(50, 95, 99))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2))
-      .toMap
-    assert(eNat == eDecl)
+  test("null values are skipped by every sketch build") {
+    // one group of 200 distinct values, and the same rows plus a null
+    val clean = spark.range(200).select(lit("g").as("g"),
+      concat(lit("z"), col("id")).as("v"), col("id").as("x"),
+      ((col("id") - 100) / 7.0).as("s"))
+    val withNull = clean.union(spark.range(1).select(lit("g").as("g"),
+      lit(null).cast("string").as("v"), lit(null).cast("long").as("x"),
+      lit(null).cast("double").as("s")))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+    // HLL: no null register row; the aggregate equals the register
+    // estimate and the null-free estimate
+    assert(rows(Sketches.hllRegisters(withNull, "g", "v")) ==
+      rows(Sketches.hllRegisters(clean, "g", "v")))
+    val hll = rows(Sketches.hllDistinct(withNull, "g", "v"))
+    assert(hll == rows(Sketches.hllEstimate(
+      Sketches.hllRegisters(withNull, "g", "v"))))
+    assert(hll == rows(Sketches.hllDistinct(clean, "g", "v")))
+    // KMV (k = 8): no null hash in the first slot, and the shard fold
+    // (the null in the first half) equals the full build
+    val kmv = rows(Sketches.kmvSketch(withNull, "g", "v", 8))
+    assert(kmv.size == 8 && kmv == rows(Sketches.kmvSketch(clean, "g", "v", 8)))
+    val even = coalesce(col("x"), lit(0L)) % 2 === 0
+    assert(rows(Sketches.kmvMerge(8)(
+      Sketches.kmvSketch(withNull.filter(even), "g", "v", 8),
+      Sketches.kmvSketch(withNull.filter(!even), "g", "v", 8))) == kmv)
+    // a group of only nulls has no sketch rows in any build
+    val onlyNull = withNull.filter(col("v").isNull).withColumn("g", lit("n"))
+    for (sketch <- Seq(Sketches.hllDistinct(onlyNull, "g", "v"),
+        Sketches.hllRegisters(onlyNull, "g", "v"),
+        Sketches.kmvSketch(onlyNull, "g", "v"),
+        Sketches.quantileBuckets(onlyNull, "g", "x"),
+        Sketches.quantileBucketsSigned(onlyNull, "g", "s")))
+      assert(sketch.count() == 0)
+    // quantiles: no null bucket counts toward n or any rank
+    val ps = Seq(1, 50, 99)
+    assert(rows(Sketches.quantileEstimate(
+        Sketches.quantileBuckets(withNull, "g", "x"), ps)) ==
+      rows(Sketches.quantileEstimate(
+        Sketches.quantileBuckets(clean, "g", "x"), ps)))
+    assert(rows(Sketches.quantileEstimateSigned(
+        Sketches.quantileBucketsSigned(withNull, "g", "s"), ps)) ==
+      rows(Sketches.quantileEstimateSigned(
+        Sketches.quantileBucketsSigned(clean, "g", "s"), ps)))
+  }
+
+  test("quantile k outside [1, 16] is refused, naming k") {
+    val df = spark.range(10).select(lit("g").as("g"), col("id").as("x"))
+    for (k <- Seq(-1, 0, 17)) {
+      val msgs = Seq(
+        intercept[IllegalArgumentException](
+          Sketches.quantileBuckets(df, "g", "x", k)),
+        intercept[IllegalArgumentException](
+          Sketches.quantileBucketsSigned(df, "g", "x", k = k)),
+        intercept[IllegalArgumentException](Sketches.quantileEstimate(
+          Sketches.quantileBuckets(df, "g", "x"), Seq(50), k)),
+        intercept[IllegalArgumentException](Sketches.quantileEstimateSigned(
+          Sketches.quantileBucketsSigned(df, "g", "x"), Seq(50), k)))
+        .map(_.getMessage)
+      assert(msgs.forall(_.contains(s"k = $k")), msgs.mkString("; "))
+    }
+    // both ends of the range build
+    for (k <- Seq(1, 16))
+      assert(Sketches.quantileEstimate(
+        Sketches.quantileBuckets(df, "g", "x", k), Seq(50), k).count() == 1)
   }
 
   test("misra-gries: survivor guarantee holds under forced partial " +
@@ -468,23 +510,30 @@ class SketchesSpec extends SparkSpec {
     assert(merged.toSeq == full.toSeq)
   }
 
-  test("kmvSketchNative: bounded-state aggregate build is row-identical " +
-      "to the declarative distinct+window bottom-k") {
+  test("kmvSketch: the bounded-state aggregate build equals a " +
+      "brute-force bottom-k of the md5 hashes") {
     // duplicates + 13-way repartition force dedup inside the buffer
     // and k-th displacement across partial merges
     val df = spark.range(30000).select(
       concat(lit("g"), col("id") % 7).as("g"),
       concat(lit("n"), col("id") % 9000).as("v"))
       .repartition(13)
-    val decl = Sketches.kmvSketch(df, "g", "v")
+    // md5 -> first 12 hex digits -> the k smallest distinct per group
+    def h48(v: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(v.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12), 16)
+    val want = (0 until 30000).map(i => (s"g${i % 7}", s"n${i % 9000}"))
+      .groupBy(_._1).toSeq
+      .flatMap { case (g, vs) =>
+        vs.map(v => h48(v._2)).distinct.sorted.take(64).map(g -> _) }
+      .sorted
+    val built = Sketches.kmvSketch(df, "g", "v")
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    val native = Sketches.kmvSketchNative(df, "g", "v")
-      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(native == decl)
+    assert(built == want)
     // small groups (below k): the buffer holds the whole distinct set
     val tiny = spark.range(10).select(lit("t").as("g"),
       concat(lit("x"), col("id")).as("v"))
-    assert(Sketches.kmvSketchNative(tiny, "g", "v").count() == 10)
+    assert(Sketches.kmvSketch(tiny, "g", "v").count() == 10)
   }
 
   test("kmvSetOps: identical sets give jaccard 1, disjoint give 0; " +

@@ -42,12 +42,6 @@ class GraftExtensionsSpec extends SparkSpec {
       "SELECT graft_kmv(x, 16) FROM (SELECT CAST(id AS STRING) AS x FROM range(0, 500))")
       .head.getSeq[Long](0)
     assert(kmv.length == 16 && kmv == kmv.sorted && kmv.distinct.length == 16)
-    // quantile sketch: bucket structs, counts sum to n
-    val qs = spark.sql(
-      """SELECT graft_quantile_sketch(x, 5) FROM (
-        |  SELECT id * id % 10000 AS x FROM range(0, 1000))""".stripMargin)
-      .head.getSeq[org.apache.spark.sql.Row](0)
-    assert(qs.map(_.getLong(1)).sum == 1000L)
     // Misra-Gries: the heavy token survives in the candidate set
     val mg = spark.sql(
       """SELECT graft_heavy_hitters(t, 4) FROM (
