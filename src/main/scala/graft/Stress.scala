@@ -1768,30 +1768,30 @@ object Stress {
     val many = docs.select((col("id") % math.max(nDocs / 10, 1L))
         .cast("string").as("g"),
       explode(split(col("text"), " ")).as("tok"))
-    val (tManyDecl, (declRes, nManyDecl)) = built(
+    val (tManyReg, (regRes, nManyReg)) = built(
       Sketches.hllEstimate(Sketches.hllRegisters(many, "g", "tok")))
-    val (tManyNat, (natRes, nManyNat)) = built(Sketches.hllDistinct(many, "g", "tok"))
-    val natDrift = drift(natRes, declRes)
-    declRes.unpersist(blocking = false)
-    natRes.unpersist(blocking = false)
-    require(natDrift == 0, s"aggregate-vs-register HLL drift: $natDrift")
-    require(nManyDecl == nManyNat)
+    val (tMany, (aggRes, nMany)) = built(Sketches.hllDistinct(many, "g", "tok"))
+    val aggDrift = drift(aggRes, regRes)
+    regRes.unpersist(blocking = false)
+    aggRes.unpersist(blocking = false)
+    require(aggDrift == 0, s"aggregate-vs-register HLL drift: $aggDrift")
+    require(nManyReg == nMany)
 
     // KMV: the bounded-state build ships O(k) longs per group per
     // partition; bottom-k of the two doc halves, folded through
     // kmvMerge, must equal the full-corpus sketch
-    val (tKvNat, (kvNat, nKvNat)) = built(Sketches.kmvSketch(tokRows, "g", "tok"))
+    val (tKv, (kv, nKv)) = built(Sketches.kmvSketch(tokRows, "g", "tok"))
     val kvDrift = drift(Sketches.kmvMerge(64)(
       Sketches.kmvSketch(tokensOf(docs.filter(even)), "g", "tok"),
-      Sketches.kmvSketch(tokensOf(docs.filter(!even)), "g", "tok")), kvNat)
-    kvNat.unpersist(blocking = false)
+      Sketches.kmvSketch(tokensOf(docs.filter(!even)), "g", "tok")), kv)
+    kv.unpersist(blocking = false)
     require(kvDrift == 0, s"KMV shard-fold drift: $kvDrift rows")
 
     println(s"""{"metric":"stress_sketch","docs":$nDocs,""" +
       s""""hll_sec":$tHll,"hll_groups":$nHll,""" +
-      s""""hll_many_groups":$nManyNat,"hll_many_decl_sec":$tManyDecl,""" +
-      s""""hll_many_native_sec":$tManyNat,"hll_native_drift":$natDrift,""" +
-      s""""kmv_native_sec":$tKvNat,"kmv_rows":$nKvNat,"kmv_merge_drift":$kvDrift,""" +
+      s""""hll_many_groups":$nMany,"hll_many_register_sec":$tManyReg,""" +
+      s""""hll_many_sec":$tMany,"hll_register_drift":$aggDrift,""" +
+      s""""kmv_sec":$tKv,"kmv_rows":$nKv,"kmv_merge_drift":$kvDrift,""" +
       s""""cm_sec":$tCm,"cm_build_sec":$tCmBuild,"cm_probe_sec":$tCmProbe,""" +
       s""""cm_cells":$nCells,"cm_heavy_confirmed":$nCm,""" +
       s""""merge_check_sec":$tMerge,"register_drift":$regDrift,""" +

@@ -66,8 +66,8 @@ class StressSpec extends SparkSpec {
     val json = new ObjectMapper().readTree(lines.head)
     val keys = json.fieldNames().asScala.toSeq
     assert(keys == Seq("metric", "docs", "hll_sec", "hll_groups",
-      "hll_many_groups", "hll_many_decl_sec", "hll_many_native_sec",
-      "hll_native_drift", "kmv_native_sec", "kmv_rows", "kmv_merge_drift",
+      "hll_many_groups", "hll_many_register_sec", "hll_many_sec",
+      "hll_register_drift", "kmv_sec", "kmv_rows", "kmv_merge_drift",
       "cm_sec", "cm_build_sec", "cm_probe_sec", "cm_cells",
       "cm_heavy_confirmed", "merge_check_sec", "register_drift",
       "quantile_sec", "quantile_buckets", "quantile_rows",
