@@ -64,10 +64,11 @@ object Bench {
     // Per-query isolation + steady-state timing. For each query: one
     // UNTIMED pass builds its shared working sets (columnar transpose,
     // dedup postings, kmeans codebooks) and JITs its codegen; the TIMED
-    // pass then measures the query warm; afterwards every shared cache
-    // and persisted frame is dropped so nothing bleeds into the next
-    // query's window. This keeps per-query numbers comparable run-over-
-    // run (warm marginal cost, the regime a resident service runs in)
+    // pass then measures the query warm; afterwards every persisted
+    // working set is dropped (Queries.clearCache) so nothing bleeds into
+    // the next query's window; on-disk fixtures and metadata stay
+    // built. This keeps per-query numbers comparable run-over-run
+    // (warm marginal cost, the regime a resident service runs in)
     // without the old single-session shape where 95 accumulated caches
     // turned later timings into GC noise. Cold-start costs are the
     // stress runs' job, not the bench's.

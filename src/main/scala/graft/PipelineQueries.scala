@@ -1,10 +1,10 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Memo
 import graft.pipeline._
 
 /**
@@ -1010,43 +1010,26 @@ object PipelineQueries {
     * q_dedup_components and q_clean_pipeline all consume these instead
     * of re-deriving them from parquet (the round-2 bench recomputed the
     * pair join three times per run). Same lifecycle as
-    * [[Queries.columnar]]: built under a lock, dropped by
-    * [[clearCache]] at end of a Verify/Bench run. */
+    * [[Queries.columnar]]: built once ([[Memo.once]]), unpersisted by
+    * [[Queries.clearCache]] at end of a Verify/Bench run. */
   private final case class DedupWorkingSet(post: DataFrame, pairs: DataFrame) {
     /** Component labels over the pairs — runs the iterative CC loop on
       * first use (localCheckpoint-backed, so no extra persist needed). */
     lazy val comps: DataFrame = Dedup.connectedComponents(pairs)
-  }
 
-  private val dedupCache =
-    TrieMap.empty[(SparkSession, String), DedupWorkingSet]
+    def unpersist(): Unit = {
+      post.unpersist(blocking = false)
+      pairs.unpersist(blocking = false)
+    }
+  }
 
   private def dedupShared(spark: SparkSession, dir: String): DedupWorkingSet =
-    dedupCache.synchronized {
-      dedupCache.getOrElseUpdate((spark, dir), {
-        val post = Dedup.cappedPostings(nearDupCorpus(spark, dir),
-          "doc_id", "text", HotTokenCap).persist()
-        val pairs = Dedup.jaccardFromPostings(post, 0.5).persist()
-        DedupWorkingSet(post, pairs)
-      })
+    Memo.once(("dedup", spark, dir), (ws: DedupWorkingSet) => ws.unpersist()) {
+      val post = Dedup.cappedPostings(nearDupCorpus(spark, dir),
+        "doc_id", "text", HotTokenCap).persist()
+      val pairs = Dedup.jaccardFromPostings(post, 0.5).persist()
+      DedupWorkingSet(post, pairs)
     }
-
-  private[graft] def clearCache(): Unit = {
-    dedupCache.synchronized {
-      dedupCache.values.foreach { ws =>
-        ws.post.unpersist(blocking = false)
-        ws.pairs.unpersist(blocking = false)
-      }
-      dedupCache.clear()
-    }
-    kmeansCache.synchronized(kmeansCache.clear())
-    ivfPqCache.synchronized {
-      ivfPqCache.values.foreach(_.assigned.unpersist(blocking = false))
-      ivfPqCache.clear()
-    }
-    VecIndex.clearBookMemo()
-    Similarity.releaseRetained()
-  }
 
   /** Token-set Jaccard near-dup pairs (inverted-index join), j >= 0.5,
     * hot tokens (df > cap) excluded on both sides. */
@@ -1100,13 +1083,6 @@ object PipelineQueries {
        |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5
        |ORDER BY 1, 2""".stripMargin
 
-  /** Per-JVM at-rest dedup working sets ([[dedupJaccardRest]]): keyed
-    * by sf dir; on-disk state under target/tmp, so the bench's untimed
-    * warm pass absorbs the init+folds and the timed pass measures the
-    * pairs RESOLVE. */
-  private val jacRestFixture =
-    TrieMap.empty[(SparkSession, String), Dedup.JaccardRest]
-
   /** Incremental Jaccard ingest AT REST, oracle-certified end to end:
     * the near-dup corpus is split into three disjoint shards by
     * doc_id % 3 (each truncated copy at id+10000 lands in a DIFFERENT
@@ -1116,20 +1092,21 @@ object PipelineQueries {
     * [[Dedup.jaccardRestPairs]]. The oracle is the FULL-corpus Jaccard
     * SQL — the same oracle as q_dedup_jaccard — certifying that
     * incremental ingest converges to exactly the batch answer (the
-    * TextOpsSpec equivalence, now through the DuckDB gate). */
+    * TextOpsSpec equivalence, now through the DuckDB gate). The set is
+    * on-disk state under target/tmp, built once per JVM, so the bench's
+    * untimed warm pass absorbs the init+folds and the timed pass
+    * measures the pairs RESOLVE. */
   def dedupJaccardRest(spark: SparkSession, dir: String): DataFrame = {
-    val st = jacRestFixture.synchronized {
-      jacRestFixture.getOrElseUpdate((spark, dir), {
-        val path = "target/tmp/jacrest-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val corpus = nearDupCorpus(spark, dir)
-        val st0 = Dedup.jaccardRestInit(
-          corpus.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-          0.5, HotTokenCap, path)
-        val st1 = Dedup.jaccardRestMerge(st0,
-          corpus.filter(col("doc_id") % 3 === 1), "doc_id", "text")
-        Dedup.jaccardRestMerge(st1,
-          corpus.filter(col("doc_id") % 3 === 2), "doc_id", "text")
-      })
+    val st = Memo.once(("jacrest", spark, dir)) {
+      val path = "target/tmp/jacrest-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val corpus = nearDupCorpus(spark, dir)
+      val st0 = Dedup.jaccardRestInit(
+        corpus.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+        0.5, HotTokenCap, path)
+      val st1 = Dedup.jaccardRestMerge(st0,
+        corpus.filter(col("doc_id") % 3 === 1), "doc_id", "text")
+      Dedup.jaccardRestMerge(st1,
+        corpus.filter(col("doc_id") % 3 === 2), "doc_id", "text")
     }
     Dedup.jaccardRestPairs(spark, st).orderBy("ida", "idb")
   }
@@ -1188,22 +1165,10 @@ object PipelineQueries {
     * SERVE path. The on-disk path carries the session's identity hash
     * so two sessions in one JVM never overwrite each other's live
     * index (cache key and path key agree). */
-  private val searchFixture =
-    TrieMap.empty[(SparkSession, String), Search.Index]
-
-  /** On-disk binary-ANN index fixtures built this JVM — session-hash
-    * in the path, so concurrent sessions never share files. */
-  private val binIdxBuilt = TrieMap.empty[String, Unit]
-
   private def searchIndex(spark: SparkSession, dir: String): Search.Index =
-    searchFixture.synchronized {
-      searchFixture.getOrElseUpdate((spark, dir), {
-        val path = "target/tmp/searchidx-" +
-          java.lang.Integer.toHexString(System.identityHashCode(spark)) +
-          "-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        Search.writeIndex(Tables.read(spark, dir, "documents"),
-          "doc_id", "text", path)
-      })
+    Memo.once(("searchidx", spark, dir)) {
+      Search.writeIndex(Tables.read(spark, dir, "documents"),
+        "doc_id", "text", Queries.fixturePath(spark, dir, "searchidx"))
     }
 
   /** Conjunctive (AND) term search over the at-rest inverted index:
@@ -1539,38 +1504,33 @@ object PipelineQueries {
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val path = s"target/tmp/vtable-idxsync-$tag"
     val sp = s"$path-sidx"
-    idxSyncBuilt.synchronized {
-      idxSyncBuilt.getOrElseUpdate(path, {
-        Versioned.drop(spark, path)
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(sp))
-        val docs = Tables.read(spark, dir, "documents")
-        Versioned.append(docs.select("doc_id", "text", "lang"), path) // v1
-        Versioned.append(docs.filter(col("doc_id") % 5 === 0)
-          .select(col("doc_id"),
-            concat(col("text"), lit(" refreshed")).as("text"),
-            col("lang")), path)                                      // v2
-        Versioned.delete(docs.filter(col("doc_id") % 7 === 0)
-          .select("doc_id"), path)                                   // v3
-        // first drain: bootstrap fold (0, 3] into an EMPTY index
-        Search.writeIndex(docs.select("doc_id", "text", "lang").limit(0),
-          "doc_id", "text", sp)
-        IndexSync.syncSearch(spark, path, "doc_id", "text",
-          Search.open(spark, sp))
-        Versioned.restore(spark, path, "doc_id", 2)                  // v4
-        // second drain: the restore diff re-ingests the 7th docs
-        IndexSync.syncSearch(spark, path, "doc_id", "text",
-          Search.open(spark, sp))
-        ()
-      })
+    Memo.once(path) {
+      Versioned.drop(spark, path)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(sp))
+      val docs = Tables.read(spark, dir, "documents")
+      Versioned.append(docs.select("doc_id", "text", "lang"), path) // v1
+      Versioned.append(docs.filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id"),
+          concat(col("text"), lit(" refreshed")).as("text"),
+          col("lang")), path)                                      // v2
+      Versioned.delete(docs.filter(col("doc_id") % 7 === 0)
+        .select("doc_id"), path)                                   // v3
+      // first drain: bootstrap fold (0, 3] into an EMPTY index
+      Search.writeIndex(docs.select("doc_id", "text", "lang").limit(0),
+        "doc_id", "text", sp)
+      IndexSync.syncSearch(spark, path, "doc_id", "text",
+        Search.open(spark, sp))
+      Versioned.restore(spark, path, "doc_id", 2)                  // v4
+      // second drain: the restore diff re-ingests the 7th docs
+      IndexSync.syncSearch(spark, path, "doc_id", "text",
+        Search.open(spark, sp))
+      ()
     }
     Search.searchBm25(spark, Search.open(spark, sp),
         Seq("window", "merge", "refreshed"), topK = 20)
       .orderBy(col("score").desc, col("id"))
   }
-
-  private val idxSyncBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   val tableIndexSyncSql: String =
     s"""WITH u AS (
@@ -1621,29 +1581,27 @@ object PipelineQueries {
     val vp = s"$path-vidx"
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("k"), col("embedding").as("vec"))
-    idxSyncBuilt.synchronized {
-      idxSyncBuilt.getOrElseUpdate(path, {
-        Versioned.drop(spark, path)
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(vp))
-        Versioned.append(emb, path)                              // v1
-        Versioned.delete(emb.filter(col("k") % 9 === 0)
-          .select("k"), path)                                    // v2
-        // first drain: bootstrap fold (0, 2] into an EMPTY index
-        val centroids = emb.filter(col("k") < 8)
-          .select(col("k").as("cid"), col("vec").as("cvec"))
-        val vIdx = VecIndex.init(
-          emb.limit(0).select(col("k").as("id"), col("vec")), 64, vp,
-          centroids = Some(centroids), cbBuckets = 4)
-        IndexSync.syncVector(spark, path, "k", "vec", vIdx)
-        Versioned.restore(spark, path, "k", 1)                   // v3
-        Versioned.delete(emb.filter(col("k") % 7 === 0)
-          .select("k"), path)                                    // v4
-        // second drain: the restore re-ingests, the delete tombstones
-        IndexSync.syncVector(spark, path, "k", "vec",
-          VecIndex.open(spark, vp))
-        ()
-      })
+    Memo.once(path) {
+      Versioned.drop(spark, path)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(vp))
+      Versioned.append(emb, path)                              // v1
+      Versioned.delete(emb.filter(col("k") % 9 === 0)
+        .select("k"), path)                                    // v2
+      // first drain: bootstrap fold (0, 2] into an EMPTY index
+      val centroids = emb.filter(col("k") < 8)
+        .select(col("k").as("cid"), col("vec").as("cvec"))
+      val vIdx = VecIndex.init(
+        emb.limit(0).select(col("k").as("id"), col("vec")), 64, vp,
+        centroids = Some(centroids), cbBuckets = 4)
+      IndexSync.syncVector(spark, path, "k", "vec", vIdx)
+      Versioned.restore(spark, path, "k", 1)                   // v3
+      Versioned.delete(emb.filter(col("k") % 7 === 0)
+        .select("k"), path)                                    // v4
+      // second drain: the restore re-ingests, the delete tombstones
+      IndexSync.syncVector(spark, path, "k", "vec",
+        VecIndex.open(spark, vp))
+      ()
     }
     VecIndex.ivfTopK(spark,
         emb.filter(col("k") < 50).withColumnRenamed("k", "id"),
@@ -1742,28 +1700,21 @@ object PipelineQueries {
 
   def searchBm25Stream(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.read(spark, dir, "documents")
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/searchidx-stream-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val inDir = s"target/tmp/searchidx-stream-in-$tagDir"
-        docs.repartition(3, col("doc_id"))
-          .write.mode("overwrite").parquet(inDir)
-        val idx = Search.writeIndex(docs.limit(0), "doc_id", "text", path)
-        val schema = spark.read.parquet(inDir).schema
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            Search.appendBatch(b, "doc_id", "text", idx, id); ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "searchidx-stream") { path =>
+      val inDir = Queries.fixturePath(spark, dir, "searchidx-stream-in")
+      docs.repartition(3, col("doc_id"))
+        .write.mode("overwrite").parquet(inDir)
+      val idx = Search.writeIndex(docs.limit(0), "doc_id", "text", path)
+      val schema = spark.read.parquet(inDir).schema
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir)
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          Search.appendBatch(b, "doc_id", "text", idx, id); ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
     }
     Search.searchBm25(spark, Search.open(spark, path), SearchTerms,
         topK = 20)
@@ -1782,23 +1733,16 @@ object PipelineQueries {
     * the marker stats deltas through the fold) in one row. */
   def searchBm25Inc(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.read(spark, dir, "documents")
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/searchidx-inc-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val idx = Search.writeIndex(
-          docs.filter(col("doc_id") % 3 =!= lit(2)),
-          "doc_id", "text", path)
-        Search.append(docs.filter(col("doc_id") % 3 === lit(2)),
-          "doc_id", "text", idx)
-        Search.delete(docs.filter(col("doc_id") % 11 === lit(0))
-          .select("doc_id"), "doc_id", idx)
-        Search.compactIncremental(spark, idx)
-        Search.vacuum(spark, idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "searchidx-inc") { path =>
+      val idx = Search.writeIndex(
+        docs.filter(col("doc_id") % 3 =!= lit(2)),
+        "doc_id", "text", path)
+      Search.append(docs.filter(col("doc_id") % 3 === lit(2)),
+        "doc_id", "text", idx)
+      Search.delete(docs.filter(col("doc_id") % 11 === lit(0))
+        .select("doc_id"), "doc_id", idx)
+      Search.compactIncremental(spark, idx)
+      Search.vacuum(spark, idx)
     }
     Search.searchBm25(spark, Search.open(spark, path), SearchTerms,
         topK = 20)
@@ -1816,33 +1760,26 @@ object PipelineQueries {
     * gate catches it. */
   def searchBm25Auto(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.read(spark, dir, "documents")
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/searchidx-auto-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val cfg = graft.io.GenLog.MaintainConfig(deltaGens = 2,
-          purgeFrac = 0.05)
-        val idx = Search.writeIndex(
-          docs.filter(col("doc_id") % 3 =!= lit(2)),
-          "doc_id", "text", path)
-        Search.append(docs.filter(col("doc_id") % 3 === lit(2) &&
-          col("doc_id") % 2 === lit(0)), "doc_id", "text", idx)
-        Search.append(docs.filter(col("doc_id") % 3 === lit(2) &&
-          col("doc_id") % 2 =!= lit(0)), "doc_id", "text", idx)
-        val a1 = Search.maintain(spark, idx, cfg)
-        require(a1.map(_._1) == Seq("fold", "vacuum"),
-          s"auto-policy should fold two deltas, took $a1")
-        Search.delete(docs.filter(col("doc_id") % 11 === lit(0))
-          .select("doc_id"), "doc_id", idx)
-        val a2 = Search.maintain(spark, idx, cfg)
-        require(a2.map(_._1) == Seq("compact", "vacuum"),
-          s"auto-policy should purge the tombstone wave, took $a2")
-        require(Search.maintain(spark, idx, cfg).map(_._1) == Seq("noop"),
-          "auto-policy must no-op at a quiet head")
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "searchidx-auto") { path =>
+      val cfg = graft.io.GenLog.MaintainConfig(deltaGens = 2,
+        purgeFrac = 0.05)
+      val idx = Search.writeIndex(
+        docs.filter(col("doc_id") % 3 =!= lit(2)),
+        "doc_id", "text", path)
+      Search.append(docs.filter(col("doc_id") % 3 === lit(2) &&
+        col("doc_id") % 2 === lit(0)), "doc_id", "text", idx)
+      Search.append(docs.filter(col("doc_id") % 3 === lit(2) &&
+        col("doc_id") % 2 =!= lit(0)), "doc_id", "text", idx)
+      val a1 = Search.maintain(spark, idx, cfg)
+      require(a1.map(_._1) == Seq("fold", "vacuum"),
+        s"auto-policy should fold two deltas, took $a1")
+      Search.delete(docs.filter(col("doc_id") % 11 === lit(0))
+        .select("doc_id"), "doc_id", idx)
+      val a2 = Search.maintain(spark, idx, cfg)
+      require(a2.map(_._1) == Seq("compact", "vacuum"),
+        s"auto-policy should purge the tombstone wave, took $a2")
+      require(Search.maintain(spark, idx, cfg).map(_._1) == Seq("noop"),
+        "auto-policy must no-op at a quiet head")
     }
     Search.searchBm25(spark, Search.open(spark, path), SearchTerms,
         topK = 20)
@@ -2127,35 +2064,30 @@ object PipelineQueries {
     * batch boundaries is the same merge argument as the at-rest
     * shard fold). */
   def heavyHittersMgStream(spark: SparkSession, dir: String): DataFrame = {
-    val tag =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val inDir = s"target/tmp/mgstream-in-$tag"
-    val candDir = s"target/tmp/mgstream-cands-$tag"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(candDir, {
-        spark.read.parquet(s"$dir/events.parquet")
-          .select(concat(lit("p"),
-            floor(sqrt((col("event_id") % 10000).cast("double")))
-              .cast("long").cast("string")).as("item"))
-          .repartition(4)
-          .write.mode("overwrite").parquet(inDir)
-        val schema = spark.read.parquet(inDir).schema
-        val table = "mg_stream_" +
-          java.lang.Integer.toHexString(System.identityHashCode(spark))
-        val q = Sketches.mgCandidates(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-              .parquet(inDir).withColumn("g", lit("all")),
-            "g", "item", 64)
-          .writeStream.format("memory").queryName(table)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.table(table).select("item")
-          .write.mode("overwrite").parquet(candDir)
-        ()
-      })
+    val inDir = Queries.fixturePath(spark, dir, "mgstream-in")
+    val candDir = Queries.fixturePath(spark, dir, "mgstream-cands")
+    Memo.once(candDir) {
+      spark.read.parquet(s"$dir/events.parquet")
+        .select(concat(lit("p"),
+          floor(sqrt((col("event_id") % 10000).cast("double")))
+            .cast("long").cast("string")).as("item"))
+        .repartition(4)
+        .write.mode("overwrite").parquet(inDir)
+      val schema = spark.read.parquet(inDir).schema
+      val table = "mg_stream_" +
+        java.lang.Integer.toHexString(System.identityHashCode(spark))
+      val q = Sketches.mgCandidates(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+            .parquet(inDir).withColumn("g", lit("all")),
+          "g", "item", 64)
+        .writeStream.format("memory").queryName(table)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      spark.table(table).select("item")
+        .write.mode("overwrite").parquet(candDir)
+      ()
     }
     val items = spark.read.parquet(inDir)
     val n = items.count()
@@ -3073,14 +3005,8 @@ object PipelineQueries {
   def annBinaryRest(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/binidx-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        Similarity.binaryIndexWrite(emb, 64, path); ()
-      })
+    val path = Queries.fixture(spark, dir, "binidx") { path =>
+      Similarity.binaryIndexWrite(emb, 64, path)
     }
     Similarity.binaryTopKAtRest(spark, emb.filter(col("id") < 3),
         path, 64, 20, 3)
@@ -3099,23 +3025,16 @@ object PipelineQueries {
   def annBinaryGen(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-gen-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = emb.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path)
-        VecIndex.append(emb.filter(col("id") > half), idx)
-        // re-embed cycle: tombstone one id, fold its vector back in —
-        // the serve path then exercises the gen-aware anti-join while
-        // the live set stays the full corpus
-        import spark.implicits._
-        VecIndex.delete(Seq(5L).toDF("id"), "id", idx)
-        VecIndex.append(emb.filter(col("id") === 5L), idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-gen") { path =>
+      val half = emb.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path)
+      VecIndex.append(emb.filter(col("id") > half), idx)
+      // re-embed cycle: tombstone one id, fold its vector back in —
+      // the serve path then exercises the gen-aware anti-join while
+      // the live set stays the full corpus
+      import spark.implicits._
+      VecIndex.delete(Seq(5L).toDF("id"), "id", idx)
+      VecIndex.append(emb.filter(col("id") === 5L), idx)
     }
     VecIndex.binaryTopK(spark,
         emb.filter(col("id") < 3), VecIndex.open(spark, path), 20, 3)
@@ -3129,24 +3048,17 @@ object PipelineQueries {
     * probed ivfTopK serve (~0.7 s at sf0.1) whose result was thrown
     * away, paid on EVERY timed pass because only the build block is
     * memoized. Factoring the build out makes ensuring the fixture
-    * O(TrieMap hit) after the first call. */
+    * O(memo hit) after the first call. */
   private def ivfGenIdx(spark: SparkSession, dir: String): VecIndex.Index = {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-ivfgen-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = emb.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
-          centroids = Some(centroids), cbBuckets = 4)
-        VecIndex.append(emb.filter(col("id") > half), idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-ivfgen") { path =>
+      val half = emb.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
+        centroids = Some(centroids), cbBuckets = 4)
+      VecIndex.append(emb.filter(col("id") > half), idx)
     }
     VecIndex.open(spark, path)
   }
@@ -3178,23 +3090,16 @@ object PipelineQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-ivfinc-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = emb.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
-          centroids = Some(centroids), cbBuckets = 8)
-        VecIndex.append(emb.filter(col("id") > half), idx)
-        import spark.implicits._
-        VecIndex.delete(Seq(5L).toDF("id"), "id", idx)
-        VecIndex.append(emb.filter(col("id") === 5L), idx)
-        VecIndex.compactIncremental(spark, idx)
-        VecIndex.vacuum(spark, idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-ivfinc") { path =>
+      val half = emb.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
+        centroids = Some(centroids), cbBuckets = 8)
+      VecIndex.append(emb.filter(col("id") > half), idx)
+      import spark.implicits._
+      VecIndex.delete(Seq(5L).toDF("id"), "id", idx)
+      VecIndex.append(emb.filter(col("id") === 5L), idx)
+      VecIndex.compactIncremental(spark, idx)
+      VecIndex.vacuum(spark, idx)
     }
     VecIndex.ivfTopK(spark,
         emb.filter(col("id") < 50), VecIndex.open(spark, path), 2, 3)
@@ -3292,19 +3197,12 @@ object PipelineQueries {
       .select(col("id").as("cid"), col("vec").as("cvec"))
     val centB = emb.filter(col("id") >= 8 && col("id") < 16)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-ivfretrain-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = emb.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
-          centroids = Some(centA), cbBuckets = 4)
-        VecIndex.append(emb.filter(col("id") > half), idx)
-        VecIndex.retrain(spark, idx, centroids = Some(centB))
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-ivfretrain") { path =>
+      val half = emb.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
+        centroids = Some(centA), cbBuckets = 4)
+      VecIndex.append(emb.filter(col("id") > half), idx)
+      VecIndex.retrain(spark, idx, centroids = Some(centB))
     }
     VecIndex.ivfTopK(spark,
         emb.filter(col("id") < 50), VecIndex.open(spark, path), 2, 3)
@@ -3327,28 +3225,21 @@ object PipelineQueries {
   def annBinaryStream(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-stream-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val inDir = s"target/tmp/vecidx-stream-in-$tagDir"
-        emb.repartition(3, col("id"))
-          .write.mode("overwrite").parquet(inDir)
-        val idx = VecIndex.init(emb.limit(0), 64, path)
-        val schema = spark.read.parquet(inDir).schema
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            VecIndex.appendBatch(b, idx, id); ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-stream") { path =>
+      val inDir = Queries.fixturePath(spark, dir, "vecidx-stream-in")
+      emb.repartition(3, col("id"))
+        .write.mode("overwrite").parquet(inDir)
+      val idx = VecIndex.init(emb.limit(0), 64, path)
+      val schema = spark.read.parquet(inDir).schema
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir)
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          VecIndex.appendBatch(b, idx, id); ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
     }
     VecIndex.binaryTopK(spark,
         emb.filter(col("id") < 3), VecIndex.open(spark, path), 20, 3)
@@ -3538,18 +3429,11 @@ object PipelineQueries {
       when(pmod(col("id"), lit(3)) === 0, "en").otherwise("xx"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-filtered-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = tagged.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(tagged.filter(col("id") <= half), 64, path,
-          centroids = Some(centroids), cbBuckets = 4)
-        VecIndex.append(tagged.filter(col("id") > half), idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-filtered") { path =>
+      val half = tagged.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(tagged.filter(col("id") <= half), 64, path,
+        centroids = Some(centroids), cbBuckets = 4)
+      VecIndex.append(tagged.filter(col("id") > half), idx)
     }
     VecIndex.ivfTopK(spark, emb.filter(col("id") < 50),
         VecIndex.open(spark, path), 2, 3,
@@ -3581,18 +3465,11 @@ object PipelineQueries {
     val chunks = emb.withColumn("doc", expr("id div 4"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-maxsim-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = chunks.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(chunks.filter(col("id") <= half), 64, path,
-          centroids = Some(centroids), cbBuckets = 4)
-        VecIndex.append(chunks.filter(col("id") > half), idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-maxsim") { path =>
+      val half = chunks.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(chunks.filter(col("id") <= half), 64, path,
+        centroids = Some(centroids), cbBuckets = 4)
+      VecIndex.append(chunks.filter(col("id") > half), idx)
     }
     VecIndex.open(spark, path)
   }
@@ -3911,18 +3788,11 @@ object PipelineQueries {
       .select(col("doc_id").as("id"), col("lang")), "id")
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-hybridflt-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = tagged.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(tagged.filter(col("id") <= half), 64, path,
-          centroids = Some(centroids), cbBuckets = 4)
-        VecIndex.append(tagged.filter(col("id") > half), idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-hybridflt") { path =>
+      val half = tagged.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(tagged.filter(col("id") <= half), 64, path,
+        centroids = Some(centroids), cbBuckets = 4)
+      VecIndex.append(tagged.filter(col("id") > half), idx)
     }
     VecIndex.open(spark, path)
   }
@@ -4371,20 +4241,15 @@ object PipelineQueries {
        |SELECT qid, nid, cos FROM scored WHERE cos >= 0.3
        |ORDER BY qid, nid""".stripMargin
 
-  /** Trained-centroid cache (k x dim rows — tiny): q_kmeans and
+  /** Trained centroids (k x dim rows — tiny): q_kmeans and
     * q_ann_ivf_kmeans share one Lloyd run per (session, dir). Collected
-    * rows, not a persisted frame, so nothing to unpersist. */
-  private val kmeansCache =
-    TrieMap.empty[(SparkSession, String), Seq[(Int, Int, Double)]]
-
+    * rows, not a persisted frame, so the memo keeps them for the JVM. */
   private def trainedCentroids(spark: SparkSession, dir: String): Seq[(Int, Int, Double)] =
-    kmeansCache.synchronized {
-      kmeansCache.getOrElseUpdate((spark, dir), {
-        val emb = Tables.read(spark, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        Similarity.kmeansCentroids(emb, 8, 2).collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
-      })
+    Memo.once(("kmeans", spark, dir)) {
+      val emb = Tables.read(spark, dir, "embeddings")
+        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      Similarity.kmeansCentroids(emb, 8, 2).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
     }
 
   /** Deterministic Lloyd k-means over the embedding corpus: k=8
@@ -4532,21 +4397,14 @@ object PipelineQueries {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val books = Similarity.pqTrainCodebooks(emb, PqM, PqSubDim, PqK, 2)
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-pqgen-$tagDir"
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = emb.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
-          pq = Some(books))
-        VecIndex.append(emb.filter(col("id") > half), idx)
-        import spark.implicits._
-        VecIndex.delete(Seq(7L).toDF("id"), "id", idx)
-        VecIndex.append(emb.filter(col("id") === 7L), idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-pqgen") { path =>
+      val half = emb.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
+        pq = Some(books))
+      VecIndex.append(emb.filter(col("id") > half), idx)
+      import spark.implicits._
+      VecIndex.delete(Seq(7L).toDF("id"), "id", idx)
+      VecIndex.append(emb.filter(col("id") === 7L), idx)
     }
     val queries = emb.filter(col("id") < PqNQueries).collect()
       .map(r => (r.getLong(0),
@@ -4721,37 +4579,35 @@ object PipelineQueries {
   /** Coarse assignment + residual PQ state, persisted once per
     * (session, dir): `assigned` carries the O(C*dim) coarse assignment
     * behind a persist barrier (the projection-collapse rule), `books`
-    * are the residual-trained PQ codebooks. Dropped by [[clearCache]]. */
+    * are the residual-trained PQ codebooks. Dropped by
+    * [[Queries.clearCache]]. */
   private final case class IvfPqState(assigned: DataFrame,
       coarse: Seq[Array[Double]], cn2: Array[Double],
       books: Seq[Array[Array[Double]]])
 
-  private val ivfPqCache = TrieMap.empty[(SparkSession, String), IvfPqState]
-
   private def ivfPqShared(spark: SparkSession, dir: String): IvfPqState =
-    ivfPqCache.synchronized {
-      ivfPqCache.getOrElseUpdate((spark, dir), {
-        val dim = PqM * PqSubDim
-        val emb = Tables.read(spark, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val coarse: Seq[Array[Double]] = emb.filter(col("id") < IvfPqC)
-          .collect()
-          .map(r => (r.getLong(0),
-            r.getSeq[Number](1).map(_.doubleValue()).toArray))
-          .sortBy(_._1).map(_._2).toSeq
-        val cn2 = coarse.map(v => v.map(x => x * x).sum).toArray
-        val assignExpr = element_at(
-          graft.functions.VectorFunctions.nearestCentroids(
-            col("vec"), coarse.toArray, cn2,
-            (0 until IvfPqC).map(_.toLong).toArray, 1, euclidean = true), 1)
-        val assigned = emb
-          .select(col("id"), col("vec"), assignExpr.as("ccid"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val books = Similarity.pqTrainCodebooks(
-          ivfPqResiduals(assigned, coarse), PqM, PqSubDim, PqK, 2,
-          initFrom = IvfPqC)
-        IvfPqState(assigned, coarse, cn2, books)
-      })
+    Memo.once(("ivfpq", spark, dir),
+        (st: IvfPqState) => st.assigned.unpersist(blocking = false)) {
+      val dim = PqM * PqSubDim
+      val emb = Tables.read(spark, dir, "embeddings")
+        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val coarse: Seq[Array[Double]] = emb.filter(col("id") < IvfPqC)
+        .collect()
+        .map(r => (r.getLong(0),
+          r.getSeq[Number](1).map(_.doubleValue()).toArray))
+        .sortBy(_._1).map(_._2).toSeq
+      val cn2 = coarse.map(v => v.map(x => x * x).sum).toArray
+      val assignExpr = element_at(
+        graft.functions.VectorFunctions.nearestCentroids(
+          col("vec"), coarse.toArray, cn2,
+          (0 until IvfPqC).map(_.toLong).toArray, 1, euclidean = true), 1)
+      val assigned = emb
+        .select(col("id"), col("vec"), assignExpr.as("ccid"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val books = Similarity.pqTrainCodebooks(
+        ivfPqResiduals(assigned, coarse), PqM, PqSubDim, PqK, 2,
+        initFrom = IvfPqC)
+      IvfPqState(assigned, coarse, cn2, books)
     }
 
   /** Residual projection v - coarse[ccid(v)]: pure column arithmetic
@@ -4826,21 +4682,14 @@ object PipelineQueries {
     * gate. */
   def annIvfPqGen(spark: SparkSession, dir: String): DataFrame = {
     val st = ivfPqShared(spark, dir)
-    val tagDir =
-      java.lang.Integer.toHexString(System.identityHashCode(spark)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/tmp/vecidx-ivfpqgen-$tagDir"
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    binIdxBuilt.synchronized {
-      binIdxBuilt.getOrElseUpdate(path, {
-        val half = emb.agg(max("id")).head().getLong(0) / 2
-        val idx = VecIndex.init(emb.filter(col("id") <= half),
-          PqM * PqSubDim, path, cbBuckets = 4,
-          ivfPq = Some((st.coarse, st.books)))
-        VecIndex.append(emb.filter(col("id") > half), idx)
-        ()
-      })
+    val path = Queries.fixture(spark, dir, "vecidx-ivfpqgen") { path =>
+      val half = emb.agg(max("id")).head().getLong(0) / 2
+      val idx = VecIndex.init(emb.filter(col("id") <= half),
+        PqM * PqSubDim, path, cbBuckets = 4,
+        ivfPq = Some((st.coarse, st.books)))
+      VecIndex.append(emb.filter(col("id") > half), idx)
     }
     val queries = Tables.read(spark, dir, "embeddings")
       .filter(col("vec_id") < PqNQueries)
@@ -5024,7 +4873,8 @@ object PipelineQueries {
         java.lang.Integer.toHexString(System.identityHashCode(spark)))
       .toString
 
-  /** Media fixture parquets written this JVM. The fixtures are
+  /** Media fixture parquets, written once per JVM ([[Memo.once]], so
+    * fixtures of different kinds build concurrently). The fixtures are
     * DETERMINISTIC (pixel/sample formulas) and sf-independent, so the
     * per-call rebuild the media queries used to do (driver-side
     * encode of every PNG/WAV/Y4M + a parquet overwrite, ~0.2-0.4 s
@@ -5034,14 +4884,10 @@ object PipelineQueries {
     * test) still executes fully on every serve. Session hash in the
     * path so concurrent sessions never share files (which the old
     * shared-path overwrite raced on). */
-  private val mediaFixtureBuilt = TrieMap.empty[String, Unit]
-
   private def ensureMediaFixture(spark: SparkSession, kind: String)(
       build: String => Unit): String = {
     val fix = mediaFixturePath(spark, kind)
-    mediaFixtureBuilt.synchronized {
-      mediaFixtureBuilt.getOrElseUpdate(fix, build(fix))
-    }
+    Memo.once(fix) { build(fix) }
     fix
   }
 

@@ -1,11 +1,12 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
+import graft.io.Memo
+import graft.pipeline.Similarity
 import graft.ml.{FrequencyDiscretizer, InfoThSelector, InfoThSelectorModel}
 
 /**
@@ -55,18 +56,14 @@ object Queries {
   // ---- Spark-side shared state ----
 
   /** Columnar working sets per (session, dir, shape) — queries share
-    * one transpose per shape within a Verify/Bench run. Built under one
-    * lock so two concurrent first calls can't each persist a copy;
-    * [[clearCache]] unpersists everything (called when a Verify/Bench
+    * one transpose per shape within a Verify/Bench run. Built once
+    * ([[Memo.once]]), so two concurrent first calls can't each persist
+    * a copy; [[clearCache]] unpersists them (called when a Verify/Bench
     * run finishes). */
-  private val workingSets =
-    TrieMap.empty[(SparkSession, String, String), ColumnarData]
-
   private def workingSet(spark: SparkSession, dir: String, shape: String)(
       build: => ColumnarData): ColumnarData =
-    workingSets.synchronized {
-      workingSets.getOrElseUpdate((spark, dir, shape), build)
-    }
+    Memo.once(("columnar", spark, dir, shape),
+      (c: ColumnarData) => c.unpersist())(build)
 
   private[graft] def columnar(spark: SparkSession, dir: String): ColumnarData =
     workingSet(spark, dir, "lineitem") {
@@ -74,12 +71,11 @@ object Queries {
         Seq("f0", "f1", "f2", "f3"), "label")
     }
 
+  /** Unpersists every shared working set ([[Memo.clear]]) and the
+    * frames [[Similarity]] retains. On-disk fixtures stay built. */
   private[graft] def clearCache(): Unit = {
-    workingSets.synchronized {
-      workingSets.values.foreach(_.unpersist())
-      workingSets.clear()
-    }
-    PipelineQueries.clearCache()
+    Memo.clear()
+    Similarity.releaseRetained()
   }
 
   private def r6(d: Double): Double =
@@ -876,7 +872,7 @@ object Queries {
     // pay-once fixture (the pattern's whole point): built once per JVM
     // — like the vtable fixtures, so the bench times the shuffle-free
     // JOIN, not two bucketed table writes
-    fixtureBuilt.getOrElseUpdate(base, {
+    Memo.once(base) {
       spark.sql(s"DROP TABLE IF EXISTS $liT")
       spark.sql(s"DROP TABLE IF EXISTS $ordT")
       // prune to the query's columns before the bucketed write — the
@@ -893,7 +889,7 @@ object Queries {
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/orders").saveAsTable(ordT)
       ()
-    })
+    }
     bucketedJoinAgg(spark.table(liT), spark.table(ordT))
   }
 
@@ -1101,7 +1097,7 @@ object Queries {
     // untimed warm pass absorbs the fixture writes so its timed pass
     // measures the RESOLVE (the operator), not three parquet writes.
     // On-disk state, not a Spark cache — clearCache leaves it alone.
-    fixtureBuilt.getOrElseUpdate(path, {
+    Memo.once(path) {
       Versioned.drop(spark, path)
       val docs = Tables.read(spark, dir, "documents")
       Versioned.append(docs.select("doc_id", "lang", "n_chars"), path)
@@ -1120,21 +1116,30 @@ object Queries {
       if (withRestoreTo > 0)
         Versioned.restore(spark, path, "doc_id", withRestoreTo)
       ()
-    })
+    }
     path
   }
 
-  /** On-disk fixture paths already built this JVM (versioned tables,
-    * bucketed tables) — deterministic per (tag, dir), so the bench's
-    * untimed warm pass absorbs the build and the timed pass measures
-    * the operator. */
-  private val fixtureBuilt = TrieMap.empty[String, Unit]
+  /** `target/tmp/<name>-<session>-<sf dir>`: the path of a fixture
+    * whose on-disk state is LIVE per session (MV refresh state, index
+    * generations). The session's identity hash in the path keeps two
+    * SparkSessions in one JVM off each other's fixture. */
+  private[graft] def fixturePath(spark: SparkSession, dir: String,
+      name: String): String =
+    s"target/tmp/$name-" +
+      java.lang.Integer.toHexString(System.identityHashCode(spark)) +
+      "-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  /** Session identity tag for fixtures whose on-disk state is LIVE per
-    * session (MV refresh state): path and cache key agree, so two
-    * SparkSessions in one JVM never overwrite each other's fixture. */
-  private def sessionTag(spark: SparkSession): String =
-    java.lang.Integer.toHexString(System.identityHashCode(spark))
+  /** The fixture at [[fixturePath]], built by `build` once per JVM
+    * ([[Memo.once]], like every on-disk fixture here): the bench's
+    * untimed warm pass absorbs the build and the timed pass measures
+    * the operator. Returns the path. */
+  private[graft] def fixture(spark: SparkSession, dir: String,
+      name: String)(build: String => Unit): String = {
+    val path = fixturePath(spark, dir, name)
+    Memo.once(path)(build(path))
+    path
+  }
 
   /** Shared oracle CTEs reconstructing the version log from the
     * documents table (the same trick as the schema-evolution oracle:
@@ -1189,7 +1194,7 @@ object Queries {
     val path = buildVersionedDemo(spark, dir, "repl")
     val dst = "target/tmp/vtable-replica-" +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(dst, {
+    Memo.once(dst) {
       Versioned.drop(spark, dst)
       val ckpt = dst + "-ckpt"
       val f = new org.apache.hadoop.fs.Path(ckpt)
@@ -1198,7 +1203,7 @@ object Queries {
       Versioned.replicateStreamTo(spark, path, "doc_id", dst, ckpt,
         maxVersionsPerTrigger = 2).awaitTermination()
       ()
-    })
+    }
     Versioned.current(spark, dst, "doc_id")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"),
@@ -1258,7 +1263,7 @@ object Queries {
     import graft.io.Versioned
     val path = "target/tmp/vtable-ren-" +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(path, {
+    Memo.once(path) {
       Versioned.drop(spark, path)
       val docs = Tables.read(spark, dir, "documents")
       Versioned.append(docs.select("doc_id", "lang", "n_chars"), path)
@@ -1272,7 +1277,7 @@ object Queries {
         .select(col("doc_id"), col("lang"),
           (col("n_chars") + 5000).as("len")), path)         // v5: new name
       ()
-    })
+    }
     Versioned.current(spark, path, "doc_id")
       .select(col("doc_id"), col("lang"),
         col("len").cast("long").as("len"),
@@ -1405,7 +1410,7 @@ object Queries {
     import graft.io.Versioned
     val path = "target/tmp/vtable-wid-" +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(path, {
+    Memo.once(path) {
       Versioned.drop(spark, path)
       val docs = Tables.read(spark, dir, "documents")
       Versioned.append(docs.select(col("doc_id"), col("lang"),
@@ -1415,7 +1420,7 @@ object Queries {
         .select(col("doc_id"), col("lang"),
           (col("n_chars") + 4000000000L).as("n_chars")), path) // v3: LONG
       ()
-    })
+    }
     Versioned.current(spark, path, "doc_id")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy("doc_id")
@@ -1462,11 +1467,11 @@ object Queries {
   def tableDeleteWhere(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
     val path = buildVersionedDemo(spark, dir, "delw")
-    fixtureBuilt.getOrElseUpdate(path + "#delw", {
+    Memo.once(path + "#delw") {
       Versioned.deleteWhere(spark, path, "doc_id",
         col("n_chars").cast("long") >= 1000L)
       ()
-    })
+    }
     Versioned.current(spark, path, "doc_id")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"),
@@ -1501,7 +1506,7 @@ object Queries {
     spark.conf.set("spark.sql.catalog.graft_sql.warehouse", wh)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_sql.${name}_$tag"
-    fixtureBuilt.getOrElseUpdate(s"$wh/${name}_$tag", {
+    Memo.once(s"$wh/${name}_$tag") {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Tables.read(spark, dir, "documents")
         .createOrReplaceTempView(s"docs_sql_$tag")
@@ -1522,7 +1527,7 @@ object Queries {
         spark.sql(s"CALL graft_sql.system.vacuum('${name}_$tag', 0)")
       }
       ()
-    })
+    }
     tbl
   }
 
@@ -1577,12 +1582,12 @@ object Queries {
     buildSqlCatalogDemo(spark, dir) // source fixture + catalog confs
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val view = s"mvdemo_$tag"
-    fixtureBuilt.getOrElseUpdate(s"target/tmp/graft-sql-warehouse/$view", {
+    Memo.once(s"target/tmp/graft-sql-warehouse/$view") {
       spark.sql(s"DROP TABLE IF EXISTS graft_sql.$view")
       spark.sql(s"CALL graft_sql.system.create_matview('$view', " +
         s"'sqldemo_$tag', 'lang', 'n_chars')")
       ()
-    })
+    }
     // the view's storage schema is (g, n_rows, sum_<col>...): `g` is
     // the group column under its generic name
     spark.sql(
@@ -1641,7 +1646,7 @@ object Queries {
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val sink = s"target/tmp/vstream-sink-$tag"
     val ckpt = s"target/tmp/vstream-ckpt-$tag"
-    fixtureBuilt.getOrElseUpdate(sink, {
+    Memo.once(sink) {
       Seq(sink, ckpt).foreach { d =>
         val hp = new org.apache.hadoop.fs.Path(d)
         val hf = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1654,7 +1659,7 @@ object Queries {
         .start()
         .awaitTermination()
       ()
-    })
+    }
     Versioned.currentOf(spark.read.parquet(sink), "doc_id")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"),
@@ -1710,7 +1715,7 @@ object Queries {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val ns = s"mntns_$tag"
     val tbl = s"graft_sql.$ns.t"
-    fixtureBuilt.getOrElseUpdate(s"$wh/$ns/t", {
+    Memo.once(s"$wh/$ns/t") {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_sql.$ns")
       Tables.read(spark, dir, "documents")
@@ -1729,7 +1734,7 @@ object Queries {
       spark.sql(s"CALL graft_sql.system.maintain_all('$ns')")
       spark.sql(s"CALL graft_sql.system.vacuum_retain('$ns.t', 0)")
       ()
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, lang, n_chars,
          |  coalesce(source, 'unknown') AS source FROM (
@@ -1766,7 +1771,7 @@ object Queries {
     spark.conf.set("spark.sql.catalog.graft_sql.warehouse", wh)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_sql.sqlmerge_$tag"
-    fixtureBuilt.getOrElseUpdate(s"$wh/sqlmerge_$tag", {
+    Memo.once(s"$wh/sqlmerge_$tag") {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Tables.read(spark, dir, "documents")
         .createOrReplaceTempView(s"docs_sql_$tag")
@@ -1791,7 +1796,7 @@ object Queries {
            |  VALUES (s.doc_id, s.lang, s.n_chars, s.source)
            |""".stripMargin)
       ()
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, lang, n_chars,
          |  coalesce(source, 'unknown') AS source FROM (
@@ -1819,7 +1824,7 @@ object Queries {
     spark.conf.set("spark.sql.catalog.graft_sql.warehouse", wh)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_sql.sqlstream_$tag"
-    fixtureBuilt.getOrElseUpdate(s"$wh/sqlstream_$tag", {
+    Memo.once(s"$wh/sqlstream_$tag") {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       val inDir = s"target/tmp/sqlstream-in-$tag"
       val ckpt = s"target/tmp/sqlstream-ckpt-$tag"
@@ -1845,7 +1850,7 @@ object Queries {
         .toTable(tbl)
         .awaitTermination()
       ()
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, lang, n_chars FROM (
          |  SELECT doc_id, lang, n_chars, __deleted,
@@ -1874,7 +1879,7 @@ object Queries {
     spark.conf.set("spark.sql.catalog.graft_sql.warehouse", wh)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_sql.sqlupd_$tag"
-    fixtureBuilt.getOrElseUpdate(s"$wh/sqlupd_$tag", {
+    Memo.once(s"$wh/sqlupd_$tag") {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Tables.read(spark, dir, "documents")
         .createOrReplaceTempView(s"docs_sql_$tag")
@@ -1886,7 +1891,7 @@ object Queries {
       spark.sql(s"UPDATE $tbl SET n_chars = n_chars + 5000, " +
         "source = 'upd' WHERE lang = 'de'")
       ()
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, lang, n_chars,
          |  coalesce(source, 'unknown') AS source FROM (
@@ -1923,7 +1928,7 @@ object Queries {
     spark.conf.set("spark.sql.catalog.graft_sql.warehouse", wh)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_sql.sqlevolve_$tag"
-    fixtureBuilt.getOrElseUpdate(s"$wh/sqlevolve_$tag", {
+    Memo.once(s"$wh/sqlevolve_$tag") {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Tables.read(spark, dir, "documents")
         .createOrReplaceTempView(s"docs_sqlev_$tag")
@@ -1945,7 +1950,7 @@ object Queries {
            |  VALUES (s.doc_id, s.language, s.n_chars)
            |""".stripMargin)
       ()
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, language, n_chars FROM (
          |  SELECT doc_id, language, n_chars, __deleted,
@@ -1986,7 +1991,7 @@ object Queries {
     spark.conf.set("spark.sql.catalog.graft_sql.warehouse", wh)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_sql.renamedml_$tag"
-    fixtureBuilt.getOrElseUpdate(s"$wh/renamedml_$tag", {
+    Memo.once(s"$wh/renamedml_$tag") {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Tables.read(spark, dir, "documents")
         .createOrReplaceTempView(s"docs_rdml_$tag")
@@ -2016,7 +2021,7 @@ object Queries {
            |  VALUES (s.doc_id, s.language, s.chars)
            |""".stripMargin)
       ()
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, language, chars FROM (
          |  SELECT doc_id, language, chars, __deleted,
@@ -2078,14 +2083,12 @@ object Queries {
     * customer. */
   def tableJoinView(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.{JoinView, Versioned}
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val factSrc = s"target/tmp/jvq-fact-$tagDir"
-    val dimSrc = s"target/tmp/jvq-dim-$tagDir"
-    val view = s"target/tmp/jvq-view-$tagDir"
+    val factSrc = fixturePath(spark, dir, "jvq-fact")
+    val dimSrc = fixturePath(spark, dir, "jvq-dim")
+    val view = fixturePath(spark, dir, "jvq-view")
     val h = JoinView.handle(factSrc, "o_orderkey", "o_custkey",
       Seq("p"), dimSrc, "c_custkey", "c_nationkey", view)
-    fixtureBuilt.getOrElseUpdate(view, {
+    Memo.once(view) {
       Versioned.drop(spark, factSrc)
       Versioned.drop(spark, dimSrc)
       Versioned.drop(spark, view)
@@ -2113,7 +2116,7 @@ object Queries {
         .select(col("c_custkey"),
           lit(99).cast("int").as("c_nationkey")), dimSrc)
       ()
-    })
+    }
     JoinView.read(spark, h).orderBy("c_nationkey")
   }
 
@@ -2148,11 +2151,9 @@ object Queries {
     * duplicates under replay. */
   def tableQuarantine(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val main = s"target/tmp/quar-main-$tagDir"
-    val dead = s"target/tmp/quar-dead-$tagDir"
-    fixtureBuilt.getOrElseUpdate(main, {
+    val main = fixturePath(spark, dir, "quar-main")
+    val dead = fixturePath(spark, dir, "quar-dead")
+    Memo.once(main) {
       Seq(main, dead).foreach(Versioned.drop(spark, _))
       val docs = Tables.read(spark, dir, "documents")
         .select(col("doc_id"), col("lang"),
@@ -2166,7 +2167,7 @@ object Queries {
       Versioned.appendCheckedQuarantine(docs, main, checks, dead,
         batchId = 1L, ingestId = "quarq")
       ()
-    })
+    }
     Versioned.current(spark, main, "doc_id")
       .select(col("doc_id"), col("lang"), col("n_chars"),
         lit("main").as("src"), lit("").as("q_violated"))
@@ -2202,7 +2203,7 @@ object Queries {
     spark.conf.set("spark.sql.catalog.graft_sql.warehouse", wh)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_sql.quarsql_$tag"
-    fixtureBuilt.getOrElseUpdate(s"$wh/quarsql_$tag", {
+    Memo.once(s"$wh/quarsql_$tag") {
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_dead")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Tables.read(spark, dir, "documents")
@@ -2218,7 +2219,7 @@ object Queries {
       spark.sql(s"INSERT INTO $tbl SELECT doc_id, lang, " +
         s"CAST(n_chars AS BIGINT) FROM docs_qsql_$tag")
       ()
-    })
+    }
     Versioned.current(spark, s"$wh/quarsql_$tag", "doc_id")
       .select(col("doc_id"), col("lang"), col("n_chars"),
         lit("main").as("src"), lit("").as("q_violated"))
@@ -2253,12 +2254,10 @@ object Queries {
     * replays everything from orders × customer × nation. */
   def tableJoinViewMinMax(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.{JoinView, Versioned}
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val factSrc = s"target/tmp/jvm-fact-$tagDir"
-    val custSrc = s"target/tmp/jvm-cust-$tagDir"
-    val natSrc = s"target/tmp/jvm-nat-$tagDir"
-    val view = s"target/tmp/jvm-view-$tagDir"
+    val factSrc = fixturePath(spark, dir, "jvm-fact")
+    val custSrc = fixturePath(spark, dir, "jvm-cust")
+    val natSrc = fixturePath(spark, dir, "jvm-nat")
+    val view = fixturePath(spark, dir, "jvm-view")
     val dims = Seq(
       JoinView.DimLink(custSrc, "c_custkey", "o_custkey",
         Seq("c_nationkey")),
@@ -2267,7 +2266,7 @@ object Queries {
     val attrs = Seq("c_nationkey", "n_regionkey")
     val h = JoinView.handle(factSrc, "o_orderkey", "o_custkey",
       Seq("p"), dims, attrs, view, minMaxCols = Seq("p"))
-    fixtureBuilt.getOrElseUpdate(view, {
+    Memo.once(view) {
       Seq(factSrc, custSrc, natSrc, view)
         .foreach(Versioned.drop(spark, _))
       val orders = Tables.read(spark, dir, "orders")
@@ -2294,7 +2293,7 @@ object Queries {
         .select(col("c_custkey"),
           lit(3).cast("int").as("c_nationkey")), custSrc)
       ()
-    })
+    }
     JoinView.read(spark, h).orderBy("c_nationkey", "n_regionkey")
   }
 
@@ -2336,7 +2335,7 @@ object Queries {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (fact, cust, nat, view) = (s"jvchain_fact_$tag",
       s"jvchain_cust_$tag", s"jvchain_nat_$tag", s"jvchain_view_$tag")
-    fixtureBuilt.getOrElseUpdate(s"$wh/$view", {
+    Memo.once(s"$wh/$view") {
       Seq(view, fact, cust, nat).foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS graft_sql.$t"))
       Tables.read(spark, dir, "orders")
@@ -2374,7 +2373,7 @@ object Queries {
       spark.sql(s"UPDATE graft_sql.$cust SET c_nationkey = 1 " +
         "WHERE c_custkey % 8 = 0")
       ()
-    })
+    }
     val h = JoinView.handle(s"$wh/$fact", "o_orderkey", "o_custkey",
       Seq("p"),
       Seq(JoinView.DimLink(s"$wh/$cust", "c_custkey", "o_custkey",
@@ -2411,12 +2410,10 @@ object Queries {
     // the path carries the session's identity hash (like the at-rest
     // search fixture): the view's refresh state is LIVE per session —
     // two sessions in one JVM must never overwrite each other's
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val src = s"target/tmp/mvq-src-$tagDir"
-    val view = s"target/tmp/mvq-view-$tagDir"
+    val src = fixturePath(spark, dir, "mvq-src")
+    val view = fixturePath(spark, dir, "mvq-view")
     val h = MatView.Handle(view, src, "doc_id", "lang", Seq("n_chars"))
-    fixtureBuilt.getOrElseUpdate(view, {
+    Memo.once(view) {
       Versioned.drop(spark, src)
       Versioned.drop(spark, view)
       val docs = Tables.read(spark, dir, "documents")
@@ -2435,7 +2432,7 @@ object Queries {
           col("doc_id").cast("long").as("n_chars")), src)
       MatView.refresh(spark, h) // one refresh folds BOTH versions
       ()
-    })
+    }
     MatView.read(spark, h).orderBy("lang")
   }
 
@@ -2468,13 +2465,11 @@ object Queries {
     * the oracle recomputes MIN/MAX over the resolved final state. */
   def tableMatViewMinMax(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.{MatView, Versioned}
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val src = s"target/tmp/mvq2-src-$tagDir"
-    val view = s"target/tmp/mvq2-view-$tagDir"
+    val src = fixturePath(spark, dir, "mvq2-src")
+    val view = fixturePath(spark, dir, "mvq2-view")
     val h = MatView.Handle(view, src, "doc_id", "lang", Seq("n_chars"),
       minMaxCols = Seq("n_chars"))
-    fixtureBuilt.getOrElseUpdate(view, {
+    Memo.once(view) {
       Versioned.drop(spark, src)
       Versioned.drop(spark, view)
       val docs = Tables.read(spark, dir, "documents")
@@ -2494,7 +2489,7 @@ object Queries {
           col("doc_id").cast("long").as("n_chars")), src)
       MatView.refresh(spark, h)
       ()
-    })
+    }
     MatView.read(spark, h).orderBy("lang")
   }
 
@@ -2534,12 +2529,10 @@ object Queries {
     * scratch, down to the register bits. */
   def tableDistinctView(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.{SketchView, Versioned}
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val src = s"target/tmp/skvq-src-$tagDir"
-    val view = s"target/tmp/skvq-view-$tagDir"
+    val src = fixturePath(spark, dir, "skvq-src")
+    val view = fixturePath(spark, dir, "skvq-view")
     val h = SketchView.Handle(view, src, "doc_id", "lang", "ncs")
-    fixtureBuilt.getOrElseUpdate(view, {
+    Memo.once(view) {
       Versioned.drop(spark, src)
       Versioned.drop(spark, view)
       val docs = Tables.read(spark, dir, "documents")
@@ -2558,7 +2551,7 @@ object Queries {
           lit("xx").as("lang"), ncs(col("doc_id")).as("ncs")), src)
       SketchView.refresh(spark, h) // one refresh folds BOTH versions
       ()
-    })
+    }
     val exact = Versioned.current(spark, src, "doc_id")
       .filter(col("ncs").isNotNull)
       .groupBy("lang").agg(countDistinct(col("ncs")).as("n_distinct"))
@@ -2608,18 +2601,16 @@ object Queries {
     * recomputes. */
   def tableMatViewStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.{MatView, Versioned}
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val src = s"target/tmp/mvq3-src-$tagDir"
-    val view = s"target/tmp/mvq3-view-$tagDir"
+    val src = fixturePath(spark, dir, "mvq3-src")
+    val view = fixturePath(spark, dir, "mvq3-view")
     val h = MatView.Handle(view, src, "doc_id", "lang", Seq("n_chars"))
-    fixtureBuilt.getOrElseUpdate(view, {
+    Memo.once(view) {
       Versioned.drop(spark, src)
       Versioned.drop(spark, view)
       // stage the corpus as a 3-file DIRECTORY (streaming file sources
       // monitor directories) and feed one file per micro-batch, so the
       // ingest→refresh loop genuinely folds multiple deltas
-      val inDir = s"target/tmp/mvq3-in-$tagDir"
+      val inDir = fixturePath(spark, dir, "mvq3-in")
       Tables.read(spark, dir, "documents")
         .select(col("doc_id"), col("lang"),
           col("n_chars").cast("long").as("n_chars"))
@@ -2639,7 +2630,7 @@ object Queries {
         .start()
       ingest.awaitTermination()
       ()
-    })
+    }
     MatView.read(spark, h).orderBy("lang")
   }
 
@@ -2657,12 +2648,10 @@ object Queries {
     * group-by as [[tableMatViewSql]]) catches exactly that. */
   def tableMatViewCompact(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.{MatView, Versioned}
-    val tagDir = sessionTag(spark) + "-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val src = s"target/tmp/mvq4-src-$tagDir"
-    val view = s"target/tmp/mvq4-view-$tagDir"
+    val src = fixturePath(spark, dir, "mvq4-src")
+    val view = fixturePath(spark, dir, "mvq4-view")
     val h = MatView.Handle(view, src, "doc_id", "lang", Seq("n_chars"))
-    fixtureBuilt.getOrElseUpdate(view, {
+    Memo.once(view) {
       Versioned.drop(spark, src)
       Versioned.drop(spark, view)
       val docs = Tables.read(spark, dir, "documents")
@@ -2682,7 +2671,7 @@ object Queries {
           col("doc_id").cast("long").as("n_chars")), src)
       MatView.refresh(spark, h)
       ()
-    })
+    }
     MatView.read(spark, h).orderBy("lang")
   }
 
@@ -2812,7 +2801,7 @@ object Queries {
     val path = buildVersionedDemo(spark, dir, "cdc", withInserts = true)
     val sink = "target/tmp/vtable-cdcfeed-" +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(sink, {
+    Memo.once(sink) {
       Versioned.drop(spark, sink)
       val ckpt = sink + "-ckpt"
       val f = new org.apache.hadoop.fs.Path(ckpt)
@@ -2821,7 +2810,7 @@ object Queries {
       Versioned.changesStreamTo(spark, path, "doc_id", sink, ckpt)
         .awaitTermination()
       ()
-    })
+    }
     // the feed is the sink's LOG (every appended change row), read as
     // explicit committed-version dirs — not a glob, which analyzes
     // eagerly and races the fixture's first build in fresh sessions
@@ -2907,7 +2896,7 @@ object Queries {
   def tableMerge(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
     val path = "target/tmp/vtable-merge-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(path, {
+    Memo.once(path) {
       Versioned.drop(spark, path)
       val docs = Tables.read(spark, dir, "documents")
       Versioned.append(docs.select("doc_id", "lang", "n_chars"), path)
@@ -2918,7 +2907,7 @@ object Queries {
       Versioned.merge(docs.filter(col("doc_id") % 14 === 0)
         .select(col("doc_id"), lit("zz").as("lang")), path)
       ()
-    })
+    }
     Versioned.current(spark, path, "doc_id")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"))
@@ -2945,7 +2934,7 @@ object Queries {
   def tablePrune(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
     val path = "target/tmp/vtable-prune-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(path, {
+    Memo.once(path) {
       Versioned.drop(spark, path)
       val docs = Tables.read(spark, dir, "documents")
       Versioned.append(docs.select("doc_id", "n_chars")
@@ -2953,7 +2942,7 @@ object Queries {
       Versioned.append(docs.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id"), (col("n_chars") + 9000).as("n_chars")), path)
       ()
-    })
+    }
     Versioned.currentRange(spark, path, "doc_id", 100L, 600L)
       .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
       .orderBy("doc_id")
@@ -2979,7 +2968,7 @@ object Queries {
   def tableSnapshotRange(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
     val path = "target/tmp/vtable-zsnap-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(path, {
+    Memo.once(path) {
       Versioned.drop(spark, path)
       val docs = Tables.read(spark, dir, "documents")
       Versioned.append(docs.select("doc_id", "lang", "n_chars"), path)
@@ -2991,7 +2980,7 @@ object Queries {
       Versioned.compactZOrder(spark, path, "doc_id",
         Seq("doc_id", "n_chars"), nFiles = 8)
       ()
-    })
+    }
     Versioned.snapshotRange(spark, path,
         Versioned.latestVersion(spark, path), "n_chars", 500L, 1500L)
       .select(col("doc_id"), col("lang"),
@@ -3022,7 +3011,7 @@ object Queries {
     import graft.io.Versioned
     val path = "target/tmp/vtable-incc-" +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
-    fixtureBuilt.getOrElseUpdate(path, {
+    Memo.once(path) {
       Versioned.drop(spark, path)
       val docs = Tables.read(spark, dir, "documents")
         .select(col("doc_id"), col("lang"),
@@ -3043,7 +3032,7 @@ object Queries {
       require(new java.io.File(s"$path/v=$v/_MANIFEST.tsv").exists(),
         "incremental checkpoint must carry untouched files by reference")
       ()
-    })
+    }
     Versioned.current(spark, path, "doc_id")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"),
@@ -3077,7 +3066,7 @@ object Queries {
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val src = s"target/tmp/vtable-clonesrc-$tag"
     val dst = s"target/tmp/vtable-clonedst-$tag"
-    fixtureBuilt.getOrElseUpdate(dst, {
+    Memo.once(dst) {
       Versioned.drop(spark, src)
       Versioned.drop(spark, dst)
       val docs = Tables.read(spark, dir, "documents")
@@ -3095,7 +3084,7 @@ object Queries {
         .withColumn("n_chars", col("n_chars") + 50)
         .withColumn("source", lit("c")), dst)
       ()
-    })
+    }
     Versioned.current(spark, dst, "doc_id")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"),

@@ -633,8 +633,11 @@ object Stress {
     Versioned.delete(spark.range(deltaN / 2)
       .select(((col("id") * 7) % nRows).as("k")).distinct(), src)
     // default cap 16: the 9 commits drain as 1 epoch
-    val (tInc, _) = timed(Versioned.replicateStreamTo(spark, src, "k", dst,
-      ckpt).awaitTermination())
+    val (tInc, drained) = timed {
+      val q = Versioned.replicateStreamTo(spark, src, "k", dst, ckpt)
+      q.awaitTermination()
+      q.recentProgress.map(_.numInputRows).sum
+    }
     // reference: rebuild the replica from the source's resolved head
     val (tFull, _) = timed(
       Versioned.append(Versioned.current(spark, src, "k"), full))
@@ -645,13 +648,21 @@ object Stress {
         curSrc.exceptAll(curDst).isEmpty &&
         curDst.exceptAll(curSrc).isEmpty,
       "replica CONTENT diverged from the source")
+    // counted gate, host-independent: the drain reads the delta
+    // commits' rows (at most deltaN per upsert, deltaN / 2 deletes),
+    // never the table. Rows from the query's progress: the micro-batch
+    // jobs run under the stream's own job group, out of Work.of's sight.
+    val deltaRows = nDeltas * deltaN + deltaN / 2
+    require(drained > 0 && drained <= deltaRows,
+      s"incremental drain read $drained rows; its delta commits hold " +
+        s"at most $deltaRows")
     require(tInc < tFull,
       f"incremental drain ($tInc%.1fs) must beat the full copy " +
         f"($tFull%.1fs)")
     println(s"""{"metric":"stress_replicate","rows":$nRows,""" +
       s""""deltas":$nDeltas,"bootstrap_sec":$tBoot,""" +
       s""""incremental_sec":$tInc,"fullcopy_sec":$tFull,""" +
-      s""""current_rows":$nSrc}""")
+      s""""drained_rows":$drained,"current_rows":$nSrc}""")
   }
 
   /** HYBRID fused-serve stress: `hybrid <nDocs> [<nQueries>]`
@@ -1059,12 +1070,18 @@ object Stress {
     val (tInc, _) = timed(Versioned.compactIncremental(spark, pInc, "k"))
     val (tFull, _) = timed(Versioned.compact(spark, pFull, "k", nFiles))
     val vi = Versioned.latestVersion(spark, pInc)
+    val rewrote = new java.io.File(s"$pInc/v=$vi")
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    // counted gate, host-independent: the fold writes at most one file
+    // per dirty checkpoint file (a band may straddle two), where the
+    // full rewrite writes nFiles; carried refs live in other dirs
+    require(rewrote <= nDeltas + 1,
+      s"incremental fold wrote $rewrote data files; its $nDeltas dirty " +
+        s"bands allow ${nDeltas + 1}")
     val man = {
       val src = scala.io.Source.fromFile(s"$pInc/v=$vi/_MANIFEST.tsv")
       try src.getLines().count(_.nonEmpty) finally src.close()
     }
-    val rewrote = new java.io.File(s"$pInc/v=$vi")
-      .listFiles().count(_.getName.endsWith(".parquet"))
     require(man >= nFiles - nDeltas - 1,
       s"expected >= ${nFiles - nDeltas - 1} carried refs, got $man")
     // resolve equivalence off both checkpoints

@@ -1,9 +1,8 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+
+import graft.io.Memo
 
 /** Session-scoped SCHEMA memo for the immutable testdata tables.
   *
@@ -15,19 +14,18 @@ import org.apache.spark.sql.types.StructType
   * explicitly skips the inference job — standard production practice
   * for stable tables.
   *
-  * The memo holds METADATA only (a StructType keyed by session+path):
-  * no rows are cached, every query still scans the parquet data. The
-  * testdata tables are immutable for a run, so a memoized schema can
-  * never go stale.
+  * The memo ([[Memo.once]]) holds METADATA only (a StructType keyed
+  * by session+path): no rows are cached, every query still scans the
+  * parquet data. The testdata tables are immutable for a run, so a
+  * memoized schema can never go stale.
   */
 object Tables {
 
-  private val schemas = TrieMap.empty[(SparkSession, String), StructType]
-
   def read(spark: SparkSession, dir: String, table: String): DataFrame = {
     val path = s"$dir/$table.parquet"
-    val st = schemas.getOrElseUpdate((spark, path),
-      spark.read.parquet(path).schema)
+    val st = Memo.once(("schema", spark, path)) {
+      spark.read.parquet(path).schema
+    }
     spark.read.schema(st).parquet(path)
   }
 

@@ -123,17 +123,6 @@ object GenLog {
 
   def commitsDir(path: String): Path = new Path(path, "commits")
 
-  /** JVM-wide SCHEMA memo for generation data reads. Every bare
-    * `spark.read.parquet(genPaths…)` pays a footer-inference job
-    * (~30–180 ms on a busy host) before the query it feeds even plans,
-    * and the serve paths re-open the same immutable generation set
-    * several times per query. Keyed by (data root, [[commitsSig]]):
-    * any publish / unpublish / vacuum / index rebuild changes the
-    * commit-marker dir's file statuses and invalidates the entry.
-    * Metadata only (a StructType) — no rows are ever cached. */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.types.StructType]
-
   /** File-status signature of a directory: file count, total bytes,
     * newest mtime, and the sorted name list's hash — so a rewrite that
     * keeps count, bytes and mtime but changes the file set still
@@ -151,11 +140,6 @@ object GenLog {
     val dir = commitsDir(path)
     if (!f.exists(dir)) "none" else dirSig(f, dir)
   }
-
-  def memoSchema(root: String, sig: String)(
-      infer: => org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    schemaMemo.getOrElseUpdate((root, sig), infer)
 
   // ---------- carry manifests (incremental compaction) ----------
 

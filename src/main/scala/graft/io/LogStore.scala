@@ -1,7 +1,5 @@
 package graft.io
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -130,19 +128,18 @@ object LogStore {
     * (no-arg constructor). Unset = [[FsLogStore]]. */
   val ConfKey = "spark.graft.logstore.class"
 
-  private val instances = TrieMap.empty[String, LogStore]
-
   /** The session's configured store. Instances are cached PER CLASS
-    * NAME JVM-wide ([[init]] runs once, with the first session that
-    * names the class — sessions sharing an implementation share its
-    * configuration; run distinct backends under distinct classes). */
+    * NAME JVM-wide ([[Memo.once]]: [[init]] runs once, with the first
+    * session that names the class — sessions sharing an implementation
+    * share its configuration; run distinct backends under distinct
+    * classes). */
   def forSession(spark: SparkSession): LogStore = {
     val cls = spark.conf.get(ConfKey, classOf[FsLogStore].getName)
-    instances.getOrElseUpdate(cls, {
+    Memo.once(("logstore", cls)) {
       val s = Class.forName(cls).getDeclaredConstructor().newInstance()
         .asInstanceOf[LogStore]
       s.init(spark)
       s
-    })
+    }
   }
 }

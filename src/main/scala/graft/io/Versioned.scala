@@ -1621,6 +1621,19 @@ object Versioned {
       ms.filterNot(_._1 == name)
     })
 
+  /** mergeSchema over committed data files, memoized per table root
+    * ([[Memo.bySig]]). Parquet part names carry write-unique UUIDs, so
+    * the sorted file list's digest IS a content signature: any append /
+    * compact / vacuum / rebuild yields a fresh entry. Metadata only (a
+    * StructType per distinct slice) — the footer-merge job is paid once
+    * per slice instead of on every resolve/time-travel/point read over
+    * the same committed state. */
+  private def mergedSchemaOf(spark: SparkSession, path: String,
+      files: Seq[String]): org.apache.spark.sql.types.StructType =
+    Memo.bySig(path, Memo.digest(files.sorted)) {
+      spark.read.option("mergeSchema", "true").parquet(files: _*).schema
+    }
+
   /** Union the given committed version dirs — mergeSchema, so a column
     * added in a later version reads as NULL in earlier rows. Data-less
     * dirs (mapping-only commits) contribute no rows; the column
@@ -1635,21 +1648,6 @@ object Versioned {
     * pin the COMMIT-time version — resolving logical names below the
     * rename would make the committing write mint phantom
     * schema-evolution ids and split one column's data in two. */
-  /** JVM-wide schema memo for mergeSchema reads over committed data
-    * files. Parquet part names carry write-unique UUIDs, so the sorted
-    * file list IS a content signature: any append / compact / vacuum /
-    * rebuild yields a different list and therefore a fresh entry.
-    * Metadata only (a StructType per distinct slice) — the
-    * footer-merge job is paid once per slice instead of on every
-    * resolve/time-travel/point read over the same committed state. */
-  private val mergedSchemaMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
-
-  private def mergedSchemaOf(spark: SparkSession, files: Seq[String])
-      : org.apache.spark.sql.types.StructType =
-    mergedSchemaMemo.getOrElseUpdate(files.sorted.mkString("\u0000"),
-      spark.read.option("mergeSchema", "true").parquet(files: _*).schema)
-
   private[io] def readDirs(spark: SparkSession, path: String,
       vs: Seq[Int], mapV: Option[Int] = None): DataFrame = {
     require(vs.nonEmpty, s"no committed versions to read at $path")
@@ -1662,7 +1660,7 @@ object Versioned {
     val widen = widenAt(spark, path, latestVersion(spark, path))
     val raw =
       if (widen.isEmpty)
-        spark.read.schema(mergedSchemaOf(spark, files)).parquet(files: _*)
+        spark.read.schema(mergedSchemaOf(spark, path, files)).parquet(files: _*)
       else
         spark.read.schema(physUnionSchema(spark, path,
             dataVersions(spark, path, vs), widen))
@@ -2307,8 +2305,9 @@ object Versioned {
         if (widen.isEmpty)
           // schema memoized on the PRUNED slice's own file list — a
           // point/range read over the same committed state skips the
-          // per-call footer-merge job (mergedSchemaMemo)
-          spark.read.schema(mergedSchemaOf(spark, files)).parquet(files: _*)
+          // per-call footer-merge job (mergedSchemaOf)
+          spark.read.schema(mergedSchemaOf(spark, path, files))
+            .parquet(files: _*)
         else spark.read.schema(physUnionSchema(spark, path,
             dataVersions(spark, path, vs), widen))
           .parquet(files: _*)

@@ -71,7 +71,7 @@ object Search {
   // internals and its concurrent-lifecycle specs reading naturally.
   // Marker fields here: a = doc-count delta, b = token-length-sum
   // delta, n = nBuckets.
-  import graft.io.GenLog
+  import graft.io.{GenLog, Memo}
   import graft.io.GenLog.{Meta, KindSeg, KindDel, KindBase}
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
@@ -526,7 +526,7 @@ object Search {
     // it as null (explicit-schema parquet reads null-fill missing
     // columns), with the footer-merge job paid once, not per serve
     val root = s"$path/docs"
-    val st = GenLog.memoSchema(root, GenLog.commitsSig(f, path)) {
+    val st = Memo.bySig(root, GenLog.commitsSig(f, path)) {
       spark.read.option("basePath", root).option("mergeSchema", "true")
         .parquet(paths: _*).schema
     }
@@ -571,10 +571,10 @@ object Search {
     // tombstone anti-join needs)
     val paths = ms.filter(_.kind != KindDel)
       .flatMap(m => GenLog.genPaths(spark, f, idx.path, "post", m.gen))
-    // schema memoized per committed generation set (GenLog.memoSchema)
+    // schema memoized per committed generation set (Memo.bySig)
     // — skips the per-call footer-inference job on the serve path
     val root = s"${idx.path}/post"
-    val st = GenLog.memoSchema(root, GenLog.commitsSig(f, idx.path)) {
+    val st = Memo.bySig(root, GenLog.commitsSig(f, idx.path)) {
       spark.read.option("basePath", root).parquet(paths: _*).schema
     }
     val post = spark.read.schema(st).option("basePath", root)

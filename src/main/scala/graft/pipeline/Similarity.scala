@@ -23,7 +23,7 @@ object Similarity {
   /** Frames persisted by operators whose internal working set outlives
     * the call (e.g. [[semanticNearDup]]'s cluster assignment, computed
     * by the eager occupancy guard and then read by the pair join and
-    * the keeper join). Released by `PipelineQueries.clearCache()` at
+    * the keeper join). Released by `Queries.clearCache()` at
     * the end of a Verify/Bench run — same lifecycle as the dedup
     * working set. */
   private val retained = scala.collection.mutable.Buffer.empty[DataFrame]

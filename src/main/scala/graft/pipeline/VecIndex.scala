@@ -1,13 +1,12 @@
 package graft.pipeline
 
-import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.io.GenLog
+import graft.io.{GenLog, Memo}
 
 /**
  * The GENERATIONAL VECTOR INDEX — [[Similarity]]'s at-rest ANN
@@ -87,7 +86,7 @@ object VecIndex {
   private def liveCols(spark: SparkSession, idx: Index): Seq[String] = {
     val f = fsOf(spark, idx.path)
     val root = s"${idx.path}/vecs"
-    GenLog.memoSchema(root, GenLog.commitsSig(f, idx.path)) {
+    Memo.bySig(root, GenLog.commitsSig(f, idx.path)) {
       val ms = GenLog.liveMetas(spark, f, idx.path)
         .filter(_.kind != GenLog.KindDel)
       spark.read.option("basePath", root)
@@ -104,33 +103,21 @@ object VecIndex {
   private def sidecar(path: String, name: String, v: Int): String =
     if (v == 0) s"$path/$name" else s"$path/${name}_v$v"
 
-  /** Driver-resident memo of the tiny, version-immutable codebook
-    * SIDECARS (centroids / pq / coarse). Every serve used to pay a
-    * parquet footer-inference job plus a collect per call just to
-    * reload a <= C·dim-doubles structure that never changes for a
-    * given version — pure per-query driver overhead (guide §1.2: don't
-    * recompute what is constant). Keyed by the sidecar directory PLUS
-    * its [[GenLog.dirSig]] (file count, total bytes, newest mtime,
-    * sorted file-name hash), so re-initializing an index under the
-    * same path invalidates naturally. This memoizes INDEX STRUCTURE — the
-    * at-rest codebook, exactly like the memoized index fixtures — not
-    * query results: every serve still scans the probed lists and
-    * scores them. Cleared with the other session caches. */
-  private val bookMemo = TrieMap.empty[(String, String), AnyRef]
-
-  private[graft] def clearBookMemo(): Unit = bookMemo.clear()
-
-  private def memoBook[T <: AnyRef](f: FileSystem, dir: String)(
-      load: => T): T =
-    bookMemo.getOrElseUpdate((dir, GenLog.dirSig(f, new Path(dir))), load)
-      .asInstanceOf[T]
-
-  /** [[Similarity.collectCodebook]] of the version-`v` centroids
-    * sidecar, memoized per on-disk state. */
+  /** The version-`v` centroids sidecar through
+    * [[Similarity.collectCodebook]]. The tiny, version-immutable
+    * codebook SIDECARS (centroids here, pq and coarse below) are
+    * memoized on the driver: every serve used to pay a parquet
+    * footer-inference job plus a collect per call just to reload a
+    * <= C·dim-doubles structure that never changes for a given version.
+    * Keyed by the sidecar directory and its [[GenLog.dirSig]] (file
+    * count, total bytes, newest mtime, sorted file-name hash), so
+    * re-initializing an index under the same path serves the new
+    * codebook. This memoizes INDEX STRUCTURE, not query results: every
+    * serve still scans the probed lists and scores them. */
   private def centroidBook(spark: SparkSession, idx: Index,
       v: Int): Seq[(Long, Seq[Double], Double)] = {
     val dir = sidecar(idx.path, "centroids", v)
-    memoBook(fsOf(spark, idx.path), dir) {
+    Memo.bySig(dir, GenLog.dirSig(fsOf(spark, idx.path), new Path(dir))) {
       Similarity.collectCodebook(spark.read.parquet(dir))
     }
   }
@@ -167,7 +154,7 @@ object VecIndex {
     val f = fsOf(spark, idx.path)
     val dir = sidecar(idx.path, "pq", v)
     if (!f.exists(new Path(dir))) None
-    else Some(memoBook(f, dir) {
+    else Some(Memo.bySig(dir, GenLog.dirSig(f, new Path(dir))) {
       val rows = spark.read.parquet(dir)
         .select("s", "cid", "comp").collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
@@ -188,7 +175,7 @@ object VecIndex {
     val f = fsOf(spark, idx.path)
     val dir = sidecar(idx.path, "coarse", v)
     if (!f.exists(new Path(dir))) None
-    else Some(memoBook(f, dir) {
+    else Some(Memo.bySig(dir, GenLog.dirSig(f, new Path(dir))) {
       spark.read.parquet(dir)
         .select("ccid", "comp").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
@@ -873,13 +860,13 @@ object VecIndex {
     // existed read it as null instead of hiding it (which would both
     // fail filtered serves spuriously and let reencode/compact DROP
     // the column). The merged schema is memoized per committed
-    // generation set over ALL live segments (GenLog.memoSchema): the
+    // generation set over ALL live segments (Memo.bySig): the
     // footer-merge job is paid once per index state instead of per
     // serve, and a probed (gens-subset) read gets the same union
     // schema with missing columns null-filled by the explicit-schema
     // parquet read.
     val root = s"${idx.path}/vecs"
-    val st = GenLog.memoSchema(root, GenLog.commitsSig(f, idx.path)) {
+    val st = Memo.bySig(root, GenLog.commitsSig(f, idx.path)) {
       val all = ms.filter(_.kind != GenLog.KindDel)
         .flatMap(m => GenLog.genPaths(spark, f, idx.path, "vecs", m.gen))
       spark.read.option("basePath", root).option("mergeSchema", "true")
