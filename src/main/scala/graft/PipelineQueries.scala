@@ -1700,7 +1700,8 @@ object PipelineQueries {
 
   def searchBm25Stream(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.read(spark, dir, "documents")
-    val path = Queries.fixture(spark, dir, "searchidx-stream") { path =>
+    val path = Queries.fixturePath(spark, dir, "searchidx-stream")
+    Memo.once(path) {
       val inDir = Queries.fixturePath(spark, dir, "searchidx-stream-in")
       docs.repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(inDir)
@@ -1733,7 +1734,8 @@ object PipelineQueries {
     * the marker stats deltas through the fold) in one row. */
   def searchBm25Inc(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.read(spark, dir, "documents")
-    val path = Queries.fixture(spark, dir, "searchidx-inc") { path =>
+    val path = Queries.fixturePath(spark, dir, "searchidx-inc")
+    Memo.once(path) {
       val idx = Search.writeIndex(
         docs.filter(col("doc_id") % 3 =!= lit(2)),
         "doc_id", "text", path)
@@ -1760,7 +1762,8 @@ object PipelineQueries {
     * gate catches it. */
   def searchBm25Auto(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.read(spark, dir, "documents")
-    val path = Queries.fixture(spark, dir, "searchidx-auto") { path =>
+    val path = Queries.fixturePath(spark, dir, "searchidx-auto")
+    Memo.once(path) {
       val cfg = graft.io.GenLog.MaintainConfig(deltaGens = 2,
         purgeFrac = 0.05)
       val idx = Search.writeIndex(
@@ -3005,7 +3008,8 @@ object PipelineQueries {
   def annBinaryRest(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val path = Queries.fixture(spark, dir, "binidx") { path =>
+    val path = Queries.fixturePath(spark, dir, "binidx")
+    Memo.once(path) {
       Similarity.binaryIndexWrite(emb, 64, path)
     }
     Similarity.binaryTopKAtRest(spark, emb.filter(col("id") < 3),
@@ -3025,7 +3029,8 @@ object PipelineQueries {
   def annBinaryGen(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val path = Queries.fixture(spark, dir, "vecidx-gen") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-gen")
+    Memo.once(path) {
       val half = emb.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path)
       VecIndex.append(emb.filter(col("id") > half), idx)
@@ -3054,7 +3059,8 @@ object PipelineQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = Queries.fixture(spark, dir, "vecidx-ivfgen") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-ivfgen")
+    Memo.once(path) {
       val half = emb.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
         centroids = Some(centroids), cbBuckets = 4)
@@ -3090,7 +3096,8 @@ object PipelineQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = Queries.fixture(spark, dir, "vecidx-ivfinc") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-ivfinc")
+    Memo.once(path) {
       val half = emb.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
         centroids = Some(centroids), cbBuckets = 8)
@@ -3197,7 +3204,8 @@ object PipelineQueries {
       .select(col("id").as("cid"), col("vec").as("cvec"))
     val centB = emb.filter(col("id") >= 8 && col("id") < 16)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = Queries.fixture(spark, dir, "vecidx-ivfretrain") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-ivfretrain")
+    Memo.once(path) {
       val half = emb.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
         centroids = Some(centA), cbBuckets = 4)
@@ -3225,7 +3233,8 @@ object PipelineQueries {
   def annBinaryStream(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val path = Queries.fixture(spark, dir, "vecidx-stream") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-stream")
+    Memo.once(path) {
       val inDir = Queries.fixturePath(spark, dir, "vecidx-stream-in")
       emb.repartition(3, col("id"))
         .write.mode("overwrite").parquet(inDir)
@@ -3429,7 +3438,8 @@ object PipelineQueries {
       when(pmod(col("id"), lit(3)) === 0, "en").otherwise("xx"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = Queries.fixture(spark, dir, "vecidx-filtered") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-filtered")
+    Memo.once(path) {
       val half = tagged.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(tagged.filter(col("id") <= half), 64, path,
         centroids = Some(centroids), cbBuckets = 4)
@@ -3465,7 +3475,8 @@ object PipelineQueries {
     val chunks = emb.withColumn("doc", expr("id div 4"))
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = Queries.fixture(spark, dir, "vecidx-maxsim") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-maxsim")
+    Memo.once(path) {
       val half = chunks.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(chunks.filter(col("id") <= half), 64, path,
         centroids = Some(centroids), cbBuckets = 4)
@@ -3788,7 +3799,8 @@ object PipelineQueries {
       .select(col("doc_id").as("id"), col("lang")), "id")
     val centroids = emb.filter(col("id") < 8)
       .select(col("id").as("cid"), col("vec").as("cvec"))
-    val path = Queries.fixture(spark, dir, "vecidx-hybridflt") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-hybridflt")
+    Memo.once(path) {
       val half = tagged.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(tagged.filter(col("id") <= half), 64, path,
         centroids = Some(centroids), cbBuckets = 4)
@@ -4243,9 +4255,10 @@ object PipelineQueries {
 
   /** Trained centroids (k x dim rows — tiny): q_kmeans and
     * q_ann_ivf_kmeans share one Lloyd run per (session, dir). Collected
-    * rows, not a persisted frame, so the memo keeps them for the JVM. */
+    * rows, not a persisted frame (nothing to release), but dropped by
+    * [[Queries.clearCache]] all the same: the key holds the session. */
   private def trainedCentroids(spark: SparkSession, dir: String): Seq[(Int, Int, Double)] =
-    Memo.once(("kmeans", spark, dir)) {
+    Memo.once(("kmeans", spark, dir), (_: Seq[(Int, Int, Double)]) => ()) {
       val emb = Tables.read(spark, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       Similarity.kmeansCentroids(emb, 8, 2).collect()
@@ -4397,7 +4410,8 @@ object PipelineQueries {
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val books = Similarity.pqTrainCodebooks(emb, PqM, PqSubDim, PqK, 2)
-    val path = Queries.fixture(spark, dir, "vecidx-pqgen") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-pqgen")
+    Memo.once(path) {
       val half = emb.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(emb.filter(col("id") <= half), 64, path,
         pq = Some(books))
@@ -4684,7 +4698,8 @@ object PipelineQueries {
     val st = ivfPqShared(spark, dir)
     val emb = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val path = Queries.fixture(spark, dir, "vecidx-ivfpqgen") { path =>
+    val path = Queries.fixturePath(spark, dir, "vecidx-ivfpqgen")
+    Memo.once(path) {
       val half = emb.agg(max("id")).head().getLong(0) / 2
       val idx = VecIndex.init(emb.filter(col("id") <= half),
         PqM * PqSubDim, path, cbBuckets = 4,

@@ -1123,23 +1123,15 @@ object Queries {
   /** `target/tmp/<name>-<session>-<sf dir>`: the path of a fixture
     * whose on-disk state is LIVE per session (MV refresh state, index
     * generations). The session's identity hash in the path keeps two
-    * SparkSessions in one JVM off each other's fixture. */
+    * SparkSessions in one JVM off each other's fixture. Callers build
+    * it once per JVM keyed by this path (`Memo.once(path) { ... }`,
+    * like every on-disk fixture here): the bench's untimed warm pass
+    * absorbs the build and the timed pass measures the operator. */
   private[graft] def fixturePath(spark: SparkSession, dir: String,
       name: String): String =
     s"target/tmp/$name-" +
       java.lang.Integer.toHexString(System.identityHashCode(spark)) +
       "-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** The fixture at [[fixturePath]], built by `build` once per JVM
-    * ([[Memo.once]], like every on-disk fixture here): the bench's
-    * untimed warm pass absorbs the build and the timed pass measures
-    * the operator. Returns the path. */
-  private[graft] def fixture(spark: SparkSession, dir: String,
-      name: String)(build: String => Unit): String = {
-    val path = fixturePath(spark, dir, name)
-    Memo.once(path)(build(path))
-    path
-  }
 
   /** Shared oracle CTEs reconstructing the version log from the
     * documents table (the same trick as the schema-evolution oracle:

@@ -12,9 +12,11 @@ import scala.annotation.tailrec
   *    builds of other keys, including one nested inside the build, go
   *    ahead. A build that throws leaves nothing behind, so the next call
   *    builds again. An entry given a `release` holds Spark-cached data
-  *    (a persisted frame): [[clear]] releases and drops it. An entry
-  *    without one (an on-disk fixture, a schema, a store instance) stays
-  *    for the life of the JVM.
+  *    (a persisted frame) or other per-run state: [[clear]] releases
+  *    and drops it. An entry without one (an on-disk fixture, a table
+  *    schema, a store instance) stays for the life of the JVM; one
+  *    keyed by a session holds one entry per session ever used, so
+  *    these grow with the sessions a JVM creates, not with its calls.
   *  - '''By signature''' ([[bySig]]): metadata derived from committed
   *    files, keyed by (root, content signature). A commit changes the
   *    signature, so an entry can never go stale, only unused. At most
@@ -22,10 +24,13 @@ import scala.annotation.tailrec
   *    going first, so a long-lived process that keeps committing to a
   *    table holds a bounded number of entries for it. The bound is
   *    larger than one because one call can resolve two signatures of
-  *    the same root: `Versioned.readFilesAligned` reads the full slice
-  *    and then the pruned slice, and `Versioned.changes` resolves both
-  *    ends of its range. Keeping only the newest would rebuild both on
-  *    every such call. [[clear]] leaves these entries alone.
+  *    the same root (`Versioned.changes` reads both ends of its range)
+  *    and readers interleave slices (a current read beside an `asOf`
+  *    one): keeping only the newest would rebuild on every such call.
+  *    The signature is the slice's, never the key's: a point or range
+  *    read prunes files but reads them under the whole slice's schema,
+  *    so reads of any number of keys share one entry. [[clear]] leaves
+  *    these entries alone.
   *
   * The maps are `ConcurrentHashMap`s and each key has its own lock, not
   * a `TrieMap`: `TrieMap.getOrElseUpdate` may run a build twice under

@@ -1649,7 +1649,19 @@ object Versioned {
     * rename would make the committing write mint phantom
     * schema-evolution ids and split one column's data in two. */
   private[io] def readDirs(spark: SparkSession, path: String,
-      vs: Seq[Int], mapV: Option[Int] = None): DataFrame = {
+      vs: Seq[Int], mapV: Option[Int] = None): DataFrame =
+    readSlice(spark, path, vs, None, mapV)
+
+  /** [[readDirs]] restricted to `subset` of the slice's files (all of
+    * them when None; none reads the slice's empty frame). The schema
+    * is ALWAYS the whole slice's: pruning may drop every file of a
+    * schema-evolution commit, and the survivors' own merged schema
+    * would then silently lose columns. So a pruned read never depends
+    * on which files were skipped, and every point or range read over
+    * one committed state shares the slice's one memoized schema,
+    * whatever the key. */
+  private def readSlice(spark: SparkSession, path: String, vs: Seq[Int],
+      subset: Option[Seq[String]], mapV: Option[Int]): DataFrame = {
     require(vs.nonEmpty, s"no committed versions to read at $path")
     val f = fs(spark, path)
     // enumerate FILES, not dirs: an incremental checkpoint's rows are
@@ -1658,14 +1670,13 @@ object Versioned {
     require(files.nonEmpty,
       s"no data-carrying versions among ${vs.mkString(",")} at $path")
     val widen = widenAt(spark, path, latestVersion(spark, path))
-    val raw =
-      if (widen.isEmpty)
-        spark.read.schema(mergedSchemaOf(spark, path, files)).parquet(files: _*)
-      else
-        spark.read.schema(physUnionSchema(spark, path,
-            dataVersions(spark, path, vs), widen))
-          .parquet(files: _*)
-    applyMapping(raw, mappingAt(spark, path, mapV.getOrElse(vs.max)))
+    val schema =
+      if (widen.isEmpty) mergedSchemaOf(spark, path, files)
+      else physUnionSchema(spark, path, dataVersions(spark, path, vs), widen)
+    val read = subset.filter(_.nonEmpty).getOrElse(files)
+    val df = applyMapping(spark.read.schema(schema).parquet(read: _*),
+      mappingAt(spark, path, mapV.getOrElse(vs.max)))
+    if (subset.exists(_.isEmpty)) df.filter(lit(false)) else df
   }
 
   /** Widen-aware PHYSICAL union-by-name schema over version dirs —
@@ -2286,34 +2297,7 @@ object Versioned {
         .filter(fp => mayIntersect(lookup(fp), phys, lo, hi))
         .map(_.toString)
     }
-    readFilesAligned(spark, path, vs, files)
-  }
-
-  /** Read a pruned file list under the FULL slice schema: pruning may
-    * drop every file of a schema-evolution commit, and the survivors'
-    * merged schema would then silently lose columns — align by name
-    * against the (empty) unpruned slice so the schema never depends
-    * on which files were skipped. */
-  private def readFilesAligned(spark: SparkSession, path: String,
-      vs: Seq[Int], files: Seq[String],
-      mapV: Option[Int] = None): DataFrame = {
-    val full = readDirs(spark, path, vs, mapV).filter(lit(false))
-    if (files.isEmpty) full // nothing can match; keep the schema
-    else {
-      val widen = widenAt(spark, path, latestVersion(spark, path))
-      val raw =
-        if (widen.isEmpty)
-          // schema memoized on the PRUNED slice's own file list — a
-          // point/range read over the same committed state skips the
-          // per-call footer-merge job (mergedSchemaOf)
-          spark.read.schema(mergedSchemaOf(spark, path, files))
-            .parquet(files: _*)
-        else spark.read.schema(physUnionSchema(spark, path,
-            dataVersions(spark, path, vs), widen))
-          .parquet(files: _*)
-      applyMapping(raw, mappingAt(spark, path, mapV.getOrElse(vs.max)))
-        .unionByName(full, allowMissingColumns = true)
-    }
+    readSlice(spark, path, vs, Some(files), None)
   }
 
   /** Zone-map-pruned LOG view: `asOf` restricted to rows with `colName`
@@ -2514,7 +2498,7 @@ object Versioned {
         }
         .map(_.toString)
     }
-    resolve(readFilesAligned(spark, path, vs, files), keyCol,
+    resolve(readSlice(spark, path, vs, Some(files), None), keyCol,
       mergeVersions(spark, path).exists(v => v > from && v <= version))
       .filter(col(keyCol).isin(keys: _*))
   }
@@ -2722,8 +2706,8 @@ object Versioned {
       dataDeltas.flatMap(x => filesOf(f, path, x)).map(_.toString)
     val sliceVs = c +: dataDeltas
     val resolved = resolve(
-        readFilesAligned(spark, path, sliceVs, foldFiles,
-          mapV = Some(head)), keyCol,
+        readSlice(spark, path, sliceVs, Some(foldFiles),
+          Some(head)), keyCol,
         hasMerges)
       .drop(VersionCol, SeqCol, MergeCol, CkptCol)
     // the rewritten part is key-clustered BY DEFAULT, sized like the

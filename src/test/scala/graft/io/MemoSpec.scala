@@ -111,6 +111,24 @@ class MemoSpec extends SparkSpec {
     assert(held >= 1 && held <= Memo.PerRoot, held)
   }
 
+  test("point and range reads of many distinct keys over one table " +
+      "state share the slice's one schema signature") {
+    val path = "target/tmp/memospec-vtable-keys"
+    Versioned.drop(spark, path)
+    (0 until 20).foreach { i =>
+      Versioned.append((i * 10 until i * 10 + 10)
+        .map(k => (k.toLong, s"v$k")).toDF("k", "s"), path)
+    }
+    // each key band prunes to its own commit's files; the schema the
+    // pruned read uses must still be the whole slice's
+    (0 until 20).foreach { i =>
+      val lo = i * 10L
+      assert(Versioned.currentPoint(spark, path, "k", lo + 3).count() == 1)
+      assert(Versioned.currentRange(spark, path, "k", lo, lo + 4).count() == 5)
+    }
+    assert(Memo.sigsHeld(path) == 1)
+  }
+
   test("re-initializing a vector index under the same path with a " +
       "different codebook serves the new codebook") {
     def corpus(ids: Range): DataFrame = ids.map { id =>
