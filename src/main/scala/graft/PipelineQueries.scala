@@ -4882,12 +4882,6 @@ object PipelineQueries {
   private val NClips = 30
   private val AudioSegs = 8
 
-  private def mediaFixturePath(spark: SparkSession, kind: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_media_" + kind + "_" +
-        java.lang.Integer.toHexString(System.identityHashCode(spark)))
-      .toString
-
   /** Media fixture parquets, written once per JVM ([[Memo.once]], so
     * fixtures of different kinds build concurrently). The fixtures are
     * DETERMINISTIC (pixel/sample formulas) and sf-independent, so the
@@ -4901,7 +4895,7 @@ object PipelineQueries {
     * shared-path overwrite raced on). */
   private def ensureMediaFixture(spark: SparkSession, kind: String)(
       build: String => Unit): String = {
-    val fix = mediaFixturePath(spark, kind)
+    val fix = Queries.fixturePath(spark, "media", kind)
     Memo.once(fix) { build(fix) }
     fix
   }
@@ -5094,7 +5088,7 @@ object PipelineQueries {
   def multimodalFrameDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     multimodalVideo(spark, dir) // builds + memoizes the y4m fixture
-    val fix = mediaFixturePath(spark, "y4m")
+    val fix = Queries.fixturePath(spark, "media", "y4m")
     val frames = Multimodal.y4mFrames(
       spark.read.parquet(fix).as[Multimodal.MediaRecord], 2)
     frames

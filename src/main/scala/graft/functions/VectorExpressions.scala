@@ -449,7 +449,6 @@ object PlaneSigns {
   }
 }
 
-/** Column-level entry points for the native vector expressions. */
 /**
  * Per-feature bucketize of an ml VectorUDT column against fixed split
  * arrays — the discretizer model's transform as a NATIVE expression.
@@ -540,12 +539,128 @@ object BucketizeVector {
         }
         o
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](1.toByte, null, null,
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)))
+    GatherVector.denseRow(out)
   }
 }
 
+/**
+ * Gather of an ml VectorUDT column onto fixed selected feature indices
+ * — the selector model's transform as a NATIVE expression, in the
+ * [[BucketizeVector]] pattern: the static `compute` reads the UDT's
+ * internal struct and is shared by interpreted eval and generated code;
+ * no `Vector` object is built.
+ *
+ * Semantics (reference: InfoSelector.scala:229-263): `indices` are
+ * strictly increasing. Dense input gathers into a dense vector of
+ * `indices.length`; sparse input is the sorted-merge intersection of its
+ * indices with `indices`, reindexed to the compacted space (explicit
+ * entries, 0.0 and -0.0 included, keep their values bit for bit). With
+ * `width` at [[GatherVector.AnyWidth]] a vector too narrow to hold the
+ * largest index is refused, naming both sizes. With `width` >= 0 the
+ * input must be exactly that wide: the form [[graft.plans.GatherFirst]]
+ * writes when it moves the gather under a [[BucketizeVector]], so a
+ * wrong-width vector is refused with the bucketize's own message.
+ */
+case class GatherVector(child: Expression, indices: Array[Int],
+    width: Int = GatherVector.AnyWidth)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  require(indices.indices.forall(i =>
+      if (i == 0) indices(0) >= 0 else indices(i - 1) < indices(i)),
+    "gather indices must be non-negative and strictly increasing")
+  require(width == GatherVector.AnyWidth || indices.isEmpty ||
+    indices.last < width, s"gather indices must lie in [0, $width)")
+
+  override def dataType: DataType =
+    org.apache.spark.ml.linalg.SQLDataTypes.VectorType
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == org.apache.spark.ml.linalg.SQLDataTypes.VectorType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"gather_vector expects an ml vector, got ${child.dataType}")
+
+  override protected def nullSafeEval(v: Any): Any =
+    GatherVector.compute(
+      v.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow], indices, width)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idx = ctx.addReferenceObj("indices", indices, "int[]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.GatherVector.compute($v, $idx, $width);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): GatherVector =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_gather_vector"
+}
+
+object GatherVector {
+
+  /** `width` of a gather that only needs the input to hold its largest
+    * index. */
+  val AnyWidth: Int = -1
+
+  /** Shared eval/codegen kernel over the VectorUDT struct encoding:
+    * type (0 = sparse, 1 = dense), size, indices, values. */
+  def compute(row: org.apache.spark.sql.catalyst.InternalRow,
+      indices: Array[Int], width: Int): org.apache.spark.sql.catalyst.InternalRow = {
+    val k = indices.length
+    if (row.getByte(0) == 1) {
+      val values = row.getArray(3)
+      checkSize(values.numElements(), indices, width)
+      val out = new Array[Double](k)
+      var i = 0
+      while (i < k) { out(i) = values.getDouble(indices(i)); i += 1 }
+      denseRow(out)
+    } else {
+      checkSize(row.getInt(1), indices, width)
+      val ids = row.getArray(2)
+      val values = row.getArray(3)
+      val nnz = ids.numElements()
+      var outIdx = new Array[Int](math.min(nnz, k))
+      var outVal = new Array[Double](outIdx.length)
+      // sorted-merge intersection, reindexed to the compacted space
+      var i = 0; var j = 0; var m = 0
+      while (i < nnz && j < k) {
+        val a = ids.getInt(i); val b = indices(j)
+        if (a == b) {
+          outIdx(m) = j; outVal(m) = values.getDouble(i)
+          m += 1; i += 1; j += 1
+        } else if (a < b) i += 1
+        else j += 1
+      }
+      if (m < outIdx.length) {
+        outIdx = java.util.Arrays.copyOf(outIdx, m)
+        outVal = java.util.Arrays.copyOf(outVal, m)
+      }
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](0.toByte, k,
+          org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(outIdx),
+          org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(outVal)))
+    }
+  }
+
+  private def checkSize(size: Int, indices: Array[Int], width: Int): Unit =
+    if (width == AnyWidth) {
+      require(indices.isEmpty || size > indices.last,
+        s"vector of size $size is narrower than the ${indices.last + 1} " +
+          "features the selected indices need")
+    } else {
+      require(size == width, s"vector size $size != number of split arrays $width")
+    }
+
+  /** A dense VectorUDT struct over `values`, as one unboxed array. */
+  private[functions] def denseRow(values: Array[Double])
+      : org.apache.spark.sql.catalyst.InternalRow =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](1.toByte, null, null,
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(values)))
+}
+
+/** Column-level entry points for the native vector expressions. */
 object VectorFunctions {
 
   /** dot(a, b): codegen'd double dot product over numeric arrays. */
@@ -583,4 +698,10 @@ object VectorFunctions {
     * transform) — native, no ScalaUDF, no Vector object per row. */
   def bucketizeVector(vec: Column, splits: Array[Array[Double]]): Column =
     GraftSqlBridge.column(BucketizeVector(GraftSqlBridge.expression(vec), splits))
+
+  /** Gather of a vector onto strictly increasing feature indices (the
+    * selector transform) — native, no ScalaUDF, no Vector object per
+    * row. */
+  def gatherVector(vec: Column, indices: Array[Int]): Column =
+    GraftSqlBridge.column(GatherVector(GraftSqlBridge.expression(vec), indices))
 }

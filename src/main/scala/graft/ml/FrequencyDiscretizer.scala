@@ -317,7 +317,10 @@ object FrequencyDiscretizer extends DefaultParamsReadable[FrequencyDiscretizer] 
   * Spark's `Bucketizer` because Bucketizer is a ScalaUDF inside AND only
   * takes double columns (a vector input would need a vector_to_array /
   * array_to_vector sandwich — three per-row object boundaries where the
-  * native kernel has none). */
+  * native kernel has none). Followed by an [[InfoThSelectorModel]]
+  * transform, [[graft.plans.GatherFirst]] bucketizes only the selected
+  * features (a NaN or out-of-range value in a dropped feature then no
+  * longer throws; a wrong-width vector is still refused). */
 class FrequencyDiscretizerModel(
     override val uid: String,
     val splitsArray: Array[Array[Double]])

@@ -3,12 +3,12 @@ package graft.ml
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.ml.{Estimator, GraftMlBridge, Model}
-import org.apache.spark.ml.linalg.{DenseVector, SparseVector, SQLDataTypes, Vector, Vectors}
+import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.{HasFeaturesCol, HasLabelCol, HasOutputCol}
 import org.apache.spark.ml.util._
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 import graft.core._
@@ -193,8 +193,17 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
 /**
  * Model: projects `featuresCol` down to the selected indices
  * (reference transform semantics: select(), InfoSelector.scala:229-263 —
- * dense gather / sparse sorted-merge intersection with reindexing).
- * Purely narrow — no shuffle, codegen-adjacent closure over primitives.
+ * dense gather / sparse sorted-merge intersection with reindexing)
+ * through the native [[graft.functions.GatherVector]] expression: purely
+ * narrow, no shuffle, no UDF and no `Vector` object per row. A vector
+ * too narrow for the largest selected index is refused, naming both
+ * sizes; a null vector gathers to null.
+ *
+ * The transform installs [[graft.plans.GatherFirst]] in the session, so
+ * behind a [[FrequencyDiscretizerModel]] whose output column is not used
+ * elsewhere only the selected features are bucketized: a wrong-width
+ * input is still refused, and a NaN or out-of-range value still throws
+ * in a selected feature but no longer in an unselected one.
  */
 class InfoThSelectorModel(
     override val uid: String,
@@ -211,9 +220,9 @@ class InfoThSelectorModel(
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
-    val indices = selectedFeatures
-    val slice = udf { v: Vector => InfoThSelectorModel.gather(v, indices) }
-    dataset.withColumn($(outputCol), slice(col($(featuresCol))))
+    graft.plans.GatherFirst.install(dataset.sparkSession)
+    dataset.withColumn($(outputCol), graft.functions.VectorFunctions
+      .gatherVector(col($(featuresCol)), selectedFeatures))
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -228,35 +237,6 @@ class InfoThSelectorModel(
 }
 
 object InfoThSelectorModel extends MLReadable[InfoThSelectorModel] {
-
-  /** Vector gather (reference: InfoSelector.scala:229-263). `indices`
-    * must be sorted ascending; a vector too narrow to hold the largest
-    * index is refused rather than read as zeros. */
-  def gather(v: Vector, indices: Array[Int]): Vector = {
-    require(indices.isEmpty || v.size > indices.last,
-      s"vector of size ${v.size} is narrower than the ${indices.last + 1} " +
-        "features the selected indices need")
-    v match {
-      case dv: DenseVector =>
-        val out = new Array[Double](indices.length)
-        var i = 0
-        while (i < indices.length) { out(i) = dv.values(indices(i)); i += 1 }
-        Vectors.dense(out)
-      case sv: SparseVector =>
-        // sorted-merge intersection, reindexed to the compacted space
-        // (reference sparse loop, InfoSelector.scala:242-257)
-        val outIdx = collection.mutable.ArrayBuilder.make[Int]
-        val outVal = collection.mutable.ArrayBuilder.make[Double]
-        var i = 0; var j = 0
-        while (i < sv.indices.length && j < indices.length) {
-          val a = sv.indices(i); val b = indices(j)
-          if (a == b) { outIdx += j; outVal += sv.values(i); i += 1; j += 1 }
-          else if (a < b) i += 1
-          else j += 1
-        }
-        Vectors.sparse(indices.length, outIdx.result(), outVal.result())
-    }
-  }
 
   private[InfoThSelectorModel] class Writer(instance: InfoThSelectorModel)
       extends MLWriter {

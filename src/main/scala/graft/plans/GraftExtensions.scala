@@ -9,7 +9,8 @@ import graft.functions.{AdjacentPairs, CharPairs, DotProduct, HllSketchAgg, KmvS
 /**
  * SparkSessionExtensions entry point: registers the engine's native
  * expressions so plain SQL can use them on any cluster via
- * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+ * `--conf spark.sql.extensions=graft.plans.GraftExtensions`, and the
+ * [[GatherFirst]] optimizer rule.
  *
  * For an already-running session (notebooks, tests), [[GraftExtensions.register]]
  * installs the same functions directly into the session's registry.
@@ -18,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(ext.injectFunction)
     GraftExtensions.tableDescriptors.foreach(ext.injectTableFunction)
+    ext.injectOptimizerRule(_ => GatherFirst)
   }
 }
 
@@ -182,8 +184,10 @@ object GraftExtensions {
         b)
     }
 
-  /** Install the functions into a live session (idempotent). */
+  /** Install the functions and the [[GatherFirst]] rule into a live
+    * session (idempotent). */
   def register(spark: SparkSession): Unit = {
+    GatherFirst.install(spark)
     builders.foreach { case (name, _, b) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, b, "built-in")

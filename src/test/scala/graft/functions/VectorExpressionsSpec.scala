@@ -148,4 +148,85 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(AdcDistances(Literal.create(Seq[Any](null, 1L),
       ArrayType(LongType, true)), tables, 2).eval(InternalRow.empty) == null)
   }
+
+  /** Runs `body` with `spark.sql.codegen.factoryMode` (and whole-stage
+    * codegen to match) set, restoring both after. */
+  private def inCodegenMode[T](mode: String)(body: => T): T = {
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), mode)
+    spark.conf.set(keys(1), (mode == "CODEGEN_ONLY").toString)
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("GatherVector equals a driver-side reference gather, codegen and interpreted") {
+    import org.apache.spark.ml.linalg.{DenseVector, SparseVector, SQLDataTypes, Vector, Vectors}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+
+    // the reference: dense gather, sparse sorted-merge reindexed
+    def reference(v: Vector, idx: Array[Int]): Vector = v match {
+      case d: DenseVector => Vectors.dense(idx.map(d.values))
+      case sv: SparseVector =>
+        val pos = idx.zipWithIndex.toMap
+        val kept = sv.indices.zip(sv.values).flatMap { case (i, x) => pos.get(i).map(_ -> x) }
+        Vectors.sparse(idx.length, kept.map(_._1), kept.map(_._2))
+    }
+    // encoding, size, indices and value bits: -0.0 must stay -0.0
+    def exact(v: Vector): (String, Int, Seq[Int], Seq[Long]) = v match {
+      case d: DenseVector =>
+        ("dense", d.size, Nil, d.values.map(java.lang.Double.doubleToRawLongBits).toSeq)
+      case sv: SparseVector =>
+        ("sparse", sv.size, sv.indices.toSeq,
+          sv.values.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    }
+
+    val nf = 11
+    val rng = new scala.util.Random(23)
+    val vectors: Seq[Vector] = (0 until 60).map { i =>
+      val dense = Array.fill(nf)(rng.nextInt(5) match {
+        case 0 => 0.0
+        case 1 => -0.0
+        case _ => rng.nextGaussian()
+      })
+      if (i % 2 == 0) Vectors.dense(dense)
+      else {
+        // explicit 0.0 / -0.0 entries stay explicit in the sparse form
+        val ids = (0 until nf).filter(_ => rng.nextInt(3) == 0).toArray
+        Vectors.sparse(nf, ids, ids.map(dense))
+      }
+    } ++ Seq(Vectors.sparse(nf, Array(0, nf - 1), Array(-0.0, 0.0)),
+      Vectors.sparse(nf, Array.empty[Int], Array.empty[Double]),
+      Vectors.dense(Array.tabulate(nf)(_.toDouble)))
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("v", SQLDataTypes.VectorType)))
+    // an RDD source, so the projection runs in a task and is not folded
+    // into a local relation on the driver
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      vectors.zipWithIndex.map { case (v, i) => Row(i, v) } :+ Row(vectors.length, null), 3),
+      schema)
+    val indexLists = Seq(Array.empty[Int], Array(0), Array(nf - 1), Array(0, nf - 1),
+      Array(1, 4, 5, 9), Array.range(0, nf))
+
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"); idx <- indexLists) {
+      val what = s"$mode, indices ${idx.mkString("[", ",", "]")}"
+      val out = inCodegenMode(mode) {
+        val q = df.select(col("id"), VectorFunctions.gatherVector(col("v"), idx))
+        val plan = q.queryExecution.executedPlan
+        assert(plan.exists(_.isInstanceOf[
+          org.apache.spark.sql.execution.WholeStageCodegenExec]) == (mode == "CODEGEN_ONLY"),
+          s"$what: plan\n$plan")
+        q.collect().map(r => r.getInt(0) -> r.getAs[Vector](1)).toMap
+      }
+      vectors.indices.foreach { i =>
+        assert(exact(out(i)) == exact(reference(vectors(i), idx)),
+          s"$what: row $i ${vectors(i)} gathered to ${out(i)}")
+      }
+      assert(out(vectors.length) == null, s"$what: a null vector gathers to null")
+    }
+  }
 }

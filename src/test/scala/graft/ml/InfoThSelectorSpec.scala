@@ -1,9 +1,13 @@
 package graft.ml
 
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.SparkSpec
+import graft.functions.{BucketizeVector, GatherVector}
 
 class InfoThSelectorSpec extends SparkSpec {
 
@@ -77,21 +81,119 @@ class InfoThSelectorSpec extends SparkSpec {
     val first = out.select("selectedFeatures").head.getAs[Vector](0)
     assert(first.size == 2)
 
-    // gather semantics directly
+    // gather semantics through the transform's expression
     val idx = Array(1, 3)
-    val dense = InfoThSelectorModel.gather(Vectors.dense(9, 8, 7, 6), idx)
+    val selector = new InfoThSelectorModel("gather", idx, idx.map(_ -> 0.0))
+    def gathered(v: Vector): Vector =
+      selector.transform(vectorDf(Seq(v))).select("selectedFeatures").head.getAs[Vector](0)
+    val dense = gathered(Vectors.dense(9, 8, 7, 6))
     assert(dense.toArray.toSeq == Seq(8.0, 6.0))
-    val sparse = InfoThSelectorModel.gather(
-      Vectors.sparse(4, Array(0, 3), Array(5.0, 2.0)), idx)
+    val sparse = gathered(Vectors.sparse(4, Array(0, 3), Array(5.0, 2.0)))
     assert(sparse.toArray.toSeq == Seq(0.0, 2.0))
     assert(sparse.isInstanceOf[org.apache.spark.ml.linalg.SparseVector])
 
     // a vector narrower than the largest selected index is refused, dense
     // or sparse, with both sizes named
     Seq(Vectors.dense(9, 8, 7), Vectors.sparse(3, Array(1), Array(5.0))).foreach { v =>
-      val e = intercept[IllegalArgumentException](InfoThSelectorModel.gather(v, idx))
-      assert(e.getMessage.contains("size 3") && e.getMessage.contains("the 4 "),
-        e.getMessage)
+      assertRefuses("size 3", "the 4 ")(gathered(v))
+    }
+  }
+
+  /** One "features" vector column, read in tasks (an RDD source, not a
+    * local relation the optimizer evaluates on the driver). */
+  private def vectorDf(vs: Seq[Vector]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), 2),
+      StructType(Seq(StructField("features", SQLDataTypes.VectorType))))
+
+  /** Asserts that `body` fails with an IllegalArgumentException, possibly
+    * wrapped by a task failure, whose message holds every one of `parts`. */
+  private def assertRefuses(parts: String*)(body: => Any): Unit = {
+    val e = intercept[Exception](body)
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      parts.forall(t.getMessage.contains)),
+      s"expected an IllegalArgumentException naming ${parts.mkString(", ")}, got $e")
+  }
+
+  /** The optimized plan's expressions, every node of every tree. */
+  private def optimizedExprs(df: DataFrame): Seq[Expression] =
+    df.queryExecution.optimizedPlan.collect { case p => p.expressions }
+      .flatten.flatMap(_.collect { case e => e })
+
+  test("discretize -> select gathers before it bucketizes, row for row") {
+    val nf = 9
+    val rng = new scala.util.Random(37)
+    val train = vectorDf((0 until 400).map { i =>
+      if (i % 3 == 0) Vectors.dense(Array.fill(nf)(rng.nextGaussian() * 10))
+      else Vectors.sparse(nf, Array(0, 2, 5, 8), Array.fill(4)(rng.nextDouble() * 4 - 2))
+    })
+    val disc = new FrequencyDiscretizer().setNumBuckets(6).setSeed(3)
+      .setInputCol("features").setOutputCol("disc").fit(train)
+    val idx = Array(0, 3, 5, 8)
+    val sel = new InfoThSelectorModel("gather-first", idx, idx.map(_ -> 0.0))
+      .setFeaturesCol("disc").setOutputCol("sel")
+    val discDf = disc.transform(train)
+    val out = sel.transform(discDf).select("sel")
+
+    val exprs = optimizedExprs(out)
+    assert(!exprs.exists(_.isInstanceOf[ScalaUDF]), "the transform plans a ScalaUDF")
+    val rewritten = exprs.collect {
+      case BucketizeVector(GatherVector(_, i, w), s) => (i.toSeq, w, s.toSeq.map(_.toSeq))
+    }
+    assert(rewritten == Seq((idx.toSeq, nf, idx.toSeq.map(disc.splitsArray(_).toSeq))),
+      s"optimized plan:\n${out.queryExecution.optimizedPlan}")
+    assert(exprs.count(_.isInstanceOf[BucketizeVector]) == 1)
+
+    // "bucketize all, then gather" computed on the driver, in row order
+    val expected = discDf.select("disc").collect()
+      .map(r => Vectors.dense(idx.map(r.getAs[Vector](0).toArray)))
+    val got = out.collect().map(_.getAs[Vector](0))
+    assert(got.toSeq == expected.toSeq)
+    assert(got.forall(_.isInstanceOf[org.apache.spark.ml.linalg.DenseVector]))
+
+    // the rewritten form does not match again, and a plan without a
+    // gather is returned as it is
+    val optimized = out.queryExecution.optimizedPlan
+    assert(graft.plans.GatherFirst(optimized) eq optimized)
+    val noGather = discDf.queryExecution.optimizedPlan
+    assert(graft.plans.GatherFirst(noGather) eq noGather)
+
+    // a bucketized column used twice keeps its projection: the rule does
+    // not fire and nothing is bucketized twice
+    val both = sel.transform(discDf).select("disc", "sel")
+    val bothExprs = optimizedExprs(both)
+    assert(bothExprs.collect { case b: BucketizeVector => b.splits.length } == Seq(nf))
+    assert(bothExprs.collect { case g: GatherVector => g.width } ==
+      Seq(GatherVector.AnyWidth))
+    assert(both.collect().map(_.getAs[Vector](1)).toSeq == expected.toSeq)
+  }
+
+  test("gather-first keeps the width check; only selected features must bucketize") {
+    // finite outer splits, so a value outside [-1, 3] is out of range
+    val splits = Array.fill(4)(Array(-1.0, 0.0, 1.0, 3.0))
+    val disc = new FrequencyDiscretizerModel("finite", splits) // features -> discFeatures
+    val sel = new InfoThSelectorModel("keep-1-2", Array(1, 2), Array(1 -> 0.0, 2 -> 0.0))
+      .setFeaturesCol("discFeatures").setOutputCol("sel")
+    def selected(v: Vector): Vector =
+      sel.transform(disc.transform(vectorDf(Seq(v)))).select("sel").head.getAs[Vector](0)
+
+    assert(selected(Vectors.dense(0.5, -0.5, 2.0, 0.0)).toArray.toSeq == Seq(0.0, 2.0))
+    // a wrong-width vector is refused, naming both widths
+    Seq(Vectors.dense(0.5, 0.5, 0.5), Vectors.sparse(5, Array(1), Array(0.5)))
+      .foreach(v => assertRefuses(s"vector size ${v.size}", "split arrays 4")(selected(v)))
+    // NaN or out of range in a selected feature still throws
+    Seq(Double.NaN, 7.0, -2.0).foreach { bad =>
+      assertRefuses("out of Bucketizer bounds")(selected(Vectors.dense(0.5, bad, 0.5, 0.5)))
+      assertRefuses("out of Bucketizer bounds")(
+        selected(Vectors.sparse(4, Array(2), Array(bad))))
+    }
+    // in an unselected feature it is never bucketized, so it no longer
+    // throws; bucketizing every feature still does
+    Seq(Double.NaN, 7.0, -2.0).foreach { bad =>
+      val v = Vectors.dense(bad, 0.5, 2.0, bad)
+      assert(selected(v).toArray.toSeq == Seq(1.0, 2.0))
+      assertRefuses("out of Bucketizer bounds")(
+        disc.transform(vectorDf(Seq(v))).select("discFeatures").collect())
     }
   }
 

@@ -18,6 +18,13 @@ class GraftExtensionsSpec extends SparkSpec {
     new GraftExtensions().apply(ext)
   }
 
+  test("register installs the gather-first rule once") {
+    GraftExtensions.register(spark)
+    GraftExtensions.register(spark)
+    GatherFirst.install(spark)
+    assert(spark.experimental.extraOptimizations.count(_ eq GatherFirst) == 1)
+  }
+
   test("wrong arity is rejected") {
     GraftExtensions.register(spark)
     intercept[Exception] {
